@@ -10,7 +10,7 @@ O(batch + |summary|), independent of history size.  Derived metrics
 
 This is the materialized-view-maintenance pattern (same algebra Spark
 itself uses between partial_ and final aggregates); the streaming twin
-is `foreachBatch` upserting the merged summary via KeyedParquetTable.
+is `foreachBatch` upserting the merged summary via ManifestSnapshotTable.
 Exactness: sums use the decimal accumulator, so partial-then-merge is
 bit-identical to a direct aggregate regardless of how history was
 batched (pinned by tests).

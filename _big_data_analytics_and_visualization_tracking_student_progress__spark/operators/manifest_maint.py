@@ -227,7 +227,7 @@ class _ManifestMaintMixin:
         evolving = (
             pb != list(self.partition_by) or generated_partitions is not None
         )
-        if not pb:
+        if evolving and not pb:
             raise ValueError("partition_by must name at least one column")
         if evolving and not (
             self.stable_partitions or set(pb) <= set(self.keys)

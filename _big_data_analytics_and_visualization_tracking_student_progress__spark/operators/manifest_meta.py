@@ -99,13 +99,15 @@ class _ManifestMetaMixin:
         with the old scheme would render fragment names that match
         nothing in the live manifest and write a divergent layout).
         Reads are unaffected — every snapshot resolves through its own
-        manifest's fragment names."""
+        manifest's fragment names.  An unpartitioned table records
+        ``[]``, which is a scheme like any other, not "none recorded"."""
         pb = self._manifest_doc().get("partition_by")
-        if pb and list(pb) != list(self.partition_by):
+        if pb is not None and list(pb) != list(self.partition_by):
             raise ValueError(
                 f"handle is configured with partition_by="
                 f"{list(self.partition_by)} but the table's current "
-                f"scheme is {list(pb)} (partition evolution happened); "
+                f"scheme is {list(pb)} (partition evolution happened, or "
+                "the handle names another scheme); "
                 "construct the handle with the current scheme"
             )
 

@@ -3,30 +3,29 @@
 idempotent last-write-wins by composite key).
 
 `merge_by_key` is pure DataFrame logic (union → latest_by_key) usable in
-batch or inside `foreachBatch`; `KeyedParquetTable` is the storage-backed
-version for streaming sinks.
+batch or inside `foreachBatch`; `ManifestSnapshotTable` is the package's
+one storage-backed keyed table — every keyed sink (streaming
+`foreachBatch` targets, the drop-folder ingest, the time-travel queries)
+commits through it.
 
 Scale posture: the merge shuffles on the business key only.  For a real
 100 TB keyed table this is the classic Delta/Iceberg MERGE; without a
-table format in this container we implement read-union-dedup-overwrite on
-parquet, with the key-hash as the shuffle partitioner.  When the table is
-partitioned AND the partition columns are part of the key (the reference's
-daily-index-plus-_id shape exactly), `upsert` prunes: only the partitions
-present in the batch are read, merged, and rewritten (dynamic partition
-overwrite) — per-batch cost tracks batch size, not table size.
+table format in this container each commit is read-union-dedup-write on
+parquet under a new version dir, with the key-hash as the shuffle
+partitioner.  When the table is partitioned (the reference's
+daily-index-plus-_id shape), a commit reads, merges and rewrites only
+the partitions present in the batch — per-batch cost tracks batch size,
+not table size; an unpartitioned table is one fragment rewritten whole.
 Idempotency under replay holds because merging the same batch twice is a
 fixed point of last-write-wins (verified in tests).
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import Column, SparkSession
 
-from .windows import latest_by_key
 from .manifest_base import (  # noqa: F401  (public re-exports)
     CommitConflictError,
     ConstraintViolationError,
@@ -34,254 +33,6 @@ from .manifest_base import (  # noqa: F401  (public re-exports)
     merge_clauses,
     retry_commit,
 )
-
-
-class KeyedParquetTable:
-    """A keyed, mutable table on parquet — the engine's stand-in for the
-    reference's Elasticsearch index (daily index + `_id` upsert,
-    con.py:55-63).  Used as the target of the streaming `foreachBatch`
-    sink (streaming/sinks.py)."""
-
-    def __init__(self, spark: SparkSession, path: str, keys: Sequence[str],
-                 order_cols: Sequence[str] | str,
-                 partition_by: Sequence[str] = (),
-                 stable_partitions: bool = False):
-        self.spark = spark
-        self.path = path
-        self.keys = list(keys)
-        self.order_cols = (
-            [order_cols] if isinstance(order_cols, str) else list(order_cols)
-        )
-        # S6 — date-partitioned sink naming (reference daily index
-        # `phantich1-YYYY.MM.DD`, con.py:58): partition dirs replace the
-        # per-day index, and queries prune on the partition column.
-        self.partition_by = list(partition_by)
-        # Caller's promise that each key's partition values never change
-        # across batches (e.g. the partition is derived from an immutable
-        # attribute of the keyed entity) — enables partition-pruned MERGE
-        # even when the partition columns aren't structurally in the key.
-        self.stable_partitions = stable_partitions
-
-    def _schema_path(self) -> str:
-        return os.path.join(self.path, "_table_schema.json")
-
-    def read(self) -> DataFrame | None:
-        """Under PRUNED merges, partitions rewritten by a schema-widening
-        batch carry the new column while untouched partitions' files
-        don't — a single-footer schema pick would silently drop the new
-        column from the view (and a later merge would then erase it from
-        disk).  The widened schema is persisted as a sidecar at write
-        time, so reads apply it in O(1) instead of a mergeSchema footer
-        sweep that grows with table file count; files lacking a column
-        read it as NULL — the additive widening merge_by_key documents.
-        Tables written before the sidecar existed fall back to
-        mergeSchema once (the next upsert writes the sidecar)."""
-        if not os.path.exists(os.path.join(self.path, "_SUCCESS")):
-            return None
-        sp = self._schema_path()
-        if os.path.exists(sp):
-            import json
-
-            from pyspark.sql.types import StructType
-
-            with open(sp) as fh:
-                schema = StructType.fromJson(json.load(fh))
-            return self.spark.read.schema(schema).parquet(self.path)
-        return (
-            self.spark.read.option("mergeSchema", "true").parquet(self.path)
-        )
-
-    def _can_prune(self) -> bool:
-        """Partition-pruned MERGE is sound only when the partition
-        columns are part of the business key: then a key lives in
-        exactly one partition forever, so partitions the batch does not
-        touch cannot contain rows the merge would change.  (A key that
-        could MOVE partitions would leave its stale row behind in the
-        old partition under pruning.)  `stable_partitions=True` is the
-        caller's explicit promise of the same invariant when the
-        partition is derived rather than key-embedded."""
-        return bool(self.partition_by) and (
-            self.stable_partitions
-            or set(self.partition_by) <= set(self.keys)
-        )
-
-    def _merge_changes_column_types(
-        self, target: DataFrame, batch: DataFrame
-    ) -> bool:
-        """Plan-only probe (no job runs): does merging `batch` coerce
-        any column the table already has to a different type?"""
-        merged_schema = merge_by_key(
-            target, batch, self.keys,
-            [F.col(c).desc() for c in self.order_cols],
-        ).schema
-        existing = {f.name: f.dataType for f in target.schema.fields}
-        return any(
-            f.name in existing and f.dataType != existing[f.name]
-            for f in merged_schema.fields
-        )
-
-    def upsert(self, batch: DataFrame) -> None:
-        target = self.read()
-        prune = target is not None and self._can_prune()
-        if prune and self._merge_changes_column_types(target, batch):
-            # Pruned rewrites are sound only for ADDITIVE widening.  If
-            # the merge would COERCE a shared column to a different type
-            # (e.g. a formerly-int column arriving as string), the
-            # sidecar would no longer match the physical type inside
-            # untouched partitions' old files and every later read would
-            # fail on parquet conversion.  The full rewrite is immune —
-            # it rewrites all files with the coerced type — so fall back
-            # to it for this batch.
-            prune = False
-        if prune:
-            # The 100 TB move: merge and rewrite ONLY the partitions
-            # present in the batch (classic Delta/Iceberg MERGE file
-            # pruning, expressed with parquet partition dirs + dynamic
-            # partition overwrite).  Touched-partition list is bounded
-            # control data — one row per partition in the batch, not
-            # per record.
-            touched = [
-                tuple(r)
-                for r in batch.select(*self.partition_by)
-                .distinct()
-                .collect()
-            ]
-            if not touched:
-                return
-            pred = None
-            for combo in touched:
-                clause = F.lit(True)
-                for col, val in zip(self.partition_by, combo):
-                    clause = clause & F.col(col).eqNullSafe(F.lit(val))
-                pred = clause if pred is None else (pred | clause)
-            # partition pruning pushes this filter into the directory
-            # listing: untouched partitions are never even read
-            target = target.filter(pred)
-        merged = merge_by_key(
-            target, batch, self.keys, [F.col(c).desc() for c in self.order_cols]
-        )
-        # Localize before overwrite: the read and write touch the same
-        # path, so materialize through a temp location.
-        tmp = self.path + "__staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        final = self.spark.read.parquet(tmp)
-        writer = final.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-            if prune:
-                # replace only the partition dirs present in `final`,
-                # leave every other partition's files untouched
-                writer = writer.option("partitionOverwriteMode", "dynamic")
-        import json
-        import shutil
-
-        def write_sidecar() -> None:
-            os.makedirs(self.path, exist_ok=True)
-            stmp = self._schema_path() + ".tmp"
-            with open(stmp, "w") as fh:
-                json.dump(final.schema.jsonValue(), fh)
-            os.replace(stmp, self._schema_path())
-
-        # Sidecar/data ordering is crash-safety-critical and differs by
-        # write mode.  Dynamic partition overwrite PRESERVES root-level
-        # files, so the old (possibly narrower) sidecar would survive a
-        # crash after the data write — hiding a widened column until the
-        # next merge erased it from disk.  Refresh the sidecar FIRST
-        # there: a crash in between leaves a harmlessly-wide sidecar
-        # (missing columns read as NULL, the replayed batch re-merges).
-        # Static overwrite WIPES the directory, sidecar included, so
-        # there the sidecar can only be written after the data: a crash
-        # in between leaves no sidecar at all → the mergeSchema
-        # fallback, which is correct.
-        if prune:
-            write_sidecar()
-        writer.parquet(self.path)
-        if not prune:
-            write_sidecar()
-        # best-effort cleanup
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-class SnapshotKeyedTable:
-    """Time-travel variant of KeyedParquetTable: every upsert commits a
-    new immutable snapshot dir `v=N` instead of overwriting in place —
-    MVCC on plain parquet (the read half of a Delta/Iceberg commit,
-    without the transaction log).  Readers pin any retained version;
-    rollback = re-pointing to an older N; concurrent readers never see a
-    half-written table because a snapshot only becomes visible once its
-    `_SUCCESS` marker exists.
-
-    Scale note: each commit rewrites the full table (copy-on-write of
-    every file), which is the right shape for a dimension/state table
-    but NOT for a 100 TB fact table — `ManifestSnapshotTable` below is
-    that shape: the same MERGE dataflow committing only changed
-    partitions plus a manifest.  The merge itself still shuffles on the
-    business key only."""
-
-    def __init__(self, spark: SparkSession, path: str, keys: Sequence[str],
-                 order_cols: Sequence[str] | str, keep_versions: int | None = None):
-        self.spark = spark
-        self.path = path
-        self.keys = list(keys)
-        self.order_cols = (
-            [order_cols] if isinstance(order_cols, str) else list(order_cols)
-        )
-        self.keep_versions = keep_versions
-
-    def _vdir(self, v: int) -> str:
-        return os.path.join(self.path, f"v={v:05d}")
-
-    def versions(self) -> list[int]:
-        if not os.path.isdir(self.path):
-            return []
-        out = []
-        for name in os.listdir(self.path):
-            if name.startswith("v=") and os.path.exists(
-                os.path.join(self.path, name, "_SUCCESS")
-            ):
-                out.append(int(name[2:]))
-        return sorted(out)
-
-    def read(self, version: int | None = None) -> DataFrame | None:
-        vs = self.versions()
-        if not vs:
-            return None
-        if version is None:
-            version = vs[-1]
-        if version not in vs:
-            raise ValueError(f"version {version} not in {vs}")
-        return self.spark.read.parquet(self._vdir(version))
-
-    def upsert(self, batch: DataFrame) -> int:
-        target = self.read()
-        merged = merge_by_key(
-            target, batch, self.keys, [F.col(c).desc() for c in self.order_cols]
-        )
-        new_v = (self.versions()[-1] + 1) if self.versions() else 1
-        merged.write.mode("overwrite").parquet(self._vdir(new_v))
-        if self.keep_versions is not None:
-            self.vacuum()
-        return new_v
-
-    def rollback(self, version: int) -> None:
-        """Drop all snapshots newer than `version` (it becomes latest)."""
-        import shutil
-
-        for v in self.versions():
-            if v > version:
-                shutil.rmtree(self._vdir(v), ignore_errors=True)
-
-    def vacuum(self) -> None:
-        """Retain only the newest `keep_versions` snapshots."""
-        import shutil
-
-        if self.keep_versions is None:
-            return
-        vs = self.versions()
-        for v in vs[: max(0, len(vs) - self.keep_versions)]:
-            shutil.rmtree(self._vdir(v), ignore_errors=True)
-
-
 from .manifest_maint import _ManifestMaintMixin
 from .manifest_meta import _ManifestMetaMixin
 from .manifest_metadata import _ManifestMetadataMixin
@@ -297,15 +48,15 @@ class ManifestSnapshotTable(
     _ManifestMaintMixin,
 ):
     """Incremental MVCC snapshots on plain parquet — the "100 TB fact
-    table" shape `SnapshotKeyedTable`'s scale note names: each commit
-    writes ONLY the partitions the batch touches, plus a manifest
-    mapping every partition to the snapshot version that holds its
-    current files.  Unchanged partitions are inherited BY REFERENCE
-    (a manifest entry pointing at an older version's files), never
-    copied — so copy-on-write cost tracks the batch, not the table,
-    while readers still get immutable point-in-time snapshots,
-    rollback, and retention.  This is the read half of a Delta/Iceberg
-    commit with the manifest playing the transaction log's role.
+    table" keyed-table shape: each commit writes ONLY the partitions
+    the batch touches, plus a manifest mapping every partition to the
+    snapshot version that holds its current files.  Unchanged
+    partitions are inherited BY REFERENCE (a manifest entry pointing at
+    an older version's files), never copied — so copy-on-write cost
+    tracks the batch, not the table, while readers still get immutable
+    point-in-time snapshots, rollback, and retention.  This is the read
+    half of a Delta/Iceberg commit with the manifest playing the
+    transaction log's role.
 
     Layout::
 
@@ -314,24 +65,32 @@ class ManifestSnapshotTable(
         root/v=00001/_CLAIM          (writer identity: pid/host/ts)
         root/v=00001/_SUCCESS        (commit marker, written LAST)
 
+    Unpartitioned (``partition_by=()``, the default): the whole table
+    is the one fragment ``""`` — files sit directly under
+    ``v=N/data/`` and every writing commit rewrites that fragment (the
+    dimension / state-table shape: streaming dedup state, serving
+    tables keyed by one id), with the same atomic commit, time travel,
+    deletion vectors and change feed as the partitioned shape.
+
     Concurrency: commits use optimistic concurrency — every writer
     atomically claims its version directory (os.mkdir) BEFORE reading
     its commit basis, so two concurrent writers can never both publish
     the same version or silently drop each other's commits; the loser
     raises `CommitConflictError` and must re-run against the new basis.
-    See the "commit protocol" section below.
+    See the "commit protocol" section of `manifest_meta.py`.
 
     Soundness: pruned MERGE requires that a key can never change
     partition, so the constructor demands partition columns ⊆ keys or
-    an explicit ``stable_partitions=True`` promise (same invariant as
-    `KeyedParquetTable._can_prune`).  Partition values must be
-    non-null scalars whose ``str()`` is filesystem-safe (the reference
-    daily-index shape: one string date column).
+    an explicit ``stable_partitions=True`` promise (the caller's word
+    that each key's partition values never change across batches).
+    Partition values must be non-null scalars whose ``str()`` is
+    filesystem-safe (the reference daily-index shape: one string date
+    column).
     """
 
     def __init__(self, spark: SparkSession, path: str, keys: Sequence[str],
                  order_cols: Sequence[str] | str,
-                 partition_by: Sequence[str],
+                 partition_by: Sequence[str] = (),
                  stable_partitions: bool = False,
                  keep_versions: int | None = None,
                  keep_seconds: float | None = None,
@@ -407,8 +166,6 @@ class ManifestSnapshotTable(
         if self.bloom_cols and (self.bloom_bits < 8 or self.bloom_k < 1):
             raise ValueError("need bloom_bits >= 8 and bloom_k >= 1")
         self._bloom_cache: dict[tuple[int, str], dict] = {}
-        if not self.partition_by:
-            raise ValueError("ManifestSnapshotTable requires partition_by")
         self.stable_partitions = stable_partitions
         if not (stable_partitions or set(self.partition_by) <= set(self.keys)):
             raise ValueError(

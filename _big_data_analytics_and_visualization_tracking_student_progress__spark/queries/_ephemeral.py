@@ -39,8 +39,7 @@ def ephemeral_table(ctor, spark: SparkSession, prefix: str, **kw):
     """Construct ``ctor(spark, <fresh temp dir>, **kw)`` — any storage
     object whose second positional arg is its root path and that
     exposes it as ``.path`` (`ManifestSnapshotTable`,
-    `SnapshotKeyedTable`, `IncrementalAggView`) — and ALWAYS remove
-    that dir on exit."""
+    `IncrementalAggView`) — and ALWAYS remove that dir on exit."""
     obj = ctor(spark, tempfile.mkdtemp(prefix=f"sparkgraft_{prefix}_"), **kw)
     try:
         yield obj

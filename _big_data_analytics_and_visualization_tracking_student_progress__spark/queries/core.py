@@ -503,7 +503,7 @@ def q_modified_file_reingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from ..operators.upsert import KeyedParquetTable
+    from ..operators.upsert import ManifestSnapshotTable
     from ..sources.watcher import DropIngestor
     from ..sources.xls import write_minimal_xls
 
@@ -529,7 +529,7 @@ def q_modified_file_reingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         drop_dir = os.path.join(wd, "drop")
         os.makedirs(drop_dir)
         path = os.path.join(drop_dir, "documents.xls")
-        table = KeyedParquetTable(
+        table = ManifestSnapshotTable(
             spark,
             os.path.join(wd, "serving"),
             keys=["doc_id"],
@@ -3448,14 +3448,14 @@ def q_windowed_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "version declaratively",
 )
 def q_snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.upsert import SnapshotKeyedTable
+    from ..operators.upsert import ManifestSnapshotTable
     from ._ephemeral import ephemeral_table, materialize_bounded
 
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts_nanos"
     )
     with ephemeral_table(
-        SnapshotKeyedTable,
+        ManifestSnapshotTable,
         spark,
         "snap",
         keys=["user_id"],

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import dround, dsum
-from ..operators.upsert import KeyedParquetTable
+from ..operators.upsert import ManifestSnapshotTable
 from ..registry import register
 from ..sources import events_file_stream
 from ..streaming.pipeline import (
@@ -382,7 +382,7 @@ def q_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     wd = _workdir("upsert_q")
-    table = KeyedParquetTable(
+    table = ManifestSnapshotTable(
         spark,
         os.path.join(wd, "table"),
         keys=["user_id", "event_type"],
@@ -432,8 +432,6 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "commits (T2)",
 )
 def q_stream_manifest_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.upsert import ManifestSnapshotTable
-
     wd = _workdir("manifest_q")
     table = ManifestSnapshotTable(
         spark,
@@ -520,7 +518,6 @@ def _stage_single_file(df: DataFrame, watch: str, name: str, mtime: int) -> None
 def q_stream_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..datasets import load_table
     from ..operators.matview import IncrementalAggView
-    from ..operators.upsert import ManifestSnapshotTable
 
     day_ns = 86_400_000_000_000
     wd = _workdir("matview_q")
@@ -621,7 +618,6 @@ def q_stream_cdc_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_file_stream(spark, _events_path(sf_dir)).select(
         "user_id", "event_type", "event_id", "ts_nanos"
     )
-    from ..operators.upsert import ManifestSnapshotTable
 
     wd = _workdir("tombstone_q")
     table = ManifestSnapshotTable(
@@ -734,7 +730,7 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts_nanos",
     )
     wd = _workdir("ingest_e2e")
-    table = KeyedParquetTable(
+    table = ManifestSnapshotTable(
         spark,
         os.path.join(wd, "table"),
         keys=["doc_id"],
@@ -1048,7 +1044,7 @@ def run_stream_curation(
         )
     )
     wd = _workdir("stream_curation")
-    table = KeyedParquetTable(
+    table = ManifestSnapshotTable(
         spark,
         os.path.join(wd, "table"),
         keys=["content_hash"],
@@ -1076,9 +1072,9 @@ def run_stream_curation(
 # by band hash so a batch's probe is a co-located join (no state-side
 # shuffle), and the shingle store is a keyed point-lookup table; both
 # grow with the corpus, not with batch count.  Here they are plain
-# KeyedParquetTables (the container has no bucketed catalog), and each
-# probe reads the full small state — the dataflow, not the layout, is
-# what this query pins.
+# unpartitioned ManifestSnapshotTables (the container has no bucketed
+# catalog), and each probe reads the full small state — the dataflow,
+# not the layout, is what this query pins.
 # ---------------------------------------------------------------------------
 def stream_near_dup_run(
     spark: SparkSession,
@@ -1096,15 +1092,15 @@ def stream_near_dup_run(
     from ..operators import dedup as D
 
     wd = _workdir("stream_neardup")
-    band_tbl = KeyedParquetTable(
+    band_tbl = ManifestSnapshotTable(
         spark, os.path.join(wd, "bands"), keys=["band", "doc"],
         order_cols=["seq"],
     )
-    sh_tbl = KeyedParquetTable(
+    sh_tbl = ManifestSnapshotTable(
         spark, os.path.join(wd, "shingles"), keys=["doc"],
         order_cols=["seq"],
     )
-    pair_tbl = KeyedParquetTable(
+    pair_tbl = ManifestSnapshotTable(
         spark, os.path.join(wd, "pairs"), keys=["id_a", "id_b"],
         order_cols=["seq"],
     )
@@ -1439,7 +1435,6 @@ def q_stream_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_change_feed_relay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.upsert import ManifestSnapshotTable
     from ..streaming.pipeline import changes_relay_run
     from .core import load_table
     from ._ephemeral import ephemeral_table, materialize_bounded
@@ -1523,7 +1518,6 @@ def _e2e_dashboard_artifact(spark: SparkSession, sf_dir: str) -> dict:
         return _E2E_ART[sf_dir]
     from ..datasets import load_table
     from ..operators.matview import IncrementalAggView
-    from ..operators.upsert import KeyedParquetTable, ManifestSnapshotTable
     from ..serving.report import _page, _table, column_chart, write_report
     from ..sources import file_stream
     from ..sources.watcher import SEQ_COL, DropIngestor
@@ -1550,7 +1544,7 @@ def _e2e_dashboard_artifact(spark: SparkSession, sf_dir: str) -> dict:
     upload = os.path.join(drop, "events_upload.xlsx")
 
     # -- watcher leg: drop, then modify-in-place ------------------------
-    staging = KeyedParquetTable(
+    staging = ManifestSnapshotTable(
         spark,
         os.path.join(wd, "staging"),
         keys=["event_id"],

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.cdc import HASH_COL, with_row_hash
 from ..operators.relational import anti_join
-from ..operators.upsert import KeyedParquetTable
+from ..operators.upsert import ManifestSnapshotTable
 
 SEQ_COL = "ingest_seq"
 
@@ -209,7 +209,7 @@ class DropIngestor:
         spark: SparkSession,
         folder: str,
         state_dir: str,
-        table: KeyedParquetTable,
+        table: ManifestSnapshotTable,
         cdc_cols: Sequence[str] | None = None,
         paranoid: bool = False,
     ):
@@ -277,9 +277,9 @@ class DropIngestor:
         (ordered by `ingest_seq`) collapses the replay by key.  The log
         is therefore an at-least-once audit feed — duplicates are
         distinguishable by seq — while the serving table converges.
-        `KeyedParquetTable.upsert`'s own overwrite is not atomic; if the
-        table dir itself is lost mid-write, `recover_table()` rebuilds
-        it from the full log."""
+        Each MERGE is one atomic manifest commit, so a crash mid-MERGE
+        leaves the table at its previous version; `recover_table()` is
+        only for a lost table dir."""
         from .readers import read_excel
 
         pending = self.monitor.scan()
@@ -318,8 +318,8 @@ class DropIngestor:
             )
             changed = changed.withColumn(SEQ_COL, F.lit(seq))
             # append survivors to the log (materializes the diff while
-            # the old hash snapshot is still intact — the same
-            # localize-before-overwrite rule as KeyedParquetTable)
+            # the old hash snapshot is still intact — localize before
+            # the snapshot below is overwritten)
             if changed.count():
                 changed.write.mode("append").parquet(self.log_path)
                 wrote = True
@@ -395,8 +395,9 @@ class DropIngestor:
     def recover_table(self) -> None:
         """Disaster recovery: rebuild the serving table from the full
         changed-rows log (at-least-once rows + `ingest_seq`-ordered
-        keyed MERGE → the same converged state), for the case where the
-        table directory itself was lost mid-overwrite."""
+        keyed MERGE → the same converged state).  Commits are atomic,
+        so a crashed MERGE never needs this — it is for a table
+        directory that was lost (deleted, or its disk replaced)."""
         if not os.path.exists(os.path.join(self.log_path, "_SUCCESS")):
             return
         self.table.upsert(

@@ -100,8 +100,8 @@ def compact(
     one file per hive partition (repartition on the partition columns),
     re-split by an estimated records-per-target-file cap so a hot
     partition still yields right-sized files.  Rewrite goes through a
-    staging dir then an overwrite of the final path (same read/write-path
-    discipline as KeyedParquetTable.upsert).  Returns before/after file
+    staging dir then an overwrite of the final path (a path cannot be
+    read and overwritten by one job).  Returns before/after file
     counts for observability."""
     stats = file_stats(spark, path).agg(
         F.count(F.lit(1)).alias("files"),

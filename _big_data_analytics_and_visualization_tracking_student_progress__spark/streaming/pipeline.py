@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import row_hash
-from ..operators.upsert import KeyedParquetTable, ManifestSnapshotTable
+from ..operators.upsert import ManifestSnapshotTable
 
 
 # ---------------------------------------------------------------------------
@@ -166,7 +166,7 @@ def append_sink_run(
 def upsert_stream_run(
     spark: SparkSession,
     sdf: DataFrame,
-    table: KeyedParquetTable | ManifestSnapshotTable,
+    table: ManifestSnapshotTable,
     workdir: str | None = None,
     quarantine_predicate: Column | None = None,
     max_scatter: int | None = None,
@@ -186,17 +186,16 @@ def upsert_stream_run(
     a quarantine sink keeps them replayable.  Returns the keyed table
     (empty-schema DataFrame when the source produced no batches).
 
-    `max_scatter` (ManifestSnapshotTable sinks only): auto-OPTIMIZE —
-    after each micro-batch commit, compact the table whenever its live
-    manifest references more than this many holder versions.  Without
+    `max_scatter`: auto-OPTIMIZE — after each micro-batch commit,
+    compact the table whenever its live manifest references more than
+    this many holder versions.  Without
     it, a long-running incremental sink accretes one holder version per
     distinct touched-partition set, growing read fan-out without bound;
     with it, scans per read stay ≤ max_scatter + 1 forever.  Compaction
     is observationally the identity, so replay stays a fixed point.
 
-    `view` (ManifestSnapshotTable sinks only): a continuous aggregate
-    refreshed after every micro-batch commit, so the rollup is always
-    one commit behind at most.  Duck-typed over `.base`/`.refresh()`:
+    `view`: a continuous aggregate refreshed after every micro-batch
+    commit, so the rollup is always one commit behind at most.  Duck-typed over `.base`/`.refresh()`:
     an `operators.matview.IncrementalAggView` (refresh = recompute
     partials of touched partitions) or a `DeltaAggView` (refresh =
     fold the commit's signed change feed) both slot in — pick by
@@ -206,8 +205,8 @@ def upsert_stream_run(
     stays a fixed point (the extra refresh is a no-op).  Per-batch
     outcomes land in `view.refresh_log`.
 
-    `tombstone_predicate` (ManifestSnapshotTable sinks only): CDC
-    delete markers — the Debezium ``op='d'`` shape.  Within each
+    `tombstone_predicate`: CDC delete markers — the Debezium
+    ``op='d'`` shape.  Within each
     micro-batch the latest record per key (by the table's order
     columns) decides: tombstone → the key is DELETED from the table
     (partition-pruned, see `ManifestSnapshotTable.delete`), otherwise
@@ -227,8 +226,8 @@ def upsert_stream_run(
     a dv no-op), and `max_scatter` auto-compaction doubles as the
     vector-materialization schedule.
 
-    `schema_evolution` (ManifestSnapshotTable sinks only): passed
-    through to each micro-batch's `upsert` — when the stream's schema
+    `schema_evolution`: passed through to each micro-batch's
+    `upsert` — when the stream's schema
     gains columns (or widens types losslessly) mid-flight, the sink
     extends the table's declared schema instead of refusing the batch
     (the Delta mergeSchema streaming-sink option).  Off by default:
@@ -241,24 +240,11 @@ def upsert_stream_run(
         raise ValueError(
             "view must be an IncrementalAggView over the sink table"
         )
-    if tombstone_predicate is not None and not isinstance(
-        table, ManifestSnapshotTable
-    ):
-        raise TypeError(
-            "tombstone_predicate needs a ManifestSnapshotTable sink "
-            "(keyed deletes)"
-        )
     if tombstone_mode not in ("rewrite", "dv"):
         raise ValueError(
             f"tombstone_mode must be 'rewrite' or 'dv', "
             f"got {tombstone_mode!r}"
         )
-
-    def _upsert(df: DataFrame) -> None:
-        if schema_evolution and isinstance(table, ManifestSnapshotTable):
-            table.upsert(df, schema_evolution=True)
-        else:
-            table.upsert(df)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         good = batch_df
@@ -277,7 +263,9 @@ def upsert_stream_run(
                 [F.col(c).desc() for c in table.order_cols],
             )
             dead = F.coalesce(tombstone_predicate, F.lit(False))
-            _upsert(latest.filter(~dead))
+            table.upsert(
+                latest.filter(~dead), schema_evolution=schema_evolution
+            )
             erase = (
                 table.delete_dv
                 if tombstone_mode == "dv"
@@ -285,7 +273,7 @@ def upsert_stream_run(
             )
             erase(latest.filter(dead).select(*table.keys))
         else:
-            _upsert(good)
+            table.upsert(good, schema_evolution=schema_evolution)
         # refresh BEFORE any compaction: a compaction moves EVERY
         # fragment's holder version, so a refresh that followed it
         # would recompute every partial — O(table) instead of the
@@ -297,11 +285,6 @@ def upsert_stream_run(
         if view is not None:
             view.refresh()
         if max_scatter is not None:
-            if not isinstance(table, ManifestSnapshotTable):
-                raise TypeError(
-                    "max_scatter auto-compaction needs a "
-                    "ManifestSnapshotTable sink"
-                )
             table.maybe_compact(max_scatter)
 
     q = (

@@ -16,7 +16,7 @@ from _big_data_analytics_and_visualization_tracking_student_progress__spark.oper
     diff_snapshots,
 )
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
-    KeyedParquetTable,
+    ManifestSnapshotTable,
 )
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.sources.readers import (
     read_excel,
@@ -117,7 +117,7 @@ def test_xlsx_cdc_upsert_chain(spark, tmp_path):
     got = {(r.F_MASV, r.F_DIEM2) for r in changed.collect()}
     assert got == {("B2", 9.0), ("B3", 5.0)}
 
-    table = KeyedParquetTable(
+    table = ManifestSnapshotTable(
         spark,
         str(tmp_path / "table"),
         keys=["F_MASV", "F_TENMH"],

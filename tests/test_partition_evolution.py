@@ -153,6 +153,16 @@ def test_stale_handle_refused_at_commit_but_reads_fine(spark, root):
         )
     )
     assert (25, 9, 9.0) in _state(fresh)
+    # an unpartitioned table records the scheme [] — a scheme like any
+    # other, so a mismatch is refused in both directions
+    flat = _mk(spark, root, name="flat", partition_by=())
+    _seed(spark, flat)
+    with pytest.raises(ValueError, match="partition evolution"):
+        _seed(spark, _mk(spark, root, name="flat"))  # day handle, [] table
+    with pytest.raises(ValueError, match="partition evolution"):
+        _seed(spark, _mk(spark, root, partition_by=()))  # [] handle
+    assert flat.versions() == [1] and _state(flat) == before
+    assert (25, 9, 9.0) in _state(fresh)
 
 
 def test_read_as_of_crosses_the_boundary(spark, root):

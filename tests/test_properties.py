@@ -10,7 +10,7 @@ have long tails hypothesis would otherwise flag.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -540,9 +540,10 @@ def test_manifest_snapshots_equal_model(spark, batches):
 
 
 # ---------------------------------------------------------------------------
-# KeyedParquetTable: the partition-pruned merge (dynamic partition
-# overwrite of batch-touched partitions only) must be observationally
-# identical to the plain full-rewrite merge for ANY batch sequence.
+# ManifestSnapshotTable: the partition-pruned merge (only batch-touched
+# fragments rewritten, the rest inherited by reference) must be
+# observationally identical to the unpartitioned table's whole-fragment
+# rewrite for ANY batch sequence.
 # ---------------------------------------------------------------------------
 @given(batches=BATCHES)
 @settings(max_examples=6, deadline=None,
@@ -552,19 +553,19 @@ def test_pruned_merge_equals_full_merge(spark, batches):
     import tempfile
 
     from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
-        KeyedParquetTable,
+        ManifestSnapshotTable,
     )
 
     root = tempfile.mkdtemp(prefix="kp_prop_")
     try:
-        pruned = KeyedParquetTable(
+        pruned = ManifestSnapshotTable(
             spark, f"{root}/p", keys=["day", "k"], order_cols=["seq"],
             partition_by=["day"],
         )
-        plain = KeyedParquetTable(
+        plain = ManifestSnapshotTable(
             spark, f"{root}/f", keys=["day", "k"], order_cols=["seq"],
+            partition_by=(),
         )
-        assert pruned._can_prune() and not plain._can_prune()
         for i, batch in enumerate(batches):
             dedup = {}
             for day, k, v in batch:
@@ -575,6 +576,7 @@ def test_pruned_merge_equals_full_merge(spark, batches):
             )
             pruned.upsert(df)
             plain.upsert(df)
+        assert set(plain.manifest()) == {""}  # one fragment, whole table
         got_p = sorted(
             (r.day, r.k, r.v, r.seq) for r in pruned.read().collect()
         )
@@ -595,7 +597,9 @@ def test_pruned_merge_equals_full_merge(spark, batches):
 # rollback, compact() is observationally the identity (a new snapshot
 # with the latest content, or a no-op when already single-holder), and
 # keyed deletes remove exactly their keys (committing a new version iff
-# a live partition was touched, dropping fully-emptied partitions).
+# a live partition was touched, dropping fully-emptied partitions).  The
+# partition scheme is an input: the unpartitioned table (one fragment
+# "") runs the same model.
 # ---------------------------------------------------------------------------
 MAINT_OPS = st.lists(
     st.one_of(
@@ -632,10 +636,25 @@ MAINT_OPS = st.lists(
 )
 
 
-@given(ops=MAINT_OPS)
+@given(ops=MAINT_OPS, scheme=st.sampled_from([("day",), ()]))
+@example(
+    # the one-fragment table through every maintenance verb
+    ops=[
+        ("upsert", [("d1", 0, 1), ("d2", 1, 2)]),
+        ("upsert", [("d1", 0, 3)]),
+        ("delete", [("d2", 1)]),
+        ("compact", 0),
+        ("ccompact", 0),
+        ("rollback", 1),
+        ("vacuum", 2),
+        ("delete", [("d1", 0)]),
+        ("compact", 0),
+    ],
+    scheme=(),
+)
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_manifest_maintenance_equals_model(spark, ops):
+def test_manifest_maintenance_equals_model(spark, ops, scheme):
     import shutil
     import tempfile
 
@@ -647,8 +666,12 @@ def test_manifest_maintenance_equals_model(spark, ops):
     try:
         t = ManifestSnapshotTable(
             spark, root, keys=["day", "k"], order_cols=["seq"],
-            partition_by=["day"],
+            partition_by=scheme,
         )
+
+        def frag(day):  # the fragment a (day, k) key lives in
+            return day if scheme else ""
+
         states: dict[int, dict] = {}   # version -> expected content
         readable: list[int] = []       # complete snapshot numbers
         model: dict = {}
@@ -673,8 +696,8 @@ def test_manifest_maintenance_equals_model(spark, ops):
                 t.delete(spark.createDataFrame(
                     doomed, "day string, k int",
                 ))
-                live_days = {d for d, _k in model}
-                if not (readable and {d for d, _k in doomed} & live_days):
+                live = {frag(d) for d, _k in model}
+                if not (readable and {frag(d) for d, _k in doomed} & live):
                     continue  # no live partition touched: no new commit
                 model = {
                     kk: v for kk, v in model.items() if kk not in doomed

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
-    KeyedParquetTable,
+    ManifestSnapshotTable,
     merge_by_key,
 )
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.sources import (
@@ -46,7 +46,7 @@ def test_multibatch_upsert_latest_by_key(spark, workdir):
     _write_chunk(spark, [("a", 2, 2.0), ("c", 1, 100.0)], src)
     _write_chunk(spark, [("b", 3, 30.0), ("a", 3, 3.0)], src)
 
-    table = KeyedParquetTable(
+    table = ManifestSnapshotTable(
         spark, os.path.join(workdir, "tbl"), keys=["k"], order_cols=["seq"]
     )
     stream = file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
@@ -65,7 +65,7 @@ def test_upsert_replay_is_idempotent(spark, workdir):
     src = os.path.join(workdir, "src")
     _write_chunk(spark, [("a", 1, 1.0), ("a", 2, 2.0), ("b", 5, 50.0)], src)
 
-    table = KeyedParquetTable(
+    table = ManifestSnapshotTable(
         spark, os.path.join(workdir, "tbl"), keys=["k"], order_cols=["seq"]
     )
     first = upsert_stream_run(
@@ -255,7 +255,7 @@ def test_upsert_quarantines_null_keys(spark, workdir):
 
     src = os.path.join(workdir, "src")
     _write_chunk(spark, [("a", 1, 1.0), (None, 2, 2.0), ("b", 3, 3.0)], src)
-    table = KeyedParquetTable(
+    table = ManifestSnapshotTable(
         spark, os.path.join(workdir, "tbl"), keys=["k"], order_cols=["seq"]
     )
     run_dir = os.path.join(workdir, "run")
@@ -278,7 +278,7 @@ def test_upsert_quarantines_null_keys(spark, workdir):
 def test_upsert_empty_source(spark, workdir):
     src = os.path.join(workdir, "src")
     os.makedirs(src)
-    table = KeyedParquetTable(
+    table = ManifestSnapshotTable(
         spark, os.path.join(workdir, "tbl"), keys=["k"], order_cols=["seq"]
     )
     out = upsert_stream_run(
@@ -319,40 +319,43 @@ def test_multimodal_resize_and_frame_sample(spark):
 
 # ---------------------------------------------------------------------------
 # Schema evolution: a later batch carrying a NEW column widens the keyed
-# table additively (reference's ragged Excel rows, pro.py:38); earlier
-# rows read NULL for it.
+# table additively (reference's ragged Excel rows, pro.py:38) when the
+# writer opts in; earlier rows read NULL for it.
 # ---------------------------------------------------------------------------
 def test_upsert_schema_evolution(spark, workdir):
-    table = KeyedParquetTable(
+    table = ManifestSnapshotTable(
         spark, os.path.join(workdir, "tbl"), keys=["k"], order_cols=["seq"]
     )
     table.upsert(
         spark.createDataFrame([("a", 1, 1.0)], "k string, seq bigint, v double")
     )
-    table.upsert(
-        spark.createDataFrame(
-            [("b", 2, 2.0, "extra")],
-            "k string, seq bigint, v double, note string",
-        )
+    wide = spark.createDataFrame(
+        [("b", 2, 2.0, "extra")],
+        "k string, seq bigint, v double, note string",
     )
+    with pytest.raises(ValueError, match="schema_evolution=True"):
+        table.upsert(wide)  # widening is opt-in
+    table.upsert(wide, schema_evolution=True)
     rows = {r.k: r for r in table.read().collect()}
     assert rows["a"].note is None
     assert rows["b"].note == "extra"
-    # and the reverse direction: a narrower later batch still merges
-    table.upsert(
-        spark.createDataFrame([("a", 9, 9.0)], "k string, seq bigint, v double")
+    # the reverse direction: a narrower later batch is refused (an
+    # upsert cannot leave a column unspecified) and the table is
+    # unchanged; the batch merges once it states the column
+    narrow = spark.createDataFrame(
+        [("a", 9, 9.0)], "k string, seq bigint, v double"
     )
+    with pytest.raises(ValueError, match="lacks table columns"):
+        table.upsert(narrow)
+    assert table.read().count() == 2
+    table.upsert(narrow.withColumn("note", F.lit(None).cast("string")))
     rows = {r.k: r for r in table.read().collect()}
     assert rows["a"].seq == 9 and rows["a"].note is None
     assert rows["b"].note == "extra"
 
 
 def test_snapshot_table_time_travel_and_rollback(spark, workdir):
-    from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
-        SnapshotKeyedTable,
-    )
-
-    t = SnapshotKeyedTable(
+    t = ManifestSnapshotTable(
         spark, os.path.join(workdir, "snap"), keys=["k"], order_cols="seq"
     )
     v1 = t.upsert(spark.createDataFrame([("a", 1, 10.0)], "k string, seq int, v double"))
@@ -369,15 +372,12 @@ def test_snapshot_table_time_travel_and_rollback(spark, workdir):
     # replaying the same batch after rollback is a fresh commit with the
     # same content — last-write-wins fixed point
     v3 = t.upsert(spark.createDataFrame([("a", 1, 10.0)], "k string, seq int, v double"))
+    assert v3 == 2
     assert t.read(v3).collect() == t.read(v1).collect()
 
 
 def test_snapshot_table_vacuum_retains_window(spark, workdir):
-    from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
-        SnapshotKeyedTable,
-    )
-
-    t = SnapshotKeyedTable(
+    t = ManifestSnapshotTable(
         spark,
         os.path.join(workdir, "snapvac"),
         keys=["k"],
@@ -390,6 +390,9 @@ def test_snapshot_table_vacuum_retains_window(spark, workdir):
         )
     assert t.versions() == [3, 4]
     assert t.read().head().v == 4.0
+    # the one-fragment table rewrites its fragment on every commit, so
+    # no older dir survives as a data holder
+    assert sorted(os.listdir(t.path)) == ["v=00003", "v=00004"]
 
 
 def test_stream_manifest_auto_compact_bounds_scatter(spark, workdir):
@@ -587,25 +590,6 @@ def test_stream_tombstones_delete_and_resurrect(spark, workdir):
     assert got == {("d1", 2, "b2"), ("d2", 3, "c")}
     # d2 was never touched by a tombstone batch: still held by v1
     assert table.manifest()["day=d2"] == 1
-
-
-def test_stream_tombstones_require_manifest_sink(spark, workdir):
-    src = os.path.join(workdir, "src")
-    _stage_tomb(
-        spark, [("d1", 1, "a", 1, "u")], src, "b1.parquet", 1_000_000_000
-    )
-    table = KeyedParquetTable(
-        spark, os.path.join(workdir, "tbl"), keys=["day", "k"],
-        order_cols=["seq"],
-    )
-    with pytest.raises(TypeError, match="ManifestSnapshotTable"):
-        upsert_stream_run(
-            spark,
-            file_stream(spark, src, TOMB_SCHEMA),
-            table,
-            workdir=os.path.join(workdir, "run"),
-            tombstone_predicate=F.col("op") == "d",
-        )
 
 
 def test_stream_tombstones_dv_mode(spark, workdir):

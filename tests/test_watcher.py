@@ -15,7 +15,7 @@ from __future__ import annotations
 import os
 
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
-    KeyedParquetTable,
+    ManifestSnapshotTable,
 )
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.sources.watcher import (
     DropFolderMonitor,
@@ -43,7 +43,7 @@ HEADER = ["F_MASV", "F_DIEM2", "F_PASSED"]
 def _ingestor(spark, tmp_path):
     drop = tmp_path / "drop"
     drop.mkdir()
-    table = KeyedParquetTable(
+    table = ManifestSnapshotTable(
         spark,
         str(tmp_path / "serving"),
         keys=["F_MASV"],
@@ -290,8 +290,8 @@ def test_monitor_tracks_directory_shaped_datasets(tmp_path):
 
 def test_monitor_tracks_hive_partitioned_datasets(tmp_path):
     """Hive-partitioned tables nest part files one level per partition
-    column (day=d1/part-*.parquet — exactly what KeyedParquetTable
-    writes with partition_by).  The directory hash must walk
+    column (day=d1/part-*.parquet — exactly what Spark's
+    ``partitionBy`` writer produces).  The directory hash must walk
     recursively: nested edits, new partitions, and deleted partitions
     all change the digest; untouched polls emit nothing."""
     folder = tmp_path / "data"

@@ -269,22 +269,24 @@ def test_report_tool_builds_dashboard(spark):
 
 
 class TestPartitionPrunedMerge:
-    """KeyedParquetTable.upsert with partition_by ⊆ keys rewrites ONLY
-    the partitions present in the batch (dynamic partition overwrite) —
-    the Delta/Iceberg MERGE file-pruning shape on plain parquet."""
+    """ManifestSnapshotTable.upsert with partition_by ⊆ keys rewrites
+    ONLY the partitions present in the batch; every other fragment stays
+    with its old holder version — the Delta/Iceberg MERGE file-pruning
+    shape on plain parquet."""
 
     @staticmethod
-    def _mk(spark, tmp_path, keys):
+    def _mk(spark, tmp_path, keys, **kw):
         from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
-            KeyedParquetTable,
+            ManifestSnapshotTable,
         )
 
-        return KeyedParquetTable(
+        return ManifestSnapshotTable(
             spark,
             str(tmp_path / "t"),
             keys=keys,
             order_cols=["seq"],
             partition_by=["day"],
+            **kw,
         )
 
     @staticmethod
@@ -293,7 +295,8 @@ class TestPartitionPrunedMerge:
             data, "day string, k int, v string, seq int"
         )
 
-    def _file_sig(self, root):
+    @staticmethod
+    def _file_sig(root):
         sig = {}
         for dirpath, _, files in os.walk(root):
             for f in files:
@@ -302,21 +305,29 @@ class TestPartitionPrunedMerge:
                     sig[p] = os.stat(p).st_mtime_ns
         return sig
 
+    def _assert_untouched(self, t, before_sig, frags):
+        """No file under an untouched fragment's holder version is
+        rewritten: the manifest still points each fragment at its old
+        holder, and that holder's files are byte-for-byte the same."""
+        m = t.manifest()
+        for frag in frags:
+            held = os.path.join(t._data_dir(m[frag]), frag)
+            old = {p: n for p, n in before_sig.items() if p.startswith(held)}
+            assert old, f"fixture sanity: {frag} has files"
+            assert self._file_sig(held) == old, f"{frag} rewritten"
+
     def test_untouched_partitions_not_rewritten(self, spark, tmp_path):
         t = self._mk(spark, tmp_path, keys=["day", "k"])
         t.upsert(self._rows(spark, [
             ("d1", 1, "a", 1), ("d1", 2, "b", 1),
             ("d2", 1, "c", 1), ("d3", 9, "z", 1),
         ]))
-        before = self._file_sig(str(tmp_path / "t"))
-        d2_d3 = {p: m for p, m in before.items() if "day=d1" not in p}
-        assert d2_d3  # fixture sanity
+        before = self._file_sig(t.path)
 
         # second batch touches ONLY day=d1
         t.upsert(self._rows(spark, [("d1", 2, "B2", 2), ("d1", 3, "n", 2)]))
-        after = self._file_sig(str(tmp_path / "t"))
-        for p, mtime in d2_d3.items():
-            assert after.get(p) == mtime, f"untouched partition rewritten: {p}"
+        assert t.manifest() == {"day=d1": 2, "day=d2": 1, "day=d3": 1}
+        self._assert_untouched(t, before, ["day=d2", "day=d3"])
 
         got = {
             (r.day, r.k): r.v for r in t.read().collect()
@@ -334,49 +345,25 @@ class TestPartitionPrunedMerge:
         got = {(r.day, r.k): r.v for r in t.read().collect()}
         assert got == {("d1", 1): "a", ("d2", 1): "c"}
 
-    def test_key_spanning_partitions_falls_back_to_full_merge(
-        self, spark, tmp_path
-    ):
-        # partition col NOT in the key: a key may move between days, so
-        # pruning would strand the stale row — upsert must take the
-        # full-merge path and converge to one row per key
-        t = self._mk(spark, tmp_path, keys=["k"])
-        assert not t._can_prune()
-        t.upsert(self._rows(spark, [("d1", 1, "a", 1)]))
-        t.upsert(self._rows(spark, [("d2", 1, "moved", 2)]))
-        rows = t.read().collect()
-        assert len(rows) == 1
-        assert (rows[0].day, rows[0].v) == ("d2", "moved")
-
     def test_stable_partitions_flag_enables_pruning(self, spark, tmp_path):
         # partition derived from an immutable attribute (not in the
-        # key): the caller's stable_partitions promise enables pruning
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
-            KeyedParquetTable,
-        )
+        # key): without the caller's stable_partitions promise the
+        # table is refused, with it the commit prunes
+        import pytest
 
-        t = KeyedParquetTable(
-            spark,
-            str(tmp_path / "t2"),
-            keys=["k"],
-            order_cols=["seq"],
-            partition_by=["day"],
-            stable_partitions=True,
-        )
-        assert t._can_prune()
+        with pytest.raises(ValueError, match="stable_partitions=True"):
+            self._mk(spark, tmp_path, keys=["k"])
+        t = self._mk(spark, tmp_path, keys=["k"], stable_partitions=True)
         t.upsert(self._rows(spark, [("d1", 1, "a", 1), ("d2", 2, "c", 1)]))
-        before = self._file_sig(str(tmp_path / "t2"))
-        d2 = {p: m for p, m in before.items() if "day=d2" in p}
+        before = self._file_sig(t.path)
         t.upsert(self._rows(spark, [("d1", 1, "a2", 2)]))
-        after = self._file_sig(str(tmp_path / "t2"))
-        for p, m in d2.items():
-            assert after.get(p) == m  # day=d2 untouched
+        self._assert_untouched(t, before, ["day=d2"])
         got = {(r.day, r.k): r.v for r in t.read().collect()}
         assert got == {("d1", 1): "a2", ("d2", 2): "c"}
 
     def test_schema_evolution_under_pruning(self, spark, tmp_path):
         """A widening batch touching only SOME partitions must not lose
-        the new column: read() applies the persisted widened schema
+        the new column: read() applies the declared widened schema
         (untouched partitions surface it as NULL) and later merges
         preserve it on disk."""
         t = self._mk(spark, tmp_path, keys=["day", "k"])  # pruned path
@@ -385,7 +372,8 @@ class TestPartitionPrunedMerge:
             [("d2", 1, "c2", 2, "extra-val")],
             "day string, k int, v string, seq int, extra string",
         )
-        t.upsert(widened)  # touches only d2, carries new column
+        # touches only d2, carries new column
+        t.upsert(widened, schema_evolution=True)
         got = {
             (r.day, r.k): (r.v, r["extra"]) for r in t.read().collect()
         }
@@ -394,7 +382,11 @@ class TestPartitionPrunedMerge:
             ("d2", 1): ("c2", "extra-val"),
         }
         # a later merge touching d2 must keep the column's data on disk
-        t.upsert(self._rows(spark, [("d2", 2, "n", 3)]))
+        t.upsert(
+            self._rows(spark, [("d2", 2, "n", 3)]).withColumn(
+                "extra", F.lit(None).cast("string")
+            )
+        )
         got = {
             (r.day, r.k): (r.v, r["extra"]) for r in t.read().collect()
         }
@@ -1168,119 +1160,47 @@ class TestManifestEscaping:
         assert got == {("10:30", 1): "a2", ("plain", 1): "b"}
 
 
-class TestSchemaSidecar:
-    """Crash-safety and migration of the _table_schema.json sidecar."""
-
-    _mk = staticmethod(TestPartitionPrunedMerge._mk)
-    _rows = staticmethod(TestPartitionPrunedMerge._rows)
-
-    def test_legacy_table_without_sidecar_migrates(self, spark, tmp_path):
-        """Pre-sidecar tables (sidecar deleted) must still read the
-        widened view via mergeSchema, and the next upsert re-persists
-        the sidecar with the full union schema."""
-        t = self._mk(spark, tmp_path, keys=["day", "k"])
-        t.upsert(self._rows(spark, [("d1", 1, "a", 1), ("d2", 1, "c", 1)]))
-        t.upsert(spark.createDataFrame(
-            [("d2", 1, "c2", 2, "x")],
-            "day string, k int, v string, seq int, extra string",
-        ))
-        os.remove(t._schema_path())  # simulate a pre-sidecar table
-        got = {(r.day, r.k): r["extra"] for r in t.read().collect()}
-        assert got == {("d1", 1): None, ("d2", 1): "x"}  # fallback works
-        t.upsert(self._rows(spark, [("d1", 2, "n", 3)]))
-        assert os.path.exists(t._schema_path())  # re-persisted
-        got = {(r.day, r.k): r["extra"] for r in t.read().collect()}
-        assert got[("d2", 1)] == "x"  # union schema survived migration
-
-    def test_crash_between_sidecar_and_data_is_safe(self, spark, tmp_path):
-        """Pruned path writes the sidecar BEFORE the data: a crash in
-        between leaves a harmlessly-wide sidecar (new column reads
-        NULL), never a stale narrow one hiding a widened column."""
-        t = self._mk(spark, tmp_path, keys=["day", "k"])
-        t.upsert(self._rows(spark, [("d1", 1, "a", 1), ("d2", 1, "c", 1)]))
-
-        # simulate the crash: run a widening pruned upsert whose data
-        # write explodes after the sidecar refresh
-        from unittest import mock
-
-        widened = spark.createDataFrame(
-            [("d2", 1, "c2", 2, "x")],
-            "day string, k int, v string, seq int, extra string",
-        )
-        from pyspark.sql.readwriter import DataFrameWriter
-
-        real = DataFrameWriter.parquet
-
-        def failing(writer_self, path, *a, **k):
-            if path == t.path:  # only the FINAL table write crashes;
-                raise RuntimeError("power loss")  # staging goes through
-            return real(writer_self, path, *a, **k)
-
-        with mock.patch.object(DataFrameWriter, "parquet", failing):
-            import pytest as _pytest
-
-            with _pytest.raises(RuntimeError, match="power loss"):
-                t.upsert(widened)
-        # wide sidecar + narrow files: the new column reads NULL —
-        # no data hidden, no data lost
-        got = {
-            (r.day, r.k): (r.v, r["extra"]) for r in t.read().collect()
-        }
-        assert got == {("d1", 1): ("a", None), ("d2", 1): ("c", None)}
-        # the replayed batch converges to the intended state
-        t.upsert(widened)
-        got = {
-            (r.day, r.k): (r.v, r["extra"]) for r in t.read().collect()
-        }
-        assert got == {("d1", 1): ("a", None), ("d2", 1): ("c2", "x")}
-
-
-class TestTypeChangeFallsBackToFullRewrite:
+class TestTypeChangeIsRefused:
     """Pruned merges are additive-widening-only: a batch that COERCES a
-    shared column's type (round-7 advice) must fall back to the full
-    rewrite, which rewrites every file with the coerced type — instead
-    of committing a sidecar whose type no longer matches the physical
-    type inside untouched partitions' old files (wedging every read)."""
+    shared column's type (round-7 advice) is refused before anything is
+    written — untouched partitions' old files keep the declared type,
+    so the table stays readable at its last version."""
 
     _mk = staticmethod(TestPartitionPrunedMerge._mk)
     _rows = staticmethod(TestPartitionPrunedMerge._rows)
 
     def test_type_coercing_batch_keeps_table_readable(self, spark, tmp_path):
+        import pytest
+
         t = self._mk(spark, tmp_path, keys=["day", "k"])
         t.upsert(self._rows(spark, [("d1", 1, "a", 1), ("d2", 1, "c", 1)]))
-        # v arrives as INT in this batch: union coerces v to string in
-        # the merged output, but d1's old file still stores v as the
-        # original string — the pruned path would commit a sidecar that
-        # can't read d1.  (Here string stays the coerced type; use an
-        # int column flipping to string for a physical-type change.)
         flipped = spark.createDataFrame(
             [("d2", 1, "c2", "2")],
             "day string, k int, v string, seq string",  # seq int→string
         )
-        t.upsert(flipped)
-        # table stays readable end-to-end and reflects the merge
+        for evolve in (False, True):
+            with pytest.raises(ValueError, match="incompatible"):
+                t.upsert(flipped, schema_evolution=evolve)
+        # no commit landed; the table reads end-to-end at v1
+        assert t.versions() == [1]
         got = {(r.day, r.k): (r.v, r.seq) for r in t.read().collect()}
-        assert got == {("d1", 1): ("a", "1"), ("d2", 1): ("c2", "2")}
+        assert got == {("d1", 1): ("a", 1), ("d2", 1): ("c", 1)}
 
     def test_additive_widening_still_prunes(self, spark, tmp_path):
-        """The guard must not disable pruning for the supported case —
-        a purely additive new column leaves untouched partitions'
-        files alone."""
+        """Refusing coercions must not disable pruning for the supported
+        case — a purely additive new column leaves untouched
+        partitions' files alone."""
         t = self._mk(spark, tmp_path, keys=["day", "k"])
         t.upsert(self._rows(spark, [
             ("d1", 1, "a", 1), ("d2", 1, "c", 1),
         ]))
-        sig = TestPartitionPrunedMerge._file_sig(
-            TestPartitionPrunedMerge(), str(tmp_path / "t" / "day=d1")
-        )
+        before = TestPartitionPrunedMerge._file_sig(t.path)
         t.upsert(spark.createDataFrame(
             [("d2", 1, "c2", 2, "x")],
             "day string, k int, v string, seq int, extra string",
-        ))
-        after = TestPartitionPrunedMerge._file_sig(
-            TestPartitionPrunedMerge(), str(tmp_path / "t" / "day=d1")
-        )
-        assert sig == after  # d1 files untouched → pruning still active
+        ), schema_evolution=True)
+        # d1 files untouched → pruning still active
+        TestPartitionPrunedMerge()._assert_untouched(t, before, ["day=d1"])
 
 
 class TestChangeFeedZoneMapPruning:
