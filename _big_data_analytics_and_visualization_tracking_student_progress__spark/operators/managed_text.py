@@ -1,12 +1,15 @@
-"""Manifest-managed inverted text index: the posting layout of
-`textindex.build_inverted_index` routed through `ManifestSnapshotTable`
-— the text twin of `ann_index.ManagedIvfIndex`.
+"""Manifest-managed inverted text index — the package's one full-text
+index, the text twin of `ann_index.ManagedIvfIndex`.
 
-The plain hive index (textindex.py) serves the frozen-corpus shape and
-patches mutability on with sidecars: tombstone files for erasure, a
-rename-aside swap for compaction (self-healing, but still a
-non-atomic window).  This module gets the full storage lifecycle from
-the manifest instead, so the entire swap/tombstone class disappears:
+Every full-text query (match, BM25, msearch, facets, more-like-this,
+phrase/proximity, fuzzy, search_after, collapse, suggest,
+significant_terms, highlight) is a method of `ManagedTextIndex`,
+served from term-hash-bucketed positional postings in one
+`ManifestSnapshotTable`; the pure scoring kernels the methods share
+live in `textindex.py`.  A frozen corpus is simply an index that has
+stopped taking commits — a query pinned to ``version=`` reads exactly
+that snapshot.  The storage lifecycle comes from the manifest, so
+every state change is one atomic commit:
 
 - **Appends** are pruned MERGE commits on (term, doc) keys: only the
   bucket fragments the batch's terms hash into rewrite, every other
@@ -39,7 +42,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..localframe import local_frame
@@ -47,7 +50,14 @@ from ..localframe import local_frame
 from .dedup import portable_hash64
 from .similarity import _portable_hash_py
 from .text import ws_tokens
-from .textindex import N_BUCKETS, bm25_fixed_point
+from .textindex import (
+    N_BUCKETS,
+    auto_fuzziness,
+    bm25_fixed_point,
+    collapse_from_scores,
+    phrase_scores,
+    proximity_scores,
+)
 from .upsert import ManifestSnapshotTable
 
 __all__ = ["ManagedTextIndex"]
@@ -94,8 +104,7 @@ class ManagedTextIndex:
     # -- write path -----------------------------------------------------
     def _postings(self, docs: DataFrame, seq: int) -> DataFrame:
         """POSITIONAL postings (term, doc, tf, dl, positions): the
-        managed index carries the Lucene position-list shape from the
-        start (textindex.build_positional_index:437), so phrase and
+        index carries the Lucene position-list shape, so phrase and
         proximity queries serve from the same manifest-maintained
         postings as BM25 — ES serves match AND match_phrase from one
         index, and so does this tier.  Positions are 1-based indices
@@ -270,9 +279,9 @@ class ManagedTextIndex:
         k: int = 10,
         version: int | None = None,
     ) -> DataFrame:
-        """Analyzed `match` (same contract as search_inverted_index):
-        (distinct terms matched, total tf) ranking over the snapshot's
-        live postings."""
+        """Analyzed `match` (same contract as the brute-force
+        `text.text_search`): (distinct terms matched, total tf) ranking
+        over the snapshot's live postings."""
         postings = self._pruned(query_terms, version)
         if postings is None:
             return self.spark.createDataFrame(
@@ -300,10 +309,11 @@ class ManagedTextIndex:
         b: float = 0.75,
         version: int | None = None,
     ) -> DataFrame:
-        """BM25 top-k over the (optionally time-traveled) snapshot —
-        the `textindex.bm25_fixed_point` kernel, so scores are
-        bit-identical to the plain index's for the same live
-        postings and stats."""
+        """BM25 top-k over the (optionally time-traveled) snapshot
+        through the `textindex.bm25_fixed_point` kernel: bucket-pruned
+        postings carry tf and dl (Lucene norms-in-postings), df comes
+        from the pruned postings themselves and N/avgdl from the
+        version's corpus stats — scoring never touches the corpus."""
         agg = self._bm25_agg(query_terms, k1, b, version)
         if agg is None:
             return self.spark.createDataFrame(
@@ -351,8 +361,7 @@ class ManagedTextIndex:
         version: int | None = None,
     ) -> DataFrame:
         """ES ``search_after`` keyset pagination over the snapshot's
-        BM25 ranking — the managed twin of
-        `textindex.bm25_search_after`: the boundary compares on the
+        BM25 ranking: the boundary compares on the
         exact 1e-4 fixed-point integer (no skip/dup at score ties),
         and pinning ``version`` makes deep paging IMMUNE to concurrent
         appends/erasures — every page reads the same snapshot, the
@@ -395,15 +404,13 @@ class ManagedTextIndex:
         terms and their df come from ONE aggregate over the pinned
         version's live (term, doc) postings — like `suggest`, the
         expansion can never rank by dfs from a different snapshot
-        than the search that consumes it.  Ranking and caps match
-        `textindex.fuzzy_expand` (distance asc, df desc, term asc,
-        ``max_expansions`` per query term; AUTO:3,6 edit budgets).
+        than the search that consumes it.  Ranking and caps follow ES
+        (distance asc, df desc, term asc, ``max_expansions`` per query
+        term; AUTO:3,6 edit budgets).
         Term-hash buckets cannot prune an edit neighborhood (ES walks
         a Levenshtein automaton over its FST for the same reason), so
         this is a postings-metadata scan with the length-band filter
         pushed ahead of the levenshtein evaluation."""
-        from .textindex import auto_fuzziness
-
         if not query_terms:
             raise ValueError("need at least one query term")
         live = self.table.read(version=version)
@@ -451,13 +458,11 @@ class ManagedTextIndex:
         b: float = 0.75,
         version: int | None = None,
     ) -> DataFrame:
-        """ES field collapsing over the snapshot's BM25 ranking — the
-        managed twin of `textindex.collapse_search` (same kernel, so
-        both tiers rank identically); ``version`` pins the postings
-        snapshot the hits come from.  ``docs`` supplies the group
+        """ES field collapsing over the snapshot's BM25 ranking (the
+        `collapse_from_scores` kernel over the `bm25` aggregate, so
+        collapsed scores equal the ranking's); ``version`` pins the
+        postings snapshot the hits come from.  ``docs`` supplies the group
         attribute; only the df-bounded hit set joins it."""
-        from .textindex import collapse_from_scores
-
         agg = self._bm25_agg(query_terms, k1, b, version)
         if agg is None:
             gt = docs.schema[group_col].dataType.simpleString()
@@ -500,9 +505,9 @@ class ManagedTextIndex:
         b: float = 0.75,
         version: int | None = None,
     ) -> DataFrame:
-        """Batched multi-query BM25 over one snapshot — the managed
-        twin of `textindex.bm25_msearch`: the UNION of all queries'
-        term buckets is read once (snapshot-isolated, DV-filtered),
+        """Batched multi-query BM25 over one snapshot (the ES
+        `_msearch` shape): the UNION of all queries' term buckets is
+        read once (snapshot-isolated, DV-filtered),
         the per-(doc, term) kernel score is computed once per posting,
         and a broadcast (q_id, term) join fans postings out to their
         queries.  Per-query results are bit-identical to `bm25` alone
@@ -538,8 +543,6 @@ class ManagedTextIndex:
             .groupBy("q_id", self.id_col)
             .agg(F.sum("s_fp").alias("s"))
         )
-        from pyspark.sql import Window
-
         w = Window.partitionBy("q_id").orderBy(
             F.col("s").desc(), F.col(self.id_col)
         )
@@ -578,6 +581,65 @@ class ManagedTextIndex:
             F.sum("tf").cast("int").alias("total_tf"),
         )
 
+    def significant_terms(
+        self,
+        fg_terms: list[str],
+        k: int = 15,
+        version: int | None = None,
+    ) -> DataFrame:
+        """Elasticsearch `significant_terms` aggregation over the
+        snapshot: terms over-represented in the FOREGROUND (docs
+        matching ``fg_terms``) relative to the whole corpus, ranked by
+        the JLH heuristic (fg% − bg%) × (fg% / bg%) — ES's default
+        sig-terms score.  The query terms themselves are excluded
+        (they are 100% foreground by construction, exactly as ES
+        excludes them).
+
+        Determinism: with a = fg_df, b = bg_df, F = |foreground|,
+        B = N docs, JLH = a·B·(a·B − b·F) / (F²·B·b) — numerator and
+        denominator are exact int64 products, so the one double
+        division (and hence the ranking) is bit-identical across
+        engines; ties to the term.  B is the version's corpus stat,
+        so it follows the Lucene contract (stale across DV erasure
+        until `compact`).
+
+        Scale posture: the fg doc set (bounded by the query's
+        document frequency, never the corpus) broadcasts a membership
+        flag into ONE scan of the snapshot's live postings that
+        partial-aggregates fg_df and bg_df together — the one-pass
+        field-data walk ES performs; all shuffled rows are
+        (term, count, count) triples."""
+        if not fg_terms:
+            raise ValueError("need at least one foreground term")
+        n_docs = int(self._stats_at(version)["n_docs"])
+        fgd = self.match_docs(fg_terms, version).select(self.id_col)
+        post = self.table.read(version=version)
+        tot = fgd.agg(F.count(F.lit(1)).cast("long").alias("__f"))
+        stats = (
+            post.join(
+                F.broadcast(fgd.withColumn("__fg", F.lit(1))),
+                self.id_col,
+                "left",
+            )
+            .groupBy("term")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("bg_df"),
+                F.count("__fg").cast("long").alias("fg_df"),
+            )
+            .filter((F.col("fg_df") > 0) & ~F.col("term").isin(fg_terms))
+        )
+        a, b = F.col("fg_df"), F.col("bg_df")
+        ftot, btot = F.col("__f"), F.lit(n_docs).cast("long")
+        num = (a * btot * (a * btot - b * ftot)).cast("double")
+        den = (ftot * ftot * btot * b).cast("double")
+        jlh = F.floor(num / den * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
+        return (
+            stats.crossJoin(F.broadcast(tot))
+            .select("term", "fg_df", "bg_df", jlh.alias("jlh"))
+            .orderBy(F.col("jlh").desc(), F.col("term"))
+            .limit(k)
+        )
+
     def more_like_this(
         self,
         docs: DataFrame,
@@ -588,9 +650,8 @@ class ManagedTextIndex:
         b: float = 0.75,
         version: int | None = None,
     ) -> DataFrame:
-        """ES `more_like_this` on the managed index (the frozen
-        textindex.more_like_this:281 recipe, snapshot-served): rank the
-        source doc's own terms by fixed-point tf·idf — df from the
+        """ES `more_like_this`, snapshot-served: rank the source
+        doc's own terms by fixed-point tf·idf — df from the
         bucket-pruned LIVE postings at the pinned version, N from the
         version's corpus stats — take the top ``m`` (ties to the
         lexicographically smaller term), BM25-search them with the
@@ -669,9 +730,8 @@ class ManagedTextIndex:
         k: int = 10,
         version: int | None = None,
     ) -> DataFrame:
-        """Exact phrase match (ES match_phrase) from the managed
-        index's positional postings — the same `phrase_scores` kernel
-        as the frozen index (textindex.py:475), but over the
+        """Exact phrase match (ES match_phrase) from the positional
+        postings — the `phrase_scores` kernel over the
         snapshot-isolated, DV-filtered, bucket-pruned read: erased
         docs can never phrase-match at the live head, and a
         `version=` pin replays yesterday's corpus exactly."""
@@ -681,8 +741,6 @@ class ManagedTextIndex:
                 [],
                 f"{self.id_col} {self._id_type(version)}, n_matches int",
             )
-        from .textindex import phrase_scores
-
         scored = phrase_scores(postings, phrase, self.id_col)
         return scored.orderBy(
             F.col("n_matches").desc(), F.col(self.id_col)
@@ -705,8 +763,6 @@ class ManagedTextIndex:
                 [],
                 f"{self.id_col} {self._id_type(version)}, n_matches int",
             )
-        from .textindex import proximity_scores
-
         scored = proximity_scores(
             postings, term_a, term_b, slop, self.id_col
         )
@@ -724,10 +780,8 @@ class ManagedTextIndex:
         ranked by document frequency, derived FROM THE POSTINGS at the
         pinned version — df per term is one count over the live
         (term, doc) rows, so suggest can never serve terms from a
-        different snapshot than search (the frozen
-        `build_term_dictionary` artifact goes stale after every
-        append; ES avoids that by keeping the FST inside the live
-        index, and so does this).
+        different snapshot than search (ES keeps its FST inside the
+        live index for the same reason).
 
         Scale posture: a term-HASH bucket can never prune a PREFIX
         query, so this reads postings metadata across buckets — one
@@ -806,6 +860,12 @@ class ManagedTextIndex:
             query_terms, k=k, k1=k1, b=b, version=version
         ).collect()
         id_ddl = self._id_type(version)
+        if not hit_rows:
+            return self.spark.createDataFrame(
+                [],
+                f"{self.id_col} {id_ddl}, bm25 double, "
+                "first_pos int, snippet string",
+            )
         hits = self.spark.createDataFrame(
             [(r[0], float(r[1])) for r in hit_rows],
             f"{self.id_col} {id_ddl}, bm25 double",

@@ -1,234 +1,29 @@
-"""Inverted text index — the build-once / query-many scale path for
-full-text search (the ingest-time posting table that
-`text.text_search`'s docstring promises at 100 TB).
+"""Shared scoring kernels of the full-text index.
 
-Build: one tokenize + (term, doc) aggregate over the corpus, laid out
-hive-partitioned by a portable hash bucket of the term.  Query: the
-search terms' buckets are computed DRIVER-SIDE with the pure-Python
-twin of the same hash, so the scan lists only |distinct term buckets|
-directories (partition pruning) instead of touching the corpus — per
-query cost is O(matching postings), independent of corpus size.
+`managed_text.ManagedTextIndex` is the package's one text index: it
+owns the postings (a `ManifestSnapshotTable` of term-hash-bucketed
+positional postings), their lifecycle (pruned MERGE appends,
+deletion-vector erasure, compaction) and the query surface.  This
+module holds only the pure DataFrame kernels those queries are built
+from, so that every ranking is one expression in one place:
 
-The bucket hash is `portable_hash64` (md5-prefix), not xxhash64, so
-the driver / any engine can compute the same bucket without a Spark
-round trip; `indexed_text_search` is DuckDB-oracle-checked against the
-brute-force scan semantics (identical ranking and tie-breaks).
+- `bm25_fixed_point` — per-(doc, term) BM25 at 1e-4 fixed point;
+- `collapse_from_scores` — ES field collapsing over a score aggregate;
+- `phrase_scores` / `proximity_scores` — position-list matching;
+- `rrf_fuse` / `rrf_fuse_grouped` — reciprocal-rank fusion;
+- `auto_fuzziness` — the ES ``fuzziness: AUTO`` edit budget;
+- `suggest_terms` — prefix completion over the first-char-partitioned
+  dictionary that `ManagedTextIndex.materialize_dictionary` freezes.
+
+`N_BUCKETS` is the default term-hash bucket count of the postings.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..localframe import local_frame
-
-from .dedup import portable_hash64
-from .similarity import _portable_hash_py
-from .text import ws_tokens
-
 N_BUCKETS = 64
-
-
-def build_inverted_index(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = N_BUCKETS,
-    mode: str = "overwrite",
-) -> None:
-    """(term, doc_id, tf, dl) postings, partitioned by term-hash bucket.
-    One tokenize pass + one (term, doc) aggregate; `repartition` on the
-    bucket gives one writer task per directory (no small-file spray).
-    The document length `dl` rides denormalized in every posting
-    (Lucene's norms-in-postings layout) so BM25 scoring never joins a
-    doc-side table.  Corpus constants (N, total dl) land in a sibling
-    `<path>__meta` parquet.  Incremental maintenance = `mode="append"`
-    with the new docs' postings (same bucket dirs) + a fresh meta."""
-    nonempty = F.filter(ws_tokens(F.col(text_col)), lambda t: t != F.lit(""))
-    toks = df.select(
-        F.col(id_col),
-        F.explode(nonempty).alias("term"),
-        F.size(nonempty).alias("dl"),
-    )
-    postings = (
-        toks.groupBy("term", id_col)
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("tf"),
-            F.first("dl").cast("int").alias("dl"),
-        )
-        .withColumn("__b", F.pmod(portable_hash64(F.col("term")), F.lit(n_buckets)))
-    )
-    (
-        postings.repartition(F.col("__b"))
-        .write.mode(mode)
-        .partitionBy("__b")
-        .parquet(path)
-    )
-    meta = df.select(
-        F.size(
-            F.filter(ws_tokens(F.col(text_col)), lambda t: t != F.lit(""))
-        ).alias("dl")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_dl"),
-    )
-    meta.write.mode(mode).parquet(path + "__meta")
-
-
-def search_inverted_index(
-    spark: SparkSession,
-    path: str,
-    query_terms: list[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
-    """Index-backed `match`: read only the query terms' bucket
-    directories, filter to the terms, aggregate per doc — identical
-    output contract to `text.text_search` ((distinct terms, total tf)
-    ranking, same tie-breaks)."""
-    scored = match_docs(spark, path, query_terms, id_col, n_buckets)
-    return scored.orderBy(
-        F.col("n_terms_matched").desc(),
-        F.col("total_tf").desc(),
-        F.col(id_col),
-    ).limit(k)
-
-
-def match_docs(
-    spark: SparkSession,
-    path: str,
-    query_terms: list[str],
-    id_col: str = "doc_id",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
-    """EVERY matching doc's (n_terms_matched, total_tf) — the unranked,
-    unlimited match aggregate `search_inverted_index` tops-k and facet
-    aggregations consume whole.  Output size is bounded by the query
-    terms' document frequencies, never the corpus."""
-    buckets = sorted({_portable_hash_py(t) % n_buckets for t in query_terms})
-    postings = live_postings(
-        spark,
-        path,
-        _read_index(spark, path)
-        .filter(F.col("__b").isin(buckets))
-        .filter(F.col("term").isin(query_terms)),
-        id_col,
-    )
-    return postings.groupBy(id_col).agg(
-        F.count_distinct(F.col("term")).cast("int").alias("n_terms_matched"),
-        F.sum("tf").cast("int").alias("total_tf"),
-    )
-
-
-def bm25_search(
-    spark: SparkSession,
-    path: str,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
-    """BM25 relevance top-k served from the inverted index: reads only
-    the query terms' bucket directories; df(t) comes from the pruned
-    postings themselves (a bucket holds ALL postings of its terms), dl
-    rides in the posting row, and (N, avgdl) are two longs from the
-    meta sidecar — so scoring never touches the corpus.
-
-    Determinism: every per-(doc, term) score is quantized to a 1e-4
-    fixed-point BIGINT before the per-doc sum (exact, order-free); the
-    idf ln() is evaluated only at integer (N, df) points.  An engine
-    mirroring these formulas reproduces the ranking bit-for-bit — the
-    registered `bm25_search_topk` query is DuckDB-oracle-checked."""
-    agg = _bm25_doc_scores(spark, path, query_terms, k1, b, id_col, n_buckets)
-    return (
-        agg.orderBy(F.col("s").desc(), F.col(id_col))
-        .limit(k)
-        .select(
-            id_col,
-            (F.col("s") / F.lit(10000.0)).alias("bm25"),
-        )
-    )
-
-
-def _bm25_doc_scores(
-    spark: SparkSession,
-    path: str,
-    query_terms: list[str],
-    k1: float,
-    b: float,
-    id_col: str,
-    n_buckets: int,
-) -> DataFrame:
-    """The unlimited (id, s) BM25 aggregate `bm25_search` tops-k and
-    `bm25_search_after` paginates — one shared scoring plan."""
-    meta = (
-        _read_index(spark, path + "__meta")
-        .agg(F.sum("n_docs").alias("n"), F.sum("total_dl").alias("t"))
-        .head()
-    )
-    n_docs, avgdl = int(meta["n"]), float(meta["t"]) / int(meta["n"])
-    buckets = sorted({_portable_hash_py(t) % n_buckets for t in query_terms})
-    # liveDocs applied BEFORE scoring: df(t) reflects live postings;
-    # N/avgdl (meta) stay pre-delete until compact_index — Lucene's
-    # deletes-don't-touch-stats-until-merge semantics
-    postings = live_postings(
-        spark,
-        path,
-        _read_index(spark, path)
-        .filter(F.col("__b").isin(buckets))
-        .filter(F.col("term").isin(query_terms)),
-        id_col,
-    )
-    scored = bm25_fixed_point(postings, n_docs, avgdl, k1, b, id_col)
-    return scored.groupBy(id_col).agg(F.sum("s_fp").alias("s"))
-
-
-def bm25_search_after(
-    spark: SparkSession,
-    path: str,
-    query_terms: list[str],
-    after: tuple[float, object] | None = None,
-    page_size: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
-    """ES ``search_after`` keyset pagination over the BM25 ranking:
-    stateless deep paging whose per-page cost is one TakeOrdered over
-    the pruned postings — never the O(from + size) sort-and-discard of
-    from+size paging (the reason ES caps from at 10 000 and tells deep
-    pagers to use search_after).  ``after`` is the (bm25, id) sort key
-    of the LAST row of the previous page (None = first page); the next
-    page is the first ``page_size`` rows strictly after it in
-    (bm25 desc, id asc) order.
-
-    The boundary compares on the 1e-4 fixed-point integer the double
-    score was derived from (recovered exactly via floor(x·1e4 + 0.5)),
-    so pagination can never skip or duplicate a row at a score tie —
-    pages concatenate to exactly the full ranking (property-tested)."""
-    agg = _bm25_doc_scores(spark, path, query_terms, k1, b, id_col, n_buckets)
-    if after is not None:
-        a_bm25, a_id = after
-        a_s = int(math.floor(a_bm25 * 10000.0 + 0.5))
-        agg = agg.filter(
-            (F.col("s") < F.lit(a_s))
-            | ((F.col("s") == F.lit(a_s)) & (F.col(id_col) > F.lit(a_id)))
-        )
-    return (
-        agg.orderBy(F.col("s").desc(), F.col(id_col))
-        .limit(page_size)
-        .select(
-            id_col,
-            (F.col("s") / F.lit(10000.0)).alias("bm25"),
-        )
-    )
 
 
 def bm25_fixed_point(
@@ -241,9 +36,10 @@ def bm25_fixed_point(
 ) -> DataFrame:
     """The shared per-(doc, term) BM25 scoring kernel: df(t) from a
     term window over the (already pruned) postings, idf at integer
-    (N, df) points, 1e-4 fixed-point floor.  Every serving path —
-    single query, msearch, the managed index — goes through THIS
-    function, so their scores are bit-identical by construction.
+    (N, df) points, 1e-4 fixed-point floor.  Every BM25 serving path
+    — single query, msearch, MLT, fuzzy, collapse, search_after —
+    goes through THIS function, so their scores are bit-identical by
+    construction.
     Returns (id_col, term, s_fp)."""
     wdf = Window.partitionBy("term")
     df_t = F.count(F.lit(1)).over(wdf).cast("double")
@@ -269,202 +65,6 @@ def bm25_fixed_point(
     )
 
 
-def bm25_msearch(
-    spark: SparkSession,
-    path: str,
-    queries: dict[object, list[str]],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
-    """Batched multi-query BM25 — the `_msearch` shape (dashboards and
-    eval harnesses issue hundreds of queries at once; one Spark job per
-    query would pay the scan/job overhead N times).
-
-    One pass serves every query: the UNION of all queries' term
-    buckets is read once (driver-side portable-hash pruning, same as
-    the single-query path), the per-(doc, term) fixed-point score is
-    computed ONCE per posting row — it does not depend on the query —
-    and a broadcast join against the tiny (q_id, term) table fans each
-    posting out to the queries that asked for its term; per-query sums
-    and a rank window finish it.  Because df(t), N/avgdl, and the 1e-4
-    quantization are the single-query path's exact subexpressions,
-    each query's (doc, score) set is BIT-IDENTICAL to running
-    `bm25_search` alone (pinned in tests); only job count changes.
-
-    Returns (q_id, <id_col>, bm25, rank) with rank 1..k per query
-    (ties to the lower id)."""
-    meta = (
-        _read_index(spark, path + "__meta")
-        .agg(F.sum("n_docs").alias("n"), F.sum("total_dl").alias("t"))
-        .head()
-    )
-    n_docs, avgdl = int(meta["n"]), float(meta["t"]) / int(meta["n"])
-    pairs = sorted(
-        {(qid, t) for qid, terms in queries.items() for t in terms}
-    )
-    all_terms = sorted({t for _q, t in pairs})
-    buckets = sorted({_portable_hash_py(t) % n_buckets for t in all_terms})
-    postings = live_postings(
-        spark,
-        path,
-        _read_index(spark, path)
-        .filter(F.col("__b").isin(buckets))
-        .filter(F.col("term").isin(all_terms)),
-        id_col,
-    )
-    # identical subexpressions to bm25_search (the shared kernel): df
-    # over the pruned postings (pruning to the term UNION cannot change
-    # a per-term count), idf at integer (N, df) points, 1e-4 floor
-    scored = bm25_fixed_point(postings, n_docs, avgdl, k1, b, id_col)
-    qt = local_frame(spark, pairs, ["q_id", "term"])
-    per_q = (
-        scored.join(F.broadcast(qt), "term")
-        .groupBy("q_id", id_col)
-        .agg(F.sum("s_fp").alias("s"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("s").desc(), F.col(id_col))
-    return (
-        per_q.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            id_col,
-            (F.col("s") / F.lit(10000.0)).alias("bm25"),
-            "rank",
-        )
-    )
-
-
-def more_like_this(
-    spark: SparkSession,
-    path: str,
-    docs: DataFrame,
-    doc_id,
-    m: int = 5,
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
-    """Elasticsearch's `more_like_this`, index-served: rank the source
-    document's OWN terms by fixed-point tf·idf (df from the pruned
-    postings, idf at integer (N, df) points — the MLT "interesting
-    terms" selection), take the top ``m`` (ties to the lexicographically
-    smaller term), then BM25-search those terms through the index with
-    the source document excluded from the results (df still counts it,
-    the ES behavior).
-
-    Driver materialization is bounded by ONE document's vocabulary:
-    the (term, tf) collect and the top-m collect — the same class as a
-    literal query's term list.  Index I/O is two bucket-pruned reads
-    (the doc's term buckets, then the selected terms' buckets)."""
-    meta = (
-        _read_index(spark, path + "__meta")
-        .agg(F.sum("n_docs").alias("n"), F.sum("total_dl").alias("t"))
-        .head()
-    )
-    n_docs, avgdl = int(meta["n"]), float(meta["t"]) / int(meta["n"])
-    nonempty = F.filter(ws_tokens(F.col(text_col)), lambda t: t != F.lit(""))
-    src = [
-        (r["term"], int(r["tf"]))
-        for r in docs.filter(F.col(id_col) == doc_id)
-        .select(F.explode(nonempty).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("int").alias("tf"))
-        .collect()
-    ]
-    if not src:
-        raise ValueError(f"document {doc_id!r} not found or has no terms")
-    src_terms = sorted(t for t, _tf in src)
-    buckets = sorted({_portable_hash_py(t) % n_buckets for t in src_terms})
-    # df(t) for the doc's terms straight from the pruned postings (one
-    # row per (term, doc) ⇒ COUNT(*) per term is the document frequency)
-    dfs = live_postings(
-        spark,
-        path,
-        _read_index(spark, path)
-        .filter(F.col("__b").isin(buckets))
-        .filter(F.col("term").isin(src_terms)),
-        id_col,
-    ).groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    tf_tbl = local_frame(spark, src, ["term", "tf"])
-    idf = F.log(
-        (F.lit(float(n_docs)) - F.col("df").cast("double") + F.lit(0.5))
-        / (F.col("df").cast("double") + F.lit(0.5))
-        + F.lit(1.0)
-    )
-    ranked = (
-        dfs.join(F.broadcast(tf_tbl), "term")
-        .select(
-            "term",
-            F.floor(F.col("tf").cast("double") * idf * F.lit(10000.0) + F.lit(0.5))
-            .cast("long")
-            .alias("s_fp"),
-        )
-        .orderBy(F.col("s_fp").desc(), F.col("term"))
-        .limit(m)
-    )
-    query_terms = [r["term"] for r in ranked.collect()]
-    q_buckets = sorted({_portable_hash_py(t) % n_buckets for t in query_terms})
-    postings = live_postings(
-        spark,
-        path,
-        _read_index(spark, path)
-        .filter(F.col("__b").isin(q_buckets))
-        .filter(F.col("term").isin(query_terms)),
-        id_col,
-    )
-    scored = bm25_fixed_point(postings, n_docs, avgdl, k1, b, id_col)
-    agg = (
-        scored.filter(F.col(id_col) != doc_id)
-        .groupBy(id_col)
-        .agg(F.sum("s_fp").alias("s"))
-    )
-    return (
-        agg.orderBy(F.col("s").desc(), F.col(id_col))
-        .limit(k)
-        .select(
-            id_col,
-            (F.col("s") / F.lit(10000.0)).alias("bm25"),
-        )
-    )
-
-
-def collapse_search(
-    spark: SparkSession,
-    path: str,
-    docs: DataFrame,
-    query_terms: list[str],
-    group_col: str,
-    k: int = 10,
-    inner_k: int = 1,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
-    """ES field collapsing (``collapse`` + ``inner_hits``): the BM25
-    result list collapsed to the best ``inner_k`` hits per distinct
-    ``group_col`` value, with groups ranked by their TOP hit's score
-    (ES's collapse ordering) — "best page per site", "best doc per
-    language".  Returns (group_col, id_col, bm25, hit_rank) for the
-    top ``k`` groups; hit_rank is 1-based within the group.
-
-    Scale posture: the hit set is bounded by the query terms' document
-    frequencies (never the corpus), and only that bounded set joins
-    the doc-side attribute (ES reads it from doc values the same way);
-    the per-group window partitions by group_col over hits only.
-    Determinism: fixed-point scores, ties to the smaller id; group
-    order ties to the smaller group value."""
-    agg = _bm25_doc_scores(spark, path, query_terms, k1, b, id_col, n_buckets)
-    return collapse_from_scores(agg, docs, group_col, id_col, k, inner_k)
-
-
 def collapse_from_scores(
     agg: DataFrame,
     docs: DataFrame,
@@ -474,8 +74,8 @@ def collapse_from_scores(
     inner_k: int,
 ) -> DataFrame:
     """The collapse kernel over an (id, s) fixed-point score aggregate
-    — shared by the frozen index's `collapse_search` and
-    `ManagedTextIndex.collapse` so both tiers rank identically."""
+    — `ManagedTextIndex.collapse` ranks through it, so collapsed
+    scores equal the uncollapsed BM25 ranking's."""
     hits = agg.join(
         docs.select(F.col(id_col), F.col(group_col)), id_col
     )
@@ -510,72 +110,6 @@ def collapse_from_scores(
             (F.col("s") / F.lit(10000.0)).alias("bm25"),
             "hit_rank",
         )
-    )
-
-
-def significant_terms(
-    spark: SparkSession,
-    path: str,
-    fg_terms: list[str],
-    k: int = 15,
-    id_col: str = "doc_id",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
-    """Elasticsearch `significant_terms` aggregation, index-served:
-    terms over-represented in the FOREGROUND (docs matching
-    ``fg_terms``) relative to the whole corpus, ranked by the JLH
-    heuristic (fg% − bg%) × (fg% / bg%) — ES's default sig-terms
-    score.  The query terms themselves are excluded (they are 100%
-    foreground by construction, exactly as ES excludes them).
-
-    Determinism: with a = fg_df, b = bg_df, F = |foreground|,
-    B = N docs, JLH = a·B·(a·B − b·F) / (F²·B·b) — numerator and
-    denominator are exact int64 products, so the one double division
-    (and hence the ranking) is bit-identical across engines; ties to
-    the term.
-
-    Scale posture: the fg doc set (bounded by the query's document
-    frequency, never the corpus) broadcasts a membership flag into ONE
-    full-postings scan that partial-aggregates fg_df and bg_df
-    together — the same one-pass field-data walk ES performs; all
-    shuffled rows are (term, count, count) triples.  Reference: ES
-    significant_terms on the student-progress dashboards' result sets
-    (app.py delegates all aggs to ES)."""
-    if not fg_terms:
-        raise ValueError("need at least one foreground term")
-    n_docs = int(
-        _read_index(spark, path + "__meta")
-        .agg(F.sum("n_docs").alias("n"))
-        .head()["n"]
-    )
-    fgd = match_docs(spark, path, fg_terms, id_col, n_buckets).select(
-        id_col
-    )
-    post = live_postings(
-        spark, path, _read_index(spark, path).drop("__b"), id_col
-    )
-    tot = fgd.agg(F.count(F.lit(1)).cast("long").alias("__f"))
-    stats = (
-        post.join(
-            F.broadcast(fgd.withColumn("__fg", F.lit(1))), id_col, "left"
-        )
-        .groupBy("term")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("bg_df"),
-            F.count("__fg").cast("long").alias("fg_df"),
-        )
-        .filter((F.col("fg_df") > 0) & ~F.col("term").isin(fg_terms))
-    )
-    a, b = F.col("fg_df"), F.col("bg_df")
-    ftot, btot = F.col("__f"), F.lit(n_docs).cast("long")
-    num = (a * btot * (a * btot - b * ftot)).cast("double")
-    den = (ftot * ftot * btot * b).cast("double")
-    jlh = F.floor(num / den * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    return (
-        stats.crossJoin(F.broadcast(tot))
-        .select("term", "fg_df", "bg_df", jlh.alias("jlh"))
-        .orderBy(F.col("jlh").desc(), F.col("term"))
-        .limit(k)
     )
 
 
@@ -632,84 +166,6 @@ def auto_fuzziness(term: str) -> int:
     return 0 if n <= 2 else (1 if n <= 5 else 2)
 
 
-def fuzzy_expand(
-    spark: SparkSession,
-    dict_path: str,
-    query_terms: list[str],
-    fuzziness: int | None = None,
-    max_expansions: int = 50,
-) -> DataFrame:
-    """ES fuzzy-match term expansion over the term dictionary: for
-    each query term, the index terms within Levenshtein distance ≤
-    fuzziness (AUTO per term when None), ranked the ES way — distance
-    ascending, then document frequency descending (ties to the
-    smaller term) — capped at ``max_expansions`` per query term
-    (ES's default 50).  Returns (q_term, term, dist, df).
-
-    Scale posture: edits can change any character, so the dictionary's
-    first-char partitioning cannot prune (ES walks its term FST with a
-    Levenshtein automaton for the same reason); the scan is one pass
-    over |vocab| rows — already corpus-size-independent — with the
-    length-band filter (|len(term) − len(q)| ≤ f, a cheap necessary
-    condition for edit distance ≤ f) pushed ahead of the levenshtein
-    evaluation, and a per-term TakeOrdered finish."""
-    if not query_terms:
-        raise ValueError("need at least one query term")
-    out = None
-    d = spark.read.parquet(dict_path).select("term", "df")
-    for q in query_terms:
-        q = q.lower()
-        f = auto_fuzziness(q) if fuzziness is None else fuzziness
-        cand = (
-            d.filter(
-                (F.length("term") >= F.lit(len(q) - f))
-                & (F.length("term") <= F.lit(len(q) + f))
-            )
-            .withColumn("dist", F.levenshtein(F.lit(q), F.col("term")))
-            .filter(F.col("dist") <= F.lit(f))
-            .orderBy(
-                F.col("dist").asc(), F.col("df").desc(), F.col("term")
-            )
-            .limit(max_expansions)
-            .select(
-                F.lit(q).alias("q_term"), "term", "dist", "df"
-            )
-        )
-        out = cand if out is None else out.unionByName(cand)
-    return out
-
-
-def fuzzy_search(
-    spark: SparkSession,
-    path: str,
-    dict_path: str,
-    query_terms: list[str],
-    k: int = 10,
-    fuzziness: int | None = None,
-    max_expansions: int = 50,
-    id_col: str = "doc_id",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
-    """ES ``match`` with fuzziness: expand each query term through the
-    term dictionary (`fuzzy_expand`), then BM25-rank over the expanded
-    term set from the bucket-pruned postings — the two-phase plan ES
-    runs (automaton expansion against the FST, then scoring on the
-    expanded disjunction).  The expansion collect is bounded by
-    n_query_terms × max_expansions rows, never the corpus."""
-    exp = fuzzy_expand(
-        spark, dict_path, query_terms, fuzziness, max_expansions
-    )
-    expanded = sorted({r["term"] for r in exp.collect()})
-    if not expanded:
-        # empty-expansion schema derived from the index's own id column
-        # (same contract as delete_docs) so string-id indexes agree
-        idt = _read_index(spark, path).schema[id_col].dataType.simpleString()
-        return spark.createDataFrame([], f"{id_col} {idt}, bm25 double")
-    return bm25_search(
-        spark, path, expanded, k=k, id_col=id_col, n_buckets=n_buckets
-    )
-
-
 def rrf_fuse_grouped(
     rankings: list[DataFrame],
     group_col: str = "q_id",
@@ -760,36 +216,6 @@ def rrf_fuse_grouped(
     )
 
 
-def build_term_dictionary(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Completion-suggester dictionary (the ES suggest shape): one row
-    per distinct term with its document frequency, hive-partitioned by
-    the term's FIRST CHARACTER — the prefix analogue of the postings'
-    hash buckets (a hash bucket can never serve a prefix query, which
-    is why ES keeps a separate FST/completion structure).  One
-    tokenize + distinct-per-doc + per-term count pass; |terms| rows."""
-    nonempty = F.filter(ws_tokens(F.col(text_col)), lambda t: t != F.lit(""))
-    terms = (
-        df.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(nonempty)).alias("term"),
-        )
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("df"))
-        .withColumn("__c1", F.substring(F.col("term"), 1, 1))
-    )
-    (
-        terms.repartition(F.col("__c1"))
-        .write.mode("overwrite")
-        .partitionBy("__c1")
-        .parquet(path)
-    )
-
-
 def suggest_terms(
     spark: SparkSession,
     path: str,
@@ -798,7 +224,8 @@ def suggest_terms(
 ) -> DataFrame:
     """Prefix completion ranked by document frequency (ties to the
     lexicographically smaller term) — ES's completion suggester served
-    from the first-char-partitioned dictionary: the scan lists ONE
+    from the first-char-partitioned dictionary that
+    `ManagedTextIndex.materialize_dictionary` writes: the scan lists ONE
     partition directory, the prefix filter prunes inside it, and the
     result is a k-row TakeOrdered.  Per-query cost is O(terms sharing
     the first character), independent of corpus size.  The prefix is
@@ -821,50 +248,14 @@ def suggest_terms(
     )
 
 
-def build_positional_index(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = N_BUCKETS,
-    mode: str = "overwrite",
-) -> None:
-    """Positional postings (term, doc_id, tf, positions) — the layout
-    phrase and proximity queries need.  Positions are 1-based indices
-    into the non-empty token sequence, sorted ascending, stored as an
-    int array per posting (the Lucene position-list shape).  Same
-    term-hash bucket partitioning as the plain index."""
-    nonempty = F.filter(ws_tokens(F.col(text_col)), lambda t: t != F.lit(""))
-    toks = df.select(
-        F.col(id_col),
-        F.posexplode(nonempty).alias("pos0", "term"),
-    ).select(id_col, (F.col("pos0") + 1).alias("pos"), "term")
-    postings = (
-        toks.groupBy("term", id_col)
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("tf"),
-            F.array_sort(F.collect_list(F.col("pos").cast("int"))).alias(
-                "positions"
-            ),
-        )
-        .withColumn("__b", F.pmod(portable_hash64(F.col("term")), F.lit(n_buckets)))
-    )
-    (
-        postings.repartition(F.col("__b"))
-        .write.mode(mode)
-        .partitionBy("__b")
-        .parquet(path)
-    )
-
-
 def phrase_scores(
     postings: DataFrame, phrase: list[str], id_col: str = "doc_id"
 ) -> DataFrame:
-    """Position-list phrase kernel, shared by the frozen hive index
-    and `ManagedTextIndex`: given positional postings (id_col, term,
-    positions) already restricted to the phrase's terms, join the
-    terms' position lists per doc and count adjacency chains — term
-    i+1's list intersected with term i's positions shifted by one.
+    """Position-list phrase kernel behind `ManagedTextIndex.phrase_search`:
+    given positional postings (id_col, term, positions) already
+    restricted to the phrase's terms, join the terms' position lists
+    per doc and count adjacency chains — term i+1's list intersected
+    with term i's positions shifted by one.
     Returns (id_col, n_matches) for docs with ≥1 match, unranked."""
     joined = None
     for i, t in enumerate(phrase):
@@ -892,8 +283,8 @@ def proximity_scores(
     slop: int,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Unordered-proximity kernel over positional postings (shared
-    like `phrase_scores`): count positions of `term_a` with `term_b`
+    """Unordered-proximity kernel over positional postings (the
+    `phrase_scores` sibling): count positions of `term_a` with `term_b`
     within ±`slop` — a nested array expression over the two (small)
     position lists.  Returns (id_col, n_matches), matches only."""
     a = postings.filter(F.col("term") == term_a).select(
@@ -915,209 +306,3 @@ def proximity_scores(
     return joined.select(
         id_col, near.cast("int").alias("n_matches")
     ).filter(F.col("n_matches") > 0)
-
-
-def phrase_search(
-    spark: SparkSession,
-    path: str,
-    phrase: list[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
-    """Exact phrase match from positional postings: read only the
-    phrase terms' buckets, then the `phrase_scores` kernel.  Per-query
-    cost is O(postings of the phrase terms); the corpus text is never
-    touched."""
-    buckets = sorted({_portable_hash_py(t) % n_buckets for t in phrase})
-    postings = live_postings(
-        spark,
-        path,
-        _read_index(spark, path)
-        .filter(F.col("__b").isin(buckets))
-        .filter(F.col("term").isin(phrase)),
-        id_col,
-    )
-    scored = phrase_scores(postings, phrase, id_col)
-    return scored.orderBy(
-        F.col("n_matches").desc(), F.col(id_col)
-    ).limit(k)
-
-
-def proximity_search(
-    spark: SparkSession,
-    path: str,
-    term_a: str,
-    term_b: str,
-    slop: int = 3,
-    k: int = 10,
-    id_col: str = "doc_id",
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
-    """Unordered proximity query over the positional index: same
-    bucket-pruned read as `phrase_search`, then the
-    `proximity_scores` kernel."""
-    buckets = sorted(
-        {_portable_hash_py(t) % n_buckets for t in (term_a, term_b)}
-    )
-    postings = live_postings(
-        spark,
-        path,
-        _read_index(spark, path)
-        .filter(F.col("__b").isin(buckets))
-        .filter(F.col("term").isin([term_a, term_b])),
-        id_col,
-    )
-    scored = proximity_scores(postings, term_a, term_b, slop, id_col)
-    return scored.orderBy(F.col("n_matches").desc(), F.col(id_col)).limit(k)
-
-
-# ---------------------------------------------------------------------------
-# Right-to-erasure for the text index — the Lucene live-docs pattern
-# (round 12, parity with ManagedIvfIndex.delete): postings are bucketed
-# by TERM, so a document's rows scatter across every bucket and an
-# eager delete would rewrite the whole index.  Instead `delete_docs`
-# appends the doomed ids to a `<path>__deletes` tombstone set (O(batch)
-# — never touches postings), every query anti-joins the broadcast
-# tombstones out, and `compact_index` purges them physically (one
-# rewrite, amortized) and refreshes the meta sidecar.  Exactly Lucene:
-# deletes are a liveDocs bitmap applied at query time; corpus-level
-# stats (N, avgdl → BM25 idf/norms) stay at their pre-delete values
-# until a merge/compaction makes them exact again.
-# ---------------------------------------------------------------------------
-_DELETES_SUFFIX = "__deletes"
-
-
-def _recover_swap(path: str) -> None:
-    """Crash recovery for `compact_index`'s rename-aside swap: between
-    its two os.replace calls the directory at ``path`` does not exist
-    (the swap is two renames, not one atomic exchange — true atomicity
-    would need renameat2(RENAME_EXCHANGE) or pointer indirection).  If
-    a crash landed there, roll the swap FORWARD when the replacement is
-    fully written (`__compacting` carries Spark's _SUCCESS marker),
-    else roll BACK to the set-aside original (`__old`).  Idempotent,
-    no-op whenever ``path`` exists; every read/write entry point probes
-    it before touching the index, so the window is self-healing."""
-    import os
-
-    if os.path.exists(path):
-        return
-    tmp, old = path + "__compacting", path + "__old"
-    if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-        os.replace(tmp, path)
-    elif os.path.exists(old):
-        os.replace(old, path)
-
-
-def _read_index(spark: SparkSession, path: str) -> DataFrame:
-    """Open an index (or meta sidecar) dir with swap recovery."""
-    _recover_swap(path)
-    return spark.read.parquet(path)
-
-
-def delete_docs(
-    spark: SparkSession,
-    path: str,
-    ids,
-    id_col: str = "doc_id",
-) -> None:
-    """Tombstone documents out of the index (plain or positional).
-    ``ids``: a DataFrame carrying ``id_col``, or an iterable of ids.
-    Idempotent — re-deleting already-tombstoned ids changes nothing a
-    query can observe (the anti-join is a set filter).  The tombstone
-    id type is derived from the INDEX's own id column (one footer
-    read), so string-id indexes work on the iterable path and
-    alternating DataFrame/iterable calls can never mix types in the
-    tombstone parquet."""
-    idt = _read_index(spark, path).schema[id_col].dataType.simpleString()
-    if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(i,) for i in ids], f"{id_col} {idt}")
-    (
-        ids.select(F.col(id_col).cast(idt))
-        .distinct()
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(path + _DELETES_SUFFIX)
-    )
-
-
-def live_postings(
-    spark: SparkSession, path: str, postings: DataFrame, id_col: str
-) -> DataFrame:
-    """Apply the tombstone set (if any) to a postings frame: a
-    broadcast anti-join on the id — the erasure batch is operational
-    metadata, never corpus-sized."""
-    import os
-
-    ddir = path + _DELETES_SUFFIX
-    if not os.path.exists(os.path.join(ddir, "_SUCCESS")):
-        return postings
-    doomed = spark.read.parquet(ddir).select(id_col).distinct()
-    return postings.join(F.broadcast(doomed), id_col, "left_anti")
-
-
-def compact_index(
-    spark: SparkSession,
-    path: str,
-    id_col: str = "doc_id",
-) -> None:
-    """Physically purge tombstoned documents: rewrite every bucket
-    minus the deleted ids (postings are self-contained — term, tf, dl
-    [, positions] — so no corpus access), refresh the meta sidecar
-    from the surviving postings (BM25's N and avgdl become exact
-    again), and clear the tombstone set.  After compaction the index
-    is indistinguishable from a fresh build over the remaining
-    documents (pinned in tests)."""
-    import os
-    import shutil
-
-    ddir = path + _DELETES_SUFFIX
-    if not os.path.exists(os.path.join(ddir, "_SUCCESS")):
-        return
-    meta_recover = path + "__meta"
-    _recover_swap(meta_recover)
-    live = live_postings(
-        spark, path, _read_index(spark, path), id_col
-    ).persist()
-    tmp = path + "__compacting"
-    (
-        live.repartition(F.col("__b"))
-        .write.mode("overwrite")
-        .partitionBy("__b")
-        .parquet(tmp)
-    )
-    meta_path = path + "__meta"
-    if os.path.exists(meta_path):
-        # dl rides denormalized in every posting: one row per doc
-        # recovers the exact per-doc length without the corpus
-        meta = (
-            live.groupBy(id_col)
-            .agg(F.first("dl").alias("dl"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("dl").cast("long").alias("total_dl"),
-            )
-        )
-        meta.write.mode("overwrite").parquet(meta_path + "__compacting")
-    live.unpersist()
-    # swap via rename-aside, never delete-then-rename.  The two renames
-    # are NOT one atomic exchange: between them the index dir does not
-    # exist.  That window is covered by `_recover_swap`, which every
-    # entry point probes first — a crash (or a straggling concurrent
-    # reader) finds either the fully-written replacement (__compacting
-    # + _SUCCESS, rolled forward) or the set-aside original (__old,
-    # rolled back); the tombstone dir survives until the very end, so
-    # a rolled-back index still filters the deleted ids at query time
-    # and the next compact converges.
-    old = path + "__old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(path, old)
-    os.replace(tmp, path)
-    if os.path.exists(meta_path + "__compacting"):
-        meta_old = meta_path + "__old"
-        shutil.rmtree(meta_old, ignore_errors=True)
-        os.replace(meta_path, meta_old)
-        os.replace(meta_path + "__compacting", meta_path)
-        shutil.rmtree(meta_old, ignore_errors=True)
-    shutil.rmtree(ddir)
-    shutil.rmtree(old, ignore_errors=True)

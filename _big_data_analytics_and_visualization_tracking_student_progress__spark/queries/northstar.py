@@ -42,38 +42,35 @@ def artifact(kind: str, sf_dir: str, build):
     return _ARTIFACTS[key]
 
 
-def inverted_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Shared hive-partitioned inverted index (postings carry tf + dl,
-    meta sidecar carries N/avgdl) for indexed_text_search AND
-    bm25_search_topk — one build serves every term query."""
+# The manifest-MANAGED text index: the inverted index routed through
+# ManifestSnapshotTable — pruned MERGE appends, DV-based liveDocs
+# erasure, snapshot time travel.  One artifact serves every full-text
+# query: two incremental appends (v1 = even docs, v_full = full corpus,
+# exact corpus stats), then a deletion-vector erasure of
+# doc_id % 5 = 2.  Frozen-corpus queries pin version=v_full; the
+# managed_* queries read the live head or compare the two.
+_MANAGED_ERASE_PRED = "doc_id % 5 = 2"
 
-    def build() -> str:
+
+def managed_text_index(spark: SparkSession, sf_dir: str):
+    """(index, v_full) — v_full is the snapshot BEFORE the erasure."""
+
+    def build():
         import tempfile
 
-        from ..operators.textindex import build_inverted_index
+        from ..operators.managed_text import ManagedTextIndex
 
         docs = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="sparkgraft_tidx_")
-        build_inverted_index(docs, path)
-        return path
+        path = tempfile.mkdtemp(prefix="sparkgraft_mtidx_") + "/idx"
+        idx = ManagedTextIndex(spark, path)
+        idx.upsert(docs.filter(F.col("doc_id") % 2 == 0))
+        idx.upsert(docs.filter(F.col("doc_id") % 2 == 1))
+        v_full = idx.table.versions()[-1]
+        idx.delete(docs.filter(F.expr(_MANAGED_ERASE_PRED)).select("doc_id"))
+        return idx, v_full
 
-    return artifact("inverted_index", sf_dir, build)
+    return artifact("managed_text_index", sf_dir, build)
 
-
-def positional_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Shared positional index for phrase and proximity search."""
-
-    def build() -> str:
-        import tempfile
-
-        from ..operators.textindex import build_positional_index
-
-        docs = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="sparkgraft_pidx_")
-        build_positional_index(docs, path)
-        return path
-
-    return artifact("positional_index", sf_dir, build)
 
 # ---------------------------------------------------------------------------
 # Dedup — exact
@@ -890,28 +887,27 @@ def q_text_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TEXT_ERASE_PRED = "doc_id % 3 = 1"
 
 
-def erased_inverted_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """A dedicated inverted-index artifact with a third of the corpus
-    TOMBSTONED (`textindex.delete_docs` — the Lucene live-docs shape:
-    the erasure batch lands in a `__deletes` sidecar, postings are
-    untouched, queries anti-join the broadcast tombstones out until
-    `compact_index` purges them physically).  Separate from the shared
-    `inverted_index_path` artifact, which must stay full-corpus."""
+def erased_text_index(spark: SparkSession, sf_dir: str):
+    """A dedicated managed index with a third of the corpus ERASED by
+    one deletion-vector commit (`ManagedTextIndex.delete` — the Lucene
+    liveDocs shape: postings untouched, every read anti-joins the DV
+    sidecars out until `compact` purges them physically).  Separate
+    from the shared `managed_text_index` artifact, whose erasure
+    predicate differs."""
 
-    def build() -> str:
+    def build():
         import tempfile
 
-        from ..operators.textindex import build_inverted_index, delete_docs
+        from ..operators.managed_text import ManagedTextIndex
 
         docs = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="sparkgraft_tidx_erased_") + "/idx"
-        build_inverted_index(docs, path)
-        delete_docs(
-            spark, path, docs.filter(F.expr(_TEXT_ERASE_PRED)).select("doc_id")
-        )
-        return path
+        path = tempfile.mkdtemp(prefix="sparkgraft_mtidx_erased_") + "/idx"
+        idx = ManagedTextIndex(spark, path)
+        idx.upsert(docs)
+        idx.delete(docs.filter(F.expr(_TEXT_ERASE_PRED)).select("doc_id"))
+        return idx
 
-    return artifact("inverted_index_erased", sf_dir, build)
+    return artifact("managed_text_index_erased", sf_dir, build)
 
 
 @register(
@@ -919,39 +915,35 @@ def erased_inverted_index_path(spark: SparkSession, sf_dir: str) -> str:
     _TEXT_SEARCH_SQL.replace(
         "FROM documents", f"FROM documents WHERE NOT ({_TEXT_ERASE_PRED})"
     ),
-    doc="right-to-erasure on the inverted text index, the Lucene "
-    "live-docs way: deleted doc ids land in a tombstone sidecar "
-    "(postings untouched — a doc's postings scatter across every term "
-    "bucket, so an eager rewrite would touch the whole index), the "
-    "bucket-pruned search anti-joins the broadcast tombstones out, "
-    "and compact_index later purges them physically (compaction ≡ "
-    "fresh rebuild, pinned in tests); oracle = brute-force match over "
-    "the corpus minus the erased docs",
+    doc="right-to-erasure on the managed text index, the Lucene "
+    "liveDocs way: one deletion-vector commit marks the erased docs' "
+    "postings (postings untouched — a doc's postings scatter across "
+    "every term bucket, so an eager rewrite would touch the whole "
+    "index), the bucket-pruned search at the head anti-joins the DV "
+    "sidecars out, and compact later purges them physically "
+    "(compaction ≡ fresh build, pinned in tests); oracle = "
+    "brute-force match over the corpus minus the erased docs",
 )
 def q_text_search_after_erasure(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.textindex import search_inverted_index
-
-    idx = erased_inverted_index_path(spark, sf_dir)
-    return search_inverted_index(spark, idx, _SEARCH_TERMS, k=10)
+    return erased_text_index(spark, sf_dir).search(_SEARCH_TERMS, k=10)
 
 
 @register(
     "indexed_text_search",
     _TEXT_SEARCH_SQL,
-    doc="the SAME full-text match served from a hive-partitioned "
-    "inverted index (term-hash bucket directories): query terms' "
-    "buckets computed driver-side with the portable hash, scan lists "
-    "only those directories — build-once/query-many, per-query cost "
-    "O(matching postings) independent of corpus size; oracle-checked "
-    "against the brute-force scan semantics",
+    doc="the SAME full-text match served from the managed inverted "
+    "index at its full-corpus snapshot (version=v_full): query terms' "
+    "term-hash buckets computed driver-side with the portable hash, "
+    "the manifest read lists only those bucket fragments — "
+    "build-once/query-many, per-query cost O(matching postings) "
+    "independent of corpus size; oracle-checked against the "
+    "brute-force scan semantics",
 )
 def q_indexed_text_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.textindex import search_inverted_index
-
-    path = inverted_index_path(spark, sf_dir)
-    return search_inverted_index(spark, path, _SEARCH_TERMS, k=10)
+    idx, v_full = managed_text_index(spark, sf_dir)
+    return idx.search(_SEARCH_TERMS, k=10, version=v_full)
 
 
 _NE_TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')"
@@ -993,19 +985,18 @@ _NE_TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')"
     ORDER BY SUM(s_fp) DESC, doc_id
     LIMIT 10
     """,
-    doc="BM25 relevance top-k (k1=1.2, b=0.75) served FROM the inverted "
-    "index: bucket-pruned postings carry tf and dl (Lucene "
-    "norms-in-postings), df comes from the pruned postings themselves, "
-    "N/avgdl from the two-long meta sidecar — scoring never rescans "
-    "the corpus.  Per-(doc,term) scores quantized to 1e-4 fixed-point "
-    "BIGINT before the order-free per-doc sum; fully oracle-checked "
-    "against a from-scratch DuckDB BM25.",
+    doc="BM25 relevance top-k (k1=1.2, b=0.75) served FROM the managed "
+    "inverted index at its full-corpus snapshot: bucket-pruned "
+    "postings carry tf and dl (Lucene norms-in-postings), df comes "
+    "from the pruned postings themselves, N/avgdl from the version's "
+    "two-long corpus stats — scoring never rescans the corpus.  "
+    "Per-(doc,term) scores quantized to 1e-4 fixed-point BIGINT "
+    "before the order-free per-doc sum; fully oracle-checked against "
+    "a from-scratch DuckDB BM25.",
 )
 def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.textindex import bm25_search
-
-    path = inverted_index_path(spark, sf_dir)
-    return bm25_search(spark, path, _SEARCH_TERMS, k=10)
+    idx, v_full = managed_text_index(spark, sf_dir)
+    return idx.bm25(_SEARCH_TERMS, k=10, version=v_full)
 
 
 # Batched multi-query BM25 (the ES `_msearch` shape).  Query 1 is the
@@ -1076,34 +1067,17 @@ def _msearch_values() -> str:
     )
     SELECT q_id, doc_id, bm25, rank FROM ranked WHERE rank <= 10
     """,
-    doc="batched multi-query BM25 (`_msearch`): the bucket UNION of all "
-    "queries' terms is read once, the per-(doc,term) fixed-point score "
-    "is computed once per posting (query-independent), and a broadcast "
-    "(q_id, term) join fans postings out to their queries — per-query "
-    "results bit-identical to running bm25_search per query, at one "
-    "job instead of N; oracle = from-scratch DuckDB BM25 per query",
+    doc="batched multi-query BM25 (`_msearch`) on the managed index's "
+    "full-corpus snapshot: the bucket UNION of all queries' terms is "
+    "read once, the per-(doc,term) fixed-point score is computed once "
+    "per posting (query-independent), and a broadcast (q_id, term) "
+    "join fans postings out to their queries — per-query results "
+    "bit-identical to running bm25 per query, at one job instead of "
+    "N; oracle = from-scratch DuckDB BM25 per query",
 )
 def q_bm25_msearch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.textindex import bm25_msearch
-
-    path = inverted_index_path(spark, sf_dir)
-    return bm25_msearch(spark, path, _MSEARCH_QUERIES, k=10)
-
-
-def term_dictionary_path(spark: SparkSession, sf_dir: str) -> str:
-    """Shared first-char-partitioned completion dictionary."""
-
-    def build() -> str:
-        import tempfile
-
-        from ..operators.textindex import build_term_dictionary
-
-        docs = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="sparkgraft_tdict_")
-        build_term_dictionary(docs, path)
-        return path
-
-    return artifact("term_dictionary", sf_dir, build)
+    idx, v_full = managed_text_index(spark, sf_dir)
+    return idx.msearch(_MSEARCH_QUERIES, k=10, version=v_full)
 
 
 @register(
@@ -1123,16 +1097,25 @@ def term_dictionary_path(spark: SparkSession, sf_dir: str) -> str:
     LIMIT 10
     """,
     doc="completion suggester (the ES suggest shape): prefix 's' "
-    "completions ranked by document frequency from a first-char-"
-    "partitioned term dictionary — the scan lists ONE partition dir "
-    "(a hash bucket can never serve a prefix query, hence the "
-    "dedicated structure, ES's FST analogue); per-query cost "
-    "independent of corpus size",
+    "completions ranked by document frequency from the first-char-"
+    "partitioned term dictionary that materialize_dictionary freezes "
+    "from the managed index's full-corpus snapshot — the scan lists "
+    "ONE partition dir (a hash bucket can never serve a prefix query, "
+    "hence the dedicated structure, ES's FST analogue); per-query "
+    "cost independent of corpus size",
 )
 def q_suggest_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textindex import suggest_terms
 
-    path = term_dictionary_path(spark, sf_dir)
+    def freeze() -> str:
+        import tempfile
+
+        idx, v_full = managed_text_index(spark, sf_dir)
+        path = tempfile.mkdtemp(prefix="sparkgraft_tdict_") + "/dict"
+        idx.materialize_dictionary(path, version=v_full)
+        return path
+
+    path = artifact("term_dictionary", sf_dir, freeze)
     return suggest_terms(spark, path, "s", k=10)
 
 
@@ -1159,15 +1142,14 @@ def q_suggest_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="search facets (the ES terms-aggregation-on-query / Kibana "
     "dashboard shape): per-language matching-doc counts and total term "
-    "frequency over ALL docs matching >=1 query term — the index-served "
-    "match aggregate (bounded by the query terms' document "
-    "frequencies) joined to the docs dimension for the facet key",
+    "frequency over ALL docs matching >=1 query term — the managed "
+    "index's match aggregate at its full-corpus snapshot (bounded by "
+    "the query terms' document frequencies) joined to the docs "
+    "dimension for the facet key",
 )
 def q_text_search_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.textindex import match_docs
-
-    path = inverted_index_path(spark, sf_dir)
-    matched = match_docs(spark, path, _SEARCH_TERMS)
+    idx, v_full = managed_text_index(spark, sf_dir)
+    matched = idx.match_docs(_SEARCH_TERMS, version=v_full)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     return (
         matched.join(docs, "doc_id")
@@ -1240,50 +1222,19 @@ _MLT_DOC_ID = 7
     ORDER BY SUM(s_fp) DESC, doc_id
     LIMIT 10
     """,
-    doc="Elasticsearch `more_like_this`, index-served: the source "
-    "document's own terms ranked by fixed-point tf*idf (df from the "
-    "pruned postings — the MLT 'interesting terms' pass), top-5 become "
+    doc="Elasticsearch `more_like_this`, served from the managed "
+    "index's full-corpus snapshot: the source document's own terms "
+    "ranked by fixed-point tf*idf (df from the pruned postings — the "
+    "MLT 'interesting terms' pass), top-5 become "
     "the BM25 query, source doc excluded from the hits while its df "
     "contribution stays (ES behavior); driver materialization bounded "
     "by one document's vocabulary; oracle replays both stages "
     "from scratch in DuckDB",
 )
 def q_mlt_similar_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.textindex import more_like_this
-
-    path = inverted_index_path(spark, sf_dir)
+    idx, v_full = managed_text_index(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    return more_like_this(spark, path, docs, _MLT_DOC_ID, m=5, k=10)
-
-
-# ---------------------------------------------------------------------------
-# Manifest-MANAGED text index (round 13): the inverted index routed
-# through ManifestSnapshotTable — pruned MERGE appends, DV-based
-# liveDocs erasure, snapshot time travel.  One artifact serves both
-# queries: two incremental appends (v1 = even docs, v2 = full corpus),
-# then a deletion-vector erasure of doc_id % 5 = 2.
-# ---------------------------------------------------------------------------
-_MANAGED_ERASE_PRED = "doc_id % 5 = 2"
-
-
-def managed_text_index(spark: SparkSession, sf_dir: str):
-    """(index, v_full) — v_full is the snapshot BEFORE the erasure."""
-
-    def build():
-        import tempfile
-
-        from ..operators.managed_text import ManagedTextIndex
-
-        docs = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="sparkgraft_mtidx_") + "/idx"
-        idx = ManagedTextIndex(spark, path)
-        idx.upsert(docs.filter(F.col("doc_id") % 2 == 0))
-        idx.upsert(docs.filter(F.col("doc_id") % 2 == 1))
-        v_full = idx.table.versions()[-1]
-        idx.delete(docs.filter(F.expr(_MANAGED_ERASE_PRED)).select("doc_id"))
-        return idx, v_full
-
-    return artifact("managed_text_index", sf_dir, build)
+    return idx.more_like_this(docs, _MLT_DOC_ID, m=5, k=10, version=v_full)
 
 
 @register(
@@ -1418,10 +1369,8 @@ _MANAGED_PHRASE = ["part", "filter"]
     )
     SELECT * FROM full_snap UNION ALL SELECT * FROM live_snap
     """,
-    doc="ES match_phrase on the manifest-MANAGED text index (the r13 "
-    "seam: the managed tier served only BM25/msearch, so a corpus "
-    "maintained through the manifest could not answer phrase queries "
-    "without a frozen rebuild): the managed postings now carry the "
+    doc="ES match_phrase on the manifest-MANAGED text index: the "
+    "managed postings carry the "
     "Lucene position-list shape, and the SAME phrase query is served "
     "at the pre-erasure snapshot (erased docs still phrase-match "
     "under version=) and at the live head (DV anti-join removes "
@@ -1495,9 +1444,9 @@ def q_managed_proximity_search(
     ORDER BY df DESC, term
     LIMIT 10
     """,
-    doc="snapshot-consistent completion suggester (the r13 seam: the "
-    "frozen build_term_dictionary artifact serves stale terms after "
-    "managed-index appends): df per term is ONE aggregate over the "
+    doc="snapshot-consistent completion suggester (a dictionary frozen "
+    "by materialize_dictionary serves stale terms after later "
+    "appends): df per term is ONE aggregate over the "
     "live (term, doc) postings at the read's snapshot — erased docs "
     "stop counting toward df the moment the DV commit lands, and "
     "suggest(version=) can never disagree with search(version=) at "
@@ -1537,8 +1486,8 @@ def q_managed_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ">=1 query term, bounded by the terms' document frequencies) "
     "joined to the docs dimension, so the facet counts are snapshot-"
     "consistent with search — a DV-erased doc drops out of every "
-    "facet bucket the moment the erasure commits (the frozen-index "
-    "facets would keep counting it until a rebuild)",
+    "facet bucket the moment the erasure commits (text_search_facets, "
+    "pinned to the pre-erasure snapshot, still counts it)",
 )
 def q_managed_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx, _v_full = managed_text_index(spark, sf_dir)
@@ -1555,7 +1504,7 @@ def q_managed_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # source doc for the managed MLT: must be LIVE in the erased artifact
-# (doc 7, the frozen MLT's source, is erased by doc_id % 5 = 2)
+# (doc 7, mlt_similar_docs' source, is erased by doc_id % 5 = 2)
 _MANAGED_MLT_DOC_ID = 11
 
 
@@ -1621,8 +1570,8 @@ _MANAGED_MLT_DOC_ID = 11
     "corpus stats (the Lucene contract the managed BM25 already "
     "hash-checks), the top-5 terms BM25-search the live snapshot with "
     "the source doc excluded — erased docs neither count toward df "
-    "nor appear as neighbors, completing the frozen-only retrieval "
-    "family (MLT/facets/suggest) on the managed tier",
+    "nor appear as neighbors — the live-head twin of "
+    "mlt_similar_docs, which pins the pre-erasure snapshot",
 )
 def q_managed_mlt(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx, _v_full = managed_text_index(spark, sf_dir)
@@ -1767,7 +1716,8 @@ def q_managed_highlight(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
     doc="hybrid retrieval with reciprocal-rank fusion (the ES 8 "
-    "`rrf` retriever): BM25 top-20 from the inverted index and "
+    "`rrf` retriever): BM25 top-20 from the managed index's "
+    "full-corpus snapshot and "
     "brute-force-exact cosine top-20 over the embeddings (vec_id keys "
     "the same documents) fused rank-based as Σ 1/(60+rank) — no score "
     "calibration between BM25's unbounded scale and cosine's [-1,1], "
@@ -1778,10 +1728,10 @@ def q_managed_highlight(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..operators.textindex import bm25_search, rrf_fuse
+    from ..operators.textindex import rrf_fuse
 
-    path = inverted_index_path(spark, sf_dir)
-    text = bm25_search(spark, path, _SEARCH_TERMS, k=20).select(
+    idx, v_full = managed_text_index(spark, sf_dir)
+    text = idx.bm25(_SEARCH_TERMS, k=20, version=v_full).select(
         "doc_id",
         F.row_number()
         .over(Window.orderBy(F.col("bm25").desc(), F.col("doc_id")))
@@ -1836,7 +1786,8 @@ _SIG_FG_TERM = "spark"
     SELECT term, fg_df, bg_df, jlh
     FROM sig ORDER BY jlh DESC, term LIMIT 15
     """,
-    doc="Elasticsearch `significant_terms` aggregation, index-served: "
+    doc="Elasticsearch `significant_terms` aggregation, served from "
+    "the managed index's full-corpus snapshot: "
     "terms over-represented in the foreground (docs matching "
     f"'{_SIG_FG_TERM}') vs the whole corpus, ranked by ES's default "
     "JLH heuristic (fg%−bg%)×(fg%/bg%) with the query term excluded; "
@@ -1847,10 +1798,8 @@ _SIG_FG_TERM = "spark"
     "the raw documents",
 )
 def q_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.textindex import significant_terms
-
-    path = inverted_index_path(spark, sf_dir)
-    return significant_terms(spark, path, [_SIG_FG_TERM], k=15)
+    idx, v_full = managed_text_index(spark, sf_dir)
+    return idx.significant_terms([_SIG_FG_TERM], k=15, version=v_full)
 
 
 _DECON_N = 8
@@ -3473,17 +3422,16 @@ _PHRASE = ["part", "filter"]
     ORDER BY n_matches DESC, doc_id
     LIMIT 10
     """,
-    doc="exact phrase search served from the POSITIONAL inverted index "
-    "(Lucene position-list shape): adjacency chains via shifted "
-    "position-list intersections over bucket-pruned postings — the "
-    "corpus text is never touched at query time; oracle = brute-force "
-    "adjacency count over the documents",
+    doc="exact phrase search served from the managed index's "
+    "POSITIONAL postings (Lucene position-list shape) at its "
+    "full-corpus snapshot: adjacency chains via shifted position-list "
+    "intersections over bucket-pruned postings — the corpus text is "
+    "never touched at query time; oracle = brute-force adjacency "
+    "count over the documents",
 )
 def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.textindex import phrase_search
-
-    path = positional_index_path(spark, sf_dir)
-    return phrase_search(spark, path, _PHRASE, k=10)
+    idx, v_full = managed_text_index(spark, sf_dir)
+    return idx.phrase_search(_PHRASE, k=10, version=v_full)
 
 
 @register(
@@ -3509,13 +3457,14 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_matches DESC, doc_id
     LIMIT 10
     """,
-    doc="proximity (slop ≤ 3, unordered) search from the positional "
-    "index: counts occurrences of the first term with the second "
+    doc="proximity (slop ≤ 3, unordered) search from the managed "
+    "index's positional postings at its full-corpus snapshot: counts "
+    "occurrences of the first term with the second "
     "within 3 positions — the Lucene slop-query analog completing the "
     "match / BM25 / phrase / proximity search family",
 )
 def q_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.textindex import proximity_search
-
-    path = positional_index_path(spark, sf_dir)
-    return proximity_search(spark, path, _PHRASE[0], _PHRASE[1], slop=3, k=10)
+    idx, v_full = managed_text_index(spark, sf_dir)
+    return idx.proximity_search(
+        _PHRASE[0], _PHRASE[1], slop=3, k=10, version=v_full
+    )

@@ -1314,15 +1314,17 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Streaming inverted-index maintenance: the continuously-maintained
-# search index.  Each micro-batch of newly-arrived documents appends
-# its postings to the term-hash-bucketed index directories (plus a
-# mergeable meta row) inside foreachBatch — the ingest side of the
-# build-once/query-many text-search story.  A file-stream source
-# delivers every document exactly once under availableNow, so appended
-# postings ≡ a full rebuild (pinned batch-boundary-independent in
-# tests/test_advanced_ops.py TestBM25 via mode="append"), and the
-# post-stream search must reproduce the brute-force scan ranking —
-# which is exactly what the oracle runs.
+# search index.  Each micro-batch of newly-arrived documents is one
+# `ManagedTextIndex.upsert` inside foreachBatch — a pruned MERGE commit
+# into the term-hash buckets plus a corpus-stats advance — the ingest
+# side of the build-once/query-many text-search story.  A file-stream
+# source delivers every document exactly once under availableNow, so
+# the appended postings ≡ a one-batch build (pinned
+# batch-boundary-independent in tests/test_advanced_ops.py
+# TestStreamIndexMaintenance), and the post-stream search must
+# reproduce the brute-force scan ranking — which is exactly what the
+# oracle runs.  `stream_managed_text_index` below is the multi-commit
+# variant (one commit per part file).
 # ---------------------------------------------------------------------------
 def _stream_index_sql() -> str:
     from .northstar import _TEXT_SEARCH_SQL
@@ -1333,13 +1335,14 @@ def _stream_index_sql() -> str:
 @register(
     "stream_index_maintenance",
     _stream_index_sql(),
-    doc="streaming inverted-index maintenance: per-micro-batch posting "
-    "appends (foreachBatch) into the bucket-partitioned index, then an "
-    "index-served search — stream-built index ≡ batch-built index ≡ "
+    doc="streaming inverted-index maintenance: each micro-batch is one "
+    "ManagedTextIndex.upsert (foreachBatch) — a pruned MERGE commit "
+    "into the term-hash bucket partitions — then an index-served "
+    "search at the head; stream-built index ≡ batch-built index ≡ "
     "brute-force scan, oracle-checked",
 )
 def q_stream_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.textindex import build_inverted_index, search_inverted_index
+    from ..operators.managed_text import ManagedTextIndex
     from .northstar import _SEARCH_TERMS
 
     schema = spark.read.parquet(
@@ -1347,19 +1350,19 @@ def q_stream_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).schema
     sdf = spark.readStream.schema(schema).parquet(_documents_path(sf_dir))
     wd = _workdir("stream_tidx")
-    idx = os.path.join(wd, "index")
+    idx = ManagedTextIndex(spark, os.path.join(wd, "index"))
 
-    def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        build_inverted_index(batch_df, idx, mode="append")
+    def index_batch(batch_df: DataFrame, batch_id: int) -> None:
+        idx.upsert(batch_df)
 
     (
-        sdf.writeStream.foreachBatch(append_batch)
+        sdf.writeStream.foreachBatch(index_batch)
         .option("checkpointLocation", os.path.join(wd, "ckpt"))
         .trigger(availableNow=True)
         .start()
         .awaitTermination()
     )
-    return search_inverted_index(spark, idx, _SEARCH_TERMS, k=10)
+    return idx.search(_SEARCH_TERMS, k=10)
 
 
 # ---------------------------------------------------------------------------
@@ -1845,7 +1848,7 @@ def _stream_mtx_sql() -> str:
     "terms' buckets rewrite; version-stamped corpus stats advance per "
     "commit), then a snapshot-isolated bucket-pruned search — "
     "stream-built ≡ batch-built ≡ brute-force scan, oracle-checked; "
-    "the manifest twin of stream_index_maintenance",
+    "the multi-commit sibling of stream_index_maintenance",
 )
 def q_stream_managed_text_index(
     spark: SparkSession, sf_dir: str

@@ -69,75 +69,68 @@ def register(name: str, oracle: Oracle = None, doc: str = ""):
 # dedup/ANN/curation north-star, and streaming.  Everything not listed
 # follows in registration order and stays covered by the in-repo
 # DuckDB-oracle pytest harness (tests/test_oracle_parity.py).
-# Round-14 rotation (generated by tools/rotation.py — run it to regen;
-# `--apply-check` verifies this tuple matches its proposal).  Window =
-# the fixed core SLIMMED to 3 for this round (VERDICT r13 item 2 —
-# every dropped name is multi-round green and re-enters via the
-# oldest-first green backfill); the rows-only CRASH-GATE slot
-# (dedup_simhash, strictly oldest rows-only row); the TEN new
-# round-14 queries (managed phrase/proximity/suggest/facets/MLT/
-# highlight, hybrid_rrf_search + its managed-tier twin,
-# significant_text_terms, decontam_ngram_overlap — first external
-# rows); then the ENTIRE 36-query r6/r7 external-vintage tail,
-# oldest-first — after this round no query's newest external row is
-# older than r8, and the vintage gate
-# (tests/test_rotation_vintage.py) keeps it that way.
-# Round-15 registration candidates (operators landed + unit-tested in
-# r14; the r14 window had no free slots): fuzzy_search /
-# bm25_search_after / collapse_search (frozen index),
-# ManagedTextIndex.fuzzy_search / .bm25_after, rrf_fuse_grouped
-# (batched hybrid).  Restore FIXED_CORE toward ~15 as slots free up.
+# The tuple is generated by tools/rotation.py — run it to regen;
+# `--apply-check` verifies this tuple matches its proposal.  Window =
+# the slimmed fixed core (3 names); the rows-only CRASH-GATE slot
+# (dedup_minhash_lsh, strictly oldest rows-only row); then the
+# stale-vintage tail, oldest external row first, so the vintage gate
+# (tests/test_rotation_vintage.py) holds: no query whose newest
+# external row is older than MAX_VINTAGE_ROUNDS sits outside it.
+# Registration candidates (operators landed + unit-tested, no window
+# slot yet): ManagedTextIndex.fuzzy_search / .bm25_after / .collapse,
+# rrf_fuse_grouped (batched hybrid).  Restore FIXED_CORE toward ~15
+# as slots free up.
 _PRIORITY_WINDOW = (
     "flagship_progress",
     "transcript_lookup",
     "stream_tumbling_append",
-    "dedup_simhash",
-    "managed_phrase_search",
-    "managed_proximity_search",
-    "managed_suggest_prefix",
-    "managed_text_facets",
-    "managed_mlt",
-    "managed_highlight",
-    "hybrid_rrf_search",
-    "managed_hybrid_rrf",
-    "significant_text_terms",
-    "decontam_ngram_overlap",
-    "stream_sliding_avg",
-    "stream_static_dim_join",
-    "top_supplier_revenue",
-    "twap_user_values",
-    "user_activity_streaks",
-    "vocab_growth_curve",
-    "weighted_sample_topk",
-    "centroid_confusion_matrix",
-    "dedup_groups",
-    "dedup_soft_weights",
-    "doc_fingerprints",
-    "doc_overlap_chunks",
-    "embedding_block_pairs",
-    "embedding_label_centroids",
-    "excess_supply_suppliers",
-    "fk_orphan_audit",
-    "forecast_revenue_change",
-    "hourly_baseline_outliers",
-    "knn_join_sample",
-    "lang_id_counts",
-    "modified_file_reingest",
-    "observed_scan_metrics",
-    "product_profit_by_nation",
-    "quality_percentile_by_lang",
-    "quality_weighted_sample",
-    "repetition_scores",
-    "sample_quota_per_lang",
-    "segment_mode_median",
-    "split_contamination",
-    "split_train_val_test",
-    "sql_monthly_nation_share",
-    "supplier_count_by_part",
-    "text_quality_scores",
-    "text_scrubbed",
-    "user_event_sequences",
-    "vocab_top_terms",
+    "dedup_minhash_lsh",
+    "big_qty_orders",
+    "clean_rows",
+    "customers_with_orders",
+    "customers_without_orders",
+    "dedup_fuzzy_clusters",
+    "derived_program_columns",
+    "late_ship_priority_counts",
+    "lenient_casts",
+    "manifest_change_feed",
+    "manifest_compaction_commits",
+    "manifest_delete_commits",
+    "manifest_incremental_commits",
+    "manifest_pruned_read",
+    "matview_incremental_refresh",
+    "matview_sketch_rollup",
+    "monthly_revenue_mom",
+    "nation_has_segment",
+    "prefix_cohort_join",
+    "reference_domain_report",
+    "region_nation_rollup",
+    "rich_idle_customers",
+    "segment_set_ops",
+    "small_qty_part_revenue",
+    "status_priority_cube",
+    "stream_cdc_tombstones",
+    "stream_manifest_commits",
+    "stream_matview_refresh",
+    "stream_near_dup_pairs",
+    "token_pack_assignments",
+    "token_pack_manifest",
+    "ann_lsh_topk",
+    "cdc_apply_latest",
+    "chunk_dedup_docs",
+    "composite_doc_key",
+    "cosine_topk",
+    "dedup_minhash_portable",
+    "dedup_simhash_portable",
+    "distinct_users_daily",
+    "doc_token_counts",
+    "event_type_pivot",
+    "ewma_user_values",
+    "hll_distinct_users",
+    "hll_user_overlap",
+    "incremental_event_stats",
+    "json_props_agg",
+    "manifest_bloom_point_read",
 )
 
 

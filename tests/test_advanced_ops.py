@@ -26,6 +26,16 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _buckets_read(df) -> int:
+    """Number of distinct term-bucket fragments the index scan reads
+    (`ManagedTextIndex` lists only the query terms' `__b=` buckets)."""
+    import re
+
+    files = df.inputFiles()
+    assert files and all("__b=" in f for f in files), files
+    return len({re.search(r"__b=(\d+)", f).group(1) for f in files})
+
+
 class TestPageRank:
     def test_mass_conservation_and_floor(self, spark):
         # ranks are BIGINT micro-units; integer floors only ever LOSE
@@ -183,29 +193,22 @@ class TestInvertedIndex:
         from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.text import (
             text_search,
         )
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (
-            build_inverted_index,
-            search_inverted_index,
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
 
         docs = load_table(spark, SF_SMALL, "documents")
-        path = str(tmp_path / "tidx")
         terms = ["spark", "merge", "window"]
-        build_inverted_index(docs, path)
-        idx = search_inverted_index(spark, path, terms, k=10)
+        mti = ManagedTextIndex(spark, str(tmp_path / "tidx"))
+        mti.upsert(docs)
+        idx = mti.search(terms, k=10)
         scan = text_search(docs, terms, k=10)
         assert [tuple(r) for r in idx.collect()] == [
             tuple(r) for r in scan.collect()
         ]
-        # the index read must partition-prune to the query terms'
-        # hash-bucket directories (≤ one per distinct term)
-        plan = _plan(idx)
-        import re
-
-        pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-        assert pf and "__b" in pf.group(1), plan
-        n_buckets = len(re.findall(r"\d+", pf.group(1).split("IN")[-1]))
-        assert 0 < n_buckets <= len(terms)
+        # the index read must prune to the query terms' hash-bucket
+        # fragments (≤ one per distinct term)
+        assert 0 < _buckets_read(idx) <= len(terms)
 
 
 class TestBM25:
@@ -213,24 +216,21 @@ class TestBM25:
         # index maintenance contract: building on half the corpus then
         # appending the other half's postings must serve IDENTICAL
         # search and BM25 results to a single full build
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (
-            bm25_search,
-            build_inverted_index,
-            search_inverted_index,
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
 
         docs = load_table(spark, SF_SMALL, "documents")
         terms = ["spark", "merge", "window"]
-        full, inc = str(tmp_path / "full"), str(tmp_path / "inc")
-        build_inverted_index(docs, full)
-        build_inverted_index(docs.filter(F.col("doc_id") % 2 == 0), inc)
-        build_inverted_index(
-            docs.filter(F.col("doc_id") % 2 == 1), inc, mode="append"
-        )
-        for fn in (search_inverted_index, bm25_search):
-            a = [tuple(r) for r in fn(spark, full, terms, k=10).collect()]
-            b = [tuple(r) for r in fn(spark, inc, terms, k=10).collect()]
-            assert a == b, fn.__name__
+        full = ManagedTextIndex(spark, str(tmp_path / "full"))
+        full.upsert(docs)
+        inc = ManagedTextIndex(spark, str(tmp_path / "inc"))
+        inc.upsert(docs.filter(F.col("doc_id") % 2 == 0))
+        inc.upsert(docs.filter(F.col("doc_id") % 2 == 1))
+        for fn in ("search", "bm25"):
+            a = [tuple(r) for r in getattr(full, fn)(terms, k=10).collect()]
+            b = [tuple(r) for r in getattr(inc, fn)(terms, k=10).collect()]
+            assert a == b, fn
 
     def test_bm25_scores_positive_and_rank_sane(self, spark):
         rows = _q("bm25_search_topk")(spark, SF_SMALL).collect()
@@ -250,30 +250,28 @@ class TestBM25:
 
     def test_msearch_identical_to_per_query_single_path(self, spark, tmp_path):
         # the _msearch contract: each query's (doc, bm25) rows are
-        # bit-identical to running bm25_search alone, and the batched
-        # index read prunes to the UNION of the queries' term buckets
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (
-            bm25_msearch,
-            bm25_search,
-            build_inverted_index,
+        # bit-identical to running bm25 alone, and the batched index
+        # read prunes to the UNION of the queries' term buckets
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
 
         docs = load_table(spark, SF_SMALL, "documents")
-        idx = str(tmp_path / "midx")
-        build_inverted_index(docs, idx)
+        idx = ManagedTextIndex(spark, str(tmp_path / "midx"))
+        idx.upsert(docs)
         queries = {
             1: ["spark", "merge", "window"],
             2: ["join", "hash"],
             3: ["nosuchterm"],
         }
-        got = bm25_msearch(spark, idx, queries, k=10).collect()
+        batched = idx.msearch(queries, k=10)
+        got = batched.collect()
         by_q = {}
         for r in got:
             by_q.setdefault(r.q_id, []).append((r.doc_id, r.bm25))
         for qid, terms in queries.items():
             single = [
-                (r.doc_id, r.bm25)
-                for r in bm25_search(spark, idx, terms, k=10).collect()
+                (r.doc_id, r.bm25) for r in idx.bm25(terms, k=10).collect()
             ]
             assert by_q.get(qid, []) == single, qid
         # ranks are 1..n per query, ordered with the single path
@@ -283,7 +281,8 @@ class TestBM25:
                 r.rank for r in got if r.q_id == qid
             )
             assert ranks == list(range(1, n + 1))
-
+        n_terms = len({t for ts in queries.values() for t in ts})
+        assert 0 < _buckets_read(batched) <= n_terms
 
 
 class TestIVFPQ:
@@ -305,13 +304,10 @@ class TestIVFPQ:
 
 class TestStreamIndexMaintenance:
     def test_batch_boundary_independent(self, spark, tmp_path):
-        # stream the corpus one FILE per micro-batch; the appended
-        # postings must serve the same search as a single batch build
-        import os
-
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (
-            build_inverted_index,
-            search_inverted_index,
+        # stream the corpus one FILE per micro-batch; the per-batch
+        # upserts must serve the same search as a single batch build
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
 
         docs = load_table(spark, SF_SMALL, "documents")
@@ -319,37 +315,29 @@ class TestStreamIndexMaintenance:
         docs.repartition(3).write.parquet(src)
         schema = spark.read.parquet(src).schema
 
-        idx = str(tmp_path / "idx")
+        idx = ManagedTextIndex(spark, str(tmp_path / "idx"))
         sdf = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
         (
-            sdf.writeStream.foreachBatch(
-                lambda b, _i: build_inverted_index(b, idx, mode="append")
-            )
+            sdf.writeStream.foreachBatch(lambda b, _i: idx.upsert(b))
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)
             .start()
             .awaitTermination()
         )
-        # >1 micro-batch actually ran (one per input file)
-        n_meta = spark.read.parquet(idx + "__meta").count()
-        assert n_meta >= 3
+        # >1 micro-batch actually ran (one commit per input file)
+        assert len(idx.table.versions()) >= 3
 
-        full = str(tmp_path / "full")
-        build_inverted_index(docs, full)
+        full = ManagedTextIndex(spark, str(tmp_path / "full"))
+        full.upsert(docs)
         terms = ["spark", "merge", "window"]
-        a = [
-            tuple(r)
-            for r in search_inverted_index(spark, idx, terms, k=10).collect()
-        ]
-        b = [
-            tuple(r)
-            for r in search_inverted_index(spark, full, terms, k=10).collect()
-        ]
+        a = [tuple(r) for r in idx.search(terms, k=10).collect()]
+        b = [tuple(r) for r in full.search(terms, k=10).collect()]
         assert a == b
+        assert idx._stats_at(None) == full._stats_at(None)
 
 
 class TestPrefixFilterJoin:
@@ -499,26 +487,21 @@ class TestParetoSkyline:
 
 class TestPhraseSearch:
     def test_positional_pruning_and_planted_phrase(self, spark, tmp_path):
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (
-            build_positional_index,
-            phrase_search,
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
 
         rows = [(1, "alpha beta gamma alpha beta"), (2, "beta alpha"),
                 (3, "alpha gamma beta"), (4, "alpha beta")]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        path = str(tmp_path / "pidx")
-        build_positional_index(docs, path)
+        idx = ManagedTextIndex(spark, str(tmp_path / "pidx"))
+        idx.upsert(docs)
         got = {(r.doc_id, r.n_matches)
-               for r in phrase_search(spark, path, ["alpha", "beta"], k=10).collect()}
+               for r in idx.phrase_search(["alpha", "beta"], k=10).collect()}
         # doc 1 has the phrase twice; doc 4 once; docs 2/3 have both
         # terms but never adjacent in order
         assert got == {(1, 2), (4, 1)}
-        plan = _plan(phrase_search(spark, path, ["alpha", "beta"], k=10))
-        import re
-
-        pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-        assert pf and "__b" in pf.group(1)
+        assert 0 < _buckets_read(idx.phrase_search(["alpha", "beta"], k=10)) <= 2
 
 
 class TestStagingCollision:
@@ -554,15 +537,14 @@ class TestMoreLikeThis:
     def test_mlt_sane_and_missing_doc_raises(self, spark, tmp_path):
         import pytest
 
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (
-            build_inverted_index,
-            more_like_this,
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
 
         docs = load_table(spark, SF_SMALL, "documents")
-        idx = str(tmp_path / "mlt")
-        build_inverted_index(docs, idx)
-        hits = more_like_this(spark, idx, docs, 7, m=5, k=10).collect()
+        idx = ManagedTextIndex(spark, str(tmp_path / "mlt"))
+        idx.upsert(docs)
+        hits = idx.more_like_this(docs, 7, m=5, k=10).collect()
         assert 0 < len(hits) <= 10
         assert all(r.doc_id != 7 for r in hits)  # source excluded
         scores = [r.bm25 for r in hits]
@@ -575,19 +557,23 @@ class TestMoreLikeThis:
         assert src_terms & set(top.text.lower().split())
 
         with pytest.raises(ValueError, match="not found"):
-            more_like_this(spark, idx, docs, -999)
+            idx.more_like_this(docs, -999)
 
 
 class TestSuggest:
     def test_prefix_completion_prunes_to_one_partition(self, spark, tmp_path):
         from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (
-            build_term_dictionary,
             suggest_terms,
+        )
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
 
         docs = load_table(spark, SF_SMALL, "documents")
+        idx = ManagedTextIndex(spark, str(tmp_path / "idx"))
+        idx.upsert(docs)
         d = str(tmp_path / "dict")
-        build_term_dictionary(docs, d)
+        idx.materialize_dictionary(d)
         got = suggest_terms(spark, d, "s", k=10)
         rows = got.collect()
         assert rows and all(r.term.startswith("s") for r in rows)
@@ -667,9 +653,8 @@ class TestSignificantTerms:
         """4-doc corpus, fg term 'x' in docs 0,1.  Term 'a' is in both
         fg docs and nowhere else (max JLH); 'b' is in one fg and one
         bg doc; the fg term itself is excluded."""
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (  # noqa: E501
-            build_inverted_index,
-            significant_terms,
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
 
         docs = spark.createDataFrame(
@@ -681,11 +666,11 @@ class TestSignificantTerms:
             ],
             "doc_id long, text string",
         )
-        path = str(tmp_path / "sig")
-        build_inverted_index(docs, path)
+        idx = ManagedTextIndex(spark, str(tmp_path / "sig"))
+        idx.upsert(docs)
         got = {
             r.term: (r.fg_df, r.bg_df, r.jlh)
-            for r in significant_terms(spark, path, ["x"], k=10).collect()
+            for r in idx.significant_terms(["x"], k=10).collect()
         }
         assert "x" not in got
 
@@ -701,17 +686,17 @@ class TestSignificantTerms:
         # 'd' never appears in a foreground doc -> no row
         assert "d" not in got
         # ranking: 'a' strictly dominates
-        top = significant_terms(spark, path, ["x"], k=1).head()
+        top = idx.significant_terms(["x"], k=1).head()
         assert top.term == "a"
 
     def test_empty_fg_terms_rejected(self, spark, tmp_path):
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (  # noqa: E501
-            significant_terms,
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
         import pytest
 
         with pytest.raises(ValueError, match="foreground"):
-            significant_terms(spark, str(tmp_path / "nope"), [])
+            ManagedTextIndex(spark, str(tmp_path / "nope")).significant_terms([])
 
 
 class TestNgramDecontaminate:
@@ -759,9 +744,8 @@ class TestNgramDecontaminate:
 
 class TestFuzzySearch:
     def _fixture(self, spark, tmp_path):
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (  # noqa: E501
-            build_inverted_index,
-            build_term_dictionary,
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
 
         docs = spark.createDataFrame(
@@ -773,56 +757,42 @@ class TestFuzzySearch:
             ],
             "doc_id long, text string",
         )
-        idx = str(tmp_path / "fidx")
-        dic = str(tmp_path / "fdict")
-        build_inverted_index(docs, idx)
-        build_term_dictionary(docs, dic)
-        return docs, idx, dic
+        idx = ManagedTextIndex(spark, str(tmp_path / "fidx"))
+        idx.upsert(docs)
+        return idx
 
     def test_expansion_ranking_and_auto(self, spark, tmp_path):
         from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (  # noqa: E501
             auto_fuzziness,
-            fuzzy_expand,
         )
 
-        _, _, dic = self._fixture(spark, tmp_path)
+        idx = self._fixture(spark, tmp_path)
         assert [auto_fuzziness(t) for t in ("a", "xy", "abc", "abcde",
                                             "abcdef")] == [0, 0, 1, 1, 2]
         # q len 5 -> AUTO f=1: spark/spars/spar at dist 1; sparse is 2
-        got = fuzzy_expand(spark, dic, ["sparc"]).collect()
+        got = idx.fuzzy_expand(["sparc"]).collect()
         assert [(r.term, r.dist) for r in got] == [
             ("spark", 1),  # df 2 beats spars/spar (df 1 each)
             ("spar", 1),
             ("spars", 1),
         ]
         # len<=2 -> f=0: exact term only
-        got = fuzzy_expand(spark, dic, ["xy"]).collect()
+        got = idx.fuzzy_expand(["xy"]).collect()
         assert [(r.term, r.dist) for r in got] == [("xy", 0)]
         # max_expansions caps the per-term list
-        got = fuzzy_expand(spark, dic, ["sparc"], max_expansions=2).collect()
+        got = idx.fuzzy_expand(["sparc"], max_expansions=2).collect()
         assert [r.term for r in got] == ["spark", "spar"]
 
     def test_fuzzy_search_equals_bm25_over_expansion(self, spark, tmp_path):
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (  # noqa: E501
-            bm25_search,
-            fuzzy_search,
-        )
-
-        _, idx, dic = self._fixture(spark, tmp_path)
-        got = fuzzy_search(spark, idx, dic, ["sparc"], k=10).collect()
-        want = bm25_search(
-            spark, idx, ["spar", "spark", "spars"], k=10
-        ).collect()
+        idx = self._fixture(spark, tmp_path)
+        got = idx.fuzzy_search(["sparc"], k=10).collect()
+        want = idx.bm25(["spar", "spark", "spars"], k=10).collect()
         assert [tuple(r) for r in got] == [tuple(r) for r in want]
         assert got[0].doc_id == 0  # the spark-heavy doc wins
 
     def test_no_expansion_is_empty_with_index_schema(self, spark, tmp_path):
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (  # noqa: E501
-            fuzzy_search,
-        )
-
-        _, idx, dic = self._fixture(spark, tmp_path)
-        out = fuzzy_search(spark, idx, dic, ["qqqqqqqq"], fuzziness=0)
+        idx = self._fixture(spark, tmp_path)
+        out = idx.fuzzy_search(["qqqqqqqq"], fuzziness=0)
         assert out.count() == 0
         assert dict(out.dtypes) == {"doc_id": "bigint", "bm25": "double"}
 
@@ -832,10 +802,8 @@ class TestSearchAfter:
         """Paging 3-at-a-time through the whole result set reproduces
         the one-shot ranking exactly — no skip, no dup, including
         across score ties (every doc here shares tf=1 so ties abound)."""
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (  # noqa: E501
-            bm25_search,
-            bm25_search_after,
-            build_inverted_index,
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
 
         docs = spark.createDataFrame(
@@ -843,15 +811,14 @@ class TestSearchAfter:
              for i in range(10)],
             "doc_id long, text string",
         )
-        idx = str(tmp_path / "pidx")
-        build_inverted_index(docs, idx)
-        full = [tuple(r) for r in bm25_search(
-            spark, idx, ["common"], k=100).collect()]
+        idx = ManagedTextIndex(spark, str(tmp_path / "pidx"))
+        idx.upsert(docs)
+        full = [tuple(r) for r in idx.bm25(["common"], k=100).collect()]
         assert len(full) == 10
         paged, after = [], None
         while True:
-            page = [tuple(r) for r in bm25_search_after(
-                spark, idx, ["common"], after=after, page_size=3
+            page = [tuple(r) for r in idx.bm25_after(
+                ["common"], after=after, page_size=3
             ).collect()]
             if not page:
                 break
@@ -860,22 +827,19 @@ class TestSearchAfter:
         assert paged == full
 
     def test_first_page_equals_topk(self, spark, tmp_path):
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (  # noqa: E501
-            bm25_search,
-            bm25_search_after,
-            build_inverted_index,
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
 
         docs = spark.createDataFrame(
             [(i, f"t{i} shared") for i in range(6)],
             "doc_id long, text string",
         )
-        idx = str(tmp_path / "pidx2")
-        build_inverted_index(docs, idx)
-        a = [tuple(r) for r in bm25_search(
-            spark, idx, ["shared"], k=4).collect()]
-        b = [tuple(r) for r in bm25_search_after(
-            spark, idx, ["shared"], page_size=4).collect()]
+        idx = ManagedTextIndex(spark, str(tmp_path / "pidx2"))
+        idx.upsert(docs)
+        a = [tuple(r) for r in idx.bm25(["shared"], k=4).collect()]
+        b = [tuple(r) for r in idx.bm25_after(
+            ["shared"], page_size=4).collect()]
         assert a == b
 
 
@@ -883,10 +847,8 @@ class TestCollapseSearch:
     def test_collapse_groups_and_inner_hits(self, spark, tmp_path):
         """Groups ranked by their best hit; inner_k bounds hits per
         group; hit_rank is the within-group BM25 order."""
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (  # noqa: E501
-            bm25_search,
-            build_inverted_index,
-            collapse_search,
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (  # noqa: E501
+            ManagedTextIndex,
         )
 
         docs = spark.createDataFrame(
@@ -899,14 +861,11 @@ class TestCollapseSearch:
             ],
             "doc_id long, text string, lang string",
         )
-        idx = str(tmp_path / "cidx")
-        build_inverted_index(docs, idx)
-        full = {r.doc_id: r.bm25 for r in bm25_search(
-            spark, idx, ["hit"], k=10).collect()}
+        idx = ManagedTextIndex(spark, str(tmp_path / "cidx"))
+        idx.upsert(docs)
+        full = {r.doc_id: r.bm25 for r in idx.bm25(["hit"], k=10).collect()}
 
-        got = collapse_search(
-            spark, idx, docs, ["hit"], "lang", k=10, inner_k=1
-        ).collect()
+        got = idx.collapse(docs, ["hit"], "lang", k=10, inner_k=1).collect()
         # one row per matched group, ordered by its best hit's score
         assert [(r.lang, r.doc_id, r.hit_rank) for r in got] == [
             ("fr", 3, 1),
@@ -919,9 +878,7 @@ class TestCollapseSearch:
         for r in got:
             assert r.bm25 == full[r.doc_id]
 
-        got2 = collapse_search(
-            spark, idx, docs, ["hit"], "lang", k=1, inner_k=2
-        ).collect()
+        got2 = idx.collapse(docs, ["hit"], "lang", k=1, inner_k=2).collect()
         assert len(got2) == 2  # one group survives k=1, two inner hits
         assert {r.lang for r in got2} == {got2[0].lang}
         assert [r.hit_rank for r in got2] == [1, 2]

@@ -1,24 +1,16 @@
-"""Right-to-erasure on the text index (round 12, Lucene live-docs
-pattern): tombstoned docs vanish from every query surface immediately,
-BM25 corpus stats stay pre-delete until compaction (Lucene semantics),
-and `compact_index` makes the index indistinguishable from a fresh
-build over the remaining documents."""
-
-import os
+"""Right-to-erasure on the text index (the Lucene liveDocs pattern, as
+`ManagedTextIndex` deletion-vector commits): erased docs vanish from
+every query surface immediately, BM25 corpus stats stay pre-delete
+until compaction (Lucene semantics), and `compact` makes the index
+indistinguishable from a fresh build over the remaining documents."""
 
 from pyspark.sql import functions as F
 
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.datasets import (
     load_table,
 )
-from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.textindex import (
-    bm25_search,
-    build_inverted_index,
-    build_positional_index,
-    compact_index,
-    delete_docs,
-    phrase_search,
-    search_inverted_index,
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.managed_text import (
+    ManagedTextIndex,
 )
 
 from .conftest import SF_SMALL
@@ -35,59 +27,51 @@ def _rows(df):
     return [tuple(r) for r in df.collect()]
 
 
+def _built(spark, path, docs):
+    idx = ManagedTextIndex(spark, path)
+    idx.upsert(docs)
+    return idx
+
+
 def test_tombstoned_search_equals_rebuild_on_remaining(spark, tmp_path):
     docs = _docs(spark)
-    full = str(tmp_path / "full")
-    build_inverted_index(docs, full)
-    delete_docs(spark, full, docs.filter(F.expr(PRED)).select("doc_id"))
+    full = _built(spark, str(tmp_path / "full"), docs)
+    full.delete(docs.filter(F.expr(PRED)).select("doc_id"))
 
-    fresh = str(tmp_path / "fresh")
-    build_inverted_index(docs.filter(~F.expr(PRED)), fresh)
+    fresh = _built(spark, str(tmp_path / "fresh"), docs.filter(~F.expr(PRED)))
 
-    got = _rows(search_inverted_index(spark, full, TERMS, k=10))
-    want = _rows(search_inverted_index(spark, fresh, TERMS, k=10))
+    got = _rows(full.search(TERMS, k=10))
+    want = _rows(fresh.search(TERMS, k=10))
     assert got == want
     assert all(r[0] % 3 != 1 for r in got)
 
 
 def test_delete_is_idempotent(spark, tmp_path):
     docs = _docs(spark)
-    idx = str(tmp_path / "idx")
-    build_inverted_index(docs, idx)
+    idx = _built(spark, str(tmp_path / "idx"), docs)
     ids = docs.filter(F.expr(PRED)).select("doc_id")
-    delete_docs(spark, idx, ids)
-    once = _rows(search_inverted_index(spark, idx, TERMS, k=10))
-    delete_docs(spark, idx, ids)
-    assert _rows(search_inverted_index(spark, idx, TERMS, k=10)) == once
+    idx.delete(ids)
+    once = _rows(idx.search(TERMS, k=10))
+    idx.delete(ids)
+    assert _rows(idx.search(TERMS, k=10)) == once
 
 
 def test_compact_purges_and_equals_fresh_build(spark, tmp_path):
     docs = _docs(spark)
-    full = str(tmp_path / "full")
-    build_inverted_index(docs, full)
-    delete_docs(spark, full, docs.filter(F.expr(PRED)).select("doc_id"))
-    compact_index(spark, full)
+    full = _built(spark, str(tmp_path / "full"), docs)
+    full.delete(docs.filter(F.expr(PRED)).select("doc_id"))
+    full.compact()
 
-    fresh = str(tmp_path / "fresh")
-    build_inverted_index(docs.filter(~F.expr(PRED)), fresh)
+    fresh = _built(spark, str(tmp_path / "fresh"), docs.filter(~F.expr(PRED)))
 
-    # tombstones gone; postings physically purged
-    assert not os.path.exists(full + "__deletes")
-    remaining = spark.read.parquet(full)
+    # deletion vectors materialized; postings physically purged
+    remaining = full.table.read()
     assert remaining.filter(F.expr(PRED)).count() == 0
 
-    # BM25 ranks identically to the fresh build: compaction refreshed
-    # the meta sidecar, so N/avgdl (idf + norms) are exact again
-    got = _rows(bm25_search(spark, full, TERMS, k=10))
-    want = _rows(bm25_search(spark, fresh, TERMS, k=10))
-    assert got == want
-
-    m_full = spark.read.parquet(full + "__meta").collect()[0]
-    m_fresh = spark.read.parquet(fresh + "__meta").collect()[0]
-    assert (m_full["n_docs"], m_full["total_dl"]) == (
-        m_fresh["n_docs"],
-        m_fresh["total_dl"],
-    )
+    # BM25 ranks identically to the fresh build: compaction rewrote the
+    # corpus stats, so N/avgdl (idf + norms) are exact again
+    assert _rows(full.bm25(TERMS, k=10)) == _rows(fresh.bm25(TERMS, k=10))
+    assert full._stats_at(None) == fresh._stats_at(None)
 
 
 def test_bm25_stats_stale_until_compact_lucene_semantics(spark, tmp_path):
@@ -95,95 +79,49 @@ def test_bm25_stats_stale_until_compact_lucene_semantics(spark, tmp_path):
     still count in N/avgdl — exactly Lucene's deletes-don't-touch-
     stats-until-merge.  After compaction the stats are exact."""
     docs = _docs(spark)
-    idx = str(tmp_path / "idx")
-    build_inverted_index(docs, idx)
-    n_before = spark.read.parquet(idx + "__meta").collect()[0]["n_docs"]
-    delete_docs(spark, idx, docs.filter(F.expr(PRED)).select("doc_id"))
-    got = _rows(bm25_search(spark, idx, TERMS, k=10))
+    idx = _built(spark, str(tmp_path / "idx"), docs)
+    n_before = idx._stats_at(None)["n_docs"]
+    idx.delete(docs.filter(F.expr(PRED)).select("doc_id"))
+    got = _rows(idx.bm25(TERMS, k=10))
     assert all(r[0] % 3 != 1 for r in got)  # results: live docs only
-    assert (
-        spark.read.parquet(idx + "__meta").collect()[0]["n_docs"]
-        == n_before
-    )  # stats: untouched
-    compact_index(spark, idx)
-    assert (
-        spark.read.parquet(idx + "__meta").collect()[0]["n_docs"]
-        < n_before
-    )
+    assert idx._stats_at(None)["n_docs"] == n_before  # stats: untouched
+    idx.compact()
+    assert idx._stats_at(None)["n_docs"] < n_before
 
 
 def test_positional_index_erasure(spark, tmp_path):
     docs = _docs(spark)
-    idx = str(tmp_path / "pos")
-    build_positional_index(docs, idx)
+    idx = _built(spark, str(tmp_path / "pos"), docs)
     phrase = ["the", "spark"]
-    before = _rows(phrase_search(spark, idx, phrase, k=10))
+    before = _rows(idx.phrase_search(phrase, k=10))
     if not before:
         import pytest
 
         pytest.skip("fixture has no phrase hits to erase")
     victim = before[0][0]
-    delete_docs(spark, idx, [victim])
-    after = _rows(phrase_search(spark, idx, phrase, k=10))
+    idx.delete([victim])
+    after = _rows(idx.phrase_search(phrase, k=10))
     assert all(r[0] != victim for r in after)
-    compact_index(spark, idx)  # positional index has no meta sidecar
-    assert _rows(phrase_search(spark, idx, phrase, k=10)) == after
+    idx.compact()
+    assert _rows(idx.phrase_search(phrase, k=10)) == after
 
 
 def test_string_id_iterable_delete(spark, tmp_path):
-    """delete_docs derives the tombstone type from the INDEX's id
-    column, so string-id indexes work on the plain-iterable path and
-    alternating DataFrame/iterable calls never mix tombstone types."""
+    """delete() takes an iterable of ids or a DataFrame of them, so
+    string-id indexes work on both paths and alternating the two
+    forms erases the union."""
     docs = _docs(spark).select(
         F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("doc_id"),
         "text",
     )
-    idx = str(tmp_path / "sidx")
-    build_inverted_index(docs, idx)
-    hit_ids = [
-        r.doc_id for r in search_inverted_index(spark, idx, TERMS, k=3).collect()
-    ]
-    delete_docs(spark, idx, hit_ids[:1])  # iterable of strings
-    delete_docs(
-        spark,
-        idx,
+    idx = _built(spark, str(tmp_path / "sidx"), docs)
+    hit_ids = [r.doc_id for r in idx.search(TERMS, k=3).collect()]
+    idx.delete(hit_ids[:1])  # iterable of strings
+    idx.delete(
         spark.createDataFrame([(hit_ids[1],)], "doc_id string"),
-    )  # DataFrame form appended to the same tombstone parquet
-    left = {
-        r.doc_id for r in search_inverted_index(spark, idx, TERMS, k=10).collect()
-    }
+    )  # DataFrame form, a second deletion-vector commit
+    left = {r.doc_id for r in idx.search(TERMS, k=10).collect()}
     assert hit_ids[0] not in left and hit_ids[1] not in left
-    compact_index(spark, idx)
-    after = {
-        r.doc_id for r in search_inverted_index(spark, idx, TERMS, k=10).collect()
-    }
+    idx.compact()
+    after = {r.doc_id for r in idx.search(TERMS, k=10).collect()}
     assert after == left
-
-
-def test_swap_crash_window_recovers(spark, tmp_path):
-    """compact_index's rename-aside swap has a window where the index
-    dir is absent; `_recover_swap` (probed by every entry point) rolls
-    a crash there forward to the fully-written replacement, or back to
-    the set-aside original — queries keep answering either way."""
-    import shutil
-
-    docs = _docs(spark)
-    idx = str(tmp_path / "cidx")
-    build_inverted_index(docs, idx)
-    delete_docs(spark, idx, docs.filter(F.expr(PRED)).select("doc_id"))
-    want = _rows(search_inverted_index(spark, idx, TERMS, k=10))
-
-    # crash AFTER set-aside, BEFORE the forward rename, replacement not
-    # yet complete (no __compacting): roll BACK to __old — tombstones
-    # still present, so results are unchanged
-    os.replace(idx, idx + "__old")
-    assert _rows(search_inverted_index(spark, idx, TERMS, k=10)) == want
-
-    # crash BETWEEN the two renames with the replacement fully written
-    # (__compacting + _SUCCESS): roll FORWARD
-    compact_index(spark, idx)  # clean state, tombstones purged
-    want2 = _rows(search_inverted_index(spark, idx, TERMS, k=10))
-    shutil.copytree(idx, idx + "__compacting")
-    os.replace(idx, idx + "__old2")  # not a recovery-known name
-    assert _rows(search_inverted_index(spark, idx, TERMS, k=10)) == want2
-    assert os.path.isdir(idx) and not os.path.exists(idx + "__compacting")

@@ -212,18 +212,18 @@ def build_scaled_dir(
 
 def warm_artifacts(spark, sf_dir: str) -> dict[str, float]:
     """Build the one-time per-fixture artifacts the serve queries read
-    (inverted index for bm25, edge table for pagerank), each timed —
+    (managed text index for bm25, edge table for pagerank), each timed —
     these are ingest-time costs, not per-query costs."""
     from _big_data_analytics_and_visualization_tracking_student_progress__spark.queries.advanced import (  # noqa: E501
         graph_edges_path,
     )
     from _big_data_analytics_and_visualization_tracking_student_progress__spark.queries.northstar import (  # noqa: E501
-        inverted_index_path,
+        managed_text_index,
     )
 
     wanted = []
     if any("bm25" in q or "text_search" in q or "index" in q for q in QUERIES):
-        wanted.append(("inverted_index", inverted_index_path))
+        wanted.append(("managed_text_index", managed_text_index))
     if any(q.startswith("graph_") for q in QUERIES):
         wanted.append(("graph_edges", graph_edges_path))
     if any("ivf" in q or "pq" in q for q in QUERIES):
