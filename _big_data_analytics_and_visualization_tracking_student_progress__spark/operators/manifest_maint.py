@@ -400,11 +400,13 @@ class _ManifestMaintMixin:
                 # set; the whole file tier lands in THIS version's
                 # sidecar (and any inline legacy file_stats dies with
                 # the rewrite)
-                doc["stats"], new_ffs = self._compute_stats_both(new_v)
+                doc["stats"], new_ffs = self._compute_stats_both(
+                    new_v, doc["schema"]
+                )
                 if new_ffs:
                     self._write_fstats_sidecar(vdir, new_ffs)
                     doc["fstats_v"] = {f: new_v for f in new_ffs}
-            self._write_blooms(new_v, vdir)
+            self._write_blooms(new_v, vdir, doc["schema"])
             with open(os.path.join(vdir, "manifest.json"), "w") as fh:
                 json.dump(doc, fh, sort_keys=True)
         except BaseException:

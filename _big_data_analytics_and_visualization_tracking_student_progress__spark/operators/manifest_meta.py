@@ -497,7 +497,9 @@ class _ManifestMetaMixin:
         fragment-filtered pyarrow read."""
         if not self.stats_cols:
             return
-        new_fs, new_ffs = self._compute_stats_both(new_v)
+        new_fs, new_ffs = self._compute_stats_both(
+            new_v, doc.get("schema")
+        )
         stats = {
             f: s
             for f, s in prev_doc.get("stats", {}).items()

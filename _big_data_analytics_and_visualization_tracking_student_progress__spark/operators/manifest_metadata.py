@@ -270,6 +270,20 @@ class _ManifestMetadataMixin:
         except (OSError, ValueError):
             return None
 
+    def _reader(self, v: int, schema: list | None):
+        """Parquet reader rooted at version ``v``'s data dir, given the
+        schema ([name, DDL type] pairs) that version's commit records
+        when there is one, so no scan built from it runs a
+        schema-inference job.  A commit scanning its own new files
+        passes the schema it is about to record (its manifest is not
+        on disk yet)."""
+        reader = self.spark.read.option("basePath", self._data_dir(v))
+        if schema:
+            reader = reader.schema(
+                ", ".join(f"`{n}` {t}" for n, t in schema)
+            )
+        return reader
+
     def _scan_version(
         self, v: int, paths: list[str], with_pos: bool
     ) -> DataFrame:
@@ -290,13 +304,7 @@ class _ManifestMetadataMixin:
         commit paths build 6-12 fragment scans per storage query at
         ~0.1-0.2 s each, most of it this inference.  Legacy docs
         without a recorded schema keep the inference path."""
-        reader = self.spark.read.option("basePath", self._data_dir(v))
-        sch = self._holder_schema(v)
-        if sch:
-            reader = reader.schema(
-                ", ".join(f"`{n}` {t}" for n, t in sch)
-            )
-        df = reader.parquet(*sorted(paths))
+        df = self._reader(v, self._holder_schema(v)).parquet(*sorted(paths))
         if with_pos:
             df = df.select(
                 "*",
@@ -322,9 +330,10 @@ class _ManifestMetadataMixin:
     _BLOOM_DOC = "blooms.json"  # legacy monolithic doc (read-only)
     _BLOOM_SIDECAR = "blooms.parquet"
 
-    def _compute_blooms(self, new_v: int) -> dict:
+    def _compute_blooms(self, new_v: int, schema: list | None) -> dict:
         """Bloom sidecar content for the files just written under
-        ``new_v``: {fragment → {file → {col → {"m", "k", "bits"}}}}.
+        ``new_v`` (recorded ``schema``, see `_reader`):
+        {fragment → {file → {col → {"m", "k", "bits"}}}}.
         One engine-side job, fully distributed: per row, k candidate
         bit positions per bloom column, folded straight into 4 KiB
         bitmap chunks by the JVM's ``bitmap_construct_agg`` per (file,
@@ -349,7 +358,7 @@ class _ManifestMetadataMixin:
         )
         if not has_files:
             return {}
-        df = self.spark.read.option("basePath", data_dir).parquet(data_dir)
+        df = self._reader(new_v, schema).parquet(data_dir)
         present = [c for c in self.bloom_cols if c in df.columns]
         if not present:
             return {}
@@ -437,7 +446,7 @@ class _ManifestMetadataMixin:
                     e["bits"] = bytes(e["bits"])
         return out
 
-    def _write_blooms(self, new_v: int, vdir: str) -> None:
+    def _write_blooms(self, new_v: int, vdir: str, schema: list) -> None:
         """Write the version's bloom sidecar (no-op without bloom_cols
         or data files) as PARQUET rows (frag, file, col, m, k, bits) —
         fragment-filterable, so a point probe reads only the surviving
@@ -451,7 +460,7 @@ class _ManifestMetadataMixin:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        blooms = self._compute_blooms(new_v)
+        blooms = self._compute_blooms(new_v, schema)
         if not blooms:
             return
         rows: dict[str, list] = {

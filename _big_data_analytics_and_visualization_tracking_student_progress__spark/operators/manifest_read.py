@@ -341,9 +341,10 @@ class _ManifestReadMixin:
     _ROWS_KEY = "#rows"
 
     def _compute_stats_both(
-        self, new_v: int
+        self, new_v: int, schema: list | None
     ) -> tuple[dict, dict]:
-        """Zone maps for the files just written under ``new_v``, BOTH
+        """Zone maps for the files just written under ``new_v``
+        (recorded ``schema``, see `_reader`), BOTH
         tiers without re-scanning the data: per-file [min, max]
         envelopes for ``stats_cols`` come straight from the parquet
         FOOTERS the write already produced (column-chunk statistics are
@@ -356,8 +357,8 @@ class _ManifestReadMixin:
         touching data.  Returns ``(fragment_stats, file_stats)``.
 
         Fallback: a stats column whose footer statistics are missing
-        or not provably exact (strings can be truncated by the writer,
-        float stats misbehave around NaN) sends the whole computation
+        or not provably exact (float stats misbehave around NaN; the
+        writer drops string stats over 4 KiB) sends the whole computation
         down the original one-pass Spark aggregate (`_stats_over`), so
         the envelopes are bit-identical either way — the footer path
         is purely an optimization (measured 0.02 s vs 0.57 s per
@@ -380,15 +381,20 @@ class _ManifestReadMixin:
         footer = self._stats_from_footers(data_dir, files)
         if footer is not None:
             return footer
-        df = self.spark.read.option("basePath", data_dir).parquet(data_dir)
-        return self._stats_over(df)
+        return self._stats_over(self._reader(new_v, schema).parquet(data_dir))
 
     # Parquet physical types whose column-chunk min/max are exact and
-    # JSON-representable.  Strings are excluded (writers may truncate
-    # binary stats), floats are excluded (NaN handling differs across
-    # writers), date/timestamp logical types are excluded (their Python
-    # values are not JSON-serializable like the Spark-aggregate path's).
-    _FOOTER_EXACT_PHYSICAL = ("INT32", "INT64", "BOOLEAN")
+    # JSON-representable.  BYTE_ARRAY qualifies only as a UTF8 string
+    # (pyarrow decodes those to `str`; raw binary decodes to `bytes`
+    # and is refused below): Spark's parquet writer records string
+    # stats untruncated under the unsigned byte-wise order that
+    # Spark's own string comparison and Python's code-point order both
+    # follow, and drops them entirely (``has_min_max`` False, so the
+    # Spark path runs) for a value over 4 KiB.  Floats are excluded
+    # (NaN handling differs across writers), date/timestamp logical
+    # types are excluded (their Python values are not
+    # JSON-serializable like the Spark-aggregate path's).
+    _FOOTER_EXACT_PHYSICAL = ("INT32", "INT64", "BOOLEAN", "BYTE_ARRAY")
 
     def _stats_from_footers(
         self, data_dir: str, files: list[str]
@@ -443,12 +449,18 @@ class _ManifestReadMixin:
                         if st.num_values == 0:
                             continue  # all-NULL row group: no envelope
                         return None
-                    smn, smx = st.min, st.max
-                    # exact only for plain int/bool values — a logical
-                    # type that decodes to date/datetime/decimal lands
-                    # here as a non-int and sends us to the Spark path
-                    if not isinstance(smn, (int, bool)) or not isinstance(
-                        smx, (int, bool)
+                    try:
+                        smn, smx = st.min, st.max
+                    except UnicodeDecodeError:
+                        # a Spark string holding invalid UTF-8 (e.g. a
+                        # cast from binary) has undecodable stats
+                        return None
+                    # exact only for plain int/bool/str values — a
+                    # logical type that decodes to date/datetime/decimal
+                    # (or raw binary to bytes) lands here as something
+                    # else and sends us to the Spark path
+                    if not isinstance(smn, (int, str)) or type(smn) is not type(
+                        smx
                     ):
                         return None
                     mn = smn if mn is None else min(mn, smn)

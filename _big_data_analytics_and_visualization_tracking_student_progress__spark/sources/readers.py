@@ -88,7 +88,18 @@ def read_excel(spark: SparkSession, path: str) -> DataFrame:
     driver-localized, which matches the ingest shape: workbooks are
     small operational drops that immediately land in a distributed
     format (pro.py pushes rows to Kafka one by one; a 100 TB corpus
-    never arrives as a spreadsheet)."""
+    never arrives as a spreadsheet).
+
+    The frame is built from a ``pyarrow.Table`` typed by the resolved
+    schema, so Spark holds the sheet as a JVM ``LocalRelation``: every
+    action over it (the drop-folder ingest's row-hash collect and its
+    changed-rows log append) reads JVM memory instead of running a
+    Python worker over a pickled list.  Schema, values and therefore
+    ``row_hash`` are exactly those of ``createDataFrame(rows,
+    schema)`` (pinned by tests/test_excel_source.py), so a sheet parsed
+    by either construction diffs to zero changed rows."""
+    import pyarrow as pa
+
     from .xls import CFB_SIG, read_xls_rows
     from .xlsx import read_xlsx_rows
 
@@ -110,18 +121,24 @@ def read_excel(spark: SparkSession, path: str) -> DataFrame:
         return "string"
 
     types = [col_type(i) for i in range(len(header))]
-    norm = [
-        tuple(
-            v if v is None or types[i] != "string" or isinstance(v, str)
-            else str(v)
-            for i, v in enumerate(r)
+    arrow_type = {"boolean": pa.bool_(), "double": pa.float64(),
+                  "string": pa.string()}
+    columns = [
+        pa.array(
+            [
+                r[i] if r[i] is None or t != "string" or isinstance(r[i], str)
+                else str(r[i])
+                for r in rows
+            ],
+            arrow_type[t],
         )
-        for r in rows
+        for i, t in enumerate(types)
     ]
     schema = ", ".join(
         f"`{name}` {t}" for name, t in zip(header, types)
     )
-    return spark.createDataFrame(norm, schema)
+    table = pa.Table.from_arrays(columns, names=list(header))
+    return spark.createDataFrame(table, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -19,17 +19,18 @@ CDC layer — the file-granularity analog of operators/cdc.py's
 - `DropIngestor.process_once()` re-reads each emitted file
   (`read_excel`: .xlsx or .xls by magic), diffs its rows against the
   file's persisted row-hash snapshot (operators/cdc.py `with_row_hash`
-  anti-join — byte-identical rows are suppressed, exactly the
+  set difference — byte-identical rows are suppressed, exactly the
   reference's semantics), appends the surviving rows to a parquet
   changed-rows log stamped with a monotonic `ingest_seq`, and MERGEs
   them into the keyed serving table.
 
 Scale posture: the folder listing / file hashing is driver-side by
 design — a drop folder is an operational inbox of small spreadsheets
-(the reference's is a single directory of .xls files), not a data lake;
-every row-level step (hash diff, merge) is a distributed DataFrame op,
-and the changed-rows log is an append-only parquet audit feed that
-downstream jobs can stream from.
+(the reference's is a single directory of .xls files), not a data lake.
+A parsed sheet is driver-local already, so the row-hash diff against
+its snapshot (one hash per sheet row) runs on the driver too; the MERGE
+is a distributed DataFrame op, and the changed-rows log is an
+append-only parquet audit feed that downstream jobs can stream from.
 """
 
 from __future__ import annotations
@@ -42,7 +43,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.cdc import HASH_COL, with_row_hash
-from ..operators.relational import anti_join
 from ..operators.upsert import ManifestSnapshotTable
 
 SEQ_COL = "ingest_seq"
@@ -228,11 +228,38 @@ class DropIngestor:
         stem = hashlib.md5(path.encode()).hexdigest()
         return os.path.join(self.state_dir, "rowhash", stem)
 
-    def _prev_hashes(self, path: str) -> DataFrame | None:
+    def _prev_hashes(self, path: str) -> set[str] | None:
+        """Row hashes of the file's last ingested version (None before
+        its first ingest), read on the driver: one string per sheet
+        row, the same bound as the driver-local sheet itself."""
+        import pyarrow.parquet as pq
+
         p = self._rowhash_path(path)
         if not os.path.exists(os.path.join(p, "_SUCCESS")):
             return None
-        return self.spark.read.parquet(p)
+        return set(pq.read_table(p, columns=[HASH_COL]).column(0).to_pylist())
+
+    def _write_hashes(self, path: str, hashes: set[str]) -> None:
+        """Replace the file's row-hash snapshot: written aside, marked
+        complete, then swapped in."""
+        import shutil
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        final = self._rowhash_path(path)
+        tmp = final + ".new"
+        shutil.rmtree(tmp, ignore_errors=True)  # a crashed attempt's debris
+        os.makedirs(tmp)
+        pq.write_table(
+            pa.table({HASH_COL: pa.array(sorted(hashes), pa.string())}),
+            os.path.join(tmp, "part-00000.parquet"),
+        )
+        with open(os.path.join(tmp, "_SUCCESS"), "w"):
+            pass
+        if os.path.exists(final):
+            shutil.rmtree(final)
+        os.replace(tmp, final)
 
     def _counter(self, name: str, advance: bool = False) -> int:
         path = os.path.join(self.state_dir, name)
@@ -280,6 +307,9 @@ class DropIngestor:
         Each MERGE is one atomic manifest commit, so a crash mid-MERGE
         leaves the table at its previous version; `recover_table()` is
         only for a lost table dir."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         from .readers import read_excel
 
         pending = self.monitor.scan()
@@ -291,7 +321,7 @@ class DropIngestor:
             # changed row is ever silently dropped from the feed.
             return self._replay_unreturned()
         seq = self._counter("seq", advance=True)
-        staged: list[tuple[str, list, DataFrame]] = []
+        staged: list[tuple[str, list, set[str]]] = []
         wrote = False
         for path, sig in pending.items():
             try:
@@ -310,20 +340,30 @@ class DropIngestor:
                 continue
             cols = self.cdc_cols or df.columns
             hashed = with_row_hash(df, cols)
+            # the sheet is driver-local (read_excel), so collecting it
+            # hashed runs no job, the diff against the old snapshot is
+            # a set difference on the driver, and the changed rows go
+            # back to Spark as an Arrow LocalRelation (no Python worker,
+            # no per-row literal in the plan)
+            rows = hashed.collect()
+            hashes = {r[HASH_COL] for r in rows}
             prev = self._prev_hashes(path)
-            changed = (
-                hashed
-                if prev is None
-                else anti_join(hashed, prev.select(HASH_COL), [HASH_COL])
-            )
-            changed = changed.withColumn(SEQ_COL, F.lit(seq))
-            # append survivors to the log (materializes the diff while
-            # the old hash snapshot is still intact — localize before
-            # the snapshot below is overwritten)
-            if changed.count():
-                changed.write.mode("append").parquet(self.log_path)
+            fresh = hashes if prev is None else hashes - prev
+            if fresh:
+                keep = [r for r in rows if r[HASH_COL] in fresh]
+                schema = to_arrow_schema(hashed.schema)
+                changed = pa.Table.from_arrays(
+                    [
+                        pa.array([r[i] for r in keep], f.type)
+                        for i, f in enumerate(schema)
+                    ],
+                    schema=schema,
+                )
+                self.spark.createDataFrame(changed, hashed.schema).withColumn(
+                    SEQ_COL, F.lit(seq)
+                ).write.mode("append").parquet(self.log_path)
                 wrote = True
-            staged.append((path, sig, hashed))
+            staged.append((path, sig, hashes))
 
         returned_before = self._counter("returned_seq")
         batch = None
@@ -332,20 +372,15 @@ class DropIngestor:
             # any rows a crashed previous batch logged but never returned
             if os.path.exists(os.path.join(self.log_path, "_SUCCESS")):
                 batch = self._log_window(returned_before, seq)
-                if batch.isEmpty():
+                # the rows this batch logged lie inside the window, so
+                # only a replay-only window can be empty
+                if not wrote and batch.isEmpty():
                     batch = None
                 else:
                     self.table.upsert(batch)
         # snapshots + monitor commits only after the MERGE landed
-        for path, sig, hashed in staged:
-            tmp = self._rowhash_path(path) + ".new"
-            hashed.select(HASH_COL).write.mode("overwrite").parquet(tmp)
-            final = self._rowhash_path(path)
-            if os.path.exists(final):
-                import shutil
-
-                shutil.rmtree(final)
-            os.replace(tmp, final)
+        for path, sig, hashes in staged:
+            self._write_hashes(path, hashes)
             self.monitor.commit(path, sig)
         if batch is None:
             return None

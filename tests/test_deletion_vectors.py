@@ -161,6 +161,45 @@ def test_emptied_fragment_leaves_manifest(spark, root):
     assert t.manifest() == {}
 
 
+def test_dv_on_partition_values_the_file_uri_escapes(spark, root):
+    """Partition values whose directory name the scan's file URI
+    percent-encodes (a space, '%' from Hive escaping, '+', non-ASCII)
+    get vectors under their manifest fragment names: the delete commits
+    with exact counts, reads drop the doomed rows, and a fragment whose
+    last row dies leaves the manifest."""
+    t = _mk(
+        spark, root, keys=["p", "k"], order_cols=["k"], partition_by=["p"],
+        stats_cols=["k"],
+    )
+    vals = ["a b", "a:b", "a+b", "é%x", "plain"]
+    t.upsert(spark.createDataFrame(
+        [(p, k) for p in vals for k in (1, 2)], "p string, k int"
+    ))
+    t.delete_dv(spark.createDataFrame(
+        [(p, 1) for p in vals] + [("a+b", 2)], "p string, k int"
+    ))
+    doc = t._manifest_doc()
+    frags = {t._part_key([p]) for p in vals}
+    assert doc["dv_rows"] == {f: 1 for f in frags - {"p=a+b"}}
+    assert set(doc["partitions"]) == frags - {"p=a+b"}
+    got = sorted(tuple(r) for r in t.read().collect())
+    assert got == sorted((p, 2) for p in vals if p != "a+b")
+
+
+def test_dv_rows_naming_no_fragment_fail_the_commit(spark, root, monkeypatch):
+    """A sidecar row whose `frag` matches no touched fragment fails the
+    delete instead of going uncounted; the table stays at its version."""
+    t = _mk(spark, root, keys=["p", "k"], order_cols=["k"], partition_by=["p"])
+    t.upsert(spark.createDataFrame([("a", 1), ("a", 2)], "p string, k int"))
+    v = t.versions()[-1]
+    monkeypatch.setattr(F, "url_decode", lambda c: F.concat(c, F.lit("?")))
+    with pytest.raises(RuntimeError, match="name no touched fragment"):
+        t.delete_dv(spark.createDataFrame([("a", 1)], "p string, k int"))
+    monkeypatch.undo()
+    assert t.versions()[-1] == v
+    assert sorted(tuple(r) for r in t.read().collect()) == [("a", 1), ("a", 2)]
+
+
 def test_metadata_aggregates_stay_exact(spark, root):
     t = _mk(spark, root, stats_cols=["k"])
     _seed(spark, t)

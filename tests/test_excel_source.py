@@ -89,6 +89,55 @@ def test_read_excel_spark_surface(spark, tmp_path):
     assert rows == {"B2012345": 8.5, "B2012346": 4.0}
 
 
+def test_read_excel_arrow_frame_equals_list_construction(spark, tmp_path):
+    """`read_excel` builds its frame from Arrow; it must equal the
+    `createDataFrame(list, schema)` construction it replaced in schema,
+    rows and `row_hash`, or every re-upload after an upgrade would diff
+    as 100% changed against row hashes persisted by the old one."""
+    from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.cdc import (
+        HASH_COL,
+        with_row_hash,
+    )
+
+    header = ["dbl", "flag", "name", "mixed", "empty"]
+    rows = [
+        [8.5, True, "Nguyễn Văn A", 1.0, None],
+        [None, False, "", True, None],
+        [-0.25, None, "学生 \U0001d11e", "B7", None],
+        [1e300, True, None, None, None],
+        [4.0, False, "x", 2.5, None],
+    ]
+    path = str(tmp_path / "types.xlsx")
+    write_minimal_xlsx(path, header, rows)
+    df = read_excel(spark, path)
+    assert [f.dataType.simpleString() for f in df.schema.fields] == [
+        "double", "boolean", "string", "string", "string",
+    ]
+    # the pre-Arrow construction, over the same parsed cells
+    _, parsed = read_xlsx_rows(path)
+    types = [f.dataType.simpleString() for f in df.schema.fields]
+    norm = [
+        tuple(
+            v if v is None or types[i] != "string" or isinstance(v, str)
+            else str(v)
+            for i, v in enumerate(r)
+        )
+        for r in parsed
+    ]
+    ddl = ", ".join(f"`{n}` {t}" for n, t in zip(header, types))
+    ref = spark.createDataFrame(norm, ddl)
+    assert df.schema == ref.schema
+    assert df.collect() == ref.collect()
+    hashes = [
+        [r[HASH_COL] for r in with_row_hash(frame, header).collect()]
+        for frame in (df, ref)
+    ]
+    assert hashes[0] == hashes[1]
+    assert len(set(hashes[0])) == len(rows)
+    mixed = [r["mixed"] for r in df.collect()]
+    assert mixed == ["1.0", "True", "B7", None, "2.5"]
+
+
 def test_xlsx_cdc_upsert_chain(spark, tmp_path):
     """The reference's whole ingest path (pro.py scan → hash-diff →
     con.py keyed upsert) on its actual input format: S1 xlsx scan →

@@ -2,9 +2,9 @@
 parquet FOOTERS (metadata-only) instead of re-scanning every written
 file with a Spark aggregate.  These tests pin the contract that made
 that safe: the footer path returns EXACTLY what the Spark path
-returns for integer/bool stats columns, and falls back to the Spark
-path whenever footer statistics are not provably exact (strings,
-floats, date-typed columns)."""
+returns for integer/bool/string stats columns, and falls back to the
+Spark path whenever footer statistics are not provably exact (floats,
+strings too long for the writer to keep stats, date-typed columns)."""
 
 from __future__ import annotations
 
@@ -88,28 +88,78 @@ def test_footer_all_null_column_matches(spark, tdir):
     assert footer[0]["p=1"]["v"] == [None, None]
 
 
-@pytest.mark.parametrize(
-    "ddl,val",
-    [
-        ("p int, k int, v string", "abc"),
-        ("p int, k int, v double", 1.5),
-    ],
-)
-def test_footer_falls_back_on_inexact_types(spark, tdir, ddl, val):
-    """String and float stats columns stay on the Spark-aggregate path
-    (footer strings can be truncated; float stats misbehave on NaN).
-    Date/timestamp columns are not representable as stats_cols at all —
-    the JSON manifest refuses them on either path."""
-    rows = [(1, 1, val)]
-    t = _mk(spark, tdir, ["v"], rows, ddl)
-    v = t.versions()[-1]
-    files = [
+def _written_files(t, v):
+    return [
         os.path.join(dp, n)
         for dp, _s, ns in os.walk(t._data_dir(v))
         for n in ns
         if n.endswith(".parquet")
     ]
-    assert t._stats_from_footers(t._data_dir(v), files) is None
+
+
+def test_footer_equals_spark_aggregate_string_col(spark, tdir):
+    """UTF8 string stats come from footers and equal the Spark
+    aggregate: byte-wise order (a supplementary-plane character sorts
+    after U+FFFF, unlike UTF-16 order), the empty string, and an
+    all-NULL fragment."""
+    rows = [
+        (1, 1, "é"),
+        (1, 2, "\U0001d11e"),
+        (1, 3, "\uffff"),
+        (1, 4, None),
+        (2, 5, ""),
+        (2, 6, "abc"),
+        (3, 7, None),
+    ]
+    t = _mk(spark, tdir, ["v"], rows, "p int, k int, v string")
+    v = t.versions()[-1]
+    footer = t._stats_from_footers(t._data_dir(v), _written_files(t, v))
+    assert footer is not None, "string stats cols must take the footer path"
+    assert footer == _spark_path(t, v)
+    assert footer[0]["p=1"]["v"] == ["é", "\U0001d11e"]
+    assert footer[0]["p=2"]["v"] == ["", "abc"]
+    assert footer[0]["p=3"]["v"] == [None, None]
+
+
+@pytest.mark.parametrize(
+    "ddl,val",
+    [
+        pytest.param(
+            "p int, k int, v string", "\uffff" * 3000,
+            id="p int, k int, v string-oversized",
+        ),
+        ("p int, k int, v double", 1.5),
+    ],
+)
+def test_footer_falls_back_on_inexact_types(spark, tdir, ddl, val):
+    """Float stats columns stay on the Spark-aggregate path (float
+    stats misbehave on NaN), and so does a string over the writer's
+    4 KiB stats limit (its footer carries no min/max).  Date/timestamp
+    columns are not representable as stats_cols at all — the JSON
+    manifest refuses them on either path."""
+    rows = [(1, 1, val)]
+    t = _mk(spark, tdir, ["v"], rows, ddl)
+    v = t.versions()[-1]
+    assert t._stats_from_footers(t._data_dir(v), _written_files(t, v)) is None
+    # the committed envelope is still the exact one
+    assert t._manifest_doc()["stats"]["p=1"]["v"] == [val, val]
+
+
+def test_footer_falls_back_on_undecodable_string_stats(spark, tdir):
+    """A Spark string may hold invalid UTF-8 (a cast from binary); its
+    footer stats cannot be decoded, so the commit takes the Spark
+    path instead of failing."""
+    t = ManifestSnapshotTable(
+        spark, tdir, keys=["p", "k"], order_cols=["k"], partition_by=["p"],
+        stats_cols=["v"],
+    )
+    t.upsert(spark.range(2).select(
+        F.lit(1).alias("p"), F.col("id").alias("k"),
+        F.expr("cast(X'FF61' as string)").alias("v"),
+    ))
+    v = t.versions()[-1]
+    assert t._stats_from_footers(t._data_dir(v), _written_files(t, v)) is None
+    assert t._manifest_doc()["stats"]["p=1"]["#rows"] == 2
 
 
 def test_commit_path_stats_unchanged_end_to_end(spark, tdir):

@@ -1,0 +1,173 @@
+"""Spark job counts of the grade-ingest write path, pinned.
+
+A write that launches an extra job costs a scheduling round trip and,
+for a Python-built input, a Python-worker pass — the dominant cost of a
+small commit — yet leaves every result unchanged, so no correctness
+test notices it.  Job counts carry no timing noise: each op below runs
+under its own Spark job group and `statusTracker` counts the jobs the
+group launched (no event log needed).  The bounds are the counts the
+engine issues today; an op that needs more jobs fails here.
+
+The table mirrors the ingest shape: keyed (term, student_id,
+course_id), term-partitioned, zone maps and blooms on student_id, fed
+by xlsx drops through `DropIngestor`, corrected by `merge_into` from a
+``createDataFrame(list)`` source, withdrawn from by `delete_dv`, with an
+`IncrementalAggView` refreshed after each write.
+"""
+
+from __future__ import annotations
+
+import uuid
+
+import pytest
+from pyspark.sql import types as T
+
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.manifest_write import (
+    _evaluate_once,
+    _python_built,
+)
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.matview import (
+    IncrementalAggView,
+)
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
+    ManifestSnapshotTable,
+)
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.sources.watcher import (
+    DropIngestor,
+)
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.sources.xlsx import (
+    write_minimal_xlsx,
+)
+
+HEADER = ["term", "student_id", "course_id", "grade"]
+SCHEMA = T.StructType([
+    T.StructField("term", T.StringType()),
+    T.StructField("student_id", T.StringType()),
+    T.StructField("course_id", T.StringType()),
+    T.StructField("grade", T.DoubleType()),
+    T.StructField("ingest_seq", T.IntegerType()),
+])
+
+# upper bounds, one per op kind; before write inputs were evaluated
+# once, sheets were diffed on the driver, string zone maps came from
+# footers and the DV count-back was fused, the counts were 20, 13, 9
+# and 6
+MAX_JOBS = {
+    "reupload": 9,
+    "merge_into": 10,
+    "delete_dv": 7,
+    "refresh": 6,
+}
+
+
+def _sheet(term, bump=()):
+    return [
+        [term, f"S{s:03d}", f"C{c}", float((s * 7 + c) % 10) + (s in bump)]
+        for s in range(20)
+        for c in range(3)
+    ]
+
+
+def _jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn`` launches, counted under a fresh job
+    group once the listener bus has delivered every job-start event."""
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def counts(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("job_counts")
+    drops = root / "drops"
+    drops.mkdir()
+    table = ManifestSnapshotTable(
+        spark,
+        str(root / "table"),
+        keys=["term", "student_id", "course_id"],
+        order_cols=["ingest_seq"],
+        partition_by=["term"],
+        stats_cols=["student_id"],
+        bloom_cols=["student_id"],
+    )
+    view = IncrementalAggView(
+        spark,
+        str(root / "view"),
+        table,
+        group_cols=["term"],
+        measures=[("n", None, "count"), ("avg_grade", "grade_dec", "avg")],
+        prepare=lambda df: df.withColumn(
+            "grade_dec", df["grade"].cast("decimal(4,1)")
+        ),
+    )
+    ing = DropIngestor(spark, str(drops), str(root / "state"), table)
+    for term in ("t1", "t2"):
+        write_minimal_xlsx(str(drops / f"{term}.xlsx"), HEADER, _sheet(term))
+    ing.process_once()
+    view.refresh()
+
+    out = {}
+    write_minimal_xlsx(
+        str(drops / "t1.xlsx"), HEADER, _sheet("t1", bump={3, 11})
+    )
+    out["reupload"] = _jobs(spark, ing.process_once)
+    out["refresh"] = _jobs(spark, view.refresh)
+    src = spark.createDataFrame(
+        [("t2", f"S{s:03d}", "C0", 9.5, 9) for s in range(5)], SCHEMA
+    )
+    out["merge_into"] = _jobs(spark, lambda: table.merge_into(src))
+    view.refresh()
+    keys = spark.createDataFrame(
+        [("t1", f"S{s:03d}", "C1") for s in range(4)],
+        "term string, student_id string, course_id string",
+    )
+    out["delete_dv"] = _jobs(spark, lambda: table.delete_dv(keys))
+
+    # the pinned ops still did their work
+    got = {
+        (r["term"], r["student_id"], r["course_id"]): r["grade"]
+        for r in table.read().collect()
+    }
+    assert len(got) == 120 - 4
+    assert got[("t1", "S003", "C0")] == _sheet("t1", bump={3})[9][3]
+    assert got[("t2", "S004", "C0")] == 9.5
+    assert ("t1", "S000", "C1") not in got
+    return out
+
+
+@pytest.mark.parametrize("op", sorted(MAX_JOBS))
+def test_write_path_job_count(counts, op):
+    assert 0 < counts[op] <= MAX_JOBS[op], (
+        f"{op} launched {counts[op]} Spark jobs, bound {MAX_JOBS[op]}: "
+        f"all counts {counts}"
+    )
+
+
+def test_only_python_built_inputs_are_checkpointed(spark, tmp_path):
+    """The evaluate-once rule reads only the input's plan: a frame a
+    Python worker produces (also under further transformations) is
+    checkpointed once; a file scan, an Arrow-built frame and an already
+    checkpointed frame pass through untouched."""
+    import pyarrow as pa
+
+    listed = spark.createDataFrame([("a", 1), ("b", 2)], "s string, n int")
+    assert _python_built(listed)
+    assert _python_built(listed.filter("n > 1").join(listed, "s"))
+    once = _evaluate_once(listed)
+    assert not _python_built(once)
+    assert sorted(once.collect()) == sorted(listed.collect())
+    assert _evaluate_once(once) is once
+    arrow = spark.createDataFrame(
+        pa.table({"s": ["a"], "n": pa.array([1], pa.int32())}), "s string, n int"
+    )
+    assert _evaluate_once(arrow) is arrow
+    listed.write.parquet(str(tmp_path / "p"))
+    scan = spark.read.parquet(str(tmp_path / "p"))
+    assert _evaluate_once(scan) is scan

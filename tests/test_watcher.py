@@ -84,6 +84,25 @@ def test_modified_file_reemits_only_changed_rows(spark, tmp_path):
     }
 
 
+def test_spark_written_hash_snapshot_still_diffs(spark, tmp_path):
+    """A row-hash snapshot in the layout Spark's parquet writer leaves
+    (part files, `_SUCCESS`, `.crc` side files) — what earlier releases
+    wrote — still suppresses the unchanged rows of the next upload."""
+    import shutil
+
+    ing, path, table = _ingestor(spark, tmp_path)
+    write_minimal_xls(path, HEADER, V1)
+    ing.process_once()
+    snap = ing._rowhash_path(path)
+    spark.read.parquet(snap).repartition(2).write.parquet(snap + ".spark")
+    shutil.rmtree(snap)
+    os.replace(snap + ".spark", snap)
+
+    write_minimal_xls(path, HEADER, V2)
+    got = {r.F_MASV for r in ing.process_once().collect()}
+    assert got == {"B002", "B004"}
+
+
 def test_touch_without_edit_emits_nothing(spark, tmp_path):
     ing, path, _ = _ingestor(spark, tmp_path)
     write_minimal_xls(path, HEADER, V1)
