@@ -207,8 +207,6 @@ class _ManifestMaintMixin:
         success.  The new scheme must keep the pruned-commit invariant
         (partition columns inside the key, or stable_partitions).
         """
-        import json
-
         if cluster_method not in ("linear", "zorder"):
             raise ValueError(
                 "cluster_method must be 'linear' or 'zorder', "
@@ -251,22 +249,11 @@ class _ManifestMaintMixin:
                 )
         if not self.versions():
             return 0
-        old_pb = list(self.partition_by)
-        old_gen = dict(self.generated_partitions)
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            prev = {
-                k: int(v)
-                for k, v in prev_doc.get("partitions", {}).items()
-            }
+        with self._txn("compact") as tx:
+            prev_doc, prev, new_v = tx.prev_doc, tx.prev, tx.version
             dv = self._dv_map(prev_doc)
-            if not prev:
-                self._abandon_claim(vdir)
-                return self.versions()[-1]
-            cur = new_v - 1
-            if (
-                set(prev.values()) == {cur}
+            if not prev or (
+                set(prev.values()) == {new_v - 1}
                 and not cluster_by
                 and not dv
                 and not evolving
@@ -275,8 +262,7 @@ class _ManifestMaintMixin:
                 # a LAYOUT change, wanted even when no scatter exists —
                 # and live deletion vectors always compact (this is the
                 # explicit materialize-everything path)
-                self._abandon_claim(vdir)
-                return cur
+                return tx.noop()
             src = self._read_fragments(prev, dv=dv, align=prev_doc)
             if evolving:
                 for pc in pb:
@@ -298,9 +284,16 @@ class _ManifestMaintMixin:
                     src = src.withColumn(pc, F.expr(gen_map[pc]))
                 # adopt the new scheme NOW: the write layout, fragment
                 # walker, stats, and bloom builders below all render
-                # through self.partition_by (restored on failure)
-                self.partition_by = pb
-                self.generated_partitions = dict(gen_map)
+                # through self.partition_by.  A failed evolution must
+                # leave the handle on the OLD scheme (the table's latest
+                # manifest still declares it)
+                old = (self.partition_by, self.generated_partitions)
+
+                def restore_scheme():
+                    self.partition_by, self.generated_partitions = old
+
+                tx.undo.append(restore_scheme)
+                self.partition_by, self.generated_partitions = pb, dict(gen_map)
             if cluster_by and cluster_method == "zorder":
                 if "__zkey" in src.columns:
                     raise ValueError(
@@ -363,7 +356,6 @@ class _ManifestMaintMixin:
                 "partition_by": list(pb),
                 "partitions": {frag: new_v for frag in written},
             }
-            doc["commit"] = self._commit_info("compact", set(prev))
             self._carry_meta(doc, prev_doc, set(prev))
             # the full rewrite physically shed every dropped column's
             # bytes — names become safe to reuse
@@ -404,20 +396,10 @@ class _ManifestMaintMixin:
                     new_v, doc["schema"]
                 )
                 if new_ffs:
-                    self._write_fstats_sidecar(vdir, new_ffs)
+                    self._write_fstats_sidecar(tx.vdir, new_ffs)
                     doc["fstats_v"] = {f: new_v for f in new_ffs}
-            self._write_blooms(new_v, vdir, doc["schema"])
-            with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-                json.dump(doc, fh, sort_keys=True)
-        except BaseException:
-            # a failed evolution must leave the handle on the OLD
-            # scheme (the table's latest manifest still declares it)
-            self.partition_by = old_pb
-            self.generated_partitions = old_gen
-            self._abandon_claim(vdir)
-            raise
-        self._publish(vdir)
-        return new_v
+            self._write_blooms(new_v, tx.vdir, doc["schema"])
+            return tx.stage_manifest(doc, set(prev))
 
     def maybe_compact(self, max_scatter: int) -> int | None:
         """Auto-OPTIMIZE policy for long-running sinks: compact when the
@@ -454,39 +436,47 @@ class _ManifestMaintMixin:
         read/upsert with dangling fragment references) and, belt and
         braces, any target whose manifest names a version dir missing
         from disk.  Holder dirs the surviving snapshots no longer
-        reference are swept so rollback cannot leak data dirs."""
+        reference are swept so rollback cannot leak data dirs.
+
+        Runs under a version claim that it never publishes: the claim
+        keeps a concurrent writer from publishing a manifest that
+        points at a version this rollback deletes (a live claim makes
+        the rollback raise `CommitConflictError` instead)."""
         import shutil
 
-        vs = self.versions()
-        if version not in vs:
-            if self._is_holder(version):
-                raise ValueError(
-                    f"cannot roll back to version {version}: it is a "
-                    "data holder, not a complete snapshot (its manifest "
-                    "may reference vacuumed versions); readable "
-                    f"snapshots: {vs}"
+        with self._txn("rollback") as tx:
+            vs = self.versions()
+            if version not in vs:
+                if self._is_holder(version):
+                    raise ValueError(
+                        f"cannot roll back to version {version}: it is a "
+                        "data holder, not a complete snapshot (its "
+                        "manifest may reference vacuumed versions); "
+                        f"readable snapshots: {vs}"
+                    )
+                raise ValueError(f"version {version} not in {vs}")
+            tdoc = self._manifest_doc(version)
+            needed = set(
+                int(h) for h in tdoc.get("partitions", {}).values()
+            ) | set(self._dv_map(tdoc).values())
+            missing = {
+                v
+                for v in needed
+                if not os.path.exists(
+                    os.path.join(self._vdir_of(v), "_SUCCESS")
                 )
-            raise ValueError(f"version {version} not in {vs}")
-        tdoc = self._manifest_doc(version)
-        needed = set(
-            int(h) for h in tdoc.get("partitions", {}).values()
-        ) | set(self._dv_map(tdoc).values())
-        missing = {
-            v
-            for v in needed
-            if not os.path.exists(
-                os.path.join(self._vdir_of(v), "_SUCCESS")
-            )
-        }
-        if missing:
-            raise ValueError(
-                f"cannot roll back to version {version}: its manifest "
-                f"references missing version dirs {sorted(missing)}"
-            )
-        for v in vs:
-            if v > version:
-                shutil.rmtree(self._vdir(v), ignore_errors=True)
-        self._sweep_unreferenced_holders()
+            }
+            if missing:
+                raise ValueError(
+                    f"cannot roll back to version {version}: its "
+                    f"manifest references missing version dirs "
+                    f"{sorted(missing)}"
+                )
+            for v in vs:
+                if v > version:
+                    shutil.rmtree(self._vdir(v), ignore_errors=True)
+            self._sweep_unreferenced_holders()
+            tx.noop()
 
     def restore(self, version: int) -> int:
         """Delta ``RESTORE TABLE ... VERSION AS OF`` — the
@@ -500,10 +490,7 @@ class _ManifestMaintMixin:
         version dirs).  Refuses holder-only targets like
         `read(version=...)`, and any target whose referenced dirs a
         vacuum already removed.  Returns the committed version."""
-        import json
-
-        new_v, vdir = self._claim_version()
-        try:
+        with self._txn("restore") as tx:
             tdoc = self._manifest_doc(version)  # validates readability
             needed = (
                 {int(h) for h in tdoc.get("partitions", {}).values()}
@@ -522,15 +509,7 @@ class _ManifestMaintMixin:
                     f"cannot restore version {version}: it references "
                     f"vacuumed version dirs {sorted(missing)}"
                 )
-            doc = dict(tdoc)
-            doc["commit"] = self._commit_info("restore", set())
-            with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-                json.dump(doc, fh, sort_keys=True)
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        self._publish(vdir)
-        return new_v
+            return tx.stage_manifest(dict(tdoc))
 
     def backfill_stats(self) -> int:
         """ANALYZE-style zone-map backfill: record fragment + file
@@ -548,21 +527,14 @@ class _ManifestMaintMixin:
         forever.  Counts are raw file counts (deletion vectors are
         subtracted downstream, same as write-path stats).  Returns the
         committed version — unchanged when nothing lacks coverage."""
-        import json
-
         if not self.stats_cols:
             raise ValueError(
                 "backfill_stats needs stats_cols configured on this "
                 "handle (the columns to record envelopes for)"
             )
         rk = self._ROWS_KEY
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            prev = {
-                k: int(v)
-                for k, v in prev_doc.get("partitions", {}).items()
-            }
+        with self._txn("backfill_stats") as tx:
+            prev_doc = tx.prev_doc
             st = prev_doc.get("stats", {})
             # file-tier coverage = an fstats_v sidecar entry OR inline
             # legacy file_stats (presence only — no sidecar is opened)
@@ -571,16 +543,14 @@ class _ManifestMaintMixin:
             )
             need = {
                 f: v
-                for f, v in prev.items()
+                for f, v in tx.prev.items()
                 if f not in st
                 or f not in covered_files
                 or rk not in st[f]
                 or any(c not in st[f] for c in self.stats_cols)
             }
             if not need:
-                self._abandon_claim(vdir)
-                vs = self.versions()
-                return vs[-1] if vs else 0
+                return tx.noop()
             new_fs: dict = {}
             new_ffs: dict = {}
             by_v: dict[int, list[str]] = {}
@@ -613,21 +583,12 @@ class _ManifestMaintMixin:
                 # sidecar; fstats_v points the covered fragments here
                 # (their DATA holder is unchanged — stats holder and
                 # data holder are independent, exactly like dv)
-                self._write_fstats_sidecar(vdir, new_ffs)
+                self._write_fstats_sidecar(tx.vdir, new_ffs)
                 doc["fstats_v"] = {
                     **(prev_doc.get("fstats_v") or {}),
-                    **{f: new_v for f in new_ffs},
+                    **{f: tx.version for f in new_ffs},
                 }
-            doc["commit"] = self._commit_info(
-                "backfill_stats", set(need)
-            )
-            with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-                json.dump(doc, fh, sort_keys=True)
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        self._publish(vdir)
-        return new_v
+            return tx.stage_manifest(doc, set(need))
 
     def describe_detail(self) -> DataFrame:
         """Delta ``DESCRIBE DETAIL``: one metadata-only row describing

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -17,6 +18,52 @@ from pyspark.sql import functions as F
 from .manifest_base import CommitConflictError, ConstraintViolationError
 
 __all__ = ["_ManifestMetaMixin"]
+
+
+class _Txn:
+    """The state of one open commit (see `_ManifestMetaMixin._txn`):
+    the claimed ``version`` and its directory ``vdir``, the basis
+    manifest ``prev_doc`` pinned under the claim, and its parsed
+    fragment map ``prev`` (fragment → holder version).  ``undo`` holds
+    callables that put the handle back if the commit is abandoned."""
+
+    def __init__(self, table, op: str, version: int, vdir: str):
+        self.table = table
+        self.op = op
+        self.version = version
+        self.vdir = vdir
+        self.prev_doc: dict = {}
+        self.prev: dict[str, int] = {}
+        self.staged = False
+        self.is_noop = False
+        self.undo: list = []
+
+    def noop(self) -> int:
+        """End the commit without a new version (the claim is dropped
+        on exit); returns the current version, or 0 for an empty
+        table."""
+        self.is_noop = True
+        vs = self.table.versions()
+        return vs[-1] if vs else 0
+
+    def meta_doc(self) -> dict:
+        """A copy of the basis manifest for a metadata-only commit:
+        every fragment inherited by reference."""
+        doc = dict(self.prev_doc)
+        doc.setdefault("partition_by", self.table.partition_by)
+        doc.setdefault("partitions", {})
+        return doc
+
+    def stage_manifest(self, doc: dict, touched: set = frozenset()) -> int:
+        """Stamp ``doc``'s ``commit`` entry and write it as this
+        version's manifest; returns the version it will publish as."""
+        import json
+
+        doc["commit"] = self.table._commit_info(self.op, touched)
+        with open(os.path.join(self.vdir, "manifest.json"), "w") as fh:
+            json.dump(doc, fh, sort_keys=True)
+        self.staged = True
+        return self.version
 
 
 class _ManifestMetaMixin:
@@ -520,17 +567,30 @@ class _ManifestMetaMixin:
             doc["fstats_v"] = fsv
 
     # -- commit protocol ------------------------------------------------
-    # Optimistic concurrency (the Delta/Iceberg baseline): every commit
-    # path first CLAIMS the next version number by atomically creating
-    # its directory (os.mkdir — EEXIST means someone else owns it), so
-    # two writers can never both commit the same version, and the
-    # commit basis (the previous manifest) is always read UNDER the
-    # claim — a peer cannot slip a commit between basis-read and
-    # publish, which is what makes pruned copy-on-write sound under
-    # concurrency (no lost updates).  A claim directory carries a
-    # `_CLAIM` marker naming its writer (pid/host/ts) and becomes a
-    # snapshot only when `_SUCCESS` lands; until then readers cannot
-    # see it.  On EEXIST the would-be writer distinguishes:
+    # Optimistic concurrency (the Delta/Iceberg baseline), run by ONE
+    # transaction that every committing verb enters —
+    # ``with self._txn(op) as tx:`` — so the protocol exists once:
+    #   1. claim: atomically create the next version's directory
+    #      (os.mkdir — EEXIST means someone else owns it), write the
+    #      `_CLAIM` marker naming the writer (pid/host/ts), re-check
+    #      the partition scheme, and read the commit basis (the
+    #      previous manifest) UNDER the claim — a peer cannot slip a
+    #      commit between basis-read and publish, which is what makes
+    #      pruned copy-on-write sound under concurrency (no lost
+    #      updates);
+    #   2. stage: the verb's body writes data files, deletion vectors
+    #      and sidecars into ``tx.vdir`` and hands the new manifest to
+    #      `tx.stage_manifest`, which stamps its ``commit`` entry —
+    #      or ends early with ``return tx.noop()`` (no new version);
+    #   3. publish: `_SUCCESS` lands LAST; until then readers cannot
+    #      see the version (``versions()`` skips it);
+    #   4. retention vacuum, OUTSIDE the abandon scope — once
+    #      `_SUCCESS` lands the version is live, and a vacuum failure
+    #      must never rmtree a published snapshot.
+    # Any exception in steps 1-3 (KeyboardInterrupt included) abandons
+    # the claim: the directory is removed and the table stays readable
+    # at its previous version.  On EEXIST the would-be writer
+    # distinguishes:
     #   - `_SUCCESS` present → a peer committed this number between our
     #     dir listing and mkdir; take the next number (safe: the basis
     #     has not been read yet);
@@ -557,7 +617,7 @@ class _ManifestMetaMixin:
         except (FileNotFoundError, ValueError):
             # mkdir happened but the marker never (fully) landed: either
             # a writer inside the sub-second mkdir→marker window or a
-            # crash in it — only age can tell
+            # hard kill in it — only age can tell
             try:
                 age = time.time() - os.path.getmtime(vdir)
             except OSError:
@@ -578,16 +638,15 @@ class _ManifestMetaMixin:
         return time.time() - float(claim.get("ts") or 0) > self.claim_ttl_seconds
 
     def _claim_version(self) -> tuple[int, str]:
-        """Atomically claim the next version; returns (version, dir).
+        """Atomically create the next version's directory; returns
+        (version, dir).  The `_CLAIM` marker is written by `_txn`,
+        inside its abandon scope.
 
         Loops past versions a peer managed to commit first (safe —
-        the caller reads its commit basis after this returns) and past
-        reclaimed crash debris; raises `CommitConflictError` on a live
-        concurrent claim."""
-        import json
+        the basis is read after this returns) and past reclaimed crash
+        debris; raises `CommitConflictError` on a live concurrent
+        claim."""
         import shutil
-        import socket
-        import time
 
         self._check_scheme()
         os.makedirs(self.path, exist_ok=True)
@@ -597,6 +656,7 @@ class _ManifestMetaMixin:
             vdir = self._vdir(new_v)
             try:
                 os.mkdir(vdir)
+                return new_v, vdir
             except FileExistsError:
                 if os.path.exists(os.path.join(vdir, "_SUCCESS")):
                     continue  # peer committed this number: next one
@@ -609,33 +669,70 @@ class _ManifestMetaMixin:
                     "publishes (or reclaim via claim_ttl_seconds if it "
                     "crashed on another host)"
                 )
-            with open(os.path.join(vdir, self._CLAIM_MARKER), "w") as fh:
-                json.dump(
-                    {
-                        "pid": os.getpid(),
-                        "host": socket.gethostname(),
-                        "ts": time.time(),
-                    },
-                    fh,
-                )
-            # re-check the scheme now that the claim is HELD: the
-            # fast-fail check above races a concurrent partition
-            # evolution (a peer may publish between check and mkdir),
-            # but no peer can publish while we hold the claim, so this
-            # second look is race-free — without it a stale-scheme
-            # handle that lost the race would merge old-scheme
-            # fragment names into the evolved manifest
-            try:
-                self._check_scheme()
-            except BaseException:
-                self._abandon_claim(vdir)
-                raise
-            return new_v, vdir
+
+    def _mark_claim(self, vdir: str) -> None:
+        import json
+        import socket
+        import time
+
+        with open(os.path.join(vdir, self._CLAIM_MARKER), "w") as fh:
+            json.dump(
+                {"pid": os.getpid(), "host": socket.gethostname(),
+                 "ts": time.time()},
+                fh,
+            )
 
     def _abandon_claim(self, vdir: str) -> None:
         import shutil
 
         shutil.rmtree(vdir, ignore_errors=True)
+
+    def _publish(self, vdir: str) -> None:
+        """The commit marker, written LAST: a crash before it leaves
+        the dir invisible to ``versions()`` — readers still resolve
+        the previous snapshot."""
+        with open(os.path.join(vdir, "_SUCCESS"), "w"):
+            pass
+
+    @contextmanager
+    def _txn(self, op: str):
+        """One commit, start to finish — the only code that claims,
+        publishes or abandons a version (see "commit protocol" above).
+        Yields a `_Txn` whose ``prev_doc`` / ``prev`` are the basis
+        read under the claim.  The body stages everything into
+        ``tx.vdir`` and ends with ``return tx.stage_manifest(doc)``
+        (the version to publish) or ``return tx.noop()``."""
+        version, vdir = self._claim_version()
+        tx = _Txn(self, op, version, vdir)
+        try:
+            self._mark_claim(vdir)
+            # re-check the scheme now that the claim is HELD: the
+            # fast-fail check in _claim_version races a concurrent
+            # partition evolution (a peer may publish between check and
+            # mkdir), but no peer can publish while we hold the claim,
+            # so this second look is race-free — without it a
+            # stale-scheme handle that lost the race would merge
+            # old-scheme fragment names into the evolved manifest
+            self._check_scheme()
+            tx.prev_doc = self._manifest_doc()
+            tx.prev = {
+                k: int(v)
+                for k, v in tx.prev_doc.get("partitions", {}).items()
+            }
+            yield tx
+            if tx.is_noop:
+                self._abandon_claim(vdir)
+                return
+            if not tx.staged:
+                raise RuntimeError(f"{op}: commit staged no manifest")
+            self._publish(vdir)
+        except BaseException:
+            for undo in tx.undo:
+                undo()
+            self._abandon_claim(vdir)
+            raise
+        if self.keep_versions is not None or self.keep_seconds is not None:
+            self.vacuum()
 
     def _effective_constraints(self, doc: dict) -> dict[str, Column]:
         """Constructor-handle constraints ∪ the TABLE-LEVEL constraints
@@ -712,22 +809,17 @@ class _ManifestMetaMixin:
         `ConstraintViolationError` if existing rows violate, and
         refuses to replace an existing name (drop it first)."""
         cond = F.expr(sql)
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            existing = dict(prev_doc.get("constraints") or {})
+        with self._txn("add_constraint") as tx:
+            existing = dict(tx.prev_doc.get("constraints") or {})
             if name in existing:
                 raise ValueError(
                     f"constraint {name!r} already exists "
                     f"({existing[name]!r}); drop it first"
                 )
-            prev = {
-                k: int(v)
-                for k, v in prev_doc.get("partitions", {}).items()
-            }
-            if prev:
+            if tx.prev:
                 live = self._read_fragments(
-                        prev, dv=self._dv_map(prev_doc), align=prev_doc)
+                        tx.prev, dv=self._dv_map(tx.prev_doc),
+                        align=tx.prev_doc)
                 n_bad = live.filter(
                     ~F.coalesce(cond, F.lit(True))
                 ).count()
@@ -736,56 +828,40 @@ class _ManifestMetaMixin:
                         f"cannot add constraint {name!r}: {n_bad} "
                         "existing row(s) violate it"
                     )
-            doc = dict(prev_doc)
-            doc.setdefault("partition_by", self.partition_by)
-            doc.setdefault("partitions", {})
-            doc["commit"] = self._commit_info("add_constraint", set())
+            doc = tx.meta_doc()
             existing[name] = sql
             doc["constraints"] = existing
-            import json
-
-            with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-                json.dump(doc, fh, sort_keys=True)
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        self._publish(vdir)
-        return new_v
+            return tx.stage_manifest(doc)
 
     def drop_constraint(self, name: str, if_exists: bool = False) -> int:
         """Remove a persisted CHECK constraint (metadata-only commit).
         Raises on an unknown name unless ``if_exists``."""
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            existing = dict(prev_doc.get("constraints") or {})
+        with self._txn("drop_constraint") as tx:
+            existing = dict(tx.prev_doc.get("constraints") or {})
             if name not in existing:
-                self._abandon_claim(vdir)
                 if if_exists:
-                    vs = self.versions()
-                    return vs[-1] if vs else 0
+                    return tx.noop()
                 raise ValueError(
                     f"no constraint named {name!r}; "
                     f"in force: {sorted(existing)}"
                 )
             existing.pop(name)
-            doc = dict(prev_doc)
-            doc.setdefault("partition_by", self.partition_by)
-            doc.setdefault("partitions", {})
-            doc["commit"] = self._commit_info("drop_constraint", set())
+            doc = tx.meta_doc()
             if existing:
                 doc["constraints"] = existing
             else:
                 doc.pop("constraints", None)
-            import json
+            return tx.stage_manifest(doc)
 
-            with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-                json.dump(doc, fh, sort_keys=True)
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        self._publish(vdir)
-        return new_v
+    @staticmethod
+    def _declared_schema(doc: dict) -> list:
+        sch = doc.get("schema")
+        if not sch:
+            raise ValueError(
+                "table has no committed schema to evolve — the "
+                "first write commit establishes it"
+            )
+        return sch
 
     def add_column(
         self, name: str, ddl_type: str, initial_default=None
@@ -807,8 +883,6 @@ class _ManifestMetaMixin:
         scalar, so any writer handle resolves it).  Requires a
         committed schema (the first write establishes it — an empty
         table has nothing to evolve)."""
-        import json
-
         if name in self._META_COLS:
             raise ValueError(f"{name!r} is reserved for DV row addresses")
         norm = self._normalize_type(ddl_type)
@@ -827,40 +901,24 @@ class _ManifestMetaMixin:
                     f"initial_default {initial_default!r} does not "
                     f"cast to {norm}"
                 )
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            sch = prev_doc.get("schema")
-            if not sch:
-                raise ValueError(
-                    "table has no committed schema to evolve — the "
-                    "first write commit establishes it"
-                )
+        with self._txn("add_column") as tx:
+            sch = self._declared_schema(tx.prev_doc)
             if name in {n for n, _t in sch}:
                 raise ValueError(f"column {name!r} already exists")
-            if name in (prev_doc.get("dropped_columns") or []):
+            if name in (tx.prev_doc.get("dropped_columns") or []):
                 raise ValueError(
                     f"column name {name!r} was dropped and pre-drop "
                     "files still hold its bytes (name-based parquet "
                     "resolution would resurrect them); use a fresh "
                     "name, or compact() first to shed the old bytes"
                 )
-            doc = dict(prev_doc)
-            doc.setdefault("partition_by", self.partition_by)
-            doc.setdefault("partitions", {})
+            doc = tx.meta_doc()
             doc["schema"] = [list(e) for e in sch] + [[name, norm]]
             if initial_default is not None:
-                defaults = dict(prev_doc.get("defaults") or {})
+                defaults = dict(tx.prev_doc.get("defaults") or {})
                 defaults[name] = initial_default
                 doc["defaults"] = defaults
-            doc["commit"] = self._commit_info("add_column", set())
-            with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-                json.dump(doc, fh, sort_keys=True)
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        self._publish(vdir)
-        return new_v
+            return tx.stage_manifest(doc)
 
     def table_defaults(self, version: int | None = None) -> dict:
         """The initial-default fills in force at a snapshot
@@ -887,7 +945,6 @@ class _ManifestMetaMixin:
         expression references (they would fail analysis on every
         later commit), and unknown names.  A declared initial default
         for the column is dropped with it."""
-        import json
         import re
 
         if name in self.keys or name in self.partition_by:
@@ -901,15 +958,9 @@ class _ManifestMetaMixin:
                 "would become unwritable (and the drop tombstone "
                 "would block re-adding the name without a compact)"
             )
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            sch = prev_doc.get("schema")
-            if not sch:
-                raise ValueError(
-                    "table has no committed schema to evolve — the "
-                    "first write commit establishes it"
-                )
+        with self._txn("drop_column") as tx:
+            prev_doc = tx.prev_doc
+            sch = self._declared_schema(prev_doc)
             if name not in {n for n, _t in sch}:
                 raise ValueError(
                     f"no column {name!r}; table columns: "
@@ -936,9 +987,7 @@ class _ManifestMetaMixin:
                     f"of the persisted layout spec {clus}; re-cluster "
                     "with compact(cluster_by=…) without it first"
                 )
-            doc = dict(prev_doc)
-            doc.setdefault("partition_by", self.partition_by)
-            doc.setdefault("partitions", {})
+            doc = tx.meta_doc()
             doc["schema"] = [list(e) for e in sch if e[0] != name]
             defaults = dict(prev_doc.get("defaults") or {})
             defaults.pop(name, None)
@@ -950,14 +999,7 @@ class _ManifestMetaMixin:
             if name not in dropped:
                 dropped.append(name)
             doc["dropped_columns"] = dropped
-            doc["commit"] = self._commit_info("drop_column", set())
-            with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-                json.dump(doc, fh, sort_keys=True)
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        self._publish(vdir)
-        return new_v
+            return tx.stage_manifest(doc)
 
     def widen_column(self, name: str, ddl_type: str) -> int:
         """``ALTER TABLE ALTER COLUMN TYPE`` restricted to the lossless
@@ -969,23 +1011,14 @@ class _ManifestMetaMixin:
         change would re-render paths); key columns are fine (the merge
         compares them post-alignment, and batch keys are conformed up
         before the join)."""
-        import json
-
         norm = self._normalize_type(ddl_type)
         if name in self.partition_by:
             raise ValueError(
                 f"cannot widen partition column {name!r}: partition "
                 "values are directory names, not parquet data"
             )
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            sch = prev_doc.get("schema")
-            if not sch:
-                raise ValueError(
-                    "table has no committed schema to evolve — the "
-                    "first write commit establishes it"
-                )
+        with self._txn("widen_column") as tx:
+            sch = self._declared_schema(tx.prev_doc)
             cur = {n: t for n, t in sch}
             if name not in cur:
                 raise ValueError(
@@ -999,20 +1032,11 @@ class _ManifestMetaMixin:
                     "int<bigint, float<double, decimal growth that "
                     "shrinks neither scale nor integer digits)"
                 )
-            doc = dict(prev_doc)
-            doc.setdefault("partition_by", self.partition_by)
-            doc.setdefault("partitions", {})
+            doc = tx.meta_doc()
             doc["schema"] = [
                 [n, norm if n == name else t] for n, t in sch
             ]
-            doc["commit"] = self._commit_info("widen_column", set())
-            with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-                json.dump(doc, fh, sort_keys=True)
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        self._publish(vdir)
-        return new_v
+            return tx.stage_manifest(doc)
 
     def _effective_generated(self, doc: dict) -> dict[str, str]:
         """Constructor-handle generation exprs ∪ the manifest-persisted
@@ -1151,18 +1175,3 @@ class _ManifestMetaMixin:
                 )
         cols += [F.col(c) for c in extra]
         return batch.select(*cols)
-
-    def _publish(self, vdir: str) -> None:
-        """Publish a fully-written version: commit marker LAST (a crash
-        before this leaves the dir invisible to ``versions()`` — readers
-        still resolve the previous snapshot), then retention vacuum.
-        MUST be called outside any try-block whose handler abandons the
-        claim: once ``_SUCCESS`` lands the version is live, and a
-        failure in vacuum must never trigger an abandon that rmtree's a
-        published snapshot (with ``keep_versions=1`` that could leave
-        ``versions()`` empty — an unreadable table)."""
-        with open(os.path.join(vdir, "_SUCCESS"), "w"):
-            pass
-        if self.keep_versions is not None or self.keep_seconds is not None:
-            self.vacuum()
-

@@ -8,7 +8,6 @@ import path (`operators.upsert.ManifestSnapshotTable`) is unchanged.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -120,9 +119,6 @@ class _ManifestWriteMixin:
         declaration; pre-evolution files read NULL there) or carry a
         losslessly WIDER type (the declaration widens) — Delta's
         ``mergeSchema`` write option, as an explicit opt-in."""
-        import json
-        import shutil
-
         batch = _evaluate_once(batch)
         # generation defs are static table metadata (declared by the
         # first write, carried forever), so the unpinned read is safe
@@ -136,75 +132,34 @@ class _ManifestWriteMixin:
             vs = self.versions()
             return vs[-1] if vs else 0
         frags = {self._part_key(c) for c in touched}
-        # claim the next version BEFORE reading the commit basis: the
-        # claim freezes the version sequence (no peer can publish while
-        # we hold it), so the manifest read below cannot go stale —
+        # the transaction claims the next version BEFORE reading the
+        # commit basis: the claim freezes the version sequence (no peer
+        # can publish while we hold it), so the basis cannot go stale —
         # two writers can neither commit the same number nor lose each
         # other's updates (the loser of the claim gets
-        # CommitConflictError inside _claim_version)
-        new_v, vdir = self._claim_version()
-        try:
-            # one pinned manifest read: partitions + both stats tiers
-            # come from the SAME doc (no torn basis)
-            prev_doc = self._manifest_doc()
-            prev = {
-                k: int(v)
-                for k, v in prev_doc.get("partitions", {}).items()
-            }
-            batch = self._conform_batch(batch, prev_doc, schema_evolution)
+        # CommitConflictError)
+        with self._txn("upsert") as tx:
+            batch = self._conform_batch(
+                batch, tx.prev_doc, schema_evolution
+            )
             # old holders of the touched partitions only, read LIVE
             # (deletion vectors applied — the rewrite materializes
             # them) and aligned to the declared schema, so the rewrite
             # also materializes any pending column add/widening
             target = self._read_fragments(
-                    {frag: prev[frag] for frag in frags & set(prev)},
-                    dv=self._dv_map(prev_doc), align=prev_doc,)
+                    {frag: tx.prev[frag] for frag in frags & set(tx.prev)},
+                    dv=self._dv_map(tx.prev_doc), align=tx.prev_doc,)
             merged = merge_by_key(
                 target, batch, self.keys,
                 [F.col(c).desc() for c in self.order_cols],
             )
-            merged, checks = self._observe_constraints(merged, prev_doc)
-            self._distribute_for_write(merged, len(frags)).write.partitionBy(
-                *self.partition_by
-            ).parquet(self._data_dir(new_v))
-            self._raise_constraint_violations(checks)
-            # the manifest is only sound if its fragments name the dirs
-            # Spark ACTUALLY wrote — verify before committing, so a value
-            # whose rendering diverges from _part_key fails loudly here
-            # instead of wedging every later read with PATH_NOT_FOUND
-            written = self._written_fragments(new_v)
-            if written != frags:
-                raise ValueError(
-                    "partition dir names diverged from manifest fragments "
-                    f"— written {sorted(written)} vs expected "
-                    f"{sorted(frags)}; this partition value type/rendering "
-                    "is unsupported"
-                )
-            manifest = {
-                frag: v for frag, v in prev.items() if frag not in frags
-            }
-            manifest.update({frag: new_v for frag in frags})
-            doc = {"partition_by": self.partition_by, "partitions": manifest}
-            doc["commit"] = self._commit_info("upsert", frags)
-            self._carry_meta(doc, prev_doc, frags)
-            gen_eff = self._effective_generated(prev_doc)
-            if gen_eff:
-                doc["generated"] = gen_eff
-            # the declared schema is what this commit actually wrote
-            # (== carried unless the batch evolved it)
-            doc["schema"] = self._frame_schema(merged)
-            self._carry_dv(doc, prev_doc, frags)
-            self._inherit_stats(doc, prev_doc, frags, new_v, vdir)
-            self._write_blooms(new_v, vdir, doc["schema"])
-            with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-                json.dump(doc, fh, sort_keys=True)
-        except BaseException:
-            # abandon the claim: the table stays readable at its
-            # current version, nothing partial is visible
-            self._abandon_claim(vdir)
-            raise
-        self._publish(vdir)
-        return new_v
+            merged, checks = self._observe_constraints(merged, tx.prev_doc)
+            # every touched partition receives batch rows, so the
+            # written set must equal it exactly
+            return self._commit_rewrite(
+                tx, frags, merged, checks=checks, exact=True,
+                generated=True,
+            )
 
     def merge_into(
         self,
@@ -247,16 +202,9 @@ class _ManifestWriteMixin:
         Returns the committed version (current version unchanged on a
         no-op: empty source and nothing for the by-source clause to
         reap)."""
-        import json
-
         source = _evaluate_once(source)
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            prev = {
-                k: int(v)
-                for k, v in prev_doc.get("partitions", {}).items()
-            }
+        with self._txn("merge") as tx:
+            prev_doc, prev = tx.prev_doc, tx.prev
             source, gen_obs = self._apply_generated(source, prev_doc)
             source = self._conform_batch(
                 source, prev_doc, schema_evolution, allow_missing=True
@@ -308,9 +256,7 @@ class _ManifestWriteMixin:
                     self._part_key(tuple(r)) for r in located
                 } & set(prev)
             if not frags:
-                self._abandon_claim(vdir)
-                vs = self.versions()
-                return vs[-1] if vs else 0
+                return tx.noop()
             target = self._read_fragments(
                     {frag: prev[frag] for frag in frags & set(prev)},
                     dv=self._dv_map(prev_doc), align=prev_doc,)
@@ -327,41 +273,97 @@ class _ManifestWriteMixin:
                 ),
             )
             merged, checks = self._observe_constraints(merged, prev_doc)
-            self._distribute_for_write(merged, len(frags)).write.partitionBy(
-                *self.partition_by
-            ).parquet(self._data_dir(new_v))
-            self._raise_constraint_violations(checks)
             # delete/insert clauses may empty a touched partition or
-            # skip it entirely, so (unlike upsert) written ⊆ touched —
-            # but never outside it
-            written = self._written_fragments(new_v)
-            if not written <= frags:
-                raise ValueError(
-                    "merge rewrote fragments outside its source's "
-                    f"partitions — written {sorted(written)} vs touched "
-                    f"{sorted(frags)}"
-                )
-            manifest = {
-                frag: v for frag, v in prev.items() if frag not in frags
-            }
-            manifest.update({frag: new_v for frag in written})
-            doc = {"partition_by": self.partition_by, "partitions": manifest}
-            doc["commit"] = self._commit_info("merge", frags)
-            self._carry_meta(doc, prev_doc, frags)
-            gen_eff = self._effective_generated(prev_doc)
-            if gen_eff:
-                doc["generated"] = gen_eff
-            doc["schema"] = self._frame_schema(merged)
-            self._carry_dv(doc, prev_doc, frags)
-            self._inherit_stats(doc, prev_doc, frags, new_v, vdir)
-            self._write_blooms(new_v, vdir, doc["schema"])
-            with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-                json.dump(doc, fh, sort_keys=True)
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        self._publish(vdir)
-        return new_v
+            # skip it entirely, so (unlike upsert) written ⊆ touched
+            return self._commit_rewrite(
+                tx, frags, merged, checks=checks, generated=True
+            )
+
+    def _commit_rewrite(
+        self, tx, frags: set[str], out: DataFrame, *, checks=None,
+        exact: bool = False, generated: bool = False,
+    ) -> int:
+        """The copy-on-write tail shared by every rewriting verb: write
+        ``out`` (the new contents of the touched fragments ``frags``)
+        under the claimed version, raise any CHECK violation ``checks``
+        counted during the write, then stage a manifest that points
+        the rewritten fragments here, drops the ones the rewrite
+        emptied and inherits everything else — with the carried
+        metadata, the written schema, surviving deletion vectors, zone
+        maps and blooms.
+
+        The manifest is only sound if its fragments name the dirs Spark
+        ACTUALLY wrote, so the written set is checked first: equal to
+        ``frags`` when ``exact`` (every touched fragment keeps rows),
+        else within it — a value whose rendering diverges from
+        `_part_key` fails loudly here instead of wedging every later
+        read with PATH_NOT_FOUND.  ``generated`` records this handle's
+        effective generated-partition derivations (the writes that
+        derive them)."""
+        self._distribute_for_write(out, len(frags)).write.partitionBy(
+            *self.partition_by
+        ).parquet(self._data_dir(tx.version))
+        self._raise_constraint_violations(checks)
+        written = self._written_fragments(tx.version)
+        if (written != frags) if exact else not written <= frags:
+            raise ValueError(
+                f"{tx.op}: partition dirs written {sorted(written)} do "
+                f"not match the touched fragments {sorted(frags)}; this "
+                "partition value type/rendering is unsupported"
+            )
+        manifest = {f: v for f, v in tx.prev.items() if f not in frags}
+        manifest.update({f: tx.version for f in written})
+        doc = {"partition_by": self.partition_by, "partitions": manifest}
+        self._carry_meta(doc, tx.prev_doc, frags)
+        gen_eff = generated and self._effective_generated(tx.prev_doc)
+        if gen_eff:
+            doc["generated"] = gen_eff
+        # the declared schema is what this commit actually wrote
+        # (== carried unless the batch evolved it; every rewrite
+        # materializes pending evolution on the fragments it touched)
+        doc["schema"] = self._frame_schema(out)
+        self._carry_dv(doc, tx.prev_doc, frags)
+        self._inherit_stats(doc, tx.prev_doc, frags, tx.version, tx.vdir)
+        self._write_blooms(tx.version, tx.vdir, doc["schema"])
+        return tx.stage_manifest(doc, frags)
+
+    # -- locate -----------------------------------------------------------
+    def _locate_keys(self, tx, keys: DataFrame) -> tuple[DataFrame, set]:
+        """``(distinct key batch, live fragments holding those keys)``.
+        When partition columns ⊆ keys (the constructor's default
+        soundness regime) the fragments come straight from the batch —
+        no table scan; under ``stable_partitions=True`` the keys don't
+        name their partitions, so they are located by bloom sidecars
+        when those allow, else one column-pruned semi-join scan."""
+        # (measured: persisting this distinct across its two consumers
+        # costs MORE than the recompute — the cached relation
+        # materializes at full shuffle width and the broadcast build
+        # re-reads it; left unpersisted)
+        keys = keys.select(*self.keys).distinct()
+        if not tx.prev:
+            return keys, set()
+        if set(self.partition_by) <= set(self.keys):
+            touched = [
+                tuple(r)
+                for r in keys.select(*self.partition_by).distinct().collect()
+            ]
+            return keys, {self._part_key(c) for c in touched} & set(tx.prev)
+        return keys, self._locate_key_fragments(keys, tx.prev_doc, tx.prev)
+
+    def _locate_where(self, tx, hit: Column) -> set[str]:
+        """Live fragments holding a row where ``hit`` is TRUE: one
+        filter-pushdown scan of the partition columns."""
+        if not tx.prev:
+            return set()
+        located = (
+            self._read_fragments(
+                    tx.prev, dv=self._dv_map(tx.prev_doc), align=tx.prev_doc)
+            .filter(hit)
+            .select(*self.partition_by)
+            .distinct()
+            .collect()
+        )
+        return {self._part_key(tuple(r)) for r in located} & set(tx.prev)
 
     # -- delete ---------------------------------------------------------
     def delete(self, keys: DataFrame) -> int:
@@ -390,52 +392,14 @@ class _ManifestWriteMixin:
         if missing:
             raise ValueError(f"delete batch lacks key columns: {missing}")
         keys = _evaluate_once(keys)
-        # claim before reading the basis (see upsert): a peer commit
-        # between locate and rewrite would otherwise be silently undone
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            prev = {
-                k: int(v)
-                for k, v in prev_doc.get("partitions", {}).items()
-            }
-            if not prev:
-                self._abandon_claim(vdir)
-                vs = self.versions()
-                return vs[-1] if vs else 0
-            # (measured: persisting this distinct across its two
-            # consumers costs MORE than the recompute — the cached
-            # relation materializes at full shuffle width and the
-            # broadcast build re-reads it; left unpersisted)
-            keys = keys.select(*self.keys).distinct()
-            if set(self.partition_by) <= set(self.keys):
-                touched = [
-                    tuple(r)
-                    for r in keys.select(*self.partition_by)
-                    .distinct()
-                    .collect()
-                ]
-                frags = {self._part_key(c) for c in touched} & set(prev)
-            else:
-                # stable_partitions: keys don't name their partitions —
-                # bloom-bounded location when sidecars allow, else one
-                # column-pruned semi-join locate scan
-                frags = self._locate_key_fragments(keys, prev_doc, prev)
-            v, committed = self._commit_delete(
-                new_v,
-                vdir,
-                prev_doc,
-                frags,
+        # located under the claim (see upsert): a peer commit between
+        # locate and rewrite would otherwise be silently undone
+        with self._txn("delete") as tx:
+            keys, frags = self._locate_keys(tx, keys)
+            return self._commit_delete(
+                tx, frags,
                 lambda df: df.join(keys, on=self.keys, how="left_anti"),
             )
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        # publish outside the abandon scope (see _publish), mirroring
-        # upsert()/merge_into()/compact()
-        if committed:
-            self._publish(vdir)
-        return v
 
     def delete_where(self, condition: Column) -> int:
         """Predicate DELETE commit: remove rows where ``condition`` is
@@ -443,96 +407,28 @@ class _ManifestWriteMixin:
         rewriting only the partitions that contain a matching row —
         located by a filter-pushdown scan of the partition columns.
         Same manifest/commit discipline as `delete`."""
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            prev = {
-                k: int(v)
-                for k, v in prev_doc.get("partitions", {}).items()
-            }
-            if not prev:
-                self._abandon_claim(vdir)
-                vs = self.versions()
-                return vs[-1] if vs else 0
-            hit = F.coalesce(condition, F.lit(False))
-            touched = [
-                tuple(r)
-                for r in self._read_fragments(
-                        prev, dv=self._dv_map(prev_doc), align=prev_doc)
-                .filter(hit)
-                .select(*self.partition_by)
-                .distinct()
-                .collect()
-            ]
-            frags = {self._part_key(c) for c in touched} & set(prev)
-            v, committed = self._commit_delete(
-                new_v,
-                vdir,
-                prev_doc,
-                frags,
-                lambda df: df.filter(~hit),
-                op="delete_where",
+        hit = F.coalesce(condition, F.lit(False))
+        with self._txn("delete_where") as tx:
+            return self._commit_delete(
+                tx, self._locate_where(tx, hit), lambda df: df.filter(~hit)
             )
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        if committed:
-            self._publish(vdir)
-        return v
 
-    def _commit_delete(
-        self, new_v, vdir, prev_doc, frags, keep_fn, op: str = "delete"
-    ) -> tuple[int, bool]:
+    def _commit_delete(self, tx, frags: set[str], keep_fn) -> int:
         """Shared delete commit: rewrite the touched fragments through
         ``keep_fn`` (which drops the doomed rows), drop fully-emptied
-        fragments from the manifest, inherit everything else.  Runs
-        under an already-held version claim (``new_v``/``vdir``) with
-        ``prev_doc`` the basis manifest read under that claim; the
-        callers' except-blocks abandon the claim on any failure.
-
-        Stops BEFORE the commit marker — returns ``(version,
-        committed)`` and the caller publishes via `_publish` outside
-        its abandon scope, so an abandon can only ever hit an
-        unpublished claim (a vacuum failure after ``_SUCCESS`` must
-        not rmtree a live snapshot)."""
-        import json
-
+        fragments from the manifest, inherit everything else — a no-op
+        when no fragment is touched."""
         if not frags:
-            # nothing to delete: no-op, no new commit
-            self._abandon_claim(vdir)
-            return self.versions()[-1], False
-        prev = {
-            k: int(v) for k, v in prev_doc.get("partitions", {}).items()
-        }
+            return tx.noop()
         # read the doomed fragments LIVE (a row already dv-deleted must
         # not be resurrected by the rewrite), aligned to the declared
         # schema so the rewrite materializes pending column evolution
         kept = keep_fn(
             self._read_fragments(
-                    {f: prev[f] for f in frags},
-                    dv=self._dv_map(prev_doc), align=prev_doc,)
+                    {f: tx.prev[f] for f in frags},
+                    dv=self._dv_map(tx.prev_doc), align=tx.prev_doc,)
         )
-        self._distribute_for_write(kept, len(frags)).write.partitionBy(
-            *self.partition_by
-        ).parquet(self._data_dir(new_v))
-        written = self._written_fragments(new_v)
-        if not written <= frags:
-            raise ValueError(
-                "delete rewrote fragments outside its pruning set — "
-                f"written {sorted(written)} vs touched {sorted(frags)}"
-            )
-        manifest = {f: v for f, v in prev.items() if f not in frags}
-        manifest.update({f: new_v for f in written})
-        doc = {"partition_by": self.partition_by, "partitions": manifest}
-        doc["commit"] = self._commit_info(op, frags)
-        self._carry_meta(doc, prev_doc, frags)
-        doc["schema"] = self._frame_schema(kept)
-        self._carry_dv(doc, prev_doc, frags)
-        self._inherit_stats(doc, prev_doc, frags, new_v, vdir)
-        self._write_blooms(new_v, vdir, doc["schema"])
-        with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-            json.dump(doc, fh, sort_keys=True)
-        return new_v, True
+        return self._commit_rewrite(tx, frags, kept)
 
     # -- update -----------------------------------------------------------
     def update_where(
@@ -571,8 +467,6 @@ class _ManifestWriteMixin:
         also materializes any live vectors on the touched partitions,
         shrinking the table's read tax as a side effect.
         """
-        import json
-
         if not assignments:
             raise ValueError("update_where needs at least one assignment")
         exprs = {
@@ -589,35 +483,14 @@ class _ManifestWriteMixin:
                 "delete + upsert) and a partition move would leave the "
                 "row's fragment"
             )
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            prev = {
-                k: int(v)
-                for k, v in prev_doc.get("partitions", {}).items()
-            }
-            if not prev:
-                self._abandon_claim(vdir)
-                vs = self.versions()
-                return vs[-1] if vs else 0
-            hit = F.coalesce(condition, F.lit(False))
-            located = (
-                self._read_fragments(
-                        prev, dv=self._dv_map(prev_doc), align=prev_doc)
-                .filter(hit)
-                .select(*self.partition_by)
-                .distinct()
-                .collect()
-            )
-            frags = {
-                self._part_key(tuple(r)) for r in located
-            } & set(prev)
+        hit = F.coalesce(condition, F.lit(False))
+        with self._txn("update_where") as tx:
+            frags = self._locate_where(tx, hit)
             if not frags:
-                self._abandon_claim(vdir)
-                return self.versions()[-1]
+                return tx.noop()
             basis = self._read_fragments(
-                    {f: prev[f] for f in frags},
-                    dv=self._dv_map(prev_doc), align=prev_doc,)
+                    {f: tx.prev[f] for f in frags},
+                    dv=self._dv_map(tx.prev_doc), align=tx.prev_doc,)
             unknown = sorted(c for c in exprs if c not in basis.columns)
             if unknown:
                 raise ValueError(
@@ -637,40 +510,12 @@ class _ManifestWriteMixin:
                     for c in basis.columns
                 ]
             )
-            updated, checks = self._observe_constraints(updated, prev_doc)
-            self._distribute_for_write(updated, len(frags)).write.partitionBy(
-                *self.partition_by
-            ).parquet(self._data_dir(new_v))
-            self._raise_constraint_violations(checks)
+            updated, checks = self._observe_constraints(updated, tx.prev_doc)
             # an update never adds or empties a partition, so the
             # soundness gate is exact equality, like upsert()
-            written = self._written_fragments(new_v)
-            if written != frags:
-                raise ValueError(
-                    "update rewrote fragments outside its locate set — "
-                    f"written {sorted(written)} vs located {sorted(frags)}"
-                )
-            manifest = {
-                f: v for f, v in prev.items() if f not in frags
-            }
-            manifest.update({f: new_v for f in written})
-            doc = {"partition_by": self.partition_by, "partitions": manifest}
-            doc["commit"] = self._commit_info("update_where", frags)
-            self._carry_meta(doc, prev_doc, frags)
-            # an update never changes the schema (assignments cast
-            # back), but it does materialize pending evolution on the
-            # rewritten partitions
-            doc["schema"] = self._frame_schema(basis)
-            self._carry_dv(doc, prev_doc, frags)
-            self._inherit_stats(doc, prev_doc, frags, new_v, vdir)
-            self._write_blooms(new_v, vdir, doc["schema"])
-            with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-                json.dump(doc, fh, sort_keys=True)
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        self._publish(vdir)
-        return new_v
+            return self._commit_rewrite(
+                tx, frags, updated, checks=checks, exact=True
+            )
 
     # -- merge-on-read delete (deletion vectors) --------------------------
     def delete_dv(self, keys: DataFrame) -> int:
@@ -684,7 +529,7 @@ class _ManifestWriteMixin:
         anti-join on the affected fragments until some later commit
         rewrites them (any upsert/merge/delete touching the fragment
         materializes its vector) or `compact()` materializes
-        everything.  Same pruning, claim and publish discipline as
+        everything.  Same pruning and commit discipline as
         `delete`; a fragment whose every live row is deleted leaves the
         manifest.  Replay-safe: deleting the same keys twice is a
         no-op second time (returns the current version unchanged)."""
@@ -692,89 +537,25 @@ class _ManifestWriteMixin:
         if missing:
             raise ValueError(f"delete batch lacks key columns: {missing}")
         keys = _evaluate_once(keys)
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            prev = {
-                k: int(v)
-                for k, v in prev_doc.get("partitions", {}).items()
-            }
-            if not prev:
-                self._abandon_claim(vdir)
-                vs = self.versions()
-                return vs[-1] if vs else 0
-            keys = keys.select(*self.keys).distinct()
-            if set(self.partition_by) <= set(self.keys):
-                touched = [
-                    tuple(r)
-                    for r in keys.select(*self.partition_by)
-                    .distinct()
-                    .collect()
-                ]
-                frags = {self._part_key(c) for c in touched} & set(prev)
-            else:
-                # see delete(): bloom-bounded location when possible
-                frags = self._locate_key_fragments(keys, prev_doc, prev)
-            v, committed = self._commit_dv(
-                new_v,
-                vdir,
-                prev_doc,
-                frags,
+        with self._txn("delete_dv") as tx:
+            keys, frags = self._locate_keys(tx, keys)
+            return self._commit_dv(
+                tx, frags,
                 lambda df: df.join(keys, on=self.keys, how="left_semi"),
-                op="delete_dv",
             )
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        if committed:
-            self._publish(vdir)
-        return v
 
     def delete_where_dv(self, condition: Column) -> int:
         """Predicate DELETE as a deletion-vector commit — see
         `delete_dv`.  SQL DELETE NULL semantics (NULL keeps the row),
         partitions located by a filter-pushdown scan like
         `delete_where`, but only sidecar rows are written."""
-        new_v, vdir = self._claim_version()
-        try:
-            prev_doc = self._manifest_doc()
-            prev = {
-                k: int(v)
-                for k, v in prev_doc.get("partitions", {}).items()
-            }
-            if not prev:
-                self._abandon_claim(vdir)
-                vs = self.versions()
-                return vs[-1] if vs else 0
-            hit = F.coalesce(condition, F.lit(False))
-            touched = [
-                tuple(r)
-                for r in self._read_fragments(
-                        prev, dv=self._dv_map(prev_doc), align=prev_doc)
-                .filter(hit)
-                .select(*self.partition_by)
-                .distinct()
-                .collect()
-            ]
-            frags = {self._part_key(c) for c in touched} & set(prev)
-            v, committed = self._commit_dv(
-                new_v,
-                vdir,
-                prev_doc,
-                frags,
-                lambda df: df.filter(hit),
-                op="delete_where_dv",
+        hit = F.coalesce(condition, F.lit(False))
+        with self._txn("delete_where_dv") as tx:
+            return self._commit_dv(
+                tx, self._locate_where(tx, hit), lambda df: df.filter(hit)
             )
-        except BaseException:
-            self._abandon_claim(vdir)
-            raise
-        if committed:
-            self._publish(vdir)
-        return v
 
-    def _commit_dv(
-        self, new_v, vdir, prev_doc, frags, doom_fn, op: str
-    ) -> tuple[int, bool]:
+    def _commit_dv(self, tx, frags: set[str], doom_fn) -> int:
         """Shared deletion-vector commit: scan the touched fragments
         LIVE (existing vectors applied — a row cannot be doomed twice)
         with their (rel, row_index) addresses, select the doomed rows
@@ -783,18 +564,11 @@ class _ManifestWriteMixin:
         all inherited untouched (deletion only shrinks a file, so every
         recorded envelope/bitset stays a sound superset for pruning);
         `dv_rows` keeps `count_rows` metadata-only.  A fragment whose
-        live rows all die leaves the manifest.  Runs under an
-        already-held claim; stops before the commit marker like
-        `_commit_delete` (caller publishes outside its abandon scope).
-        Returns ``(version, committed)``."""
-        import json
-
+        live rows all die leaves the manifest.  A no-op when no
+        fragment is touched or no row is newly doomed."""
         if not frags:
-            self._abandon_claim(vdir)
-            return self.versions()[-1], False
-        prev = {
-            k: int(v) for k, v in prev_doc.get("partitions", {}).items()
-        }
+            return tx.noop()
+        prev, prev_doc, new_v = tx.prev, tx.prev_doc, tx.version
         dv_prev = self._dv_map(prev_doc)
         dvr_prev = {
             k: int(v) for k, v in (prev_doc.get("dv_rows") or {}).items()
@@ -849,14 +623,13 @@ class _ManifestWriteMixin:
         }
         if sum(cnt.values()) != int(counts["n"]):
             raise RuntimeError(
-                f"{op}: {int(counts['n']) - sum(cnt.values())} deletion-"
+                f"{tx.op}: {int(counts['n']) - sum(cnt.values())} deletion-"
                 f"vector rows name no touched fragment of {touched}"
             )
         if sum(cnt.values()) == sum(dvr_prev.get(f, 0) for f in frags):
             # nothing newly doomed (e.g. a replay of an applied
             # delete): no-op, no new commit
-            self._abandon_claim(vdir)
-            return self.versions()[-1], False
+            return tx.noop()
         # data-file row counts for the vectored fragments, to drop the
         # fully-emptied ones: fragment-tier manifest metadata where
         # recorded, one grouped count over the rest
@@ -883,7 +656,6 @@ class _ManifestWriteMixin:
         emptied = {f for f in cnt if data_rows[f] - cnt[f] <= 0}
         manifest = {f: v for f, v in prev.items() if f not in emptied}
         doc = {"partition_by": self.partition_by, "partitions": manifest}
-        doc["commit"] = self._commit_info(op, frags)
         self._carry_meta(doc, prev_doc, set())
         if self.stats_cols:
             doc["stats"] = {
@@ -915,9 +687,7 @@ class _ManifestWriteMixin:
         if dv_new:
             doc["dv"] = dv_new
             doc["dv_rows"] = dvr_new
-        with open(os.path.join(vdir, "manifest.json"), "w") as fh:
-            json.dump(doc, fh, sort_keys=True)
-        return new_v, True
+        return tx.stage_manifest(doc, frags)
 
     # -- change feed ------------------------------------------------------
     def changes(

@@ -72,12 +72,13 @@ class ManifestSnapshotTable(
     tables keyed by one id), with the same atomic commit, time travel,
     deletion vectors and change feed as the partitioned shape.
 
-    Concurrency: commits use optimistic concurrency — every writer
-    atomically claims its version directory (os.mkdir) BEFORE reading
-    its commit basis, so two concurrent writers can never both publish
-    the same version or silently drop each other's commits; the loser
-    raises `CommitConflictError` and must re-run against the new basis.
-    See the "commit protocol" section of `manifest_meta.py`.
+    Concurrency: commits use optimistic concurrency — every committing
+    verb runs in one transaction (`_txn`) that atomically claims its
+    version directory (os.mkdir) BEFORE reading its commit basis, so
+    two concurrent writers can never both publish the same version or
+    silently drop each other's commits; the loser raises
+    `CommitConflictError` and must re-run against the new basis.  See
+    the "commit protocol" section of `manifest_meta.py`.
 
     Soundness: pruned MERGE requires that a key can never change
     partition, so the constructor demands partition columns ⊆ keys or

@@ -37,7 +37,10 @@ class TestVersionClaim:
         upsert / delete / delete_where / compact raise instead of
         deleting the peer's in-flight commit; the table stays readable
         at its current version throughout, and abandoning the claim
-        unblocks the next writer at the SAME version number."""
+        unblocks the next writer at the SAME version number.  A
+        rollback, which deletes newer version dirs, is blocked too: a
+        peer that read its basis before the rollback would otherwise
+        publish a manifest pointing at a deleted version."""
         CommitConflict = _conflict_cls()
         t = _mk(spark, tmp_path)
         assert t.upsert(_rows(spark, [("d1", 1, "a", 1)])) == 1
@@ -69,6 +72,14 @@ class TestVersionClaim:
         t._abandon_claim(vdir)
         assert t.upsert(_rows(spark, [("d1", 1, "b", 2)])) == 2
         assert [(r.k, r.v) for r in t.read().collect()] == [(1, "b")]
+        _, vdir = t._claim_version()
+        with pytest.raises(CommitConflict):
+            t.rollback(1)
+        root = str(tmp_path / "ms")
+        assert os.path.isdir(os.path.join(root, "v=00001"))
+        assert os.path.isdir(os.path.join(root, "v=00002"))
+        assert t.versions() == [1, 2]
+        t._abandon_claim(vdir)
 
     def test_two_threads_one_wins_one_conflicts(self, spark, tmp_path):
         """The judge's two-writer test: both threads commit the same
@@ -190,18 +201,117 @@ class TestVersionClaim:
         assert t.upsert(_rows(spark, [("d1", 1, "b", 2)])) == 2
 
     def test_noop_paths_release_their_claim(self, spark, tmp_path):
-        """delete with no matching partition / compact of an
-        already-compact table are no-ops: they must leave no claim
-        behind (a leaked claim would wedge the next writer)."""
+        """Every no-op exit — a delete that matches nothing, compact of
+        an already-compact table, an empty merge, a replayed DV delete,
+        an update that matches nothing, a stats backfill of a covered
+        table, dropping an absent constraint with ``if_exists`` —
+        returns the current version and leaves no claim behind (a
+        leaked claim would wedge the next writer)."""
         from pyspark.sql import functions as F
 
-        t = _mk(spark, tmp_path)
-        t.upsert(_rows(spark, [("d1", 1, "a", 1)]))
-        assert t.delete_where(F.lit(False)) == 1  # no-op delete
-        assert t.compact() == 1  # already single-holder
+        t = _mk(spark, tmp_path, stats_cols=["k"])
+        t.upsert(_rows(spark, [("d1", 1, "a", 1), ("d2", 2, "b", 1)]))
+        dv_keys = _rows(spark, [("d2", 2, "b", 1)]).select("day", "k")
         root = str(tmp_path / "ms")
-        assert sorted(os.listdir(root)) == ["v=00001"]
-        assert t.upsert(_rows(spark, [("d1", 2, "b", 2)])) == 2
+
+        def check(name, noop, v):
+            assert noop() == v, name
+            assert sorted(os.listdir(root)) == [
+                f"v={i:05d}" for i in range(1, v + 1)
+            ], name
+
+        for name, noop in [
+            ("delete_where", lambda: t.delete_where(F.lit(False))),
+            ("compact", t.compact),  # already single-holder
+            ("merge_into", lambda: t.merge_into(_rows(spark, []))),
+            ("update_where", lambda: t.update_where(
+                F.col("k") == 99, {"v": "'z'"})),
+            ("backfill_stats", t.backfill_stats),
+            ("drop_constraint", lambda: t.drop_constraint(
+                "absent", if_exists=True)),
+        ]:
+            check(name, noop, 1)
+        assert t.delete_dv(dv_keys) == 2
+        check("replayed delete_dv", lambda: t.delete_dv(dv_keys), 2)
+        assert t.upsert(_rows(spark, [("d1", 2, "b", 2)])) == 3
+
+    # a commit's step boundaries, in order, and the ones each verb
+    # passes through (a DV commit's data is its vector file; a
+    # metadata-only commit writes no data at all)
+    _CRASH_STEPS = {
+        "upsert": ("claim", "data", "sidecars", "manifest", "success"),
+        "merge_into": ("claim", "data", "sidecars", "manifest", "success"),
+        "delete_dv": ("claim", "data", "manifest", "success"),
+        "add_column": ("claim", "manifest", "success"),
+        "compact": ("claim", "data", "sidecars", "manifest", "success"),
+    }
+
+    @pytest.mark.parametrize("op", sorted(_CRASH_STEPS))
+    def test_crash_at_every_step_leaves_the_table_as_it_was(
+        self, spark, tmp_path, monkeypatch, op
+    ):
+        """A commit that dies at any step boundary — while claiming,
+        after its data files, after its sidecars, after its manifest,
+        or before its `_SUCCESS` marker — leaves the table exactly as
+        it was: same versions, same rows, no claim dir left behind, and
+        the next commit lands at the version number the dead one
+        claimed.  The claim step dies before the `_CLAIM` marker is
+        written: a marker-less dir of a live process would otherwise
+        block every writer until ``claim_ttl_seconds``.  The upsert
+        also dies once by ``KeyboardInterrupt``."""
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.manifest_meta import (
+            _Txn,
+        )
+        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
+            ManifestSnapshotTable,
+        )
+
+        # (owner, method, whether the real method runs before the crash)
+        at = {
+            "claim": (ManifestSnapshotTable, "_mark_claim", False),
+            "data": (DataFrameWriter, "parquet", True),
+            "sidecars": (ManifestSnapshotTable, "_write_blooms", True),
+            "manifest": (_Txn, "stage_manifest", True),
+            "success": (ManifestSnapshotTable, "_publish", False),
+        }
+        t = _mk(spark, tmp_path, stats_cols=["k"])
+        t.upsert(_rows(spark, [("d1", 1, "a", 1), ("d2", 2, "b", 1)]))
+        # inputs evaluated once up front, so each retry reads them cheaply
+        batch = _rows(spark, [("d1", 1, "c", 2), ("d2", 3, "c", 2)])
+        batch = batch.localCheckpoint()
+        commit = {
+            "upsert": lambda: t.upsert(batch),
+            "merge_into": lambda: t.merge_into(batch),
+            "delete_dv": lambda: t.delete_dv(batch.select("day", "k")),
+            "add_column": lambda: t.add_column("extra", "int"),
+            "compact": lambda: t.compact(cluster_by=["k"]),
+        }[op]
+        root = str(tmp_path / "ms")
+        dirs, vs = sorted(os.listdir(root)), t.versions()
+        rows = sorted(t.read().collect())
+        crashes = [(step, RuntimeError) for step in self._CRASH_STEPS[op]]
+        if op == "upsert":
+            crashes.append(("data", KeyboardInterrupt))
+        for step, exc in crashes:
+            owner, name, run_first = at[step]
+            real = getattr(owner, name)
+
+            def crash(*a, _real=real, _run=run_first, _exc=exc,
+                      _msg=f"crash at {step}", **kw):
+                if _run:
+                    _real(*a, **kw)
+                raise _exc(_msg)
+
+            with monkeypatch.context() as m:
+                m.setattr(owner, name, crash)
+                with pytest.raises(exc, match=f"crash at {step}"):
+                    commit()
+            assert sorted(os.listdir(root)) == dirs, step
+            assert t.versions() == vs, step
+            assert sorted(t.read().collect()) == rows, step
+        assert commit() == vs[-1] + 1
 
 
 # ---------------------------------------------------------------------------

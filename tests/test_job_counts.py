@@ -12,7 +12,9 @@ The table mirrors the ingest shape: keyed (term, student_id,
 course_id), term-partitioned, zone maps and blooms on student_id, fed
 by xlsx drops through `DropIngestor`, corrected by `merge_into` from a
 ``createDataFrame(list)`` source, withdrawn from by `delete_dv`, with an
-`IncrementalAggView` refreshed after each write.
+`IncrementalAggView` refreshed after each write.  A zone-map-pruned
+`read_where` point read and three metadata-only commits (`restore`,
+`widen_column`, `drop_constraint`) are pinned on the same table.
 """
 
 from __future__ import annotations
@@ -50,13 +52,21 @@ SCHEMA = T.StructType([
 
 # upper bounds, one per op kind; before write inputs were evaluated
 # once, sheets were diffed on the driver, string zone maps came from
-# footers and the DV count-back was fused, the counts were 20, 13, 9
-# and 6
+# footers and the DV count-back was fused, the counts for the first
+# four were 20, 13, 9 and 6.  The first drop of two sheets and the
+# zone-map-pruned point read are pinned at their counts, and the
+# metadata-only commits read and write manifests only, so they launch
+# no job at all.
 MAX_JOBS = {
     "reupload": 9,
     "merge_into": 10,
     "delete_dv": 7,
     "refresh": 6,
+    "first_drop": 10,
+    "point_read": 3,
+    "restore": 0,
+    "widen_column": 0,
+    "drop_constraint": 0,
 }
 
 
@@ -110,10 +120,9 @@ def counts(spark, tmp_path_factory):
     ing = DropIngestor(spark, str(drops), str(root / "state"), table)
     for term in ("t1", "t2"):
         write_minimal_xlsx(str(drops / f"{term}.xlsx"), HEADER, _sheet(term))
-    ing.process_once()
+    out = {"first_drop": _jobs(spark, ing.process_once)}
     view.refresh()
 
-    out = {}
     write_minimal_xlsx(
         str(drops / "t1.xlsx"), HEADER, _sheet("t1", bump={3, 11})
     )
@@ -139,12 +148,31 @@ def counts(spark, tmp_path_factory):
     assert got[("t1", "S003", "C0")] == _sheet("t1", bump={3})[9][3]
     assert got[("t2", "S004", "C0")] == 9.5
     assert ("t1", "S000", "C1") not in got
+
+    out["point_read"] = _jobs(
+        spark,
+        lambda: table.read_where("student_id", "S003", "S003")[0].collect(),
+    )
+    out["restore"] = _jobs(spark, lambda: table.restore(table.versions()[-1]))
+    out["widen_column"] = _jobs(
+        spark, lambda: table.widen_column("ingest_seq", "bigint")
+    )
+    table.add_constraint("grade_known", "grade IS NOT NULL")
+    out["drop_constraint"] = _jobs(
+        spark, lambda: table.drop_constraint("grade_known")
+    )
+    assert table.table_constraints() == {}
+    assert dict(table.table_schema())["ingest_seq"] == "bigint"
     return out
 
 
 @pytest.mark.parametrize("op", sorted(MAX_JOBS))
 def test_write_path_job_count(counts, op):
-    assert 0 < counts[op] <= MAX_JOBS[op], (
+    # a zero bound pins "no job"; any other op must launch one, or the
+    # counter is not seeing its jobs
+    assert (counts[op] > 0 or not MAX_JOBS[op]) and (
+        counts[op] <= MAX_JOBS[op]
+    ), (
         f"{op} launched {counts[op]} Spark jobs, bound {MAX_JOBS[op]}: "
         f"all counts {counts}"
     )

@@ -7,6 +7,7 @@ Usage: python tools/opt_profile_storage.py <query_name> [reps]
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import os
 import sys
@@ -38,6 +39,38 @@ def timed(cls, name):
                 TIMES[name].append(dt)
 
     setattr(cls, name, wrap)
+
+
+def timed_txn(cls):
+    """Time every commit transaction in three rows: ``_txn.claim`` (its
+    entry: claim, claim marker, basis read), ``_txn.publish`` (its exit:
+    ``_SUCCESS`` and retention vacuum, or the abandon) and ``_txn`` (the
+    whole span, the verb's body included)."""
+    orig = cls._txn
+
+    @functools.wraps(orig)
+    @contextlib.contextmanager
+    def wrap(self, op):
+        cm = orig(self, op)
+        t0 = time.perf_counter()
+        tx = cm.__enter__()
+        t1 = time.perf_counter()
+        exc = (None, None, None)
+        try:
+            yield tx
+        except BaseException:
+            exc = sys.exc_info()
+        t2 = time.perf_counter()
+        try:
+            if not cm.__exit__(*exc) and exc[1] is not None:
+                raise exc[1]
+        finally:
+            t3 = time.perf_counter()
+            TIMES["_txn.claim"].append(t1 - t0)
+            TIMES["_txn.publish"].append(t3 - t2)
+            TIMES["_txn"].append(t3 - t0)
+
+    cls._txn = wrap
 
 
 def main() -> None:
@@ -72,13 +105,11 @@ def main() -> None:
         "_written_fragments",
         "_read_fragments",
         "_manifest_doc",
-        "_publish",
-        "_claim_version",
         "_conform_batch",
         "_apply_generated",
     ]:
-        if hasattr(ManifestSnapshotTable, m):
-            timed(ManifestSnapshotTable, m)
+        timed(ManifestSnapshotTable, m)
+    timed_txn(ManifestSnapshotTable)
 
     name = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
