@@ -69,6 +69,7 @@ from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .upsert import ManifestSnapshotTable
 
@@ -277,6 +278,20 @@ class IncrementalAggView(_SnapshotDirStore):
         with open(os.path.join(self._vdir(v), "state.json")) as fh:
             return json.load(fh)
 
+    def _partials_path(self, version: int) -> str:
+        return os.path.join(self._vdir(version), "partials.parquet")
+
+    def _read_partials(self, version: int, state: dict) -> DataFrame:
+        """The version's partials, read with the schema its refresh
+        recorded in ``state`` (a state written before the schema was
+        recorded falls back to inference)."""
+        reader = self.spark.read
+        if "partials_schema" in state:
+            reader = reader.schema(
+                StructType.fromJson(state["partials_schema"])
+            )
+        return reader.parquet(self._partials_path(version))
+
     # -- refresh --------------------------------------------------------
     # dtypes whose sums are exact (partial-merge order cannot change the
     # result); float/double sums are order-sensitive in the last ulp and
@@ -441,21 +456,30 @@ class IncrementalAggView(_SnapshotDirStore):
             else None
         )
         kept_frags = {f: v for f, v in m.items() if f not in changed}
-        old = None
         if prev_frags:
-            old = self.spark.read.parquet(
-                os.path.join(self._vdir(self.versions()[-1]), "partials.parquet")
-            )
-        if old is not None:
-            # one row per fragment — bounded control data; mapping each
-            # combo back through _part_key identifies the rows to evict
-            # with the exact types the partials table stores
-            combos = old.select(*pb).distinct()
-            evict_rows = [
-                r
-                for r in combos.collect()
-                if self.base._part_key([r[c] for c in pb]) in evict
-            ]
+            prev_v = self.versions()[-1]
+            old = self._read_partials(prev_v, state)
+            # the partials file is one small file of bounded control
+            # data: its distinct partition combos are read on the
+            # driver, with no Spark job, and mapped back through
+            # _part_key to find the rows to evict
+            import pyarrow.parquet as pq
+
+            held = pq.read_table(self._partials_path(prev_v), columns=pb)
+            combos = {
+                self.base._part_key([r[c] for c in pb]): r
+                for r in held.group_by(pb).aggregate([]).to_pylist()
+            }
+            # every partial row belongs to a fragment the previous
+            # refresh recorded; a combo that renders to any other name
+            # would escape eviction and be counted twice
+            stray = set(combos) - set(prev_frags)
+            if stray:
+                raise RuntimeError(
+                    f"partials of v={prev_v} hold fragments {sorted(stray)} "
+                    "that its state does not list"
+                )
+            evict_rows = [r for f, r in combos.items() if f in evict]
             if evict_rows:
                 # literal NOT-IN predicate, not an anti-join: the evict
                 # set is a handful of partition combos, and a
@@ -464,13 +488,12 @@ class IncrementalAggView(_SnapshotDirStore):
                 # per core) just to ship a few literals — measured at
                 # ~1.6 s and ~2 GB of worker RSS per refresh, pure
                 # fixed overhead on the incremental path
-                hit = None
+                hit = F.lit(False)
                 for r in evict_rows:
-                    eq = None
+                    eq = F.lit(True)
                     for c in pb:
-                        e_ = F.col(c).eqNullSafe(F.lit(r[c]))
-                        eq = e_ if eq is None else eq & e_
-                    hit = eq if hit is None else hit | eq
+                        eq = eq & F.col(c).eqNullSafe(F.lit(r[c]))
+                    hit = hit | eq
                 old = old.filter(~hit)
             partials = (
                 old
@@ -488,12 +511,19 @@ class IncrementalAggView(_SnapshotDirStore):
         # merge — opens one file instead of a shuffle-partition's worth
         # of shards.  repartition(1) (not coalesce) keeps the fragment
         # aggregation itself parallel and only funnels the tiny result.
-        partials.repartition(1).write.parquet(
-            os.path.join(vdir, "partials.parquet")
-        )
+        partials.repartition(1).write.parquet(self._partials_path(new_v))
+        # the partials' schema follows from the view definition and the
+        # base schema; recorded next to the definition, it lets every
+        # later read of this file skip Spark's schema inference job
         with open(os.path.join(vdir, "state.json"), "w") as fh:
             json.dump(
-                {"fragments": fp, **live_def}, fh, sort_keys=True
+                {
+                    "fragments": fp,
+                    "partials_schema": partials.schema.jsonValue(),
+                    **live_def,
+                },
+                fh,
+                sort_keys=True,
             )
         with open(os.path.join(vdir, "_SUCCESS"), "w"):
             pass
@@ -516,9 +546,7 @@ class IncrementalAggView(_SnapshotDirStore):
         v = vs[-1] if version is None else version
         if v not in vs:
             raise ValueError(f"version {v} not in {vs}")
-        partials = self.spark.read.parquet(
-            os.path.join(self._vdir(v), "partials.parquet")
-        )
+        partials = self._read_partials(v, self._state(v))
         merges = []
         finals = []
         for name, _src, kind in self.measures:

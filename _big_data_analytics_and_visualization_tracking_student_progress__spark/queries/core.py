@@ -5032,16 +5032,17 @@ def q_manifest_bloom_point_read(
         # the three point probes are independent: overlap their
         # metadata resolution + 1-row position jobs on driver threads
         # (guide §2.6 — Spark schedules concurrent jobs FIFO and the
-        # probes' tiny jobs back-fill each other's idle gaps)
-        from concurrent.futures import ThreadPoolExecutor
+        # probes' tiny jobs back-fill each other's idle gaps), each
+        # carrying the caller's job group
+        from ..serving.collect import run_concurrently
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            results = list(
-                pool.map(
-                    lambda p: table.read_where_eq([("event_id", p)]),
-                    probes,
-                )
-            )
+        results = run_concurrently(
+            spark,
+            [
+                lambda p=p: table.read_where_eq([("event_id", p)])
+                for p in probes
+            ],
+        )
         frames, files_kept, files_total = [], 0, 0
         for fr, _fk, _ft, flk, flt in results:
             files_kept += flk

@@ -30,6 +30,20 @@ Scale posture: rendering collects only AGGREGATED query results (a
 histogram's buckets, one student's transcript page, monthly rollups) —
 bounded control data, same as every other driver-side artifact.  The
 heavy work stays in the distributed queries.
+
+Latency posture: the dashboard's five panels, and the student page's
+transcript and grade histogram, are independent queries.  Each render
+builds its frames on the calling thread (the registry builders and
+`load_table`'s schema caches are not made for concurrent use), then
+collects them together through `collect.collect_concurrently`, one
+driver thread per frame, so a render waits for its slowest panel
+instead of the sum of its panels.  The jobs are the same ones: a
+render issues as many jobs, stages and tasks as before, all under the
+caller's job group.  The student page's hit check stays a sequential
+lookup ahead of them, so a miss still costs one query.
+`tests/test_job_counts.py` pins the dashboard's job count under the
+caller's group, and `tests/test_serving_report.py` pins both pages
+byte-identical to a sequential collect.
 """
 
 from __future__ import annotations
@@ -38,6 +52,8 @@ import html
 from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
+
+from .collect import collect_concurrently
 
 # Palette: validated default slots (light / dark), one categorical hue
 # for data marks, reserved status steps, text tokens for all text.
@@ -373,8 +389,10 @@ def render_student_report(
             f"<h1>Student {int(custkey)}</h1>"
             "<p class='sub'>no records found</p>",
         )
-    transcript = transcript_lookup(spark, sf_dir, custkey=custkey).collect()
-    hist = all_queries()["grade_histogram"].fn(spark, sf_dir).collect()
+    transcript, hist = collect_concurrently([
+        transcript_lookup(spark, sf_dir, custkey=custkey),
+        all_queries()["grade_histogram"].fn(spark, sf_dir),
+    ])
     hist.sort(key=lambda r: r["grade4"])
     s = row[0]
     tiles = "".join(
@@ -430,17 +448,19 @@ def render_dashboard(spark: SparkSession, sf_dir: str) -> str:
     from ..registry import all_queries
 
     qs = all_queries()
-    hll = qs["hll_distinct_users"].fn(spark, sf_dir).collect()
-    trend = qs["monthly_order_trend"].fn(spark, sf_dir).collect()
+    # five independent panels: built here, collected together
+    panels = [
+        qs[name].fn(spark, sf_dir)
+        for name in ("hll_distinct_users", "monthly_order_trend",
+                     "grade_histogram", "corpus_quality_rollup",
+                     "pricing_summary")
+    ]
+    hll, trend, hist, quality, ps = collect_concurrently(panels)
     trend.sort(key=lambda r: r["ym"])
-    hist = qs["grade_histogram"].fn(spark, sf_dir).collect()
     hist.sort(key=lambda r: r["grade4"])
-    quality = [tuple(r) for r in
-               qs["corpus_quality_rollup"].fn(spark, sf_dir).collect()]
-    pricing = qs["pricing_summary"].fn(spark, sf_dir)
-    ps_cols = pricing.columns
-    ps = sorted((tuple(r) for r in pricing.collect()),
-                key=lambda r: (r[0], r[1]))
+    quality = [tuple(r) for r in quality]
+    ps_cols = panels[-1].columns
+    ps = sorted((tuple(r) for r in ps), key=lambda r: (r[0], r[1]))
 
     # grouping-sets rollup: (g_lang, g_source) = (1,1) grand total,
     # (0,1) per-language subtotals

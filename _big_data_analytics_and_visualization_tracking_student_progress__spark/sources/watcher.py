@@ -41,6 +41,7 @@ import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.cdc import HASH_COL, with_row_hash
 from ..operators.upsert import ManifestSnapshotTable
@@ -222,6 +223,7 @@ class DropIngestor:
             folder, os.path.join(state_dir, "files.json"), paranoid=paranoid
         )
         self.log_path = os.path.join(state_dir, "changed_rows")
+        self.log_schema_path = os.path.join(state_dir, "changed_rows.schema.json")
 
     # -- per-file row-hash snapshots ------------------------------------
     def _rowhash_path(self, path: str) -> str:
@@ -359,9 +361,11 @@ class DropIngestor:
                     ],
                     schema=schema,
                 )
-                self.spark.createDataFrame(changed, hashed.schema).withColumn(
-                    SEQ_COL, F.lit(seq)
-                ).write.mode("append").parquet(self.log_path)
+                logged = self.spark.createDataFrame(
+                    changed, hashed.schema
+                ).withColumn(SEQ_COL, F.lit(seq))
+                self._record_log_schema(logged.schema)
+                logged.write.mode("append").parquet(self.log_path)
                 wrote = True
             staged.append((path, sig, hashes))
 
@@ -387,13 +391,33 @@ class DropIngestor:
         self._write_returned(seq)
         return batch
 
+    # -- the changed-rows log ---------------------------------------------
+    def _record_log_schema(self, schema: StructType) -> None:
+        """Keep the schema of the rows about to be appended to the log
+        next to it, replaced atomically, before the append."""
+        tmp = self.log_schema_path + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(schema.json())
+        os.replace(tmp, self.log_schema_path)
+
+    def _read_log(self) -> DataFrame:
+        """The whole changed-rows log, read with the schema this
+        ingestor writes to it: no schema-inference job, whose listing
+        would grow with every batch the log has ever received.  A log
+        written before the schema was kept falls back to inference."""
+        reader = self.spark.read
+        if os.path.exists(self.log_schema_path):
+            with open(self.log_schema_path) as fh:
+                reader = reader.schema(StructType.fromJson(json.load(fh)))
+        return reader.parquet(self.log_path)
+
     def _log_window(self, lo: int, hi: int) -> DataFrame:
         """Log rows with `lo < ingest_seq <= hi`.  Bounded on BOTH
         sides: the returned DataFrame is lazy over the append-only log,
         so an upper bound is what keeps a batch stable after later
         batches append newer rows."""
         return (
-            self.spark.read.parquet(self.log_path)
+            self._read_log()
             .filter((F.col(SEQ_COL) > lo) & (F.col(SEQ_COL) <= hi))
             .drop(HASH_COL)
         )
@@ -435,6 +459,4 @@ class DropIngestor:
         directory that was lost (deleted, or its disk replaced)."""
         if not os.path.exists(os.path.join(self.log_path, "_SUCCESS")):
             return
-        self.table.upsert(
-            self.spark.read.parquet(self.log_path).drop(HASH_COL)
-        )
+        self.table.upsert(self._read_log().drop(HASH_COL))

@@ -15,6 +15,11 @@ by xlsx drops through `DropIngestor`, corrected by `merge_into` from a
 `IncrementalAggView` refreshed after each write.  A zone-map-pruned
 `read_where` point read and three metadata-only commits (`restore`,
 `widen_column`, `drop_constraint`) are pinned on the same table.
+
+The serving side is pinned too: `render_dashboard` collects its five
+panels on driver threads, and the threads' jobs must still land in the
+caller's job group, so the dashboard's count is pinned exactly — a
+thread that dropped the group would leave its jobs uncounted.
 """
 
 from __future__ import annotations
@@ -34,12 +39,20 @@ from _big_data_analytics_and_visualization_tracking_student_progress__spark.oper
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
     ManifestSnapshotTable,
 )
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.serving.collect import (
+    collect_concurrently,
+)
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.serving.report import (
+    render_dashboard,
+)
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.sources.watcher import (
     DropIngestor,
 )
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.sources.xlsx import (
     write_minimal_xlsx,
 )
+
+from .conftest import SF_SMALL
 
 HEADER = ["term", "student_id", "course_id", "grade"]
 SCHEMA = T.StructType([
@@ -56,13 +69,16 @@ SCHEMA = T.StructType([
 # four were 20, 13, 9 and 6.  The first drop of two sheets and the
 # zone-map-pruned point read are pinned at their counts, and the
 # metadata-only commits read and write manifests only, so they launch
-# no job at all.
+# no job at all.  Reading the changed-rows log and the view's previous
+# partials with their recorded schemas, and taking the partials'
+# partition combos on the driver, cut the drops by one job each (from
+# 10 and 9) and the refresh by three (from 6).
 MAX_JOBS = {
-    "reupload": 9,
+    "reupload": 8,
     "merge_into": 10,
     "delete_dv": 7,
-    "refresh": 6,
-    "first_drop": 10,
+    "refresh": 3,
+    "first_drop": 9,
     "point_read": 3,
     "restore": 0,
     "widen_column": 0,
@@ -176,6 +192,39 @@ def test_write_path_job_count(counts, op):
         f"{op} launched {counts[op]} Spark jobs, bound {MAX_JOBS[op]}: "
         f"all counts {counts}"
     )
+
+
+# jobs of one warm `render_dashboard` over SF_SMALL, the same count as
+# when its five panels were collected one after another
+DASHBOARD_JOBS = 11
+
+
+def test_dashboard_jobs_stay_in_the_callers_group(spark):
+    render_dashboard(spark, SF_SMALL)  # first call fills the schema caches
+    n = _jobs(spark, lambda: render_dashboard(spark, SF_SMALL))
+    assert n == DASHBOARD_JOBS, (
+        f"render_dashboard launched {n} jobs under the caller's job group, "
+        f"pinned at {DASHBOARD_JOBS}: fewer means a panel's jobs left the group"
+    )
+
+
+def test_collect_concurrently_keeps_input_order(spark):
+    frames = [spark.range(i, i + 1 + i % 2) for i in range(6)]
+    got = collect_concurrently(frames)
+    assert [[r.id for r in rows] for rows in got] == [
+        list(range(i, i + 1 + i % 2)) for i in range(6)
+    ]
+    assert collect_concurrently([]) == []
+
+
+def test_collect_concurrently_raises_a_frames_error(spark):
+    frames = [
+        spark.range(3),
+        spark.range(1).selectExpr("raise_error('panel failed') AS x"),
+        spark.range(2),
+    ]
+    with pytest.raises(Exception, match="panel failed"):
+        collect_concurrently(frames)
 
 
 def test_only_python_built_inputs_are_checkpointed(spark, tmp_path):

@@ -59,6 +59,28 @@ def test_student_report_renders_transcript(spark):
     assert f"{n} transcript rows" in html_text
 
 
+def test_concurrent_collects_render_the_sequential_html(spark, monkeypatch):
+    """Overlapping the panel collects changes when each panel's jobs
+    run, never what the page shows: both pages are byte-identical to a
+    render whose collects run one after another."""
+    from _big_data_analytics_and_visualization_tracking_student_progress__spark.serving import (
+        report,
+    )
+
+    concurrent = (
+        render_dashboard(spark, SF_SMALL),
+        render_student_report(spark, SF_SMALL, custkey=1),
+    )
+    monkeypatch.setattr(
+        report, "collect_concurrently", lambda frames: [df.collect() for df in frames]
+    )
+    sequential = (
+        render_dashboard(spark, SF_SMALL),
+        render_student_report(spark, SF_SMALL, custkey=1),
+    )
+    assert concurrent == sequential
+
+
 def test_student_report_missing_student(spark):
     html_text = render_student_report(spark, SF_SMALL, custkey=99999999)
     assert "no records found" in html_text
