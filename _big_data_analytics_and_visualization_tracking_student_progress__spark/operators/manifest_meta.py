@@ -220,7 +220,10 @@ class _ManifestMetaMixin:
                 )
             raise ValueError(f"version {version} not in {vs}")
         with open(os.path.join(self._vdir(version), "manifest.json")) as fh:
-            return json.load(fh)
+            doc = json.load(fh)
+        if version == vs[-1]:
+            self._retain_scans(doc)
+        return doc
 
     def manifest(self, version: int | None = None) -> dict[str, int]:
         """partition-dir-fragment → version holding its current files."""

@@ -166,73 +166,194 @@ class _ManifestMetadataMixin:
             out.update(self._read_fstats_sidecar(v, fl))
         return out
 
+    # -- per-version scan resolver ----------------------------------------
+    # Every read — point reads, pruned reads, copy-on-write locates,
+    # deletion-vector builds, view refreshes — resolves each holder
+    # version it touches to one aligned scan (`_version_scan`) and
+    # each deletion-vector holder to one filtered sidecar scan
+    # (`_dv_scan`).  A published version's files never change, so
+    # both frames are built once per handle and reused: a later read
+    # plans only what it puts on top of them, not the reader, the
+    # address columns and the alignment Project again.  A memo key
+    # holds the version, its commit stamp (a rollback followed by a
+    # re-commit of the same number is a different commit, so it
+    # misses), the sorted path or fragment set, ``with_pos`` and the
+    # declared schema and defaults the scan was aligned to.  Versions
+    # without ``_SUCCESS`` (a commit scanning its own files) or
+    # without a stamp are never memoized, and each read of the latest
+    # manifest drops the entries of versions it no longer references
+    # (`_retain_scans`), so the memo holds one snapshot's holder set
+    # (plus whatever time-travel reads touched since).  Reads run
+    # concurrently on driver threads (the bloom point-read probes), so
+    # the memo is only touched under ``_scan_lock``.
+    _DV_SCHEMA = "frag string, rel string, row_index bigint"
+
+    def _holder_manifest(self, v: int) -> tuple[list | None, str | None]:
+        """``(schema, commit)`` from version ``v``'s OWN manifest, read
+        raw from its (clone-resolved) version dir: the ``schema`` entry
+        (None when unavailable) and the serialized ``commit`` stamp,
+        which is None unless ``v`` is published and stamped — the
+        identity a memoized scan of ``v`` is keyed by.  Deliberately
+        NOT `_manifest_doc`: holder versions are routinely
+        vacuum-demoted (no longer readable snapshots) or borrowed
+        through a shallow clone's base map, and both are refused there;
+        for schema purposes the holder's manifest is authoritative
+        whenever the file still exists, because it records exactly the
+        frame that commit wrote — the schema of every data file under
+        that version dir."""
+        import json
+
+        vdir = self._vdir_of(v)
+        # `_SUCCESS` first: once it exists the manifest is final
+        published = os.path.exists(os.path.join(vdir, "_SUCCESS"))
+        try:
+            with open(os.path.join(vdir, "manifest.json")) as fh:
+                doc = json.load(fh)
+        except (OSError, ValueError):
+            return None, None
+        stamp = doc.get("commit")
+        commit = (
+            json.dumps(stamp, sort_keys=True)
+            if published and stamp
+            else None
+        )
+        return doc.get("schema"), commit
+
+    def _memoized(self, key: tuple, build) -> DataFrame:
+        """The frame memoized under ``key`` (``(kind, version, commit,
+        ...)``), built by ``build`` on a miss; a key without a commit
+        identity is built every time and never stored."""
+        if key[2] is None:
+            return build()
+        with self._scan_lock:
+            hit = self._scan_memo.get(key)
+        if hit is not None:
+            return hit
+        df = build()  # outside the lock: planning makes py4j calls
+        with self._scan_lock:
+            return self._scan_memo.setdefault(key, df)
+
+    def _retain_scans(self, doc: dict) -> None:
+        """Drop memoized scans of versions the latest manifest ``doc``
+        no longer references as a data or deletion-vector holder."""
+        live = {
+            int(v) for v in (doc.get("partitions") or {}).values()
+        } | set(self._dv_map(doc).values())
+        with self._scan_lock:
+            for key in [k for k in self._scan_memo if k[1] not in live]:
+                del self._scan_memo[key]
+
+    def _version_scan(
+        self, v: int, paths: list[str], with_pos: bool, align: dict | None
+    ) -> DataFrame:
+        """One holder-version scan of ``paths``, aligned to ``align``'s
+        declared schema (see `_align_schema`); memoized (see above).
+        ``with_pos`` appends the DV row address (``__rel``, ``__ri``)
+        from the scan's metadata column (it must be derived BEFORE any
+        union — ``_metadata`` only resolves on the file-scan relation).
+
+        The reader gets version ``v``'s MANIFEST schema explicitly
+        instead of inferring one: every data file under a version dir
+        was written by the single commit that created it, and that
+        commit recorded exactly the frame it wrote (``doc["schema"]``,
+        partition columns included — the reader resolves those from
+        the directory names and casts them to the declared type, which
+        is the same value the inference+align path produced).  This
+        skips the footer-read schema-inference job Spark otherwise
+        runs per ``spark.read.parquet`` call — measured r15: the
+        commit paths build 6-12 fragment scans per storage query at
+        ~0.1-0.2 s each, most of it this inference.  Legacy docs
+        without a recorded schema keep the inference path."""
+        import json
+
+        schema, commit = self._holder_manifest(v)
+        paths = sorted(paths)
+        sch = (align or {}).get("schema")
+        aligned_to = (
+            json.dumps([sch, align.get("defaults") or {}], sort_keys=True)
+            if sch
+            else None
+        )
+
+        def build() -> DataFrame:
+            df = self._reader(v, schema).parquet(*paths)
+            if with_pos:
+                df = df.select(
+                    "*",
+                    F.regexp_extract(
+                        F.col("_metadata.file_path"), self._DV_REL, 1
+                    ).alias("__rel"),
+                    F.col("_metadata.row_index").alias("__ri"),
+                )
+            return self._align_schema(df, align)
+
+        return self._memoized(
+            ("scan", v, commit, tuple(paths), with_pos, aligned_to), build
+        )
+
+    def _dv_scan(self, v: int, frags: list[str]) -> DataFrame:
+        """Deletion-vector holder ``v``'s sidecar, filtered to
+        ``frags``, read with its fixed schema (no inference job);
+        memoized like `_version_scan`."""
+        frags = sorted(frags)
+        return self._memoized(
+            ("dv", v, self._holder_manifest(v)[1], tuple(frags)),
+            lambda: self.spark.read.schema(self._DV_SCHEMA)
+            .parquet(self._dv_dir(v))
+            .filter(F.col("frag").isin(frags)),
+        )
+
     def _read_dv(self, dv_map: dict[str, int]) -> DataFrame | None:
         """The doomed-row table for ``dv_map`` (fragment → dv holder
         version): columns (frag, rel, row_index), one scan per holder
         version filtered to the fragments it currently serves."""
-        if not dv_map:
-            return None
         by_version: dict[int, list[str]] = {}
         for frag, v in dv_map.items():
             by_version.setdefault(v, []).append(frag)
         out = None
         for v, frags in sorted(by_version.items()):
-            df = self.spark.read.parquet(self._dv_dir(v)).filter(
-                F.col("frag").isin(frags)
-            )
+            df = self._dv_scan(v, frags)
             out = df if out is None else out.unionByName(df)
         return out
-
-    def _apply_dv(
-        self, df: DataFrame | None, dv_map: dict[str, int]
-    ) -> DataFrame | None:
-        """Anti-join a scan (which carried ``__rel``/``__ri`` metadata
-        columns — see `_scan_version`) against the deletion vectors,
-        dropping the helper columns.  No broadcast hint: vectors are
-        tiny by design (DV deletes are the small-scattered-erasure
-        path; mass deletes belong to copy-on-write `delete`), so AQE
-        broadcasts them, but a pathologically large vector must degrade
-        to a shuffle join rather than OOM the driver."""
-        if df is None:
-            return None
-        if not dv_map or "__rel" not in df.columns:
-            return df.drop("__rel", "__ri")
-        doomed = self._read_dv(dv_map).select(
-            F.col("rel").alias("__rel"),
-            F.col("row_index").alias("__ri"),
-        )
-        return df.join(doomed, ["__rel", "__ri"], "left_anti").drop(
-            "__rel", "__ri"
-        )
 
     def _scan_entries_dv(
         self,
         entries: list[tuple[str, int, str]],
         dv: dict[str, int],
         align: dict | None = None,
+        keep_pos: bool = False,
     ) -> DataFrame | None:
-        """Scan ``entries`` = [(fragment, holder version, path)] with
-        the merge-on-read tax applied ONLY to vectored fragments'
-        paths: clean fragments scan without address columns and never
-        enter the anti-join, so the tax tracks the vectored data, not
-        the read.  Shared by the pruned read paths.
+        """Scan ``entries`` = [(fragment, holder version, path)] — the
+        one union every read path goes through: one `_version_scan` per
+        holder version, versions unioned by name so schema may evolve
+        across commits.  The merge-on-read tax applies ONLY to vectored
+        fragments' paths: clean fragments scan without address columns
+        and never enter the anti-join against ``dv`` (fragment → dv
+        holder version), so the tax tracks the vectored data, not the
+        read.  ``keep_pos`` scans every entry with its address columns
+        and keeps them on the result (the DV build path needs them).
+        No broadcast hint on the anti-join: vectors are tiny by design
+        (DV deletes are the small-scattered-erasure path; mass deletes
+        belong to copy-on-write `delete`), so AQE broadcasts them, but
+        a pathologically large vector must degrade to a shuffle join
+        rather than OOM the driver.
 
         ``align``: manifest doc whose declared schema each PER-VERSION
         scan is aligned to BEFORE any union — alignment must happen at
         this level because the union's own missing-column handling
         NULL-fills, which would override a declared initial default."""
+        frags = {frag for frag, _v, _p in entries}
+        dv = {f: v for f, v in dv.items() if f in frags}
         clean: dict[int, list[str]] = {}
         vectored: dict[int, list[str]] = {}
         for frag, v, path in entries:
-            tgt = vectored if frag in dv else clean
+            tgt = vectored if (frag in dv or keep_pos) else clean
             tgt.setdefault(v, []).append(path)
 
-        def _union(by_version, with_pos):
+        def union(by_version, with_pos):
             out = None
             for v, paths in sorted(by_version.items()):
-                df = self._align_schema(
-                    self._scan_version(v, paths, with_pos), align
-                )
+                df = self._version_scan(v, paths, with_pos, align)
                 out = (
                     df
                     if out is None
@@ -240,35 +361,21 @@ class _ManifestMetadataMixin:
                 )
             return out
 
-        plain = _union(clean, False)
-        tagged = _union(vectored, True)
-        if tagged is not None:
-            tagged = self._apply_dv(tagged, dv)
+        plain = union(clean, False)
+        tagged = union(vectored, True)
+        if tagged is not None and dv:
+            doomed = self._read_dv(dv).select(
+                F.col("rel").alias("__rel"),
+                F.col("row_index").alias("__ri"),
+            )
+            tagged = tagged.join(doomed, ["__rel", "__ri"], "left_anti")
+        if tagged is not None and not keep_pos:
+            tagged = tagged.drop("__rel", "__ri")
         if plain is None:
             return tagged
         if tagged is None:
             return plain
         return plain.unionByName(tagged, allowMissingColumns=True)
-
-    def _holder_schema(self, v: int) -> list | None:
-        """The ``schema`` entry of version ``v``'s OWN manifest, read
-        raw from its (clone-resolved) version dir — or None when
-        unavailable.  Deliberately NOT `_manifest_doc`: holder versions
-        are routinely vacuum-demoted (no longer readable snapshots) or
-        borrowed through a shallow clone's base map, and both are
-        refused there; for schema purposes the holder's manifest is
-        authoritative whenever the file still exists, because it
-        records exactly the frame that commit wrote — the schema of
-        every data file under that version dir."""
-        import json
-
-        try:
-            with open(
-                os.path.join(self._vdir_of(v), "manifest.json")
-            ) as fh:
-                return json.load(fh).get("schema")
-        except (OSError, ValueError):
-            return None
 
     def _reader(self, v: int, schema: list | None):
         """Parquet reader rooted at version ``v``'s data dir, given the
@@ -283,37 +390,6 @@ class _ManifestMetadataMixin:
                 ", ".join(f"`{n}` {t}" for n, t in schema)
             )
         return reader
-
-    def _scan_version(
-        self, v: int, paths: list[str], with_pos: bool
-    ) -> DataFrame:
-        """One holder-version scan; ``with_pos`` appends the DV row
-        address (``__rel``, ``__ri``) from the scan's metadata column
-        (it must be derived BEFORE any union — ``_metadata`` only
-        resolves on the file-scan relation).
-
-        The reader gets version ``v``'s MANIFEST schema explicitly
-        instead of inferring one: every data file under a version dir
-        was written by the single commit that created it, and that
-        commit recorded exactly the frame it wrote (``doc["schema"]``,
-        partition columns included — the reader resolves those from
-        the directory names and casts them to the declared type, which
-        is the same value the inference+align path produced).  This
-        skips the footer-read schema-inference job Spark otherwise
-        runs per ``spark.read.parquet`` call — measured r15: the
-        commit paths build 6-12 fragment scans per storage query at
-        ~0.1-0.2 s each, most of it this inference.  Legacy docs
-        without a recorded schema keep the inference path."""
-        df = self._reader(v, self._holder_schema(v)).parquet(*sorted(paths))
-        if with_pos:
-            df = df.select(
-                "*",
-                F.regexp_extract(
-                    F.col("_metadata.file_path"), self._DV_REL, 1
-                ).alias("__rel"),
-                F.col("_metadata.row_index").alias("__ri"),
-            )
-        return df
 
     # -- bloom filters (per-file equality skipping) -----------------------
     # Zone maps prune RANGES; they are blind to equality probes on a
@@ -681,9 +757,7 @@ class _ManifestMetadataMixin:
                 )
         if not entries:
             return (
-                self._read_fragments(m, align=doc).filter(
-                    F.lit(False)
-                ),
+                self._empty_read(doc, m),
                 len(keep),
                 len(m),
                 0,

@@ -30,7 +30,8 @@ class _ManifestReadMixin:
         """Resolve fragment→holder-version mappings into one DataFrame:
         one scan per holding version (basePath keeps hive partition
         inference working across the per-version data roots), versions
-        unioned by name so schema may evolve across commits.
+        unioned by name so schema may evolve across commits — the
+        whole-fragment form of `_scan_entries_dv`, which does the work.
 
         ``dv``: deletion-vector map (fragment → dv holder version) from
         the SAME pinned manifest doc as ``frag_to_version`` — doomed
@@ -38,53 +39,28 @@ class _ManifestReadMixin:
         ``keep_pos``: retain the ``__rel``/``__ri`` address columns on
         the result (the DV build path needs them).
         ``align``: manifest doc whose declared schema each PER-VERSION
-        scan is aligned to BEFORE the cross-version union — it must
-        happen per scan, not after, because the union's own
-        missing-column handling NULL-fills, which would override a
-        declared initial default."""
-        dv = {
-            f: v for f, v in (dv or {}).items() if f in frag_to_version
-        }
-        # the anti-join (and its per-row address derivation) applies
-        # ONLY to the vectored fragments' scans — reads of clean
-        # fragments pay zero merge-on-read tax, so the tax tracks the
-        # VECTORED data, not the table
-        clean: dict[int, list[str]] = {}
-        vectored: dict[int, list[str]] = {}
-        for frag, v in frag_to_version.items():
-            tgt = vectored if (frag in dv or keep_pos) else clean
-            tgt.setdefault(v, []).append(
-                os.path.join(self._data_dir(v), frag)
-            )
+        scan is aligned to BEFORE the cross-version union."""
+        entries = [
+            (frag, v, os.path.join(self._data_dir(v), frag))
+            for frag, v in frag_to_version.items()
+        ]
+        return self._scan_entries_dv(
+            entries, dv or {}, align=align, keep_pos=keep_pos
+        )
 
-        def _union(by_version, with_pos):
-            out = None
-            for v, paths in sorted(by_version.items()):
-                df = self._align_schema(
-                    self._scan_version(v, paths, with_pos), align
-                )
-                out = (
-                    df
-                    if out is None
-                    else out.unionByName(df, allowMissingColumns=True)
-                )
-            return out
-
-        plain = _union(clean, False)
-        tagged = _union(vectored, True)
-        if tagged is not None and dv:
-            doomed = self._read_dv(dv).select(
-                F.col("rel").alias("__rel"),
-                F.col("row_index").alias("__ri"),
-            )
-            tagged = tagged.join(doomed, ["__rel", "__ri"], "left_anti")
-        if tagged is not None and not keep_pos:
-            tagged = tagged.drop("__rel", "__ri")
-        if plain is None:
-            return tagged
-        if tagged is None:
-            return plain
-        return plain.unionByName(tagged, allowMissingColumns=True)
+    def _empty_read(self, doc: dict, m: dict[str, int]) -> DataFrame:
+        """An empty frame typed like a read of snapshot ``doc`` (fragment
+        map ``m``) — what a read returns when pruning kept nothing.
+        Built from the declared schema alone; only docs without a
+        recorded schema scan the holders to learn it."""
+        sch = doc.get("schema")
+        if not sch:
+            return self._read_fragments(m, align=doc).filter(F.lit(False))
+        # the false filter folds the plan to an empty local relation,
+        # so collecting it runs no job
+        return self.spark.range(0).select(
+            *[F.lit(None).cast(t).alias(n) for n, t in sch]
+        ).filter(F.lit(False))
 
     def read(self, version: int | None = None) -> DataFrame | None:
         doc = self._manifest_doc(version)
@@ -266,9 +242,7 @@ class _ManifestReadMixin:
         if frame is None:
             # everything pruned: an empty frame with the table schema
             return (
-                self._read_fragments(m, align=doc).filter(
-                    F.lit(False)
-                ),
+                self._empty_read(doc, m),
                 frags_kept,
                 len(m),
                 files_kept,

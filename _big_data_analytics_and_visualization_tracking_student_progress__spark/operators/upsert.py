@@ -22,9 +22,10 @@ fixed point of last-write-wins (verified in tests).
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from .manifest_base import (  # noqa: F401  (public re-exports)
     CommitConflictError,
@@ -194,4 +195,8 @@ class ManifestSnapshotTable(
         # cache that is O(history) manifest-JSON parses PER COMMIT,
         # unbounded for long-lived time-retained tables.
         self._ts_cache: dict[int, float] = {}
+        # memoized per-version scans and deletion-vector frames — see
+        # "per-version scan resolver" in `manifest_metadata.py`
+        self._scan_memo: dict[tuple, DataFrame] = {}
+        self._scan_lock = threading.Lock()
 

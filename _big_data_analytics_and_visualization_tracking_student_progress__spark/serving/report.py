@@ -40,7 +40,9 @@ driver thread per frame, so a render waits for its slowest panel
 instead of the sum of its panels.  The jobs are the same ones: a
 render issues as many jobs, stages and tasks as before, all under the
 caller's job group.  The student page's hit check stays a sequential
-lookup ahead of them, so a miss still costs one query.
+lookup ahead of them, so a miss still costs one query; its jobs carry
+a job tag, and whatever AQE left running of them is cancelled once its
+collect returns.
 `tests/test_job_counts.py` pins the dashboard's job count under the
 caller's group, and `tests/test_serving_report.py` pins both pages
 byte-identical to a sequential collect.
@@ -49,6 +51,7 @@ byte-identical to a sequential collect.
 from __future__ import annotations
 
 import html
+import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
@@ -376,11 +379,23 @@ def render_student_report(
     from ..plans.student_progress import flagship_progress, transcript_lookup
     from ..registry import all_queries
 
-    row = (
-        flagship_progress(spark, sf_dir)
-        .filter(f"c_custkey = {int(custkey)}")
-        .collect()
-    )
+    # AQE can leave stage jobs of the hit check running after its
+    # collect has returned (their result is no longer needed): tag the
+    # check's jobs and cancel what is left of them, so neither the
+    # caller's next query nor a session stop competes with them.  A
+    # tag, unlike a job group, leaves the caller's group in place.
+    sc = spark.sparkContext
+    tag = f"student-hit-check-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        row = (
+            flagship_progress(spark, sf_dir)
+            .filter(f"c_custkey = {int(custkey)}")
+            .collect()
+        )
+    finally:
+        sc.removeJobTag(tag)
+        sc.cancelJobsWithTag(tag)
     if not row:
         # early out BEFORE the transcript/histogram jobs: a miss should
         # cost one lookup, not three distributed queries

@@ -14,7 +14,9 @@ by xlsx drops through `DropIngestor`, corrected by `merge_into` from a
 ``createDataFrame(list)`` source, withdrawn from by `delete_dv`, with an
 `IncrementalAggView` refreshed after each write.  A zone-map-pruned
 `read_where` point read and three metadata-only commits (`restore`,
-`widen_column`, `drop_constraint`) are pinned on the same table.
+`widen_column`, `drop_constraint`) are pinned on the same table, and
+so is the number of py4j commands the warm point read sends — the
+driver-side planning cost of a short read, also free of timing noise.
 
 The serving side is pinned too: `render_dashboard` collects its five
 panels on driver threads, and the threads' jobs must still land in the
@@ -72,14 +74,16 @@ SCHEMA = T.StructType([
 # no job at all.  Reading the changed-rows log and the view's previous
 # partials with their recorded schemas, and taking the partials'
 # partition combos on the driver, cut the drops by one job each (from
-# 10 and 9) and the refresh by three (from 6).
+# 10 and 9) and the refresh by three (from 6).  Reading the deletion
+# vectors with their fixed schema cut the point read from 3 to 2 (it
+# ran one schema-inference job per vector holder).
 MAX_JOBS = {
     "reupload": 8,
     "merge_into": 10,
     "delete_dv": 7,
     "refresh": 3,
     "first_drop": 9,
-    "point_read": 3,
+    "point_read": 2,
     "restore": 0,
     "widen_column": 0,
     "drop_constraint": 0,
@@ -92,6 +96,30 @@ def _sheet(term, bump=()):
         for s in range(20)
         for c in range(3)
     ]
+
+
+def _round_trips(fn) -> int:
+    """Number of py4j commands the driver sends while ``fn`` runs,
+    counted at the one method every command goes through.  Memory
+    commands are left out: they release proxies of Java objects that
+    earlier code dropped, at whatever point py4j gets round to it."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    send = ClientServerConnection.send_command
+    n = 0
+
+    def counted(self, command):
+        nonlocal n
+        n += not command.startswith(MEMORY_COMMAND_NAME)
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        fn()
+    finally:
+        ClientServerConnection.send_command = send
+    return n
 
 
 def _jobs(spark, fn) -> int:
@@ -169,6 +197,10 @@ def counts(spark, tmp_path_factory):
         spark,
         lambda: table.read_where("student_id", "S003", "S003")[0].collect(),
     )
+    # warm: the job-count read above already resolved every scan
+    out["point_read_round_trips"] = _round_trips(
+        lambda: table.read_where("student_id", "S003", "S003")[0].collect()
+    )
     out["restore"] = _jobs(spark, lambda: table.restore(table.versions()[-1]))
     out["widen_column"] = _jobs(
         spark, lambda: table.widen_column("ingest_seq", "bigint")
@@ -191,6 +223,22 @@ def test_write_path_job_count(counts, op):
     ), (
         f"{op} launched {counts[op]} Spark jobs, bound {MAX_JOBS[op]}: "
         f"all counts {counts}"
+    )
+
+
+# py4j commands the driver sends for one warm zone-map-pruned point
+# read, build and collect together.  Round trips carry no timing noise
+# and are the driver's share of a short read: before each published
+# holder version's aligned scan and deletion-vector frame were
+# memoized on the handle, the same read sent 455.
+POINT_READ_ROUND_TRIPS = 143
+
+
+def test_point_read_round_trips(counts):
+    n = counts["point_read_round_trips"]
+    assert 0 < n <= POINT_READ_ROUND_TRIPS, (
+        f"a warm point read sent {n} py4j commands, bound "
+        f"{POINT_READ_ROUND_TRIPS}"
     )
 
 

@@ -12,6 +12,8 @@ agree with the underlying registered queries.
 from __future__ import annotations
 
 import re
+import time
+import uuid
 
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.serving.report import (
     column_chart,
@@ -84,6 +86,33 @@ def test_concurrent_collects_render_the_sequential_html(spark, monkeypatch):
 def test_student_report_missing_student(spark):
     html_text = render_student_report(spark, SF_SMALL, custkey=99999999)
     assert "no records found" in html_text
+
+
+def test_student_report_miss_leaves_no_job_running(spark):
+    """A miss returns as soon as the hit check's collect does; the
+    check's AQE stage jobs that are still running then are cancelled,
+    while its jobs stay in the caller's job group."""
+    sc = spark.sparkContext
+    group = f"miss-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        html_text = render_student_report(spark, SF_SMALL, custkey=99999999)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(group))
+    assert "no records found" in html_text
+    assert jobs, "the hit check's jobs left the caller's job group"
+    # the scheduler's event loop handles the cancel a moment after the
+    # call; left alone, the jobs ran for seconds after the miss
+    deadline = time.monotonic() + 0.25
+    while (running := jobs & set(tracker.getActiveJobsIds())) and (
+        time.monotonic() < deadline
+    ):
+        time.sleep(0.01)
+    assert not running, f"hit-check jobs {sorted(running)} still running"
 
 
 def test_chart_marks_follow_spec():

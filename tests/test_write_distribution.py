@@ -66,18 +66,24 @@ def test_scan_uses_manifest_schema_and_fallback_matches(table, spark):
     produce identical rows AND identical schemas (the alignment layer
     runs either way)."""
     fast = table.read().orderBy("day", "id").collect()
-    sch = table._holder_schema(1)
+    sch, commit = table._holder_manifest(1)
     assert sch is not None and [c for c, _t in sch] == ["id", "day", "x"]
-    orig = type(table)._holder_schema
+    assert commit is not None
+    # a fresh handle, so no memoized scan answers for the fallback
+    slow_table = ManifestSnapshotTable(
+        spark, table.path, keys=["day", "id"], order_cols=["id"],
+        partition_by=["day"], stats_cols=["x"],
+    )
+    orig = type(table)._holder_manifest
     try:
-        type(table)._holder_schema = lambda self, v: None
-        slow_df = table.read()
+        type(table)._holder_manifest = lambda self, v: (None, None)
+        slow_df = slow_table.read()
         slow = slow_df.orderBy("day", "id").collect()
     finally:
-        type(table)._holder_schema = orig
+        type(table)._holder_manifest = orig
     assert fast == slow
     assert [r.asDict() for r in fast] == [r.asDict() for r in slow]
 
 
 def test_holder_schema_absent_manifest_returns_none(table):
-    assert table._holder_schema(99) is None
+    assert table._holder_manifest(99) == (None, None)
