@@ -107,11 +107,6 @@ def dround(c: Column, n: int) -> Column:
     return F.floor(c * F.lit(s) + F.lit(0.5)) / F.lit(s)
 
 
-def sql_dround(expr: str, n: int) -> str:
-    s = float(10**n)
-    return f"FLOOR(({expr}) * {s} + 0.5) / {s}"
-
-
 def wavg(value: Column, weight: Column, scale: int = 6) -> Column:
     """A3 — weighted average with the reference's zero-denominator guard
     (app.py:141-144 returns 0.0, where plain SQL division yields NULL).

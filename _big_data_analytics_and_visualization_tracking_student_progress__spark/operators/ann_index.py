@@ -1,11 +1,10 @@
 """Managed IVF ANN index: the materialized IVF layout with a LIFECYCLE.
 
-`similarity.build_ivf_index` writes a one-shot hive layout — the right
-shape for a frozen corpus, but production corpora grow, re-embed, and
-must honor right-to-erasure.  This module routes the same layout
-through `ManifestSnapshotTable` (partition column ``__c`` = the coarse-
-quantizer cell), so the index inherits the full storage lifecycle the
-text index already has via streaming maintenance:
+Production corpora grow, re-embed, and must honor right-to-erasure, so
+the cell layout is a `ManifestSnapshotTable` (partition column ``__c``
+= the coarse-quantizer cell) rather than a one-shot write: the index
+inherits the full storage lifecycle the text index already has via
+streaming maintenance:
 
 - **Incremental appends** are pruned MERGE commits: only the cells the
   batch lands in are rewritten, every other cell is inherited by
@@ -36,7 +35,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..localframe import local_frame
+from ..localframe import empty_frame, local_frame
 
 from .similarity import (
     _sq_dist,
@@ -257,9 +256,6 @@ class ManagedIvfIndex:
                 return ddl
         return "long"
 
-    def _empty(self, spark: SparkSession, ddl: str) -> DataFrame:
-        return spark.createDataFrame([], ddl)
-
     def probe(
         self,
         query_vec: Sequence[float],
@@ -283,7 +279,7 @@ class ManagedIvfIndex:
         if cand is None:
             if total == 0:
                 raise ValueError("index is empty — nothing to probe")
-            return self._empty(
+            return empty_frame(
                 self.table.spark,
                 f"{self.id_col} {self._id_type(version)}, cos_sim double",
             )
@@ -381,7 +377,7 @@ class ManagedIvfIndex:
             # probed cells hold no live vectors (erased / not yet
             # built): a legitimate empty join, typed like the real one
             qt = queries.schema[q_id].dataType.simpleString()
-            return self._empty(
+            return empty_frame(
                 self.table.spark,
                 f"{q_id} {qt}, "
                 f"{self.id_col} {self._id_type(version)}, "
@@ -549,7 +545,7 @@ class ManagedPqIndex(ManagedIvfIndex):
         if cand is None:
             if total == 0:
                 raise ValueError("index is empty — nothing to probe")
-            return self._empty(
+            return empty_frame(
                 self.table.spark,
                 f"{self.id_col} {self._id_type(version)}, approx_d2 double",
             )
@@ -640,7 +636,7 @@ class ManagedPqIndex(ManagedIvfIndex):
             if total == 0:
                 raise ValueError("index is empty — nothing to join")
             qt = queries.schema[q_id].dataType.simpleString()
-            return self._empty(
+            return empty_frame(
                 self.table.spark,
                 f"{q_id} {qt}, {self.id_col} {self._id_type(version)}, "
                 "approx_d2 double, rank int",

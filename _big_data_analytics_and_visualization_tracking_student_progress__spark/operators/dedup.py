@@ -524,12 +524,6 @@ def simhash_from_hashes(hashes: Column) -> Column:
     return out
 
 
-def simhash64(text: Column) -> Column:
-    """64-bit SimHash over word tokens (single-expression convenience;
-    prefer materializing `token_hashes` as a column in pipelines)."""
-    return simhash_from_hashes(token_hashes(text))
-
-
 def token_hashes(text: Column) -> Column:
     return F.transform(
         F.array_distinct(tokens(text)), lambda t: F.xxhash64(t)

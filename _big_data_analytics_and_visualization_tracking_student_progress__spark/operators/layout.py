@@ -1,40 +1,60 @@
-"""Z-order (Morton-curve) file layout — multi-dimensional data
-skipping, the Delta/Iceberg `OPTIMIZE ZORDER BY` capability built from
-primitives.
+"""Z-order (Morton-curve) bucket and interleave primitives — the
+shared halves of every multi-dimensional layout in the package.
 
-A table range-partitioned (or sorted) on ONE column skips files for
-predicates on that column only; interleaving the bits of TWO bucketized
-columns into a Morton code and laying files out by code prefix gives
-every file a small hyper-rectangle in (x, y) space, so min/max
-manifests (or partition values) prune files for predicates on EITHER
-column.  At 100 TB this is the difference between "fast on the cluster
-key, full scan on everything else" and "skip ~(1 − sel_x·sel_y) of the
-files on any conjunctive range".
-
-Everything here is exact integer arithmetic (bucket = (v − lo) div w
-with w = (hi − lo) div 2^bits + 1, then bit interleave), so the layout
-decision is bit-reproducible on any engine — the registered
-`zorder_layout_stats` query is DuckDB-oracle-checked end to end.
+A table sorted on ONE column skips files for predicates on that column
+only; quantizing several columns into buckets and interleaving the
+bucket bits into a Morton key gives every file a small hyper-rectangle
+in the cluster columns' space, so per-file min/max zone maps prune
+files for predicates on ANY of them.  `ManifestSnapshotTable.compact(
+cluster_method="zorder")` is the one writer of that layout; it builds
+its key from `scaled_bucket` (or `quantile_bounds` / `quantile_bucket`)
+and `morton_interleave`.  The registered `zorder_layout_stats` query
+computes the same key with exact-integer grid buckets via `morton`, and
+its DuckDB oracle via `morton_sql`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-# ---------------------------------------------------------------------------
-# Morton interleave of two pre-bucketized integer columns (bits each →
-# 2·bits z).  Delegates to the n-column `writers.morton_interleave`
-# (x bits land at even positions, y at odd — the same placement
-# `morton_sql` mirrors for the oracle).  This module is the
-# exact-integer / oracle-checkable / prefix-partitioned face of
-# z-ordering; `sources/writers.py write_zordered` is the float-
-# normalized range-file variant whose pruning rides min/max file stats.
-# ---------------------------------------------------------------------------
-def morton(xb: Column, yb: Column, bits: int = 8) -> Column:
-    from ..sources.writers import morton_interleave
+def morton_interleave(cols: Sequence[Column], bits: int) -> Column:
+    """Z-order key: bit-interleave `bits` low bits of each (already
+    bucketized, non-negative long) column — pure native shifts/masks, so
+    the key computes inside codegen with zero Python in the write path."""
+    z = F.lit(0).cast("long")
+    n = len(cols)
+    for i in range(bits):
+        for j, c in enumerate(cols):
+            bit = F.shiftright(c, i).bitwiseAND(F.lit(1))
+            z = z.bitwiseOR(F.shiftleft(bit, i * n + j))
+    return z
 
+
+def scaled_bucket(c: Column, lo, hi, bits: int) -> Column:
+    """NULL-safe uniform-width bucketization of ``c`` into
+    [0, 2^bits − 1] between the driver-side ``lo``/``hi`` bounds: the
+    quantization half of the Morton key.  NULLs bucket to 0 (NULLS
+    FIRST — a NULL fed raw into `morton_interleave` would poison the
+    whole key to NULL); unknown or degenerate bounds (constant /
+    all-NULL column) contribute a constant bucket, i.e. no order."""
+    top = (1 << bits) - 1
+    if lo is None or hi is None or hi <= lo:
+        return F.lit(0).cast("long")
+    scaled = F.floor(
+        (c.cast("double") - F.lit(lo)) / F.lit(hi - lo) * F.lit(float(top))
+    ).cast("long")
+    return F.coalesce(
+        F.least(F.greatest(scaled, F.lit(0)), F.lit(top)), F.lit(0)
+    )
+
+
+def morton(xb: Column, yb: Column, bits: int = 8) -> Column:
+    """Two-column `morton_interleave`: x bits land at even positions,
+    y at odd — the placement `morton_sql` mirrors for the oracle."""
     return morton_interleave([xb.cast("long"), yb.cast("long")], bits)
 
 
@@ -46,145 +66,6 @@ def morton_sql(xb: str, yb: str, bits: int = 8) -> str:
         terms.append(f"(({xb}) // {1 << b}) % 2 * {1 << (2 * b)}")
         terms.append(f"(({yb}) // {1 << b}) % 2 * {1 << (2 * b + 1)}")
     return " + ".join(terms)
-
-
-def grid_bucket(v: Column, lo: int, hi: int, bits: int = 8) -> Column:
-    """Exact-integer grid bucket: (v − lo) div w with w = (hi − lo) div
-    2^bits + 1 ⇒ bucket ∈ [0, 2^bits) for any v ∈ [lo, hi].  (Rank- or
-    quantile-based bucketization is the skew-robust production variant;
-    the grid keeps the layout decision a pure per-row expression.)"""
-    w = (hi - lo) // (1 << bits) + 1
-    return F.floor((v.cast("long") - F.lit(lo)) / F.lit(w)).cast("long")
-
-
-def zorder_code(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    x_range: tuple[int, int],
-    y_range: tuple[int, int],
-    bits: int = 8,
-    out_col: str = "__z",
-) -> DataFrame:
-    """Stamp the Morton code of (x, y) — table stats (min/max per
-    dimension) are driver-known layout-time constants, as in any
-    OPTIMIZE job."""
-    xb = grid_bucket(F.col(x_col), *x_range, bits=bits)
-    yb = grid_bucket(F.col(y_col), *y_range, bits=bits)
-    return df.withColumn(out_col, morton(xb, yb, bits))
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    x_range: tuple[int, int],
-    y_range: tuple[int, int],
-    bits: int = 8,
-    prefix_bits: int = 4,
-) -> None:
-    """Write the table hive-partitioned by the top `prefix_bits` of the
-    Morton code (2^prefix_bits directories, each a small (x, y)
-    hyper-rectangle).  `repartition` on the prefix keeps one writer
-    task per cell — no small-file explosion."""
-    shift = 1 << (2 * bits - prefix_bits)
-    stamped = zorder_code(
-        df, x_col, y_col, x_range, y_range, bits=bits
-    ).withColumn("__zp", F.floor(F.col("__z") / F.lit(shift)).cast("long"))
-    (
-        stamped.drop("__z")
-        .repartition(F.col("__zp"))
-        .write.mode("overwrite")
-        .partitionBy("__zp")
-        .parquet(path)
-    )
-
-
-def _prefix_rect(
-    p: int, bits: int, prefix_bits: int
-) -> tuple[int, int, int, int]:
-    """Bucket-space hyper-rectangle covered by z-prefix `p`: the prefix
-    fixes the top interleaved bits (alternating y, x from the MSB); the
-    free suffix spans the rest of each dimension."""
-    x_hi_bits = y_hi_bits = nx = ny = 0
-    for i in range(prefix_bits):
-        zpos = 2 * bits - 1 - i
-        bit = (p >> (prefix_bits - 1 - i)) & 1
-        if zpos % 2 == 0:
-            x_hi_bits = (x_hi_bits << 1) | bit
-            nx += 1
-        else:
-            y_hi_bits = (y_hi_bits << 1) | bit
-            ny += 1
-    x_lo = x_hi_bits << (bits - nx)
-    y_lo = y_hi_bits << (bits - ny)
-    return (
-        x_lo,
-        x_lo + (1 << (bits - nx)) - 1,
-        y_lo,
-        y_lo + (1 << (bits - ny)) - 1,
-    )
-
-
-def zorder_prefixes(
-    x_sel: tuple[int, int],
-    y_sel: tuple[int, int],
-    x_range: tuple[int, int],
-    y_range: tuple[int, int],
-    bits: int = 8,
-    prefix_bits: int = 4,
-) -> list[int]:
-    """Driver-side manifest pruning: the z-prefixes whose bucket-space
-    rectangle intersects the query's (x, y) value rectangle.  One loop
-    over 2^prefix_bits cells — O(files) control work, zero data I/O."""
-
-    def to_bucket(v: int, rng: tuple[int, int]) -> int:
-        lo, hi = rng
-        w = (hi - lo) // (1 << bits) + 1
-        return max(0, min((1 << bits) - 1, (v - lo) // w))
-
-    qx = (to_bucket(x_sel[0], x_range), to_bucket(x_sel[1], x_range))
-    qy = (to_bucket(y_sel[0], y_range), to_bucket(y_sel[1], y_range))
-    out = []
-    for p in range(1 << prefix_bits):
-        x0, x1, y0, y1 = _prefix_rect(p, bits, prefix_bits)
-        if x1 >= qx[0] and x0 <= qx[1] and y1 >= qy[0] and y0 <= qy[1]:
-            out.append(p)
-    return out
-
-
-def zorder_pruned_read(
-    spark: SparkSession,
-    path: str,
-    x_col: str,
-    y_col: str,
-    x_sel: tuple[int, int],
-    y_sel: tuple[int, int],
-    x_range: tuple[int, int],
-    y_range: tuple[int, int],
-    bits: int = 8,
-    prefix_bits: int = 4,
-) -> DataFrame:
-    """Read back ONLY the partitions whose z-prefix rectangle intersects
-    the predicate box (`__zp IN (...)` — partition pruning, unmatched
-    directories are never listed), then apply the exact residual
-    filter.  Result is identical to a full-scan filter; I/O is
-    proportional to the intersected cells."""
-    prefixes = zorder_prefixes(
-        x_sel, y_sel, x_range, y_range, bits=bits, prefix_bits=prefix_bits
-    )
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("__zp").isin(prefixes))
-        .filter(
-            (F.col(x_col) >= x_sel[0])
-            & (F.col(x_col) <= x_sel[1])
-            & (F.col(y_col) >= y_sel[0])
-            & (F.col(y_col) <= y_sel[1])
-        )
-        .drop("__zp")
-    )
 
 
 def quantile_bounds(

@@ -45,7 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..localframe import local_frame
+from ..localframe import empty_frame, local_frame
 
 from .dedup import portable_hash64
 from .similarity import _portable_hash_py
@@ -284,8 +284,8 @@ class ManagedTextIndex:
         over the snapshot's live postings."""
         postings = self._pruned(query_terms, version)
         if postings is None:
-            return self.spark.createDataFrame(
-                [],
+            return empty_frame(
+                self.spark,
                 f"{self.id_col} {self._id_type(version)}, "
                 "n_terms_matched int, total_tf int",
             )
@@ -316,8 +316,9 @@ class ManagedTextIndex:
         version's corpus stats — scoring never touches the corpus."""
         agg = self._bm25_agg(query_terms, k1, b, version)
         if agg is None:
-            return self.spark.createDataFrame(
-                [], f"{self.id_col} {self._id_type(version)}, bm25 double"
+            return empty_frame(
+                self.spark,
+                f"{self.id_col} {self._id_type(version)}, bm25 double"
             )
         return (
             agg.orderBy(F.col("s").desc(), F.col(self.id_col))
@@ -371,8 +372,9 @@ class ManagedTextIndex:
 
         agg = self._bm25_agg(query_terms, k1, b, version)
         if agg is None:
-            return self.spark.createDataFrame(
-                [], f"{self.id_col} {self._id_type(version)}, bm25 double"
+            return empty_frame(
+                self.spark,
+                f"{self.id_col} {self._id_type(version)}, bm25 double"
             )
         if after is not None:
             a_bm25, a_id = after
@@ -419,8 +421,9 @@ class ManagedTextIndex:
             q = q.lower()
             f = auto_fuzziness(q) if fuzziness is None else fuzziness
             if live is None:
-                cand = self.spark.createDataFrame(
-                    [], "q_term string, term string, dist int, df bigint"
+                cand = empty_frame(
+                    self.spark,
+                    "q_term string, term string, dist int, df bigint"
                 )
             else:
                 cand = (
@@ -466,8 +469,8 @@ class ManagedTextIndex:
         agg = self._bm25_agg(query_terms, k1, b, version)
         if agg is None:
             gt = docs.schema[group_col].dataType.simpleString()
-            return self.spark.createDataFrame(
-                [],
+            return empty_frame(
+                self.spark,
                 f"{group_col} {gt}, {self.id_col} "
                 f"{self._id_type(version)}, bm25 double, hit_rank int",
             )
@@ -492,8 +495,9 @@ class ManagedTextIndex:
         )
         expanded = sorted({r["term"] for r in exp.collect()})
         if not expanded:
-            return self.spark.createDataFrame(
-                [], f"{self.id_col} {self._id_type(version)}, bm25 double"
+            return empty_frame(
+                self.spark,
+                f"{self.id_col} {self._id_type(version)}, bm25 double"
             )
         return self.bm25(expanded, k=k, version=version)
 
@@ -529,8 +533,8 @@ class ManagedTextIndex:
             # which infers q_id's type from the dict keys — derive the
             # DDL the same way instead of hardcoding long
             q_ddl = "string" if isinstance(pairs[0][0], str) else "long"
-            return self.spark.createDataFrame(
-                [],
+            return empty_frame(
+                self.spark,
                 f"q_id {q_ddl}, {self.id_col} {self._id_type(version)}, "
                 "bm25 double, rank int",
             )
@@ -569,8 +573,8 @@ class ManagedTextIndex:
         Bounded by the query terms' document frequencies."""
         postings = self._pruned(query_terms, version)
         if postings is None:
-            return self.spark.createDataFrame(
-                [],
+            return empty_frame(
+                self.spark,
                 f"{self.id_col} {self._id_type(version)}, "
                 "n_terms_matched int, total_tf int",
             )
@@ -737,8 +741,8 @@ class ManagedTextIndex:
         `version=` pin replays yesterday's corpus exactly."""
         postings = self._pruned(phrase, version)
         if postings is None:
-            return self.spark.createDataFrame(
-                [],
+            return empty_frame(
+                self.spark,
                 f"{self.id_col} {self._id_type(version)}, n_matches int",
             )
         scored = phrase_scores(postings, phrase, self.id_col)
@@ -759,8 +763,8 @@ class ManagedTextIndex:
         `phrase_search`."""
         postings = self._pruned([term_a, term_b], version)
         if postings is None:
-            return self.spark.createDataFrame(
-                [],
+            return empty_frame(
+                self.spark,
                 f"{self.id_col} {self._id_type(version)}, n_matches int",
             )
         scored = proximity_scores(
@@ -794,7 +798,7 @@ class ManagedTextIndex:
         prefix = prefix.lower()
         live = self.table.read(version=version)
         if live is None:
-            return self.spark.createDataFrame([], "term string, df bigint")
+            return empty_frame(self.spark, "term string, df bigint")
         return (
             live.filter(F.col("term").startswith(prefix))
             .groupBy("term")
@@ -861,8 +865,8 @@ class ManagedTextIndex:
         ).collect()
         id_ddl = self._id_type(version)
         if not hit_rows:
-            return self.spark.createDataFrame(
-                [],
+            return empty_frame(
+                self.spark,
                 f"{self.id_col} {id_ddl}, bm25 double, "
                 "first_pos int, snippet string",
             )

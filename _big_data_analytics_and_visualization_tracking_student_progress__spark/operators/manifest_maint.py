@@ -62,9 +62,8 @@ class _ManifestMaintMixin:
         live fragment recorded one — zero data scan — else one bounds
         aggregate; arithmetic only, no window, no UDF), then the bucket
         bits are interleaved so no column dominates the sort.  Both
-        halves are the SHARED layout primitives
-        (`sources.writers.scaled_bucket` / `morton_interleave` — the
-        same code `write_zordered` runs, so the paths cannot drift).
+        halves are the shared layout primitives
+        (`operators.layout.scaled_bucket` / `morton_interleave`).
         Sorting files by this key gives every cluster column locality
         at once: a predicate on ANY of them skips files via the
         per-file zone maps, where a linear (lexicographic) sort serves
@@ -81,7 +80,12 @@ class _ManifestMaintMixin:
         buckets keep every z-cell comparably full.  Costs one bounded
         sample collect per column at layout time and a literal-array
         scan per row in the rewrite."""
-        from ..sources.writers import morton_interleave, scaled_bucket
+        from .layout import (
+            morton_interleave,
+            quantile_bounds,
+            quantile_bucket,
+            scaled_bucket,
+        )
 
         if bucketing not in ("uniform", "quantile"):
             raise ValueError(
@@ -100,8 +104,6 @@ class _ManifestMaintMixin:
                     f"zorder column {c!r} must be numeric, got {dt}"
                 )
         if bucketing == "quantile":
-            from .layout import quantile_bounds, quantile_bucket
-
             buckets = []
             for c in cols:
                 qb = quantile_bounds(src, c, bits=self._Z_BITS)

@@ -14,6 +14,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..localframe import empty_frame
 
 __all__ = ["_ManifestReadMixin"]
 
@@ -56,11 +57,8 @@ class _ManifestReadMixin:
         sch = doc.get("schema")
         if not sch:
             return self._read_fragments(m, align=doc).filter(F.lit(False))
-        # the false filter folds the plan to an empty local relation,
-        # so collecting it runs no job
-        return self.spark.range(0).select(
-            *[F.lit(None).cast(t).alias(n) for n, t in sch]
-        ).filter(F.lit(False))
+        ddl = ", ".join("`" + n.replace("`", "``") + f"` {t}" for n, t in sch)
+        return empty_frame(self.spark, ddl)
 
     def read(self, version: int | None = None) -> DataFrame | None:
         doc = self._manifest_doc(version)
@@ -388,7 +386,9 @@ class _ManifestReadMixin:
         frag_stats: dict[str, dict] = {}
         for fp in files:
             frag = os.path.relpath(os.path.dirname(fp), data_dir)
-            frag = frag.replace(os.sep, "/")
+            # an unpartitioned table's one fragment is "" (`_part_key`
+            # of no columns), not relpath's "."
+            frag = "" if frag == "." else frag.replace(os.sep, "/")
             try:
                 md = pq.ParquetFile(fp).metadata
             except Exception:

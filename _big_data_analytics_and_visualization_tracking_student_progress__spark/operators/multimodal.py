@@ -68,13 +68,6 @@ def attach_binary_payload(df: DataFrame, text_col: str, id_col: str) -> DataFram
     )
 
 
-def _fake_decode(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic stand-in for a real decoder.  Production swaps this
-    for PIL.Image.open / torchaudio.load etc."""
-    n = len(payload)
-    return (n % 640 + 1, (n * 7) % 480 + 1, n % 30 + 1)
-
-
 def encode_bmp(width: int, height: int) -> bytes:
     """Build a real, spec-conformant 24-bit uncompressed BMP
     (BITMAPFILEHEADER + BITMAPINFOHEADER + bottom-up BGR rows padded to
@@ -239,7 +232,8 @@ def decode_stub(media: DataFrame) -> DataFrame:
         import pandas as _pd
 
         def fake(payload: bytes) -> tuple[int, int, int]:
-            # keep in sync with _fake_decode above
+            # deterministic stand-in for a real decoder (production
+            # swaps in PIL.Image.open / torchaudio.load etc.)
             n = len(payload)
             return (n % 640 + 1, (n * 7) % 480 + 1, n % 30 + 1)
 

@@ -18,7 +18,6 @@ and require no state.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -122,77 +121,6 @@ def rh_signature(vec: Column, planes: list[list[float]]) -> Column:
         )
         sig = sig.bitwiseOR(bit)
     return sig
-
-
-def ann_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    probe_flips: int = 1,
-) -> DataFrame:
-    """Approximate top-k: score only rows whose hyperplane signature is
-    within `probe_flips` bit-flips of the query's (multi-probe LSH).
-
-    At scale the signature is a persisted column and `sig` a pushed-down
-    equality/IN filter — the scan touches only matching buckets."""
-    dim = len(query_vec)
-    planes = hyperplanes(dim, n_planes)
-    qv = np.array(query_vec, dtype=float)
-    qsig = 0
-    for i, p in enumerate(planes):
-        if float(np.dot(qv, np.array(p))) > 0:
-            qsig |= 1 << i
-    probes = {qsig}
-    if probe_flips >= 1:
-        for i in range(n_planes):
-            probes.add(qsig ^ (1 << i))
-    if probe_flips >= 2:
-        for i in range(n_planes):
-            for j in range(i + 1, n_planes):
-                probes.add(qsig ^ (1 << i) ^ (1 << j))
-
-    signed = df.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).withColumn("sig", rh_signature(F.col("v"), planes))
-    bucket = signed.filter(F.col("sig").isin([int(s) for s in probes]))
-    q = _lit_vec(list(query_vec))
-    scored = bucket.select(
-        F.col(id_col), cosine(F.col("v"), q).alias("cos_sim")
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
-
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized alternative path: identical semantics to the native
-# `cosine` expression, computed by numpy over Arrow batches.  The native
-# expression is the default (stays in codegen); this exists for the
-# cases where the scoring function outgrows SQL expressions (learned
-# re-rankers, quantized distance kernels) — and its equality with the
-# native path is pinned in tests.
-# ---------------------------------------------------------------------------
-def cosine_pandas_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        mask = a.notna() & b.notna()
-        if not mask.any():
-            return pd.Series([None] * len(a), dtype="float64")
-        xa = np.stack(a[mask].to_numpy())  # (n, d) — fixed-dim embeddings
-        yb = np.stack(b[mask].to_numpy())
-        num = np.einsum("ij,ij->i", xa, yb)
-        den = np.linalg.norm(xa, axis=1) * np.linalg.norm(yb, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(den > 0, num / den, 0.0)
-        out = pd.Series([None] * len(a), dtype="float64")
-        out[mask.to_numpy()] = cos
-        return out
-
-    return _cos
 
 
 # ---------------------------------------------------------------------------
@@ -371,49 +299,6 @@ def with_cluster(
     return base.mapInArrow(assign, out_schema)
 
 
-def train_ivf_centroids(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int = 16,
-    iters: int = 5,
-) -> list[list[float]]:
-    """Lloyd's k-means, Spark-shaped: assignment is a distributed native
-    expression over the corpus; the centroid update shuffles only
-    (cluster, dim_pos, partial_sum) rows — k×dim values reach the
-    driver per iteration, never vectors.  Init = first k vectors in
-    deterministic hash order (seeded, restart-stable).  This is the
-    MLlib k-means communication pattern without the mllib dependency."""
-    v = F.col(vec_col).cast("array<double>")
-    base = df.select(v.alias("__v"), F.col(id_col)).persist()
-    init_rows = (
-        base.orderBy(F.xxhash64(F.col(id_col).cast("string")))
-        .limit(k)
-        .collect()
-    )
-    centroids = [[float(x) for x in r["__v"]] for r in init_rows]
-    for _ in range(iters):
-        assigned = with_cluster(base, "__v", centroids).select("__c", "__v")
-        stats = (
-            assigned.select("__c", F.posexplode("__v").alias("__p", "__x"))
-            .groupBy("__c", "__p")
-            .agg(F.sum("__x").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        dim = len(centroids[0])
-        sums: dict[int, list[float]] = {}
-        counts: dict[int, int] = {}
-        for r in stats:
-            sums.setdefault(r["__c"], [0.0] * dim)[r["__p"]] = r["s"]
-            counts[r["__c"]] = r["n"]
-        centroids = [
-            [s / counts[c] for s in sums[c]] if c in sums else centroids[c]
-            for c in range(k)
-        ]
-    base.unpersist()
-    return centroids
-
-
 def train_ivf_centroids_sample(
     df: DataFrame,
     vec_col: str,
@@ -427,9 +312,7 @@ def train_ivf_centroids_sample(
     sees O(k × 100s) vectors, so training is one corpus scan (TakeOrdered
     on a seeded hash — per-partition heaps, no shuffle of vectors beyond
     `sample_size` rows) and Lloyd iterations run driver-side in numpy on
-    the sample.  Compare `train_ivf_centroids`, which iterates
-    distributed assignment over the FULL corpus: more precise, but
-    O(iters) corpus passes — an offline job, never a query-time cost."""
+    the sample."""
     rows = (
         df.select(
             F.col(vec_col).cast("array<double>").alias("__v"),
@@ -544,9 +427,8 @@ def ivf_topk(
     (skipped entirely when a pre-trained `centroids` list is supplied —
     the production path, where the quantizer is trained once offline);
     pass 2 stamps cluster ids and scores only `__c IN probes` rows.  The
-    fully ingest-stamped variant (`build_ivf_index`/`ivf_probe_index`)
-    replaces pass 2's full scan with partition-pruned reads of
-    nprobe/n_centroids of the files."""
+    cell-partitioned `ManagedIvfIndex` replaces pass 2's full scan with
+    manifest-pruned reads of nprobe/n_centroids of the files."""
     if centroids is None:
         centroids = train_ivf_centroids_sample(
             df, vec_col, id_col, k=n_centroids, iters=iters
@@ -555,48 +437,6 @@ def ivf_topk(
     candidates = with_cluster(df, vec_col, centroids).filter(
         F.col("__c").isin(probe)
     ).drop("__c")
-    return cosine_topk(candidates, query_vec, k=k, vec_col=vec_col, id_col=id_col)
-
-
-def build_ivf_index(
-    df: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Ingest-time IVF index build: stamp every row's coarse-quantizer
-    cell and lay the table out hive-partitioned by `__c` — one file set
-    per cell.  A probe filtering `__c IN (...)` is then partition
-    pruning: the scan lists only nprobe/n_centroids directories and
-    never opens the rest (PartitionFilters in .explain, zero data I/O
-    for unprobed cells)."""
-    stamped = with_cluster(df, vec_col, centroids)
-    (
-        stamped.repartition(F.col("__c"))
-        .write.mode("overwrite")
-        .partitionBy("__c")
-        .parquet(path)
-    )
-
-
-def ivf_probe_index(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Query-time probe of an ingest-stamped IVF layout: reads ONLY the
-    nprobe partition directories nearest the query (partition pruning on
-    the `__c` IN-list), then exact cosine top-k inside them.  Per-query
-    cost is nprobe/n_centroids of the corpus regardless of corpus
-    size — the IVF scale contract."""
-    probe = nearest_clusters(centroids, query_vec, nprobe)
-    candidates = spark.read.parquet(path).filter(F.col("__c").isin(probe))
     return cosine_topk(candidates, query_vec, k=k, vec_col=vec_col, id_col=id_col)
 
 

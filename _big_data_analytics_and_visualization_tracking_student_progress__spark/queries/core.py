@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from ..datasets import load_table
 from ..functions.scalar import dround, dsum, grade_bucket_4pt
+from ..localframe import empty_frame
 from ..operators.cdc import diff_snapshots
 from ..operators.relational import anti_join, broadcast_lookup, semi_join
 from ..operators.windows import latest_by_key, top_k
@@ -543,7 +544,7 @@ def q_modified_file_reingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         changed = ing.process_once()  # only the edited rows flow
         if changed is None:  # degenerate fixture: nothing divisible by 3
             empty = "doc_id double, lang string, source string, n_chars double"
-            return spark.createDataFrame([], empty)
+            return empty_frame(spark, empty)
         out = changed.select("doc_id", "lang", "source", "n_chars")
         # the edited-row diff is bounded control data (the drop file is
         # a small operational spreadsheet); materializing lets the

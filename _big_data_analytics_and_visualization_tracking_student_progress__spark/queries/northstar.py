@@ -673,9 +673,9 @@ def q_emb_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deterministic sample (portable md5-hash order on vec_id, the
 # train_ivf_centroids_portable recipe): per-group state is ≤ sample_size
 # regardless of corpus size, so no collect_list grows with the corpus —
-# the 100 TB posture for an exact-reproducible prototype.  (The
-# order-free full-corpus avg used by similarity.train_ivf_centroids is
-# the single-pass variant when bit-reproducibility isn't required.)
+# the 100 TB posture for an exact-reproducible prototype.  (An
+# order-free full-corpus avg is the single-pass variant when
+# bit-reproducibility isn't required.)
 # ---------------------------------------------------------------------------
 _CENT_SAMPLE = 256
 _CENT_SAMPLE_SQL = f"""
@@ -2181,74 +2181,44 @@ def q_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Quantizer trains on a bounded hash-ordered sample (pass 1); the
     # probe stamps + filters in one more scan (pass 2).  At production
     # scale the centroids come from an offline job and the cluster id
-    # is an ingest-stamped partition column (build_ivf_index /
-    # ivf_probe_index) — the probe then reads nprobe/n_centroids of the
-    # FILES, not just of the rows.
+    # is an ingest-stamped partition column (ManagedIvfIndex, see
+    # ann_ivf_indexed_topk) — the probe then reads nprobe/n_centroids
+    # of the FILES, not just of the rows.
     cent = ivf_centroids_cached(spark, sf_dir)
     out = S.ivf_topk(emb, qv, k=10, nprobe=_IVF_NPROBE, centroids=cent)
     return out.select("vec_id", dround(F.col("cos_sim"), 6).alias("cos_sim"))
 
 
-def ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """The MATERIALIZED IVF index for this fixture — embeddings laid
-    out hive-partitioned by their coarse-quantizer cell
-    (`build_ivf_index`), built once per (sf_dir) via the artifact
-    cache: the ingest-time index build of a production ANN service.  A
-    probe then reads nprobe/n_cells of the FILES (partition pruning on
-    the `__c` IN-list), not just of the rows — per-query I/O is
-    independent of corpus size, the IVF scale contract at 100 TB."""
-
-    def build() -> str:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="sparkgraft_ivfidx_")
-        S.build_ivf_index(
-            load_table(spark, sf_dir, "embeddings"),
-            path,
-            ivf_centroids_cached(spark, sf_dir),
-        )
-        return path
-
-    return artifact("ivf_index", sf_dir, build)
-
-
 @register(
     "ann_ivf_indexed_topk",
     _ivf_oracle_sql,
-    doc="IVF ANN over the MATERIALIZED index: embeddings hive-"
-    "partitioned by coarse-quantizer cell at ingest (build_ivf_index, "
-    "a once-per-fixture artifact), probed by partition pruning on the "
-    "nprobe nearest cells — the scan lists only the probed cell "
-    "directories (PartitionFilters, pinned by test), so per-query I/O "
-    "is nprobe/n_cells of the FILES at any corpus size.  Same "
-    "assignment, same results, same retrained-literal oracle as "
+    doc="IVF ANN over the ingest-time index at its full-corpus "
+    "snapshot: embeddings laid out by coarse-quantizer cell in the "
+    "managed IVF index (a once-per-fixture artifact), probed at "
+    "version=v_full by manifest partition pruning — read_partitions "
+    "lists only the nprobe nearest cell fragments (pinned by test), so "
+    "per-query I/O is nprobe/n_cells of the FILES at any corpus size.  "
+    "Same assignment, same results, same retrained-literal oracle as "
     "ann_ivf_topk — this is its production (ingest-indexed) twin.",
 )
 def q_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cent = ivf_centroids_cached(spark, sf_dir)
+    idx, v_full = managed_ivf_index(spark, sf_dir)
     qv = _query_vec(spark, sf_dir, 0)
-    out = S.ivf_probe_index(
-        spark,
-        ivf_index_path(spark, sf_dir),
-        cent,
-        qv,
-        k=10,
-        nprobe=_IVF_NPROBE,
-    )
+    out = idx.probe(qv, k=10, nprobe=_IVF_NPROBE, version=v_full)
     return out.select("vec_id", dround(F.col("cos_sim"), 6).alias("cos_sim"))
 
 
 def managed_ivf_index(spark: SparkSession, sf_dir: str):
-    """The MAINTAINED IVF index for this fixture: the same cell-
-    partitioned layout as `ivf_index_path`, but routed through
-    `ManagedIvfIndex` (ManifestSnapshotTable on ``__c``) and built
+    """(index, v_full): the IVF index for this fixture, embeddings
+    laid out by coarse-quantizer cell in `ManagedIvfIndex`
+    (ManifestSnapshotTable partitioned on ``__c``) and built
     INCREMENTALLY — a bulk build commit, then an append commit of the
     held-out slice (pruned MERGE: only the slice's cells rewrite),
     then a same-cell re-upsert (latest ``__seq`` wins), then
-    scatter-triggered compaction.  Final content is exactly the full
-    embeddings corpus, so the probe shares ann_ivf_topk's
-    retrained-literal oracle — while the build path exercises the
-    lifecycle a production ANN service needs (VERDICT r11 item 3)."""
+    scatter-triggered compaction.  ``v_full`` is the append commit,
+    the first snapshot holding the whole corpus.  Every snapshot from
+    ``v_full`` on is exactly the full embeddings corpus, so probes
+    share ann_ivf_topk's retrained-literal oracle."""
 
     def build():
         import tempfile
@@ -2262,10 +2232,10 @@ def managed_ivf_index(spark: SparkSession, sf_dir: str):
             ivf_centroids_cached(spark, sf_dir),
         )
         idx.upsert(emb.filter(F.col("vec_id") % 5 != 0))       # bulk build
-        idx.upsert(emb.filter(F.col("vec_id") % 5 == 0))       # append
+        v_full = idx.upsert(emb.filter(F.col("vec_id") % 5 == 0))  # append
         idx.upsert(emb.filter(F.col("vec_id") % 10 == 1))      # re-upsert
         idx.maybe_compact(max_scatter=2)
-        return idx
+        return idx, v_full
 
     return artifact("ivf_index_managed", sf_dir, build)
 
@@ -2285,7 +2255,7 @@ def managed_ivf_index(spark: SparkSession, sf_dir: str):
     "production ANN service needs at 100 TB.",
 )
 def q_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    idx = managed_ivf_index(spark, sf_dir)
+    idx, _v_full = managed_ivf_index(spark, sf_dir)
     qv = _query_vec(spark, sf_dir, 0)
     out = idx.probe(qv, k=10, nprobe=_IVF_NPROBE)
     return out.select("vec_id", dround(F.col("cos_sim"), 6).alias("cos_sim"))
@@ -2418,7 +2388,7 @@ def _ivf_knn_join_oracle_sql(sf_dir: str) -> str:
     "literal centroids and replays the same probe/rank tie-breaks",
 )
 def q_ivf_index_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    idx = managed_ivf_index(spark, sf_dir)
+    idx, _v_full = managed_ivf_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.expr(_KNN_QPRED)).select(
         F.col("vec_id").alias("q_id"), "embedding"
@@ -2780,7 +2750,7 @@ def q_chunk_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every vector that has a >= tau cosine neighbor with a lower id (first
 # occurrence wins — the embedding-space analog of exact-hash dedup).
 # Blocks here are the fixture's label partitions; at 100 TB the block is
-# an IVF cell from a sample-trained quantizer (build_ivf_index), so the
+# an IVF cell from a sample-trained quantizer (ManagedIvfIndex), so the
 # quadratic compare is bounded per cell and cells join co-partitioned —
 # never an all-pairs corpus join.
 # ---------------------------------------------------------------------------

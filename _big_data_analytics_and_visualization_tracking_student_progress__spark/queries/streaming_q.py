@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import dround, dsum
+from ..localframe import empty_frame
 from ..operators.upsert import ManifestSnapshotTable
 from ..registry import register
 from ..sources import events_file_stream
@@ -1180,9 +1181,7 @@ def stream_near_dup_run(
     q.awaitTermination()
     out = pair_tbl.read()
     if out is None:
-        return spark.createDataFrame(
-            [], "id_a long, id_b long, jaccard double"
-        )
+        return empty_frame(spark, "id_a long, id_b long, jaccard double")
     return out.select("id_a", "id_b", "jaccard")
 
 

@@ -24,17 +24,6 @@ EVENT_TYPES = ("click", "view", "purchase", "signup", "error")
 KNUTH = 2654435761  # 2^32 * golden-ratio conjugate, classic integer hash
 
 
-def synth_row(i: int) -> tuple[int, int, str, float]:
-    """Pure function id → row; int arithmetic only, so bit-identical in
-    any engine (the /100.0 is exact: the dividend is < 2^53)."""
-    return (
-        i,
-        i % 97,
-        EVENT_TYPES[i % 5],
-        ((i * KNUTH) % 100_000) / 100.0,
-    )
-
-
 def make_synthetic_source():
     """Build the DataSource class in function scope (pickle-by-value)."""
     from pyspark.sql.datasource import (

@@ -294,14 +294,6 @@ def _parse_sst(segments: list[bytes]) -> list[str]:
     return out
 
 
-def _short_unicode(b: bytes, off: int) -> str:
-    """ShortXLUnicodeString (sheet names): 1-byte cch, 1-byte flags."""
-    cch, grbit = b[off], b[off + 1]
-    if grbit & 0x01:
-        return b[off + 2 : off + 2 + 2 * cch].decode("utf-16-le")
-    return b[off + 2 : off + 2 + cch].decode("latin-1")
-
-
 def _long_unicode(b: bytes, off: int) -> str:
     """XLUnicodeString (LABEL / cached STRING payloads)."""
     cch = _u16(b, off)

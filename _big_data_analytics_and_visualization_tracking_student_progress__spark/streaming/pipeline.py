@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import row_hash
+from ..localframe import empty_frame
 from ..operators.upsert import ManifestSnapshotTable
 
 
@@ -296,7 +297,7 @@ def upsert_stream_run(
     q.awaitTermination()
     out = table.read()
     if out is None:
-        return spark.createDataFrame([], sdf.schema)
+        return empty_frame(spark, sdf.schema)
     return out
 
 

@@ -22,6 +22,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.localframe import (
+    empty_frame,
+)
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.matview import (
     DeltaAggView,
 )
@@ -299,9 +302,7 @@ def test_apply_feed_requires_bootstrap(spark, root):
     t.upsert(spark.createDataFrame([(0, 1, "a", 1, 1)], SCHEMA))
     with pytest.raises(RuntimeError, match="bootstrapped"):
         v.apply_feed(
-            spark.createDataFrame(
-                [], "_change_type string, " + SCHEMA
-            ),
+            empty_frame(spark, "_change_type string, " + SCHEMA),
             base_version=1,
         )
 

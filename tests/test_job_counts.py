@@ -31,6 +31,9 @@ import uuid
 import pytest
 from pyspark.sql import types as T
 
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.localframe import (
+    empty_frame,
+)
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.manifest_write import (
     _evaluate_once,
     _python_built,
@@ -296,3 +299,36 @@ def test_only_python_built_inputs_are_checkpointed(spark, tmp_path):
     listed.write.parquet(str(tmp_path / "p"))
     scan = spark.read.parquet(str(tmp_path / "p"))
     assert _evaluate_once(scan) is scan
+
+
+_EMPTY_STRUCT = T.StructType([
+    T.StructField("k", T.LongType(), nullable=False),
+    T.StructField("b", T.StringType()),
+    T.StructField("v", T.ArrayType(T.DoubleType(), containsNull=False)),
+])
+
+
+@pytest.mark.parametrize(
+    "schema, want",
+    [
+        (
+            "a int, b string, v array<double>",
+            T.StructType([
+                T.StructField("a", T.IntegerType()),
+                T.StructField("b", T.StringType()),
+                T.StructField("v", T.ArrayType(T.DoubleType())),
+            ]),
+        ),
+        (_EMPTY_STRUCT, _EMPTY_STRUCT),
+    ],
+    ids=["ddl", "struct"],
+)
+def test_empty_frame_runs_no_job(spark, schema, want):
+    """A zero-row frame collects without a Spark job, from a DDL string
+    or a StructType, and keeps each field's nullability (a list-built
+    empty frame launches one job with Python workers to return
+    nothing)."""
+    df = empty_frame(spark, schema)
+    assert df.schema == want
+    assert _jobs(spark, df.collect) == 0
+    assert df.collect() == []

@@ -1,9 +1,11 @@
-"""Z-order layout: Morton-code locality, prefix-pruned reads, and the
-partition-pruning plan shape.  Value parity of `zorder_layout_stats` is
-covered by test_oracle_parity; these pin the property the layout exists
-for — 2-D data skipping."""
+"""Z-order layout: Morton-code locality, zone-map-pruned reads of a
+Z-ordered `ManifestSnapshotTable`, and the bucket primitives.  Value
+parity of `zorder_layout_stats` is covered by test_oracle_parity; these
+pin the property the layout exists for — 2-D data skipping."""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import functions as F
 
@@ -11,10 +13,15 @@ from _big_data_analytics_and_visualization_tracking_student_progress__spark.data
     load_table,
 )
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.layout import (
-    zorder_code,
-    zorder_prefixes,
-    zorder_pruned_read,
-    zorder_write,
+    quantile_bounds,
+    quantile_bucket,
+    scaled_bucket,
+)
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
+    ManifestSnapshotTable,
+)
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.registry import (
+    all_queries,
 )
 from .conftest import SF_SMALL
 
@@ -38,22 +45,20 @@ def _ranges(df):
 
 class TestZorderLocality:
     def test_both_dimensions_narrow_per_file(self, spark):
-        # top-8-bit z-cells are 16×16 blocks in 256×256 bucket space ⇒
-        # each file's min/max range on EITHER dimension should span a
-        # small fraction of the domain (a 1-D sort gives ~0 on one axis
-        # and ~1 on the other; random gives ~1 on both)
-        o = _orders_with_day(spark)
-        xr, yr = _ranges(o)
-        z = zorder_code(o, "o_custkey", "day", xr, yr, bits=8)
+        # the registered layout's top-8-bit z-cells are 16×16 blocks in
+        # 256×256 bucket space ⇒ each file's min/max range on EITHER
+        # dimension should span a small fraction of the domain (a 1-D
+        # sort gives ~0 on one axis and ~1 on the other; random gives
+        # ~1 on both)
+        xr, yr = _ranges(_orders_with_day(spark))
         stats = (
-            z.groupBy(F.floor(F.col("__z") / F.lit(256)).alias("f"))
-            .agg(
-                (F.max("o_custkey") - F.min("o_custkey")).alias("xr"),
-                (F.max("day") - F.min("day")).alias("yr"),
-                F.count(F.lit(1)).alias("n"),
-            )
+            all_queries()["zorder_layout_stats"]
+            .fn(spark, SF_SMALL)
             .filter(F.col("n") >= 5)
-            .agg(F.avg("xr"), F.avg("yr"))
+            .agg(
+                F.avg(F.col("max_cust") - F.col("min_cust")),
+                F.avg(F.col("max_day") - F.col("min_day")),
+            )
             .head()
         )
         x_frac = stats[0] / (xr[1] - xr[0])
@@ -66,12 +71,18 @@ class TestZorderPrunedRead:
     def test_round_trip_equals_full_filter_and_prunes(self, spark, tmp_path):
         o = _orders_with_day(spark)
         xr, yr = _ranges(o)
-        path = str(tmp_path / "zorders")
-        zorder_write(
-            o, path, "o_custkey", "day", xr, yr, bits=8, prefix_bits=4
+        t = ManifestSnapshotTable(
+            spark, os.path.join(str(tmp_path), "zorders"),
+            keys=["o_orderkey"], order_cols=["o_orderkey"],
+            stats_cols=["o_custkey", "day"],
+        )
+        t.upsert(o)
+        t.compact(
+            cluster_by=["o_custkey", "day"], cluster_files=16,
+            cluster_method="zorder",
         )
 
-        # a selective 2-D box: middle eighth of each dimension
+        # a selective 2-D box: the second eighth of each dimension
         xs = (
             xr[0] + (xr[1] - xr[0]) * 4 // 16,
             xr[0] + (xr[1] - xr[0]) * 6 // 16,
@@ -80,9 +91,8 @@ class TestZorderPrunedRead:
             yr[0] + (yr[1] - yr[0]) * 4 // 16,
             yr[0] + (yr[1] - yr[0]) * 6 // 16,
         )
-        pruned = zorder_pruned_read(
-            spark, path, "o_custkey", "day", xs, ys, xr, yr,
-            bits=8, prefix_bits=4,
+        pruned, _fk, _ft, files_kept, files_total = t.read_where_all(
+            [("o_custkey", *xs), ("day", *ys)]
         )
         expected = o.filter(
             (F.col("o_custkey") >= xs[0])
@@ -95,32 +105,14 @@ class TestZorderPrunedRead:
         assert got == want
         assert want  # box is non-empty, the test is meaningful
 
-        # the prefix manifest must actually prune: a centered 1/8 × 1/8
-        # box intersects a strict minority of the 16 cells
-        cand = zorder_prefixes(xs, ys, xr, yr, bits=8, prefix_bits=4)
-        assert 0 < len(cand) < 16
-        # and the IN-list lands in the scan's PartitionFilters (true
-        # partition pruning — unmatched directories are never read;
-        # inputFiles() reflects the pre-pruning listing, so assert on
-        # the executed plan instead)
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan
-        import re
-
-        pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
-        assert "__zp" in pf, plan
+        # the per-file zone maps must actually prune: a 1/8 × 1/8 box
+        # intersects a strict minority of the Z-ordered files
+        assert files_total > 8
+        assert 0 < files_kept < files_total / 2, (files_kept, files_total)
 
 
 class TestQuantileBuckets:
     def test_balanced_under_skew_where_grid_collapses(self, spark):
-        from pyspark.sql import functions as F
-
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.layout import (
-            grid_bucket,
-            quantile_bounds,
-            quantile_bucket,
-        )
-
         # heavy-tailed values: x = 2^(i mod 20) — the equal-width grid
         # dumps almost everything into bucket 0
         df = spark.range(4000).select(
@@ -129,7 +121,7 @@ class TestQuantileBuckets:
             .alias("x")
         )
         bits = 4
-        g = df.select(grid_bucket(F.col("x"), 1, 2 ** 19, bits=bits).alias("b"))
+        g = df.select(scaled_bucket(F.col("x"), 1, 2 ** 19, bits).alias("b"))
         top_grid = (
             g.groupBy("b").count().orderBy(F.col("count").desc()).head()[1]
         )

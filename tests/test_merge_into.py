@@ -20,6 +20,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.localframe import (
+    empty_frame,
+)
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
     ManifestSnapshotTable,
     merge_clauses,
@@ -201,7 +204,7 @@ def test_by_source_delete_with_empty_source(spark, root):
     t = _mk(spark, root)
     t.upsert(spark.createDataFrame(
         [(0, 1, 10, 1), (1, 2, 20, 1)], SCHEMA))
-    empty = spark.createDataFrame([], SCHEMA)
+    empty = empty_frame(spark, SCHEMA)
     v = t.merge_into(
         empty,
         when_not_matched_by_source_delete=F.col("t.v") >= 20,
@@ -331,7 +334,7 @@ def test_by_source_condition_may_reference_source_side(spark, root):
     # a pure s-comparison is NULL → false on unmatched rows: the
     # clause can never fire, and the locate must not crash either
     t.merge_into(
-        spark.createDataFrame([], SCHEMA),
+        empty_frame(spark, SCHEMA),
         when_not_matched_by_source_delete=F.col("s.v") > 0,
     )
     got2 = sorted((r.day, r.k, r.v) for r in t.read().collect())

@@ -99,32 +99,6 @@ class TestSimhash:
         assert (1, 3) in pairs and 0 < pairs[(1, 3)] <= 16
 
 
-class TestANN:
-    def test_recall_vs_brute_force(self, spark):
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.datasets import (
-            load_table,
-        )
-        from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.similarity import (
-            ann_topk,
-            cosine_topk,
-        )
-
-        emb = load_table(spark, SF_SMALL, "embeddings")
-        qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-        exact = [r.vec_id for r in cosine_topk(emb, qv, k=10).collect()]
-        approx = [
-            r.vec_id
-            for r in ann_topk(emb, qv, k=10, n_planes=4, probe_flips=2).collect()
-        ]
-        # query point itself must always be found (cos=1, same bucket)
-        assert 0 in approx
-        # the fixture embeddings are UNclustered random vectors — the
-        # hardest case for LSH; with 4 planes + 2-flip multiprobe the
-        # deterministic (seeded) recall on this fixture is 0.4
-        overlap = len(set(exact) & set(approx)) / 10
-        assert overlap >= 0.4, f"ANN recall regressed: {overlap}"
-
-
 class TestMultimodal:
     def test_decode_stub_schema_and_determinism(self, spark):
         from _big_data_analytics_and_visualization_tracking_student_progress__spark.datasets import (
@@ -362,38 +336,6 @@ def test_dedup_ops_null_text_safety(spark):
 
     sh = D.simhash_pairs(df, "doc_id", "text", max_hamming=8).collect()
     assert {(r.id_a, r.id_b) for r in sh} == {(1, 2)}
-
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized cosine UDF ≡ native expression (within float noise:
-# numpy uses pairwise/SIMD summation, the native fold is sequential).
-# ---------------------------------------------------------------------------
-def test_cosine_pandas_udf_matches_native(spark):
-    from _big_data_analytics_and_visualization_tracking_student_progress__spark.datasets import (
-        load_table,
-    )
-    from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators import (
-        similarity as S,
-    )
-    from .conftest import SF_SMALL
-
-    emb = (
-        load_table(spark, SF_SMALL, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .limit(50)
-    )
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
-    b = emb.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
-    pairs = a.crossJoin(b).filter(F.col("ia") < F.col("ib"))
-    udf_cos = S.cosine_pandas_udf()
-    both = pairs.select(
-        "ia", "ib",
-        S.cosine(F.col("va"), F.col("vb")).alias("native"),
-        udf_cos(F.col("va"), F.col("vb")).alias("vectorized"),
-    ).collect()
-    assert both
-    for r in both:
-        assert abs(r.native - r.vectorized) < 1e-9, (r.ia, r.ib)
 
 
 # ---------------------------------------------------------------------------
@@ -734,51 +676,6 @@ def test_cms_merge_monoid_and_overestimate_bound(spark):
     assert all(est[k] >= exact[k] for k in exact)
 
 
-# ---------------------------------------------------------------------------
-# IVF ingest-stamped index: the layout is hive-partitioned by cluster id,
-# so a probe is partition pruning — only nprobe/n_centroids of the
-# directories are listed/scanned — and agrees with the inline stamp path.
-# ---------------------------------------------------------------------------
-def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
-    from _big_data_analytics_and_visualization_tracking_student_progress__spark.datasets import (
-        load_table,
-    )
-    from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators import (
-        similarity as S,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-    centroids = S.train_ivf_centroids_sample(
-        emb, "embedding", "vec_id", k=8, iters=5
-    )
-    path = str(tmp_path / "ivf_index")
-    S.build_ivf_index(emb, path, centroids)
-
-    probed = S.ivf_probe_index(spark, path, centroids, qv, k=10, nprobe=3)
-    inline = S.ivf_topk(emb, qv, k=10, n_centroids=8, nprobe=3, centroids=centroids)
-    assert [r.vec_id for r in probed.collect()] == [
-        r.vec_id for r in inline.collect()
-    ]
-
-    # pruning is real: the probe plan carries a partition filter on __c
-    # and the executed scan reads files from exactly nprobe cell dirs
-    probe_cells = set(S.nearest_clusters(centroids, qv, 3))
-    scan = spark.read.parquet(path).filter(F.col("__c").isin(list(probe_cells)))
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__c" in plan
-    touched = {
-        r.f
-        for r in scan.select(
-            F.col("_metadata.file_path").alias("f")
-        ).distinct().collect()
-    }
-    assert touched, "scan should read some files"
-    assert all(
-        any(f"__c={c}/" in f for c in probe_cells) for f in touched
-    ), touched
-
-
 def test_approx_query_driver_compare_contract(spark):
     # The driver's compare does toPandas().sort_values() over all
     # columns — every output column must therefore be a sortable scalar
@@ -905,21 +802,37 @@ class TestArtifactCache:
             northstar._ARTIFACTS.pop(("unit_test_kind", key_dir + "2"), None)
 
 
-def test_registered_indexed_ivf_twin(spark):
-    """`ann_ivf_indexed_topk` (materialized hive-partitioned index,
-    probed by partition pruning) returns exactly `ann_ivf_topk`'s rows
-    (same quantizer, same assignment), and its registered plan carries
-    the `__c` partition filter — per-query I/O is nprobe/n_cells of
-    the FILES, the production IVF shape."""
+def test_registered_indexed_ivf_twin(spark, monkeypatch):
+    """`ann_ivf_indexed_topk` (the managed IVF index probed at its
+    full-corpus snapshot) returns exactly `ann_ivf_topk`'s rows (same
+    quantizer, same assignment), and its probe resolves only the
+    nprobe cell fragments of that snapshot — per-query I/O is
+    nprobe/n_cells of the FILES, the production IVF shape."""
+    from _big_data_analytics_and_visualization_tracking_student_progress__spark.queries.northstar import (
+        _IVF_NPROBE,
+        managed_ivf_index,
+    )
     from _big_data_analytics_and_visualization_tracking_student_progress__spark.registry import (
         all_queries,
     )
 
+    idx, v_full = managed_ivf_index(spark, SF_SMALL)
+    scans = []
+    read_partitions = idx.table.read_partitions
+
+    def recorded(combos, version=None):
+        out = read_partitions(combos, version=version)
+        scans.append((version, out[1], out[2]))
+        return out
+
+    monkeypatch.setattr(idx.table, "read_partitions", recorded)
     reg = all_queries()
-    idx = reg["ann_ivf_indexed_topk"].fn(spark, SF_SMALL)
+    got = reg["ann_ivf_indexed_topk"].fn(spark, SF_SMALL)
     inline = reg["ann_ivf_topk"].fn(spark, SF_SMALL)
-    assert [tuple(r) for r in idx.collect()] == [
+    assert [tuple(r) for r in got.collect()] == [
         tuple(r) for r in inline.collect()
     ]
-    plan = idx._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__c" in plan
+    assert len(scans) == 1
+    version, kept, total = scans[0]
+    assert version == v_full
+    assert kept == _IVF_NPROBE < total

@@ -1,18 +1,20 @@
-"""Sink-layout layer: partitioned writes, file stats, compaction,
-range clustering.  These are layout properties — file counts, dir
-structure, per-file key ranges — not just data round-trips."""
+"""Sink layout of `ManifestSnapshotTable`: partitioned writes, file
+stats, compaction, range and Z-order clustering.  These are layout
+properties — file counts, dir structure, per-file key ranges — not just
+data round-trips."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.datasets import (
     load_table,
 )
-from _big_data_analytics_and_visualization_tracking_student_progress__spark.sources import (
-    writers as W,
+from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
+    ManifestSnapshotTable,
 )
 
 from .conftest import SF_SMALL
@@ -25,73 +27,99 @@ def _parquet_files(root: str) -> list[str]:
     return out
 
 
+def _events_by_day(spark):
+    return load_table(spark, SF_SMALL, "events").withColumn(
+        "day", F.to_date(F.col("ts"))
+    )
+
+
+def _events_table(spark, path, **kw):
+    return ManifestSnapshotTable(
+        spark, path, keys=["day", "event_id"], order_cols=["event_id"],
+        partition_by=["day"], **kw,
+    )
+
+
+def _row_hash_sum(df, cols):
+    h = F.md5(F.concat_ws("|", *[F.col(c).cast("string") for c in cols]))
+    return df.agg(F.sum(F.crc32(h))).head()[0]
+
+
+def _fragment_files(t, frag):
+    v = t.manifest()[frag]
+    return _parquet_files(os.path.join(t.path, f"v={v:05d}", "data", frag))
+
+
 def test_write_partitioned_one_file_per_partition(spark, tmp_path):
-    events = load_table(spark, SF_SMALL, "events").withColumn(
-        "day", F.to_date(F.col("ts"))
-    )
-    path = str(tmp_path / "events_by_day")
-    W.write_partitioned(events, path, partition_by=["day"], sort_within=["user_id"])
+    events = _events_by_day(spark)
+    t = _events_table(spark, str(tmp_path / "events_by_day"))
+    t.upsert(events)
 
     days = events.select("day").distinct().count()
-    part_dirs = [d for d in os.listdir(path) if d.startswith("day=")]
-    assert len(part_dirs) == days
+    frags = t.manifest()
+    assert len(frags) == days and all(f.startswith("day=") for f in frags)
     # the whole point: one writer task per partition → one file per dir
-    for d in part_dirs:
-        assert len(_parquet_files(os.path.join(path, d))) == 1
-
-    back = spark.read.parquet(path)
-    assert back.count() == events.count()
+    for frag in frags:
+        assert len(_fragment_files(t, frag)) == 1, frag
+    assert t.read().count() == events.count()
 
 
-def test_compact_collapses_small_files(spark, tmp_path):
-    orders = load_table(spark, SF_SMALL, "orders")
-    path = str(tmp_path / "orders_fragged")
-    # simulate micro-batch ingest: 16 slivers
-    orders.repartition(16).write.parquet(path)
-    assert len(_parquet_files(path)) == 16
-
-    before = orders.withColumn("__h", F.md5(F.concat_ws("|", *orders.columns)))
-    before_hash = before.agg(F.sum(F.crc32(F.col("__h")))).head()[0]
-
-    report = W.compact(spark, path, target_file_bytes=1 << 30)
-    assert report["files_before"] == 16
-    assert report["files_after"] == 1
-    assert len(_parquet_files(path)) == 1
-
-    after = spark.read.parquet(path)
-    after = after.withColumn("__h", F.md5(F.concat_ws("|", *orders.columns)))
-    assert after.agg(F.sum(F.crc32(F.col("__h")))).head()[0] == before_hash
+@pytest.fixture(scope="module")
+def compacted_events(spark, tmp_path_factory):
+    """The events fixture ingested as four micro-batches, each landing
+    a slice of the days, so the latest manifest scatters its day
+    fragments over four holder versions, then compacted; yields
+    (table, manifest before, row hash before)."""
+    events = _events_by_day(spark)
+    t = _events_table(spark, str(tmp_path_factory.mktemp("ev") / "t"))
+    for b in range(4):
+        t.upsert(events.filter(F.dayofmonth("day") % 4 == b))
+    before = t.manifest()
+    h = _row_hash_sum(t.read(), events.columns)
+    t.compact()
+    return t, before, h
 
 
-def test_compact_partitioned_keeps_dirs(spark, tmp_path):
-    events = load_table(spark, SF_SMALL, "events").withColumn(
-        "day", F.to_date(F.col("ts"))
-    )
-    path = str(tmp_path / "events_fragged")
-    # worst-case ingest layout: every task writes into every partition
-    events.repartition(8).write.partitionBy("day").parquet(path)
-    n_frag = len(_parquet_files(path))
-    days = events.select("day").distinct().count()
-    assert n_frag > days
+def test_compact_collapses_small_files(compacted_events):
+    t, before, h = compacted_events
+    assert len(set(before.values())) == 4  # micro-batches scattered it
+    after = t.manifest()
+    assert len(set(after.values())) == 1  # one self-contained holder
+    for frag in after:
+        assert len(_fragment_files(t, frag)) == 1, frag
+    assert _row_hash_sum(t.read(), t.read().columns) == h
 
-    report = W.compact(
-        spark, path, target_file_bytes=1 << 30, partition_by=["day"]
-    )
-    assert report["files_after"] == days
-    assert spark.read.parquet(path).count() == events.count()
+
+def test_compact_partitioned_keeps_dirs(compacted_events):
+    t, before, _h = compacted_events
+    v = t.versions()[-1]
+    assert set(t.manifest()) == set(before)
+    dirs = os.listdir(os.path.join(t.path, f"v={v:05d}", "data"))
+    assert sorted(d for d in dirs if d.startswith("day=")) == sorted(before)
 
 
 def test_file_stats_inventory(spark, tmp_path):
-    orders = load_table(spark, SF_SMALL, "orders")
-    path = str(tmp_path / "orders_stats")
-    orders.repartition(4).write.parquet(path)
-    stats = W.file_stats(spark, path).collect()
-    assert len(stats) == 4
-    assert sum(r.rows for r in stats) == orders.count()
-    from urllib.parse import urlparse
-
-    for r in stats:
-        assert r.file_bytes == os.path.getsize(urlparse(r.file_path).path)
+    orders = load_table(spark, SF_SMALL, "orders").withColumn(
+        "p", (F.col("o_orderkey") % 4).cast("int")
+    )
+    t = ManifestSnapshotTable(
+        spark, str(tmp_path / "orders_stats"), keys=["p", "o_orderkey"],
+        order_cols=["o_orderkey"], partition_by=["p"],
+        stats_cols=["o_orderkey"],
+    )
+    t.upsert(orders)
+    stats = t.file_stats()
+    assert set(stats) == set(t.manifest())
+    # one entry per data file on disk, with that file's key envelope
+    for frag, files in stats.items():
+        on_disk = {os.path.basename(f) for f in _fragment_files(t, frag)}
+        assert set(files) == on_disk, frag
+        p = int(frag.split("=")[1])
+        want = orders.filter(F.col("p") == p).agg(
+            F.min("o_orderkey"), F.max("o_orderkey")
+        ).head()
+        (env,) = files.values()
+        assert env["o_orderkey"] == [want[0], want[1]]
 
 
 def test_orc_round_trip_and_pushdown(spark, tmp_path):
@@ -133,19 +161,19 @@ def test_read_text_lines(spark, tmp_path):
 
 def test_write_clustered_files_own_disjoint_ranges(spark, tmp_path):
     li = load_table(spark, SF_SMALL, "lineitem")
-    path = str(tmp_path / "lineitem_clustered")
-    W.write_clustered(li, path, cluster_by=["l_orderkey"], num_files=4)
-
-    ranges = (
-        spark.read.parquet(path)
-        .groupBy(F.col("_metadata.file_path").alias("f"))
-        .agg(F.min("l_orderkey").alias("lo"), F.max("l_orderkey").alias("hi"))
-        .orderBy("lo")
-        .collect()
+    t = ManifestSnapshotTable(
+        spark, str(tmp_path / "lineitem_clustered"),
+        keys=["l_orderkey", "l_linenumber"], order_cols=["l_linenumber"],
+        stats_cols=["l_orderkey"],
     )
+    t.upsert(li)
+    t.compact(cluster_by=["l_orderkey"], cluster_files=4)
+
+    (files,) = t.file_stats().values()
+    ranges = sorted(env["l_orderkey"] for env in files.values())
     assert len(ranges) == 4
     for prev, cur in zip(ranges, ranges[1:]):
-        assert prev.hi <= cur.lo  # disjoint key ranges ⇒ file-level skipping
+        assert prev[1] <= cur[0]  # disjoint key ranges ⇒ file-level skipping
 
 
 def test_zorder_files_cover_small_hyperrectangles(spark, tmp_path):
@@ -153,19 +181,18 @@ def test_zorder_files_cover_small_hyperrectangles(spark, tmp_path):
     (user_id, value) space — the property range clustering on user_id
     alone cannot give for predicates on value."""
     events = load_table(spark, SF_SMALL, "events")
-    dest = str(tmp_path / "zordered")
-    W.write_zordered(events, dest, ["user_id", "value"], num_files=8)
-
-    per_file = (
-        spark.read.parquet(dest)
-        .groupBy(F.col("_metadata.file_path"))
-        .agg(
-            F.min("user_id").alias("ulo"), F.max("user_id").alias("uhi"),
-            F.min("value").alias("vlo"), F.max("value").alias("vhi"),
-        )
-        .collect()
+    t = ManifestSnapshotTable(
+        spark, str(tmp_path / "zordered"), keys=["event_id"],
+        order_cols=["event_id"], stats_cols=["user_id", "value"],
     )
-    assert len(per_file) == 8
+    t.upsert(events)
+    t.compact(
+        cluster_by=["user_id", "value"], cluster_files=8,
+        cluster_method="zorder",
+    )
+
+    (files,) = t.file_stats().values()
+    assert len(files) == 8
     g = events.agg(
         F.min("user_id"), F.max("user_id"), F.min("value"), F.max("value")
     ).head()
@@ -173,37 +200,11 @@ def test_zorder_files_cover_small_hyperrectangles(spark, tmp_path):
     # average file covers a fraction of the 2-D area; 8 z-order files
     # should land well under half the full rectangle each
     fracs = [
-        ((r.uhi - r.ulo) / u_span) * ((r.vhi - r.vlo) / v_span) for r in per_file
+        ((e["user_id"][1] - e["user_id"][0]) / u_span)
+        * ((e["value"][1] - e["value"][0]) / v_span)
+        for e in files.values()
     ]
     assert sum(fracs) / len(fracs) < 0.5, fracs
-
-
-def test_read_pruned_skips_files_outside_range(spark, tmp_path):
-    """File-skipping correctness + effectiveness: on a range-clustered
-    layout a narrow range must read a strict subset of files and return
-    exactly the full-scan filter result."""
-    from _big_data_analytics_and_visualization_tracking_student_progress__spark.datasets import (
-        load_table,
-    )
-    from _big_data_analytics_and_visualization_tracking_student_progress__spark.sources.writers import (
-        read_pruned,
-        write_clustered,
-    )
-    from pyspark.sql import functions as F
-
-    out = str(tmp_path / "clustered")
-    orders = load_table(spark, SF_SMALL, "orders")
-    write_clustered(orders, out, ["o_orderkey"], num_files=8)
-
-    lo, hi = 100, 300
-    got, kept, total = read_pruned(spark, out, "o_orderkey", lo, hi)
-    assert total == 8 and 0 < kept < total, (kept, total)
-    expected = orders.filter(
-        (F.col("o_orderkey") >= lo) & (F.col("o_orderkey") <= hi)
-    )
-    assert sorted(map(tuple, got.select(*orders.columns).collect())) == sorted(
-        map(tuple, expected.collect())
-    )
 
 
 # ---------------------------------------------------------------------------

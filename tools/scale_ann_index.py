@@ -2,8 +2,7 @@
 show that the manifest-backed index lifecycle (VERDICT r11 item 3)
 keeps its 100 TB contract:
 
-(a) the bulk build is one cell-partitioned write (same order as
-    `build_ivf_index`'s one-shot layout),
+(a) the bulk build is one cell-partitioned write,
 (b) an APPEND confined to a few cells is a pruned commit — the
     manifest proves only the touched cells' fragments moved, and its
     wall time is a small fraction of the bulk build's,
