@@ -10,9 +10,9 @@ materialization at local[32] (r14, OPTIMIZATION_r14.md).  Routing the
 same rows through an explicit single-slice parallelize keeps the
 DataFrame (schema, values, semantics) identical and runs one task.
 
-An EMPTY frame needs no task at all: `createDataFrame([], schema)` is
-still a Python-built RDD, so collecting it launches a Spark job with
-Python workers to return nothing.  `empty_frame` builds the same
+An EMPTY frame needs no task at all, yet `createDataFrame` over an
+empty list is still a Python-built RDD, so collecting it launches a
+Spark job with Python workers to return nothing.  `empty_frame` builds the same
 schema as an empty Arrow table, a local relation that collects
 without a job.
 
