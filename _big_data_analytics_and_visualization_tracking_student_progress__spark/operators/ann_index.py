@@ -9,7 +9,7 @@ streaming maintenance:
 - **Incremental appends** are pruned MERGE commits: only the cells the
   batch lands in are rewritten, every other cell is inherited by
   reference in the manifest.  Append cost tracks the BATCH, not the
-  corpus — the 100 TB contract (see tools/scale_ann_index.py).
+  corpus — the 100 TB contract.
 - **Compaction** (`maybe_compact`) bounds small-file scatter per cell
   as drip appends accumulate, exactly like the text index's posting
   buckets.
@@ -55,8 +55,6 @@ __all__ = [
     "ManagedIvfIndex",
     "ManagedPqIndex",
     "occupancy_summary",
-    "recall_probe_sample",
-    "retrain_decision",
 ]
 
 
@@ -74,73 +72,6 @@ def occupancy_summary(key_name: str, units: dict) -> dict:
         "rows_mean": mean,
         "skew": (max(counted) / mean) if counted and mean else None,
     }
-
-
-def recall_probe_sample(
-    index,
-    corpus: DataFrame,
-    query_vecs: list,
-    k: int = 10,
-    nprobe: int = 4,
-) -> float:
-    """Recall@k of the index's nprobe probe against exact brute-force
-    cosine over the LIVE corpus, averaged over a probe sample — the
-    recall-drift telemetry that completes the r12/r13 skew telemetry's
-    other half: `cell_stats`/`occupancy_summary` show when the frozen
-    quantizer's CELLS go lopsided, this shows when its ANSWERS go bad
-    (distribution shift quantizes new vectors against codebooks that
-    never saw them; FAISS's frozen-quantizer posture makes that decay
-    invisible without an explicit probe-sample measurement).
-
-    The sample is a handful of query vectors (driver loop, bounded by
-    len(query_vecs) — run this at monitoring cadence, not per query);
-    each brute-force pass is one corpus scan.  Works for both the raw
-    tier (exact in-cell cosine — recall loss = cell pruning only) and
-    the PQ tier (ADC — recall loss = pruning + quantization error).
-    """
-    if not query_vecs:
-        raise ValueError("need at least one probe query")
-    hits, want = 0, 0
-    for qv in query_vecs:
-        qv = [float(x) for x in qv]
-        exact = {
-            r[index.id_col]
-            for r in cosine_topk(
-                corpus, qv, k=k, id_col=index.id_col, vec_col=index.vec_col
-            ).collect()
-        }
-        got = {
-            r[index.id_col]
-            for r in index.probe(qv, k=k, nprobe=nprobe).collect()
-        }
-        hits += len(exact & got)
-        want += len(exact)
-    return hits / want if want else 0.0
-
-
-def retrain_decision(
-    recall: float | None,
-    skew: float | None,
-    recall_floor: float = 0.9,
-    skew_bound: float = 6.0,
-) -> dict:
-    """The pinned retrain trigger for frozen-quantizer indexes: retrain
-    (= train a new quantizer and bulk-build a new index — the FAISS
-    posture; never in-place cell splits) when the probe-sample recall
-    drops below ``recall_floor`` (absolute, or pass the build-time
-    baseline × 0.9 for a relative floor) OR occupancy max/mean exceeds
-    ``skew_bound``.  A None input means that signal is unavailable and
-    is reported rather than silently passed."""
-    reasons = []
-    if recall is None:
-        reasons.append("recall signal missing — measure before trusting")
-    elif recall < recall_floor:
-        reasons.append(f"recall {recall:.3f} < floor {recall_floor}")
-    if skew is None:
-        reasons.append("occupancy signal missing — no recorded row counts")
-    elif skew > skew_bound:
-        reasons.append(f"occupancy skew {skew:.2f}x > bound {skew_bound}x")
-    return {"retrain": bool(reasons), "reasons": reasons}
 
 
 class ManagedIvfIndex:

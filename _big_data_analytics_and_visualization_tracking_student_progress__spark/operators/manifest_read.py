@@ -127,58 +127,6 @@ class _ManifestReadMixin:
         """Time travel by timestamp: `read` of `version_as_of(ts)`."""
         return self.read(self.version_as_of(ts))
 
-    def delete_auto(
-        self, keys: DataFrame, dv_max_fraction: float = 0.1
-    ) -> int:
-        """Keyed DELETE that picks its physical strategy from manifest
-        metadata — the Delta-style auto mode: when the batch's key
-        count is a small fraction (< ``dv_max_fraction``) of the
-        touched partitions' LIVE rows, erase via deletion vectors
-        (`delete_dv`: sidecars only, no rewrite); otherwise
-        copy-on-write (`delete`: rewrite amortizes better and leaves no
-        read tax).  The estimate is metadata-only: one bounded count of
-        the (distinct) key batch against per-fragment row counts and
-        vector cardinalities already in the manifest — fragments
-        without recorded counts make the estimate conservative (assume
-        large, prefer rewrite).  Requires partition columns ⊆ keys (the
-        constructor's default regime) so the touched set comes from the
-        batch alone."""
-        if not 0 < dv_max_fraction <= 1:
-            raise ValueError("dv_max_fraction must be in (0, 1]")
-        if not set(self.partition_by) <= set(self.keys):
-            # without batch-side partition locating, the estimate would
-            # need a table scan — the caller should choose explicitly
-            return self.delete(keys)
-        doc = self._manifest_doc()
-        prev = {
-            k: int(v) for k, v in doc.get("partitions", {}).items()
-        }
-        if not prev:
-            vs = self.versions()
-            return vs[-1] if vs else 0
-        kd = keys.select(*self.keys).distinct()
-        touched = [
-            tuple(r)
-            for r in kd.select(*self.partition_by).distinct().collect()
-        ]
-        frags = {self._part_key(c) for c in touched} & set(prev)
-        if not frags:
-            return self.versions()[-1]
-        st = doc.get("stats", {})
-        dvr = {k: int(v) for k, v in (doc.get("dv_rows") or {}).items()}
-        rk = self._ROWS_KEY
-        live = 0
-        for f in frags:
-            env = st.get(f)
-            if not env or rk not in env:
-                # unknown size: conservative — rewrite
-                return self.delete(keys)
-            live += int(env[rk]) - dvr.get(f, 0)
-        n_keys = kd.count()
-        if live > 0 and n_keys / live < dv_max_fraction:
-            return self.delete_dv(keys)
-        return self.delete(keys)
-
     def read_where(
         self, col: str, lo, hi, version: int | None = None
     ) -> tuple[DataFrame | None, int, int, int, int]:

@@ -386,8 +386,7 @@ class _ManifestWriteMixin:
         current version unchanged when no key matched a live partition.
         Replay-safe: deleting the same keys twice is a fixed point.
         `delete_dv` is the merge-on-read twin (sidecars, no rewrite —
-        the small-scattered-erasure shape); `delete_auto` picks
-        between them from manifest metadata."""
+        the small-scattered-erasure shape)."""
         missing = [c for c in self.keys if c not in keys.columns]
         if missing:
             raise ValueError(f"delete batch lacks key columns: {missing}")

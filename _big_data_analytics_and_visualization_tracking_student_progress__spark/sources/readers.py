@@ -57,24 +57,6 @@ def read_json(
     return reader.json(path)
 
 
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same pushdown/pruning properties as parquet (both
-    columnar with min/max stats; Catalyst emits PushedFilters/ReadSchema
-    identically)."""
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
-
-
-def read_text(spark: SparkSession, path: str) -> DataFrame:
-    """Line-oriented text scan: one `value` string column per line — the
-    raw-corpus ingestion shape (each line a document/record) feeding the
-    text operators."""
-    return spark.read.text(path)
-
-
 def read_excel(spark: SparkSession, path: str) -> DataFrame:
     """Excel scan (reference pro.py:34-44: header row 1, data rows 2+,
     all-empty rows skipped).  The reference's watcher accepts both
@@ -303,50 +285,3 @@ def read_json_quarantined(
         F.col("_corrupt_record").alias("raw")
     )
     return good, quarantine
-
-
-# ---------------------------------------------------------------------------
-# Schema evolution on read.  Plain parquet has no table metadata, so a
-# long-lived 100 TB table accumulates file "generations": early files miss
-# later-added columns, and a renamed column exists under its old name in
-# old files and its new name in new ones.  Delta/Iceberg record this in a
-# commit log; this reader applies the same repairs engine-side so old
-# files never need rewriting (rewriting 100 TB to add a NULL column is
-# the anti-pattern this exists to avoid).
-# ---------------------------------------------------------------------------
-def read_evolved(
-    spark: SparkSession,
-    path: str,
-    renames: dict[str, str] | None = None,
-    target_schema=None,
-) -> DataFrame:
-    """Parquet read tolerant of schema drift across file generations.
-
-    - ``mergeSchema`` unions the column sets; the vectorized reader fills
-      columns absent from a given file with NULLs per file, no rewrite.
-    - ``renames`` maps legacy names to current ones.  After the merged
-      read both may coexist (old files populate the old name, new files
-      the new), so the repair is ``coalesce(new, old)`` — exactly one of
-      the two is non-NULL for any row — then the legacy column drops.
-    - ``target_schema`` (StructType) conforms the result: missing columns
-      materialize as typed NULLs, unexpected columns drop, and types cast
-      leniently (non-ANSI: NULL on failure, SURVEY §1.3).
-    """
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    for old, new in (renames or {}).items():
-        if old in df.columns and new in df.columns:
-            df = df.withColumn(new, F.coalesce(F.col(new), F.col(old))).drop(
-                old
-            )
-        elif old in df.columns:
-            df = df.withColumnRenamed(old, new)
-    if target_schema is not None:
-        df = df.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in target_schema.fields
-            ]
-        )
-    return df

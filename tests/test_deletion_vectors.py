@@ -395,34 +395,6 @@ def test_read_as_of_timestamp(spark, root):
         t.version_as_of(ts1 - 60)
 
 
-def test_delete_auto_picks_by_fraction(spark, root):
-    """delete_auto routes on the metadata-estimated doomed fraction:
-    one key out of five live rows in the touched partitions -> dv;
-    most of a partition -> rewrite."""
-    t = _mk(spark, root, stats_cols=["k"])
-    _seed(spark, t)
-    v2 = t.delete_auto(_keys(spark, [(0, 2)]), dv_max_fraction=0.5)
-    assert t.history().filter(F.col("version") == v2).first().op == (
-        "delete_dv"
-    )
-    # 2 of the 2 remaining day=0 rows: fraction 1.0 -> rewrite
-    v3 = t.delete_auto(_keys(spark, [(0, 1), (0, 3)]), dv_max_fraction=0.5)
-    assert t.history().filter(F.col("version") == v3).first().op == (
-        "delete"
-    )
-    assert _rows(t) == [(1, 4, "d"), (1, 5, "e")]
-    # without recorded row counts the estimate is conservative: rewrite
-    t2 = ManifestSnapshotTable(
-        spark, os.path.join(root, "t2"), keys=["day", "k"],
-        order_cols=["seq"], partition_by=["day"],
-    )
-    _seed(spark, t2)
-    v = t2.delete_auto(_keys(spark, [(0, 2)]), dv_max_fraction=0.99)
-    assert t2.history().filter(F.col("version") == v).first().op == (
-        "delete"
-    )
-
-
 def test_dv_and_upsert_writers_interleave_safely(spark, root):
     """Optimistic concurrency over deletion-vector commits: a dv
     eraser and an upserter race on the SAME table (overlapping

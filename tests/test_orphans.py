@@ -38,15 +38,9 @@ KNOWN_ORPHANS = {
     "operators.sketches.cms_merge",
     "operators.textindex.rrf_fuse_grouped",
     # tested API with no caller in the package (ROADMAP item 5)
-    "operators.bucketing.colocated_join",
-    "operators.bucketing.write_bucketed",
     "operators.multimodal.frame_sample_stub",
     "operators.multimodal.resize_stub",
-    "sources.readers.read_evolved",
     "sources.readers.read_json_quarantined",
-    "sources.readers.read_orc",
-    "sources.readers.read_text",
-    "sources.readers.write_orc",
     "streaming.pipeline.read_quarantine",
 }
 

@@ -133,48 +133,6 @@ def test_topk_is_take_ordered(spark):
 
 
 # ---------------------------------------------------------------------------
-# Bucketed co-located join: same bucket spec on both sides ⇒ the join
-# plan contains NO Exchange — the 100 TB repeated-join strategy.
-# ---------------------------------------------------------------------------
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.bucketing import (
-        colocated_join,
-        write_bucketed,
-    )
-
-    li = load_table(spark, SF_SMALL, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    )
-    o = load_table(spark, SF_SMALL, "orders").select(
-        "o_orderkey", "o_totalprice"
-    )
-    write_bucketed(li, "b_lineitem", "l_orderkey", num_buckets=4)
-    write_bucketed(
-        o.withColumnRenamed("o_orderkey", "l_orderkey"),
-        "b_orders",
-        "l_orderkey",
-        num_buckets=4,
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # Force the shuffle-join path (at fixture scale the planner would
-        # rather broadcast and skip bucketing); at 100 TB neither side is
-        # broadcastable and THIS is the plan that matters.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = colocated_join(spark, "b_lineitem", "b_orders", "l_orderkey")
-        plan = _plan(joined)
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        # sanity: it is still a real join producing rows
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-
-
-# ---------------------------------------------------------------------------
 # Hash sampling is a pure map-side filter: NO exchange anywhere in the
 # plan — the property that makes it free at any scale.
 # ---------------------------------------------------------------------------

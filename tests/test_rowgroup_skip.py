@@ -3,8 +3,8 @@ manifest's zone maps kept, the parquet reader must prune ROW GROUPS —
 which only happens when (a) `read_where`'s residual predicate reaches
 the scan as PushedFilters and (b) `compact(cluster_by=…)`'s in-file
 sort has tightened row-group min/max.  These tests pin both, measuring
-rows MATERIALIZED by the scan (`plans.inspect.scan_rows_read`) against
-rows kept — clustered vs unclustered at equal logical content."""
+rows MATERIALIZED by the scan (`_scan_rows_read`) against rows kept —
+clustered vs unclustered at equal logical content."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,13 +12,52 @@ from pyspark.sql import functions as F
 from _big_data_analytics_and_visualization_tracking_student_progress__spark.operators.upsert import (
     ManifestSnapshotTable,
 )
-from _big_data_analytics_and_visualization_tracking_student_progress__spark.plans.inspect import (
-    scan_metrics,
-    scan_rows_read,
-)
 
 ROWS = 400_000
 FRAG = 100_000  # rows per day fragment
+
+
+def _walk(node):
+    yield node
+    name = node.nodeName()
+    if name.startswith("AdaptiveSparkPlan"):
+        # the final (re-planned) physical plan lives behind the wrapper
+        yield from _walk(node.executedPlan())
+    elif "QueryStage" in name:
+        # AQE stage wrappers (Shuffle/Broadcast/ResultQueryStage) hold
+        # their materialized subtree in plan(), not children()
+        yield from _walk(node.plan())
+    ch = node.children()
+    for i in range(ch.size()):
+        yield from _walk(ch.apply(i))
+
+
+def _scan_metrics(df) -> list[dict[str, int]]:
+    """Per-scan-node metric maps ({metric key -> value}) from ``df``'s
+    EXECUTED plan — call after an action (collect/count) has run the
+    frame, or the metrics are zero.  Keys are Spark's internal metric
+    names (``numOutputRows``, ``numFiles``, ``filesSize``, ...)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    out: list[dict[str, int]] = []
+    for node in _walk(plan):
+        if "Scan" not in node.nodeName():
+            continue
+        metrics: dict[str, int] = {}
+        it = node.metrics().iterator()
+        while it.hasNext():
+            kv = it.next()
+            metrics[kv._1()] = int(kv._2().value())
+        out.append(metrics)
+    return out
+
+
+def _scan_rows_read(df) -> int:
+    """Total rows materialized by ``df``'s file scans (sum of the scan
+    nodes' ``numOutputRows`` after execution).  With parquet filter
+    pushdown this counts rows in SURVIVING row groups only — on a
+    range-clustered layout it should track the predicate's selectivity,
+    not the file sizes."""
+    return sum(m.get("numOutputRows", 0) for m in _scan_metrics(df))
 
 
 @pytest.fixture()
@@ -80,7 +119,7 @@ def test_residual_predicate_reaches_scan_and_prunes_rowgroups(
     # min/max intersect the range — a small multiple of the rows kept,
     # nowhere near the surviving files' full content
     df.collect()
-    read = scan_rows_read(df)
+    read = _scan_rows_read(df)
     surviving_file_rows = FRAG // max(filek, 1) * filek  # upper-ish bound
     assert got <= read < surviving_file_rows // 4, (
         got,
@@ -102,7 +141,7 @@ def test_clustering_tightens_rowgroups_vs_unclustered(
         assert len(rows) == len(
             {i for i in range(ROWS) if lo <= (i * 2654435761) % ROWS <= hi}
         )
-        reads[label] = (scan_rows_read(df), filek)
+        reads[label] = (_scan_rows_read(df), filek)
     # same rows kept; the un-clustered layout's files are KEY-sorted,
     # so y's row-group (and file) min/max span the whole domain and
     # the scan materializes ~everything the file tier kept, while the
@@ -115,6 +154,6 @@ def test_scan_metrics_reports_files_and_rows(spark, tmp_path, small_rowgroups):
     t = _table(spark, str(tmp_path / "m"), cluster_by=["x"])
     df, *_ = t.read_where("x", 0, 499)
     df.collect()
-    ms = scan_metrics(df)
+    ms = _scan_metrics(df)
     assert ms and all("numOutputRows" in m for m in ms)
     assert sum(m.get("numFiles", 0) for m in ms) >= 1

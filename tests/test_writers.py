@@ -123,43 +123,6 @@ def test_file_stats_inventory(spark, tmp_path):
         assert env["o_orderkey"] == [want[0], want[1]]
 
 
-def test_orc_round_trip_and_pushdown(spark, tmp_path):
-    from _big_data_analytics_and_visualization_tracking_student_progress__spark.sources.readers import (
-        read_orc,
-        write_orc,
-    )
-
-    orders = load_table(spark, SF_SMALL, "orders")
-    path = str(tmp_path / "orders_orc")
-    write_orc(orders, path)
-    back = read_orc(spark, path)
-    assert back.schema == orders.schema
-    assert back.count() == orders.count()
-    assert (
-        back.exceptAll(orders).count() == 0
-        and orders.exceptAll(back).count() == 0
-    )
-    # filters reach the ORC scan just like parquet
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.filter(F.col("o_custkey") == 7).explain("formatted")
-    assert "PushedFilters" in buf.getvalue()
-
-
-def test_read_text_lines(spark, tmp_path):
-    from _big_data_analytics_and_visualization_tracking_student_progress__spark.sources.readers import (
-        read_text,
-    )
-
-    p = tmp_path / "corpus.txt"
-    p.write_text("alpha beta\ngamma\n")
-    df = read_text(spark, str(tmp_path))
-    assert sorted(r.value for r in df.collect()) == ["alpha beta", "gamma"]
-
-
 def test_write_clustered_files_own_disjoint_ranges(spark, tmp_path):
     li = load_table(spark, SF_SMALL, "lineitem")
     t = ManifestSnapshotTable(
@@ -206,45 +169,6 @@ def test_zorder_files_cover_small_hyperrectangles(spark, tmp_path):
         for e in files.values()
     ]
     assert sum(fracs) / len(fracs) < 0.5, fracs
-
-
-# ---------------------------------------------------------------------------
-# Schema evolution on read: generations with added + renamed columns are
-# unified without rewriting old files.
-# ---------------------------------------------------------------------------
-def test_read_evolved_unifies_generations(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from _big_data_analytics_and_visualization_tracking_student_progress__spark.sources.readers import (
-        read_evolved,
-    )
-
-    base = str(tmp_path / "evo")
-    spark.createDataFrame(
-        [(1, 10.0)], "a BIGINT, val DOUBLE"
-    ).write.parquet(base + "/gen=1")
-    spark.createDataFrame(
-        [(2, 20.0, "x")], "a BIGINT, value DOUBLE, c STRING"
-    ).write.parquet(base + "/gen=2")
-
-    target = T.StructType(
-        [
-            T.StructField("a", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("c", T.StringType()),
-            T.StructField("added_later", T.IntegerType()),
-        ]
-    )
-    out = read_evolved(
-        spark, base, renames={"val": "value"}, target_schema=target
-    )
-    assert [f.name for f in out.schema.fields] == [
-        "a", "value", "c", "added_later",
-    ]
-    rows = {r["a"]: r for r in out.collect()}
-    assert rows[1]["value"] == 10.0 and rows[1]["c"] is None
-    assert rows[2]["value"] == 20.0 and rows[2]["c"] == "x"
-    assert rows[1]["added_later"] is None and rows[2]["added_later"] is None
 
 
 def test_report_tool_builds_dashboard(spark):

@@ -1,9 +1,9 @@
 """Nx scale smoke (VERDICT r4 item 8 / r5 item 3): materialize a ~Nx
-replica of the heavy fixture tables (events, lineitem, orders, documents)
-with key-shifted copies — join relationships preserved, dedup structure
-deliberately made Nx denser (worst case for LSH bucket sizes) — then run
-the heaviest registered queries once at 1x and once at Nx, recording wall
-time and per-phase driver RSS into SCALE.md.
+replica of the heavy fixture tables (events, lineitem, orders, documents,
+embeddings) with key-shifted copies — join relationships preserved,
+dedup structure deliberately made Nx denser (worst case for LSH bucket
+sizes) — then run registered queries once at 1x and once at Nx,
+recording wall time and per-phase driver RSS into SCALE.md.
 
 One-time artifact builds (inverted index, graph edge table) are timed
 SEPARATELY from the queries that serve from them, so a cold cache never
@@ -15,7 +15,15 @@ collects that grow with data, streaming state explosions, bucket-guard
 overflows, quadratic blocks.  A healthy engine shows ~linear wall-time
 growth and flat driver memory.
 
-Usage: python tools/scale_smoke.py [sf_dir] [factor]
+Usage: python tools/scale_smoke.py [sf_dir] [factor] [q1,q2,...]
+
+With no query list the heaviest BENCH queries run; a comma-separated
+list runs those registry names instead (storage, view and index
+lifecycles included), replicating only the tables they scan.  Every run
+appends one section to SCALE.md, e.g.
+
+    python tools/scale_smoke.py /root/testdata/sf0.1 100 \\
+        manifest_dv_delete,matview_incremental_refresh,ann_ivf_index_upsert
 """
 
 from __future__ import annotations
@@ -30,9 +38,6 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-FACTOR = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-
 # heaviest BENCH queries + one per scale-sensitive family
 DEFAULT_QUERIES = [
     "pricing_summary",            # full lineitem aggregate
@@ -44,45 +49,67 @@ DEFAULT_QUERIES = [
     "graph_pagerank_topk",        # iterative graph over Nx edges
 ]
 
-# Optional 3rd arg: comma-separated subset — e.g. the 100x events-only
-# smoke over the three state-heavy families (VERDICT r5 item 7):
-#   python tools/scale_smoke.py /root/testdata/sf0.1 100 \
-#       dedup_minhash_lsh,bm25_search_topk,stream_tumbling_append
-# In subset mode only the tables those queries scan are replicated, and
-# the report section is APPENDED to SCALE.md rather than replacing it.
-QUERIES = sys.argv[3].split(",") if len(sys.argv) > 3 else DEFAULT_QUERIES
-SUBSET_MODE = len(sys.argv) > 3
-
 # tables each query's scan actually grows with (everything else is
 # hard-linked 1x — replicating lineitem for a documents-only smoke
 # would only burn disk and build time)
 _NEEDS = {
-    "ann_ivfpq_topk": {"embeddings"},
-    "ann_ivf_topk": {"embeddings"},
-    "cosine_topk": {"embeddings"},
-    "curation_pipeline": {"documents"},
-    "dedup_exact": {"documents"},
-    "dedup_minhash_lsh": {"documents"},
-    "dedup_fuzzy_clusters": {"documents"},
-    "dedup_fuzzy_clusters_fast": {"documents"},
-    "token_pack_manifest": {"documents"},
-    "token_pack_assignments": {"documents"},
-    "bm25_search_topk": {"documents"},
-    "stream_tumbling_append": {"events"},
-    "stream_tumbling_counts": {"events"},
-    "stream_session_append": {"events"},
-    "stream_sliding_append": {"events"},
-    "stream_stateful_running_totals": {"events"},
-    "stream_manifest_commits": {"events"},
-    "asof_click_error": {"events"},
+    **dict.fromkeys(
+        (
+            "stream_tumbling_append", "stream_tumbling_counts",
+            "stream_session_append", "stream_sliding_append",
+            "stream_stateful_running_totals", "stream_manifest_commits",
+            "asof_click_error",
+            # storage and view lifecycles, each over an events table
+            "manifest_analyze_backfill", "manifest_bloom_point_read",
+            "manifest_change_feed", "manifest_check_constraints",
+            "manifest_compaction_commits", "manifest_delete_commits",
+            "manifest_dv_delete", "manifest_generated_partitions",
+            "manifest_history", "manifest_incremental_commits",
+            "manifest_merge_into", "manifest_metadata_agg",
+            "manifest_partition_evolution", "manifest_pruned_read",
+            "manifest_restore", "manifest_schema_evolution",
+            "manifest_shallow_clone", "manifest_update_where",
+            "manifest_zorder_read", "matview_delta_refresh",
+            "matview_incremental_refresh", "matview_sketch_rollup",
+        ),
+        {"events"},
+    ),
+    **dict.fromkeys(
+        (
+            "curation_pipeline", "dedup_exact", "dedup_minhash_lsh",
+            "dedup_fuzzy_clusters", "dedup_fuzzy_clusters_fast",
+            "token_pack_manifest", "token_pack_assignments",
+            "bm25_search_topk",
+            # the managed text index lifecycle
+            "managed_highlight", "managed_mlt", "managed_phrase_search",
+            "managed_proximity_search", "managed_suggest_prefix",
+            "managed_text_bm25_stale_stats", "managed_text_facets",
+            "managed_text_time_travel",
+        ),
+        {"documents"},
+    ),
+    **dict.fromkeys(
+        (
+            "ann_ivfpq_topk", "ann_ivf_topk", "cosine_topk",
+            # the managed IVF / PQ index lifecycles
+            "ann_index_knn_join", "ann_ivf_index_erasure",
+            "ann_ivf_index_upsert", "ann_ivf_indexed_topk",
+            "ann_pq_index_erasure", "ann_pq_index_topk",
+        ),
+        {"embeddings"},
+    ),
+    "managed_hybrid_rrf": {"documents", "embeddings"},
     "pricing_summary": {"lineitem"},
     "only_late_supplier_waits": {"lineitem", "orders"},
     "graph_pagerank_topk": {"lineitem", "orders"},
 }
-SCALED = set().union(
-    *(_NEEDS.get(q, {"events", "lineitem", "orders", "documents"})
-      for q in QUERIES)
-)
+
+
+def scaled_tables(queries: list[str]) -> set[str]:
+    """Tables to replicate for ``queries``: the `_NEEDS` row of each, or
+    every table `_REPLACE` knows for a query without one, so no scanned
+    table silently stays 1x under an "Nx" column."""
+    return set().union(*(_NEEDS.get(q, set(_REPLACE)) for q in queries))
 
 
 def _proc_rss_mb(pid: int | str = "self") -> float:
@@ -151,9 +178,7 @@ _REPLACE = {
 }
 
 
-def build_scaled_dir(
-    sf_dir: str, factor: int, tables: set[str] | None = None
-) -> str:
+def build_scaled_dir(sf_dir: str, factor: int, tables: set[str]) -> str:
     """Replicate the heavy tables `factor`x with shifted keys: orderkeys
     shift identically in orders and lineitem (joins stay valid, fan-out
     preserved), event ids/users shift so the user population scales,
@@ -172,8 +197,6 @@ def build_scaled_dir(
     files."""
     import duckdb
 
-    if tables is None:
-        tables = SCALED
     out = tempfile.mkdtemp(prefix=f"sparkgraft_scale{factor}x_")
     con = duckdb.connect()
     for t in os.listdir(sf_dir):
@@ -210,7 +233,7 @@ def build_scaled_dir(
     return out
 
 
-def warm_artifacts(spark, sf_dir: str) -> dict[str, float]:
+def warm_artifacts(spark, sf_dir: str, queries: list[str]) -> dict[str, float]:
     """Build the one-time per-fixture artifacts the serve queries read
     (managed text index for bm25, edge table for pagerank), each timed —
     these are ingest-time costs, not per-query costs."""
@@ -222,11 +245,18 @@ def warm_artifacts(spark, sf_dir: str) -> dict[str, float]:
     )
 
     wanted = []
-    if any("bm25" in q or "text_search" in q or "index" in q for q in QUERIES):
+    # name words of the queries that serve from the managed text index
+    # (a few other text queries match too; none that serves from it is
+    # missed, and no ANN query builds it for nothing)
+    text_words = (
+        "bm25", "text", "phrase", "proximity", "suggest", "mlt", "hybrid",
+        "highlight",
+    )
+    if any(w in q for q in queries for w in text_words):
         wanted.append(("managed_text_index", managed_text_index))
-    if any(q.startswith("graph_") for q in QUERIES):
+    if any(q.startswith("graph_") for q in queries):
         wanted.append(("graph_edges", graph_edges_path))
-    if any("ivf" in q or "pq" in q for q in QUERIES):
+    if any("ivf" in q or "pq" in q for q in queries):
         # quantizer training is the offline one-time cost of the
         # IVF/PQ family (FAISS posture) — report it as a build row so
         # the serve rows below stay serve-only
@@ -247,9 +277,9 @@ def warm_artifacts(spark, sf_dir: str) -> dict[str, float]:
     return builds
 
 
-def run(spark, registry, sf_dir: str) -> dict[str, float]:
+def run(spark, registry, sf_dir: str, queries: list[str]) -> dict[str, float]:
     times = {}
-    for name in QUERIES:
+    for name in queries:
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         registry[name].fn(spark, sf_dir).write.format("noop").mode(
@@ -267,11 +297,21 @@ def main() -> None:
         get_spark,
     )
 
-    spark = get_spark("scale-smoke", master="local[32]")
-    spark.sparkContext.setLogLevel("ERROR")
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    factor = int(sys.argv[2]) if len(sys.argv) > 2 else 10
+    subset = len(sys.argv) > 3
+    queries = sys.argv[3].split(",") if subset else DEFAULT_QUERIES
     registry = all_queries()
+    unknown = [q for q in queries if q not in registry]
+    if unknown:
+        sys.exit(f"not registered queries: {', '.join(unknown)}")
+    scaled = scaled_tables(queries)
 
-    scaled_dir = build_scaled_dir(SF_DIR, FACTOR)
+    spark = get_spark("scale-smoke")
+    spark.sparkContext.setLogLevel("ERROR")
+    master = spark.sparkContext.master
+
+    scaled_dir = build_scaled_dir(sf_dir, factor, scaled)
     # replicas can be tens of GB (16 GB at 1000x) — remove them on EVERY
     # exit path, including the mid-smoke crashes this tool exists to
     # catch (atexit also fires on unhandled exceptions)
@@ -280,39 +320,35 @@ def main() -> None:
     atexit.register(shutil.rmtree, scaled_dir, ignore_errors=True)
     rss_after_build = rss_snapshot_mb()
 
-    builds_base = warm_artifacts(spark, SF_DIR)
-    base = run(spark, registry, SF_DIR)       # warm (JVM+codegen) + 1x numbers
+    builds_base = warm_artifacts(spark, sf_dir, queries)
+    base = run(spark, registry, sf_dir, queries)  # warm (JVM+codegen) + 1x
     rss_base = rss_snapshot_mb()
-    builds_scaled = warm_artifacts(spark, scaled_dir)
-    scaled = run(spark, registry, scaled_dir)
+    builds_scaled = warm_artifacts(spark, scaled_dir, queries)
+    times = run(spark, registry, scaled_dir, queries)
     rss_scaled = rss_snapshot_mb()
 
     def _fmt_rss(s: dict[str, float]) -> str:
         return f"python {s['python_mb']:.0f} MB + JVM tree {s['jvm_tree_mb']:.0f} MB"
 
-    title = (
-        f"## {FACTOR}x subset smoke ({', '.join(QUERIES)})"
-        if SUBSET_MODE
-        else f"# {FACTOR}x scale smoke"
-    )
-    cmd = f"python tools/scale_smoke.py {SF_DIR} {FACTOR}" + (
-        f" {','.join(QUERIES)}" if SUBSET_MODE else ""
+    cmd = f"python tools/scale_smoke.py {sf_dir} {factor}" + (
+        f" {','.join(queries)}" if subset else ""
     )
     lines = [
-        title,
+        "",
+        f"## {factor}x scale smoke ({', '.join(queries)})",
         "",
         f"Auto-generated by `{cmd}`:",
-        f"heavy tables ({', '.join(sorted(SCALED))}) replicated "
-        f"{FACTOR}x with key-shifted copies (joins preserved; documents kept "
+        f"heavy tables ({', '.join(sorted(scaled))}) replicated "
+        f"{factor}x with key-shifted copies (joins preserved; documents kept "
         "verbatim so dedup clusters densify — the adversarial LSH case), "
-        "run on local[32].  1x runs first and doubles as warmup, so the "
-        f"{FACTOR}x column is the steady-state cost.  Watch for wall-time "
-        f"growth >>{FACTOR}x (a quadratic or skew collapse) or driver-RSS "
+        f"run on {master}.  1x runs first and doubles as warmup, so the "
+        f"{factor}x column is the steady-state cost.  Watch for wall-time "
+        f"growth >>{factor}x (a quadratic or skew collapse) or driver-RSS "
         "growth (an unbounded collect / state leak).",
         "",
-        "## One-time artifact builds (ingest-time cost, not per-query)",
+        "### One-time artifact builds (ingest-time cost, not per-query)",
         "",
-        f"| Artifact | 1x build (s) | {FACTOR}x build (s) | ratio |",
+        f"| Artifact | 1x build (s) | {factor}x build (s) | ratio |",
         "|---|---|---|---|",
     ]
     for label in builds_base:
@@ -321,14 +357,14 @@ def main() -> None:
         lines.append(f"| `{label}` | {b} | {s} | {r:.1f}x |")
     lines += [
         "",
-        "## Query serve cost (artifacts pre-built)",
+        "### Query serve cost (artifacts pre-built)",
         "",
-        f"| Query | 1x wall (s) | {FACTOR}x wall (s) | ratio |",
+        f"| Query | 1x wall (s) | {factor}x wall (s) | ratio |",
         "|---|---|---|---|",
     ]
-    for name in QUERIES:
-        r = scaled[name] / base[name] if base[name] else float("nan")
-        lines.append(f"| `{name}` | {base[name]} | {scaled[name]} | {r:.1f}x |")
+    for name in queries:
+        r = times[name] / base[name] if base[name] else float("nan")
+        lines.append(f"| `{name}` | {base[name]} | {times[name]} | {r:.1f}x |")
     lines += [
         "",
         "Reading the ratios: any sub-1x row is a warmup/page-cache effect "
@@ -337,43 +373,37 @@ def main() -> None:
         "ingest (stream_index_maintenance is the registered incremental "
         "path), so the query rows here are serve-only.  The property this "
         "smoke certifies is the absence of super-linear blowup: every "
-        f"ratio must stay <={FACTOR}x.",
+        f"ratio must stay <={factor}x.",
         "",
         "Driver RSS (sampled per phase via /proc — current RSS of the "
         "Python driver + its JVM process tree, NOT the process-lifetime "
         "peak, so growth between phases is visible):",
         "",
-        f"- after building the {FACTOR}x replica: {_fmt_rss(rss_after_build)}",
+        f"- after building the {factor}x replica: {_fmt_rss(rss_after_build)}",
         f"- after the 1x pass: {_fmt_rss(rss_base)}",
-        f"- after the {FACTOR}x pass: {_fmt_rss(rss_scaled)}",
+        f"- after the {factor}x pass: {_fmt_rss(rss_scaled)}",
         "",
         "Driver memory must stay ~flat across the scale-up (all collects "
         "are bounded control data).  The JVM tree number includes executor "
         "threads' heap in local mode; on a real cluster that memory lives "
         "on executors.",
         "",
-        "Finding from the first 100x run: a single-file replica silently "
-        "collapses input-split parallelism (60 MB file = 1 task at 128 MB "
-        "maxPartitionBytes), serializing CPU-heavy text stages — replicas "
-        "are therefore written multi-file, the layout a real Nx ingest "
-        "produces.  The engine needs no config change: given a realistic "
-        "file layout, every stage parallelizes.",
-        "",
     ]
-    mode = "a" if SUBSET_MODE else "w"
-    with open(os.path.join(ROOT, "SCALE.md"), mode) as fh:
+    with open(os.path.join(ROOT, "SCALE.md"), "a") as fh:
         fh.write("\n".join(lines))
     print(
         json.dumps(
             {
+                "master": master,
+                "scaled_tables": sorted(scaled),
                 "builds_base": builds_base,
                 "builds_scaled": builds_scaled,
                 "base": base,
-                "scaled": scaled,
+                "scaled": times,
                 "rss": {
                     "after_build": rss_after_build,
                     "after_1x": rss_base,
-                    f"after_{FACTOR}x": rss_scaled,
+                    f"after_{factor}x": rss_scaled,
                 },
             }
         )
